@@ -67,8 +67,9 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from .io import merge_upsert_plan, anti_join_new
+from .io import anti_join_new, key_schema, merge_upsert_plan
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
@@ -174,11 +175,13 @@ class CommitLogTable:
                 return None
         return json.loads(self.store.read(self._log_path(version)))
 
-    def read(self, spark: SparkSession,
-             version: int | None = None) -> DataFrame | None:
+    def read(self, spark: SparkSession, version: int | None = None,
+             schema: StructType | None = None) -> DataFrame | None:
         """The table at ``version`` (latest by default); None when
         the log is empty.  Reads exactly the manifest's segments —
-        orphaned segments from losing writers are invisible."""
+        orphaned segments from losing writers are invisible.
+        ``schema`` (the table's, or the columns the caller needs)
+        skips schema inference, as in ``io.read_layer_table``."""
         man = self.manifest(version)
         if man is None:
             return None
@@ -187,7 +190,8 @@ class CommitLogTable:
         if not dirs:
             raise FileNotFoundError(
                 f"commit {man['version']} lists no segments")
-        return spark.read.parquet(*dirs)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*dirs)
 
     # ----------------------------------------------------- mutation
     def _write_segment(self, df: DataFrame) -> str:
@@ -204,18 +208,22 @@ class CommitLogTable:
             os.path.join(self.path, _DATA_DIR, seg))
 
     def transact(self, spark: SparkSession, build, op: str = "overwrite",
-                 max_retries: int = 10) -> int:
+                 max_retries: int = 10,
+                 schema: StructType | None = None) -> int:
         """Run one optimistic transaction; returns the committed
         version.  ``build(snapshot_df_or_None) -> DataFrame`` is
         re-invoked against the FRESH snapshot on every retry, so a
         lost race can never publish a result derived from a stale
         base (the lost-update failure mode of lock-free upserts).
+        ``schema`` is what ``build`` reads of the snapshot (see
+        :meth:`read`).
         """
         if op not in ("overwrite", "append"):
             raise ValueError(f"unknown op {op!r}")
         for _ in range(max_retries):
             base_v = self.current_version()
-            base = self.read(spark, base_v) if base_v is not None else None
+            base = (self.read(spark, base_v, schema)
+                    if base_v is not None else None)
             out = build(base)
             if out is None:  # nothing to do (e.g. empty anti-join)
                 return base_v if base_v is not None else -1
@@ -290,10 +298,12 @@ class CommitLogTable:
         accumulate empty segments (the 'idempotent append'
         contract).  The anti-join plan executes exactly once (the
         segment write IS the materialization; the probe is a
-        driver-side parquet-footer read)."""
+        driver-side parquet-footer read).  The snapshot is read key
+        columns only, typed from the batch, as in
+        ``io.insert_if_absent``."""
         return self.transact(
             spark, lambda base: anti_join_new(df, base, keys),
-            op="append")
+            op="append", schema=key_schema(df.schema, keys))
 
     def merge(self, spark: SparkSession, source: DataFrame,
               keys: list[str]) -> int:
@@ -364,11 +374,13 @@ class CommitLogTable:
 # for object-store deployments where rename does not exist.
 
 def read_layer_table(spark: SparkSession, warehouse: str, layer: str,
-                     name: str) -> DataFrame | None:
+                     name: str,
+                     schema: StructType | None = None) -> DataFrame | None:
     """Latest snapshot of a commit-log layer table; None while the
-    log is empty (mirrors io.read_layer_table's contract)."""
+    log is empty (mirrors io.read_layer_table's contract, ``schema``
+    included)."""
     return CommitLogTable(
-        os.path.join(warehouse, layer, name)).read(spark)
+        os.path.join(warehouse, layer, name)).read(spark, schema=schema)
 
 
 def insert_if_absent(spark: SparkSession, new_df: DataFrame,
@@ -378,7 +390,9 @@ def insert_if_absent(spark: SparkSession, new_df: DataFrame,
     """Idempotent append through the commit log: the anti-join runs
     inside the optimistic transaction, so first-writer-wins holds
     across CONCURRENT pipeline runs — the property the rename-based
-    layout needs io.table_lock (kernel flock) for.
+    layout needs io.table_lock (kernel flock) for.  Like
+    io.insert_if_absent it reads the destination's key columns only,
+    typed from the batch.
 
     ``partition_by`` is accepted for signature parity and ignored:
     segments are immutable whole units addressed by the manifest;

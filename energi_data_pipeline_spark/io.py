@@ -11,10 +11,12 @@ formats:
   the reference's conflict behavior for a single writer.
 * ordered CSV export with header (gold_aggr.py:234-254).
 
-At 100 TB the anti-join reads only the destination's key column
-(column pruning) over partition-pruned files (the caller passes a
-watermark so only recent partitions are scanned); the appended data
-is written date-partitioned so downstream cursor predicates prune.
+The anti-join reads only the destination's key columns, typed from
+the batch, so it never runs a schema-inference job.  Nothing here
+prunes files: the medallion's layer tables are written unpartitioned,
+and their time keys are INT96 timestamps, whose parquet footers carry
+no min/max statistics — a watermark or an anti-join scans the whole
+key column of its table (one narrow column, never the measures).
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .session import tune
 
@@ -377,9 +380,39 @@ def table_path(warehouse: str, layer: str, name: str) -> str:
     return os.path.join(warehouse, layer, name)
 
 
+def _hidden(name: str) -> bool:
+    """Spark's rule for the names a file scan skips: ``.``-prefixed
+    files (checksums, staging) and ``_``-prefixed metadata
+    (``_SUCCESS``, ``_log``) unless it is a ``k=v`` partition
+    directory such as ``_bid=3``."""
+    return name.startswith(".") or (name.startswith("_")
+                                    and "=" not in name)
+
+
+def _has_data_files(path: str) -> bool:
+    """True when the directory ``path`` holds a file a scan would
+    read; False when it is missing or holds only metadata."""
+    for _root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        if any(not _hidden(f) for f in files):
+            return True
+    return False
+
+
 def read_layer_table(spark: SparkSession, warehouse: str, layer: str,
-                     name: str) -> DataFrame | None:
+                     name: str,
+                     schema: StructType | None = None) -> DataFrame | None:
     """Read a managed layer table; None if it does not exist yet.
+
+    Absence is checked explicitly: a missing directory, or one that
+    holds no data files (nothing, or only ``_SUCCESS``), is an absent
+    table.  Every error of the read itself — a truncated or corrupt
+    part file, a schema clash — raises; it never reads as "absent".
+
+    ``schema`` is the table's schema, or the subset of its columns
+    the caller needs (a watermark needs only the key).  Given, Spark
+    reads the files with it and runs no schema-inference job; None
+    infers the schema from the files.
 
     Repairs a hard-killed :func:`publish_atomic` swap first (the
     previous snapshot renamed back into place), so a crash between
@@ -387,26 +420,39 @@ def read_layer_table(spark: SparkSession, warehouse: str, layer: str,
     old snapshot, never a missing table."""
     path = table_path(warehouse, layer, name)
     recover_atomic(path)
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
+    if not _has_data_files(path):
         return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     # segment-append tables carry the internal _bid partition column
     # (append_batch_segment's idempotency key) — never part of the
     # logical schema
     return df.drop("_bid") if "_bid" in df.columns else df
 
 
+def key_schema(schema: StructType, keys: list[str]) -> StructType:
+    """The ``keys`` fields of ``schema``: the typed read a watermark
+    or an anti-join needs."""
+    return StructType([schema[k] for k in keys])
+
+
 def max_watermark(df: DataFrame | None, col: str, default):
     """``SELECT COALESCE(MAX(col), default)`` — the reference's
     self-watermarking cursor (silver_transform.py:54-58,
-    gold_aggr.py:59-63).  Single-stage partial+final max; at scale
-    this reads only parquet footers' column statistics when the
-    table is append-ordered."""
+    gold_aggr.py:59-63).
+
+    Computed as the top-1 non-null value: each partition keeps its
+    largest and the driver takes the largest of those — one Spark
+    job, where a global aggregate under AQE runs two (its shuffle
+    stage is a job of its own).  The job scans ``col``; footers
+    cannot answer it, because the time keys are INT96 timestamps,
+    written without min/max statistics.  Pass a key-only read
+    (:func:`key_schema`) so it touches one column."""
     if df is None:
         return default
-    row = df.agg(F.coalesce(F.max(col), F.lit(default)).alias("wm")).first()
-    return row["wm"] if row is not None else default
+    row = (df.select(col).where(F.col(col).isNotNull())
+           .orderBy(F.col(col).desc()).first())
+    return row[0] if row is not None else default
 
 
 def anti_join_new(new_df: DataFrame, existing: DataFrame | None,
@@ -428,9 +474,14 @@ def anti_join_new(new_df: DataFrame, existing: DataFrame | None,
 def insert_if_absent(spark: SparkSession, new_df: DataFrame, warehouse: str,
                      layer: str, name: str, keys: list[str],
                      partition_by: list[str] | None = None) -> None:
-    """Idempotent append: anti-join against destination, append rest."""
+    """Idempotent append: anti-join against destination, append rest.
+
+    The destination is read key columns only, typed from the batch's
+    own key fields, so the anti-join never infers a schema; a stored
+    key must therefore keep the type its writer gave it."""
     path = table_path(warehouse, layer, name)
-    existing = read_layer_table(spark, warehouse, layer, name)
+    existing = read_layer_table(spark, warehouse, layer, name,
+                                schema=key_schema(new_df.schema, keys))
     to_write = anti_join_new(new_df, existing, keys)
     writer = to_write.write.mode("append")
     if partition_by:

@@ -23,6 +23,8 @@ from __future__ import annotations
 from datetime import timedelta
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (BooleanType, DoubleType, IntegerType,
+                               StructField, StructType, TimestampType)
 
 from ..functions.guards import guarded_ratio
 from .windows import trailing_window, with_trailing_partitioned
@@ -57,6 +59,17 @@ STDDEV_MEASURES = {
 }
 
 TIME_FEATURES = ["day_of_week", "hour_of_day", "is_weekend", "season"]
+
+#: what :func:`build_gold` writes; readers of the gold table pass it
+#: instead of inferring it from the files
+GOLD_SCHEMA = StructType(
+    [StructField("time_id", TimestampType())]
+    + [StructField(c, DoubleType()) for c in (
+        list(AVG_MEASURES) + list(STDDEV_MEASURES) + ["wind_solar_ratio"])]
+    + [StructField("day_of_week", IntegerType()),
+       StructField("hour_of_day", IntegerType()),
+       StructField("is_weekend", BooleanType()),
+       StructField("season", IntegerType())])
 
 
 def build_time_series(fact: DataFrame, dim: DataFrame,

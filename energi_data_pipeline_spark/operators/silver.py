@@ -2,32 +2,24 @@
 
 Re-expresses silver_transform.py:61-106 as pure DataFrame
 transforms.  Both builders take an optional watermark and filter
-``ts > watermark`` — Catalyst pushes that predicate into the
-parquet scan, which at 100 TB (fact partitioned by date) becomes
-partition pruning: an incremental run touches only new files.
+``ts > watermark``.  The filter bounds what an increment builds and
+writes, not what it reads: bronze is written unpartitioned and Spark
+pushes no predicate into its INT96 minute column, so every increment
+scans all of bronze.
+
+:data:`DIM_TIME_SCHEMA` and :data:`FACT_SCHEMA` declare what the two
+builders write; readers of the silver tables pass them instead of
+inferring them from the files.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import (BooleanType, DateType, DoubleType,
+                               IntegerType, StructField, StructType,
+                               TimestampType)
 
 from ..functions.timeparts import dow_sunday0, is_weekend, season
-
-#: bronze measure column -> silver fact column
-#: (silver_transform.py:88-101; sums expressed as expressions below)
-FACT_RENAMES = {
-    "co2_emission": "co2_emission",
-    "production_ge100_mw": "production_large_plants",
-    "production_lt100_mw": "production_small_plants",
-    "solar_power": "solar_production",
-    "offshore_wind_power": "offshore_wind_production",
-    "onshore_wind_power": "onshore_wind_production",
-    "exchange_sum": "exchange_sum",
-    "exchange_dk1_nl": "exchange_netherlands",
-    "exchange_dk1_gb": "exchange_great_brt",
-    "exchange_dk1_no": "exchange_norway",
-    "exchange_dk1_dk2": "exchange_dk1_dk2",
-}
 
 
 def time_features(ts: Column) -> list[Column]:
@@ -40,6 +32,18 @@ def time_features(ts: Column) -> list[Column]:
         is_weekend(ts).alias("is_weekend"),
         season(ts).alias("season"),
     ]
+
+
+#: what :func:`build_dim_time` writes
+DIM_TIME_SCHEMA = StructType([
+    StructField("time_id", TimestampType()),
+    StructField("date", DateType()),
+    StructField("hour", IntegerType()),
+    StructField("minute", IntegerType()),
+    StructField("day_of_week", IntegerType()),
+    StructField("is_weekend", BooleanType()),
+    StructField("season", IntegerType()),
+])
 
 
 def build_dim_time(bronze: DataFrame, ts_col: str = "minutes1_utc",
@@ -55,6 +59,18 @@ def build_dim_time(bronze: DataFrame, ts_col: str = "minutes1_utc",
         df = df.filter(F.col(ts_col) > F.lit(watermark))
     ts = F.col(ts_col)
     return df.select(ts.alias("time_id"), *time_features(ts)).distinct()
+
+
+#: what :func:`build_fact` writes: the minute key and 13 measures
+FACT_SCHEMA = StructType(
+    [StructField("time_id", TimestampType())]
+    + [StructField(c, DoubleType()) for c in (
+        "co2_emission", "production_large_plants",
+        "production_small_plants", "solar_production",
+        "offshore_wind_production", "onshore_wind_production",
+        "exchange_sum", "exchange_germany", "exchange_netherlands",
+        "exchange_great_brt", "exchange_norway", "exchange_sweden",
+        "exchange_dk1_dk2")])
 
 
 def build_fact(bronze: DataFrame, ts_col: str = "minutes1_utc",

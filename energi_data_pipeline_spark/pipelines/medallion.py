@@ -9,9 +9,16 @@ reads incrementally from its own destination watermark
 (COALESCE(MAX(time_id), epoch)) — the reference's self-watermarking
 protocol, no external state store.
 
-Scale: fact and gold tables are date-partitioned so the watermark
-predicate prunes partitions; dim_time broadcasts; the gold window
-runs partitioned-by-day with warm-up replay (operators.windows).
+Reads: every read passes a schema the engine already knows — bronze
+``BRONZE_FULL_SCHEMA``, fact, dim and gold the schemas declared next
+to their builders, and a destination read only for its watermark its
+key column alone — so no read runs a schema-inference job.  Bronze is
+ingested through Arrow (sources.normalize).
+
+Scale: every layer table is written unpartitioned, so a watermark
+read scans the table's whole key column; dim_time broadcasts; the
+``scaled`` gold window runs partitioned-by-day with warm-up replay
+(operators.windows).
 """
 
 from __future__ import annotations
@@ -19,16 +26,22 @@ from __future__ import annotations
 import time
 from datetime import datetime
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..io import (export_csv, insert_if_absent, max_watermark,
-                  read_layer_table)
-from ..operators.gold import EXPORT_COLUMNS, build_gold
-from ..operators.silver import build_dim_time, build_fact
-from ..sources.normalize import records_to_bronze
+from ..io import (export_csv, insert_if_absent, key_schema,
+                  max_watermark, read_layer_table)
+from ..operators.gold import EXPORT_COLUMNS, GOLD_SCHEMA, build_gold
+from ..operators.silver import (DIM_TIME_SCHEMA, FACT_SCHEMA,
+                                build_dim_time, build_fact)
+from ..sources.normalize import BRONZE_FULL_SCHEMA, records_to_bronze
 from ..sources.rest import INITIAL_CURSOR, format_cursor
 
 EPOCH = datetime(1970, 1, 1)
+
+#: the watermark reads: a destination's key column alone
+BRONZE_KEY = key_schema(BRONZE_FULL_SCHEMA, ["minutes1_utc"])
+FACT_KEY = key_schema(FACT_SCHEMA, ["time_id"])
+GOLD_KEY = key_schema(GOLD_SCHEMA, ["time_id"])
 
 
 def _layer_io(table_format: str):
@@ -60,7 +73,8 @@ def run_bronze(spark: SparkSession, warehouse: str, source,
     """
     t0 = time.time()
     read_t, insert_t = _layer_io(table_format)
-    bronze = read_t(spark, warehouse, "bronze", "power_system_raw")
+    bronze = read_t(spark, warehouse, "bronze", "power_system_raw",
+                    schema=BRONZE_KEY)
     cursor = max_watermark(bronze, "minutes1_utc", None)
     cursor_str = format_cursor(cursor) if cursor else INITIAL_CURSOR
     records = source.fetch(cursor_str)
@@ -71,27 +85,35 @@ def run_bronze(spark: SparkSession, warehouse: str, source,
     return len(records)
 
 
+def silver_step(spark: SparkSession, warehouse: str, bronze: DataFrame,
+                table_format: str = "parquet") -> None:
+    """The silver upsert of ``bronze`` rows past the fact watermark:
+    dim insert + fact insert.  Shared by :func:`run_silver` (all of
+    bronze) and the streaming micro-batch (one batch of it)."""
+    read_t, insert_t = _layer_io(table_format)
+    fact_dst = read_t(spark, warehouse, "silver", "fact_power_system",
+                      schema=FACT_KEY)
+    wm = max_watermark(fact_dst, "time_id", EPOCH)
+    insert_t(spark, build_dim_time(bronze, watermark=wm), warehouse,
+             "silver", "dim_time", keys=["time_id"])
+    insert_t(spark, build_fact(bronze, watermark=wm), warehouse,
+             "silver", "fact_power_system", keys=["time_id"])
+
+
 def run_silver(spark: SparkSession, warehouse: str,
                table_format: str = "parquet") -> None:
     """silver_transform.py equivalent: watermark from the fact table,
     dim upsert + fact insert, stats report."""
-    read_t, insert_t = _layer_io(table_format)
-    bronze = read_t(spark, warehouse, "bronze", "power_system_raw")
+    read_t, _ = _layer_io(table_format)
+    bronze = read_t(spark, warehouse, "bronze", "power_system_raw",
+                    schema=BRONZE_FULL_SCHEMA)
     if bronze is None:
         print("silver: no bronze data")
         return
-    fact_dst = read_t(spark, warehouse, "silver", "fact_power_system")
-    wm = max_watermark(fact_dst, "time_id", EPOCH)
+    silver_step(spark, warehouse, bronze, table_format)
 
-    dim = build_dim_time(bronze, watermark=wm)
-    insert_t(spark, dim, warehouse, "silver", "dim_time",
-             keys=["time_id"])
-    fact = build_fact(bronze, watermark=wm)
-    insert_t(spark, fact, warehouse, "silver", "fact_power_system",
-             keys=["time_id"])
-
-    stats = read_t(spark, warehouse, "silver",
-                   "fact_power_system").agg(
+    stats = read_t(spark, warehouse, "silver", "fact_power_system",
+                   schema=FACT_KEY).agg(
         F.count(F.lit(1)).alias("total"),
         F.min("time_id").alias("earliest"),
         F.max("time_id").alias("latest")).first()
@@ -99,23 +121,36 @@ def run_silver(spark: SparkSession, warehouse: str,
           f"{stats['earliest']} .. {stats['latest']}")
 
 
-def run_gold(spark: SparkSession, warehouse: str,
-             scaled: bool = False,
-             table_format: str = "parquet") -> None:
-    """gold_aggr.py equivalent: watermark from the gold table,
-    lookback-extended window build, trim, idempotent insert."""
+def gold_step(spark: SparkSession, warehouse: str, scaled: bool = False,
+              table_format: str = "parquet") -> bool:
+    """The gold upsert: watermark from the gold table, lookback-
+    extended window build, trim, idempotent insert.  Shared by
+    :func:`run_gold` and the streaming micro-batch; False when
+    silver holds no data yet."""
     read_t, insert_t = _layer_io(table_format)
-    fact = read_t(spark, warehouse, "silver", "fact_power_system")
-    dim = read_t(spark, warehouse, "silver", "dim_time")
+    fact = read_t(spark, warehouse, "silver", "fact_power_system",
+                  schema=FACT_SCHEMA)
+    dim = read_t(spark, warehouse, "silver", "dim_time",
+                 schema=DIM_TIME_SCHEMA)
     if fact is None or dim is None:
-        print("gold: no silver data")
-        return
-    gold_dst = read_t(spark, warehouse, "gold", "power_system_5min_avg")
+        return False
+    gold_dst = read_t(spark, warehouse, "gold", "power_system_5min_avg",
+                      schema=GOLD_KEY)
     wm = max_watermark(gold_dst, "time_id", EPOCH)
     gold = build_gold(fact, dim, watermark=wm, scaled=scaled)
     insert_t(spark, gold, warehouse, "gold",
              "power_system_5min_avg", keys=["time_id"])
-    print("gold: 5-minute moving averages updated")
+    return True
+
+
+def run_gold(spark: SparkSession, warehouse: str,
+             scaled: bool = False,
+             table_format: str = "parquet") -> None:
+    """gold_aggr.py equivalent (:func:`gold_step`)."""
+    if gold_step(spark, warehouse, scaled, table_format):
+        print("gold: 5-minute moving averages updated")
+    else:
+        print("gold: no silver data")
 
 
 def export_ml_features(spark: SparkSession, warehouse: str,
@@ -123,7 +158,8 @@ def export_ml_features(spark: SparkSession, warehouse: str,
                        table_format: str = "parquet") -> None:
     """gold_aggr.py:226-255: ordered 13-column CSV export."""
     read_t, _ = _layer_io(table_format)
-    gold = read_t(spark, warehouse, "gold", "power_system_5min_avg")
+    gold = read_t(spark, warehouse, "gold", "power_system_5min_avg",
+                  schema=GOLD_SCHEMA)
     export_csv(gold.select(*EXPORT_COLUMNS), out_path,
                order_by=["time_id"], single_file=single_file)
 

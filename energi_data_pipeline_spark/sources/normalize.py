@@ -11,6 +11,7 @@ the bronze schema to a StructType so re-inference can never drift.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import re
@@ -21,9 +22,11 @@ from pyspark.sql.types import (DoubleType, MapType, StringType,
                                StructField, StructType, TimestampType)
 
 
+@functools.lru_cache(maxsize=1024)
 def snake_case(name: str) -> str:
     """camelCase/PascalCase/acronym -> snake_case, matching the dlt
-    normalizations the reference depends on:
+    normalizations the reference depends on (memoized: a feed repeats
+    the same few field names on every record):
 
     >>> snake_case("Minutes1UTC")
     'minutes1_utc'
@@ -78,6 +81,17 @@ def batch_load_id(records: list[dict]) -> str:
     return hashlib.md5(payload.encode()).hexdigest()[:16]
 
 
+def _minute(ts):
+    """The API timestamp truncated to its minute (bronze_ingest.py:
+    26-30: fromisoformat + strftime '%Y-%m-%dT%H:%M')."""
+    if isinstance(ts, str):
+        ts = datetime.fromisoformat(ts.replace("Z", "+00:00"))
+        ts = ts.replace(tzinfo=None)
+    if ts is not None:
+        ts = ts.replace(second=0, microsecond=0)
+    return ts
+
+
 def records_to_bronze(spark: SparkSession, records: list[dict],
                       load_id: str | None = None) -> DataFrame:
     """API JSON dicts -> typed, snake_cased bronze DataFrame.
@@ -91,31 +105,36 @@ def records_to_bronze(spark: SparkSession, records: list[dict],
     visible instead of silent loss), and each row carries the batch
     ``_load_id`` so a bad batch can be identified and surgically
     deleted from bronze.
+
+    The batch is built column by column into one ``pyarrow.Table``
+    and handed to Spark in one Arrow stream: no per-row Python
+    conversion on the way into the JVM.  The minute column is typed
+    ``timestamp[us, UTC]``, so a naive minute is read as the UTC
+    minute it names, whatever the local time zone of this process.
     """
+    import pyarrow as pa
+
     lid = load_id if load_id is not None else batch_load_id(records)
-    known = {f.name for f in BRONZE_SCHEMA.fields}
-    normalized = []
+    known = set(BRONZE_SCHEMA.names)
+    minutes = []
+    measures: dict[str, list] = {m: [] for m in MEASURES}
+    extras_col = []
     for rec in records:
         row = {snake_case(k): v for k, v in rec.items()}
-        ts = row.get("minutes1_utc")
-        if isinstance(ts, str):
-            ts = datetime.fromisoformat(ts.replace("Z", "+00:00"))
-            ts = ts.replace(tzinfo=None)
-        if ts is not None:
-            ts = ts.replace(second=0, microsecond=0)
-        row["minutes1_utc"] = ts
-        out = {
-            f.name: (float(row[f.name])
-                     if isinstance(f.dataType, DoubleType)
-                     and row.get(f.name) is not None
-                     else row.get(f.name))
-            for f in BRONZE_SCHEMA.fields}
-        extras = {k: str(v) for k, v in sorted(row.items())
-                  if k not in known and v is not None}
-        out["_extras"] = extras or None
-        out["_load_id"] = lid
-        normalized.append(out)
-    return spark.createDataFrame(normalized, BRONZE_FULL_SCHEMA)
+        minutes.append(_minute(row.get("minutes1_utc")))
+        for m, col in measures.items():
+            v = row.get(m)
+            col.append(None if v is None else float(v))
+        extras = [(k, str(v)) for k, v in sorted(row.items())
+                  if k not in known and v is not None]
+        extras_col.append(extras or None)
+    table = pa.Table.from_arrays(
+        [pa.array(minutes, pa.timestamp("us", tz="UTC"))]
+        + [pa.array(measures[m], pa.float64()) for m in MEASURES]
+        + [pa.array(extras_col, pa.map_(pa.string(), pa.string())),
+           pa.array([lid] * len(records), pa.string())],
+        names=BRONZE_FULL_SCHEMA.names)
+    return spark.createDataFrame(table, BRONZE_FULL_SCHEMA)
 
 
 def normalize_columns(df: DataFrame) -> DataFrame:

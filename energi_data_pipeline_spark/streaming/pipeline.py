@@ -9,9 +9,10 @@ Structured Streaming:
     readStream(bronze dir)
       -> foreachBatch( silver builders + gold window + upsert )
 
-``foreachBatch`` reuses the *batch* builders (operators.silver/gold)
-unchanged — one set of semantics, two execution modes — and the
-checkpoint directory replaces the reference's dlt state dir.  The
+``foreachBatch`` runs the *batch* pipeline's own silver and gold
+steps (pipelines.medallion) — one set of semantics and of typed
+reads, two execution modes — and the checkpoint directory replaces
+the reference's dlt state dir.  The
 4-minute warm-up lookback (gold_aggr.py:98) is the batch-side
 equivalent of ``withWatermark("time_id", "4 minutes")``; inside
 foreachBatch we keep the reference's literal two-predicate protocol
@@ -20,44 +21,24 @@ so results are bit-identical with the batch pipeline.
 
 from __future__ import annotations
 
-from datetime import datetime
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import (insert_if_absent, max_watermark, read_layer_table,
-                  table_path)
-from ..operators.gold import build_gold
-from ..operators.silver import build_dim_time, build_fact
-
-EPOCH = datetime(1970, 1, 1)
+from ..io import table_path
+from ..pipelines.medallion import gold_step, silver_step
+from ..sources.normalize import BRONZE_FULL_SCHEMA
 
 
 def process_batch(spark: SparkSession, warehouse: str,
                   bronze_batch: DataFrame) -> None:
-    """One micro-batch: silver upsert then gold window + trim.
+    """One micro-batch: the batch pipeline's silver step over the
+    batch, then its gold step.
 
-    Identical logic to pipelines.medallion but driven by the stream;
-    watermarks still come from the destination tables, so replays
+    Watermarks still come from the destination tables, so replays
     (checkpoint recovery) are idempotent — the anti-join drops rows
     a half-finished previous batch already wrote.
     """
-    fact_dst = read_layer_table(spark, warehouse, "silver",
-                                "fact_power_system")
-    wm = max_watermark(fact_dst, "time_id", EPOCH)
-    insert_if_absent(spark, build_dim_time(bronze_batch, watermark=wm),
-                     warehouse, "silver", "dim_time", keys=["time_id"])
-    insert_if_absent(spark, build_fact(bronze_batch, watermark=wm),
-                     warehouse, "silver", "fact_power_system",
-                     keys=["time_id"])
-
-    fact = read_layer_table(spark, warehouse, "silver", "fact_power_system")
-    dim = read_layer_table(spark, warehouse, "silver", "dim_time")
-    gold_dst = read_layer_table(spark, warehouse, "gold",
-                                "power_system_5min_avg")
-    gwm = max_watermark(gold_dst, "time_id", EPOCH)
-    gold = build_gold(fact, dim, watermark=gwm)
-    insert_if_absent(spark, gold, warehouse, "gold",
-                     "power_system_5min_avg", keys=["time_id"])
+    silver_step(spark, warehouse, bronze_batch)
+    gold_step(spark, warehouse)
 
 
 def run_streaming(spark: SparkSession, warehouse: str,
@@ -69,8 +50,7 @@ def run_streaming(spark: SparkSession, warehouse: str,
     bronze files as the ingest lands them.
     """
     bronze_path = table_path(warehouse, "bronze", "power_system_raw")
-    schema = spark.read.parquet(bronze_path).schema
-    stream = spark.readStream.schema(schema).parquet(bronze_path)
+    stream = spark.readStream.schema(BRONZE_FULL_SCHEMA).parquet(bronze_path)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         process_batch(batch_df.sparkSession, warehouse, batch_df)
