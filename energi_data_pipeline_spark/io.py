@@ -22,9 +22,11 @@ key column of its table (one narrow column, never the measures).
 from __future__ import annotations
 
 import os
+import urllib.parse
+from datetime import timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, TimestampType
 
 from .session import tune
 
@@ -389,13 +391,34 @@ def _hidden(name: str) -> bool:
                                     and "=" not in name)
 
 
-def _has_data_files(path: str) -> bool:
+def _has_data_files(spark: SparkSession, path: str) -> bool:
     """True when the directory ``path`` holds a file a scan would
-    read; False when it is missing or holds only metadata."""
-    for _root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not _hidden(d)]
-        if any(not _hidden(f) for f in files):
-            return True
+    read; False when it is missing or holds only metadata.
+
+    A plain local path is walked with ``os.walk``; a URI
+    (``file://``, ``hdfs://``, ``s3a://`` …) through the session's
+    Hadoop FileSystem, the one the read itself will use.  The local
+    walk is kept because the Hadoop one pays a py4j round trip per
+    listed file: 5 ms against 0.06 ms on a 48-file table, on every
+    layer read of an increment."""
+    if not urllib.parse.urlparse(path).scheme:
+        for _root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            if any(not _hidden(f) for f in files):
+                return True
+        return False
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return False
+    todo = [jpath]
+    while todo:
+        for st in fs.listStatus(todo.pop()):
+            if _hidden(st.getPath().getName()):
+                continue
+            if not st.isDirectory():
+                return True
+            todo.append(st.getPath())
     return False
 
 
@@ -420,7 +443,7 @@ def read_layer_table(spark: SparkSession, warehouse: str, layer: str,
     old snapshot, never a missing table."""
     path = table_path(warehouse, layer, name)
     recover_atomic(path)
-    if not _has_data_files(path):
+    if not _has_data_files(spark, path):
         return None
     reader = spark.read if schema is None else spark.read.schema(schema)
     df = reader.parquet(path)
@@ -447,12 +470,22 @@ def max_watermark(df: DataFrame | None, col: str, default):
     stage is a job of its own).  The job scans ``col``; footers
     cannot answer it, because the time keys are INT96 timestamps,
     written without min/max statistics.  Pass a key-only read
-    (:func:`key_schema`) so it touches one column."""
+    (:func:`key_schema`) so it touches one column.
+
+    A ``TimestampType`` watermark comes back as an aware UTC
+    datetime.  PySpark collects a timestamp as a naive datetime in
+    the process's local time zone; formatted as a cursor, that naive
+    value would name the wrong minute on a non-UTC host, and as a
+    literal it is ambiguous in a DST fall-back hour."""
     if df is None:
         return default
     row = (df.select(col).where(F.col(col).isNotNull())
            .orderBy(F.col(col).desc()).first())
-    return row[0] if row is not None else default
+    if row is None:
+        return default
+    if isinstance(df.schema[col].dataType, TimestampType):
+        return row[0].astimezone(timezone.utc)
+    return row[0]
 
 
 def anti_join_new(new_df: DataFrame, existing: DataFrame | None,

@@ -8,11 +8,15 @@ pushes no predicate into its INT96 minute column, so every increment
 scans all of bronze.
 
 :data:`DIM_TIME_SCHEMA` and :data:`FACT_SCHEMA` declare what the two
-builders write; readers of the silver tables pass them instead of
-inferring them from the files.
+builders write (the fact columns are named once, in
+:data:`FACT_MEASURES`); readers of the silver tables pass them
+instead of inferring them from the files.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (BooleanType, DateType, DoubleType,
@@ -61,16 +65,29 @@ def build_dim_time(bronze: DataFrame, ts_col: str = "minutes1_utc",
     return df.select(ts.alias("time_id"), *time_features(ts)).distinct()
 
 
-#: what :func:`build_fact` writes: the minute key and 13 measures
+#: the 13 fact measures :func:`build_fact` writes, in column order:
+#: output name -> the bronze column(s) it is the sum of
+#: (silver_transform.py:85-106)
+FACT_MEASURES = {
+    "co2_emission": ("co2_emission",),
+    "production_large_plants": ("production_ge100_mw",),
+    "production_small_plants": ("production_lt100_mw",),
+    "solar_production": ("solar_power",),
+    "offshore_wind_production": ("offshore_wind_power",),
+    "onshore_wind_production": ("onshore_wind_power",),
+    "exchange_sum": ("exchange_sum",),
+    "exchange_germany": ("exchange_dk1_de", "exchange_dk2_de"),
+    "exchange_netherlands": ("exchange_dk1_nl",),
+    "exchange_great_brt": ("exchange_dk1_gb",),
+    "exchange_norway": ("exchange_dk1_no",),
+    "exchange_sweden": ("exchange_dk1_se", "exchange_dk2_se"),
+    "exchange_dk1_dk2": ("exchange_dk1_dk2",),
+}
+
+#: what :func:`build_fact` writes: the minute key and the measures
 FACT_SCHEMA = StructType(
     [StructField("time_id", TimestampType())]
-    + [StructField(c, DoubleType()) for c in (
-        "co2_emission", "production_large_plants",
-        "production_small_plants", "solar_production",
-        "offshore_wind_production", "onshore_wind_production",
-        "exchange_sum", "exchange_germany", "exchange_netherlands",
-        "exchange_great_brt", "exchange_norway", "exchange_sweden",
-        "exchange_dk1_dk2")])
+    + [StructField(c, DoubleType()) for c in FACT_MEASURES])
 
 
 def build_fact(bronze: DataFrame, ts_col: str = "minutes1_utc",
@@ -81,20 +98,7 @@ def build_fact(bronze: DataFrame, ts_col: str = "minutes1_utc",
     if watermark is not None:
         df = df.filter(F.col(ts_col) > F.lit(watermark))
     df = df.filter(F.col(ts_col).isNotNull())
-    cols = [F.col(ts_col).alias("time_id")]
-    cols.append(F.col("co2_emission"))
-    cols.append(F.col("production_ge100_mw").alias("production_large_plants"))
-    cols.append(F.col("production_lt100_mw").alias("production_small_plants"))
-    cols.append(F.col("solar_power").alias("solar_production"))
-    cols.append(F.col("offshore_wind_power").alias("offshore_wind_production"))
-    cols.append(F.col("onshore_wind_power").alias("onshore_wind_production"))
-    cols.append(F.col("exchange_sum"))
-    cols.append((F.col("exchange_dk1_de") + F.col("exchange_dk2_de"))
-                .alias("exchange_germany"))
-    cols.append(F.col("exchange_dk1_nl").alias("exchange_netherlands"))
-    cols.append(F.col("exchange_dk1_gb").alias("exchange_great_brt"))
-    cols.append(F.col("exchange_dk1_no").alias("exchange_norway"))
-    cols.append((F.col("exchange_dk1_se") + F.col("exchange_dk2_se"))
-                .alias("exchange_sweden"))
-    cols.append(F.col("exchange_dk1_dk2"))
-    return df.select(*cols)
+    return df.select(
+        F.col(ts_col).alias("time_id"),
+        *[functools.reduce(operator.add, map(F.col, src)).alias(name)
+          for name, src in FACT_MEASURES.items()])

@@ -6,11 +6,14 @@ from __future__ import annotations
 
 import contextlib
 import os
+import time
+from datetime import datetime, timezone
 
 import pytest
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import (LongType, StructField, StructType,
+                               TimestampType)
 
-from energi_data_pipeline_spark.io import (insert_if_absent,
+from energi_data_pipeline_spark.io import (insert_if_absent, max_watermark,
                                            read_layer_table, table_path)
 
 
@@ -43,6 +46,23 @@ def inference_jobs(jobs: list[list[str]]) -> list[list[str]]:
     job only to infer the schema of its files."""
     return [j for j in jobs
             if any("DataFrameReader." in d.split("\n", 1)[0] for d in j)]
+
+
+@contextlib.contextmanager
+def local_tz(name: str):
+    """Run the block with ``name`` as this process's local time zone
+    (the zone PySpark converts collected timestamps into)."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = name
+    time.tzset()
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
 
 
 KEY = StructType([StructField("k", LongType())])
@@ -103,3 +123,34 @@ def test_insert_if_absent_reads_keys_without_inference(spark, tmp_path):
                  read_layer_table(spark, wh, "silver", "t").collect())
     assert [r[0] for r in got] == [1, 2, 3]
     assert got[:2] == [(1, "a"), (2, "b")]
+
+
+def test_uri_warehouse_is_read_not_absent(spark, tmp_path):
+    """A warehouse given as a URI is resolved by the Hadoop FileSystem:
+    an existing table reads as present, so the anti-join runs and a
+    rerun appends nothing."""
+    wh = tmp_path.as_uri()
+    assert wh.startswith("file:")
+    assert read_layer_table(spark, wh, "silver", "t", schema=KEY) is None
+    os.makedirs(table_path(str(tmp_path), "silver", "t"))
+    open(os.path.join(table_path(str(tmp_path), "silver", "t"),
+                      "_SUCCESS"), "w").close()
+    assert read_layer_table(spark, wh, "silver", "t", schema=KEY) is None
+    batch = spark.createDataFrame([(1,), (2,)], KEY)
+    for _ in range(2):
+        insert_if_absent(spark, batch, wh, "silver", "t", keys=["k"])
+    got = read_layer_table(spark, wh, "silver", "t", schema=KEY)
+    assert sorted(r.k for r in got.collect()) == [1, 2]
+
+
+def test_timestamp_watermark_is_utc_in_any_local_zone(spark):
+    """Both instants collect as the same naive local 02:30 in
+    Copenhagen (the 2025-10-26 DST fall-back hour); the watermark
+    keeps them apart and names the UTC minute."""
+    with local_tz("Europe/Copenhagen"):
+        for hour in (0, 1):
+            df = spark.sql(
+                f"SELECT timestamp'2025-10-26 0{hour}:30:00' AS t")
+            assert isinstance(df.schema["t"].dataType, TimestampType)
+            assert max_watermark(df, "t", None) == datetime(
+                2025, 10, 26, hour, 30, tzinfo=timezone.utc)

@@ -17,7 +17,7 @@ from energi_data_pipeline_spark.sources.rest import FixtureSource
 
 from . import reference_oracle
 from .fixtures import make_power_records
-from .test_layer_reads import inference_jobs, job_group
+from .test_layer_reads import inference_jobs, job_group, local_tz
 from .test_pipeline_golden import (gold_rows_duck, gold_rows_spark,
                                    rows_close)
 
@@ -78,6 +78,26 @@ def test_steady_increment_job_budget_and_idempotency(spark, tmp_path):
     # each table unchanged
     run_all(spark, wh, ReplaySource(records))
     assert row_counts(wh) == before
+
+
+def test_increments_ingest_every_record_in_any_local_zone(spark, tmp_path):
+    """The bronze cursor names the UTC minute of the last stored row
+    whatever the local time zone of the driver process: on a host in
+    Copenhagen (UTC+1/+2) two increments still ingest every record,
+    and every table ends equal to the same run on a UTC host."""
+    records = make_power_records()
+    minutes = {r["Minutes1UTC"] for r in records if r["Minutes1UTC"]}
+    whs = {}
+    for tz in ("UTC", "Europe/Copenhagen"):
+        whs[tz] = str(tmp_path / tz.replace("/", "_"))
+        with local_tz(tz):
+            run_all(spark, whs[tz], FixtureSource(upto(records, T1)))
+            run_all(spark, whs[tz], FixtureSource(records))
+    cph = row_counts(whs["Europe/Copenhagen"])
+    assert cph[0] == len(minutes)
+    assert cph == row_counts(whs["UTC"])
+    assert gold_rows_spark(spark, whs["Europe/Copenhagen"]) \
+        == gold_rows_spark(spark, whs["UTC"])
 
 
 def test_lookback_gap_at_boundary_matches_reference(spark, tmp_path):
