@@ -69,7 +69,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from .io import anti_join_new, key_schema, merge_upsert_plan
+from .io import (anti_join_new, key_schema, merge_upsert_plan,
+                 naive_timestamps)
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
@@ -288,7 +289,7 @@ class CommitLogTable:
         return self.transact(spark, lambda _base: df, op="append")
 
     def insert_if_absent(self, spark: SparkSession, df: DataFrame,
-                         keys: list[str]) -> int:
+                         keys: list[str], after=None) -> int:
         """``ON CONFLICT DO NOTHING`` with multi-writer safety: the
         anti-join re-runs against the fresh snapshot on every retry,
         so first-writer-wins holds across concurrent committers.
@@ -299,10 +300,13 @@ class CommitLogTable:
         contract).  The anti-join plan executes exactly once (the
         segment write IS the materialization; the probe is a
         driver-side parquet-footer read).  The snapshot is read key
-        columns only, typed from the batch, as in
+        columns only, typed from the batch, bounded by ``after`` and
+        written in the same storage encoding as
         ``io.insert_if_absent``."""
         return self.transact(
-            spark, lambda base: anti_join_new(df, base, keys),
+            spark,
+            lambda base: naive_timestamps(
+                anti_join_new(df, base, keys, after)),
             op="append", schema=key_schema(df.schema, keys))
 
     def merge(self, spark: SparkSession, source: DataFrame,
@@ -386,13 +390,15 @@ def read_layer_table(spark: SparkSession, warehouse: str, layer: str,
 def insert_if_absent(spark: SparkSession, new_df: DataFrame,
                      warehouse: str, layer: str, name: str,
                      keys: list[str],
-                     partition_by: list[str] | None = None) -> None:
+                     partition_by: list[str] | None = None,
+                     after=None) -> None:
     """Idempotent append through the commit log: the anti-join runs
     inside the optimistic transaction, so first-writer-wins holds
     across CONCURRENT pipeline runs — the property the rename-based
     layout needs io.table_lock (kernel flock) for.  Like
     io.insert_if_absent it reads the destination's key columns only,
-    typed from the batch.
+    typed from the batch and bounded by ``after``, and stores
+    timestamps naive.
 
     ``partition_by`` is accepted for signature parity and ignored:
     segments are immutable whole units addressed by the manifest;
@@ -400,4 +406,4 @@ def insert_if_absent(spark: SparkSession, new_df: DataFrame,
     (per-segment min/max stats), not directory-level."""
     CommitLogTable(
         os.path.join(warehouse, layer, name)
-    ).insert_if_absent(spark, new_df, keys)
+    ).insert_if_absent(spark, new_df, keys, after)

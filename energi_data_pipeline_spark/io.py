@@ -12,18 +12,22 @@ formats:
 * ordered CSV export with header (gold_aggr.py:234-254).
 
 The anti-join reads only the destination's key columns, typed from
-the batch, so it never runs a schema-inference job.  Nothing here
-prunes files: the medallion's layer tables are written unpartitioned,
-and their time keys are INT96 timestamps, whose parquet footers carry
-no min/max statistics — a watermark or an anti-join scans the whole
-key column of its table (one narrow column, never the measures).
+the batch, so it never runs a schema-inference job.  Layer tables
+store timestamps naive, as parquet INT64 ``TIMESTAMP(MICROS,
+isAdjustedToUTC=false)`` (:func:`naive_timestamps`), whose footers
+carry per-row-group min/max.  A watermark, a stats line and the
+key-bounded anti-join read those footers on the driver
+(:func:`footer_stats`, :func:`rows_after`) instead of scanning the
+key column; a frame the footers cannot answer for (a legacy INT96
+file, a non-local URI, a derived frame) is scanned as before.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import urllib.parse
-from datetime import timezone
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType, TimestampType
@@ -459,18 +463,142 @@ def key_schema(schema: StructType, keys: list[str]) -> StructType:
     return StructType([schema[k] for k in keys])
 
 
+_EPOCH_UTC = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+@functools.lru_cache(maxsize=4096)
+def _footer_span_at(path: str, column: str, _mtime_ns: int,
+                    _size: int) -> tuple[int, int | None, int | None] | None:
+    """(rows, min, max) of the timestamp ``column`` in one parquet
+    file, min and max as epoch microseconds (None when it holds no
+    value).  None when the footer cannot say: the column is absent
+    or not an INT64 microsecond timestamp (a legacy INT96 key has no
+    statistics), or a row group holding values has no min/max."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    ci = next((i for i in range(md.num_columns)
+               if md.schema.column(i).path == column), None)
+    if ci is None:
+        return None
+    desc = md.schema.column(ci)
+    if (desc.physical_type != "INT64"
+            or desc.logical_type.type != "TIMESTAMP"
+            or json.loads(desc.logical_type.to_json())["timeUnit"]
+            != "microseconds"):
+        return None
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(ci).statistics
+        if st is not None and st.has_min_max:
+            lo = st.min_raw if lo is None else min(lo, st.min_raw)
+            hi = st.max_raw if hi is None else max(hi, st.max_raw)
+        elif st is None or st.null_count != md.row_group(rg).num_rows:
+            return None
+    return md.num_rows, lo, hi
+
+
+def _scan_files(df: DataFrame) -> list[str] | None:
+    """The local paths of the parquet files ``df`` reads when ``df``
+    is a bare parquet scan (nothing on top of the files, no partition
+    column); None otherwise, or when a file is not on the local file
+    system."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().shortName() != "parquet"
+            or not rel.partitionSchema().isEmpty()):
+        return None
+    paths = []
+    for f in df.inputFiles():
+        uri = urllib.parse.urlparse(f)
+        if uri.scheme not in ("", "file"):
+            return None
+        paths.append(urllib.parse.unquote(uri.path))
+    return paths
+
+
+def _file_spans(df: DataFrame, col: str) -> list[tuple] | None:
+    """Per file of ``df``: (path, rows, min, max) of the
+    ``TimestampType`` column ``col``, min and max as aware UTC
+    datetimes, from the parquet footers (pyarrow, cached per file
+    identity like :func:`parquet_row_count`); None when they cannot
+    answer for every file."""
+    if not isinstance(df.schema[col].dataType, TimestampType):
+        return None
+    files = _scan_files(df)
+    if files is None:
+        return None
+    spans = []
+    for path in files:
+        st = os.stat(path)
+        span = _footer_span_at(path, col, st.st_mtime_ns, st.st_size)
+        if span is None:
+            return None
+        rows, lo, hi = span
+        spans.append((path, rows, *(
+            None if v is None else _EPOCH_UTC + timedelta(microseconds=v)
+            for v in (lo, hi))))
+    return spans
+
+
+def footer_stats(df: DataFrame, col: str) -> tuple | None:
+    """``(COUNT(*), MIN(col), MAX(col))`` of ``df`` from its parquet
+    footers, with no Spark job; min and max are aware UTC datetimes,
+    None when ``col`` holds no value.  None when the footers cannot
+    answer: ``df`` is not a bare parquet scan of local files, ``col``
+    is not a ``TimestampType`` column, or a file has no min/max for
+    it (a legacy INT96 timestamp)."""
+    spans = _file_spans(df, col)
+    if spans is None:
+        return None
+    return (sum(n for _p, n, _lo, _hi in spans),
+            min((lo for _p, _n, lo, _hi in spans if lo is not None),
+                default=None),
+            max((hi for _p, _n, _lo, hi in spans if hi is not None),
+                default=None))
+
+
+def rows_after(df: DataFrame | None, col: str,
+               after: datetime) -> DataFrame | None:
+    """The rows of ``df`` with ``col > after``; None when the footers
+    show there are none.
+
+    Where :func:`footer_stats` can answer, only the files holding a
+    value past ``after`` are read, and when no file does nothing is
+    read at all.  Spark prunes no row group of a naive
+    (isAdjustedToUTC=false) timestamp column, so this choice of files
+    is what bounds the read by the increment instead of the table's
+    history.  Otherwise the whole frame is filtered."""
+    if df is None:
+        return None
+    spans = _file_spans(df, col)
+    if spans is not None:
+        # a naive bound is local time, as PySpark reads a naive literal
+        bound = after.astimezone(timezone.utc)
+        files = [p for p, _n, _lo, hi in spans
+                 if hi is not None and hi > bound]
+        if not files:
+            return None
+        if len(files) < len(spans):
+            df = df.sparkSession.read.schema(df.schema).parquet(*files)
+    return df.where(F.col(col) > F.lit(after))
+
+
 def max_watermark(df: DataFrame | None, col: str, default):
     """``SELECT COALESCE(MAX(col), default)`` — the reference's
     self-watermarking cursor (silver_transform.py:54-58,
     gold_aggr.py:59-63).
 
-    Computed as the top-1 non-null value: each partition keeps its
-    largest and the driver takes the largest of those — one Spark
-    job, where a global aggregate under AQE runs two (its shuffle
-    stage is a job of its own).  The job scans ``col``; footers
-    cannot answer it, because the time keys are INT96 timestamps,
-    written without min/max statistics.  Pass a key-only read
-    (:func:`key_schema`) so it touches one column.
+    Answered from the parquet footers when they can
+    (:func:`footer_stats`): no Spark job.  Otherwise computed as the
+    top-1 non-null value: each partition keeps its largest and the
+    driver takes the largest of those — one Spark job, where a
+    global aggregate under AQE runs two (its shuffle stage is a job
+    of its own).  Pass a key-only read (:func:`key_schema`) so it
+    touches one column.
 
     A ``TimestampType`` watermark comes back as an aware UTC
     datetime.  PySpark collects a timestamp as a naive datetime in
@@ -479,6 +607,9 @@ def max_watermark(df: DataFrame | None, col: str, default):
     literal it is ambiguous in a DST fall-back hour."""
     if df is None:
         return default
+    stats = footer_stats(df, col)
+    if stats is not None:
+        return default if stats[2] is None else stats[2]
     row = (df.select(col).where(F.col(col).isNotNull())
            .orderBy(F.col(col).desc()).first())
     if row is None:
@@ -488,8 +619,28 @@ def max_watermark(df: DataFrame | None, col: str, default):
     return row[0]
 
 
+def naive_timestamps(df: DataFrame) -> DataFrame:
+    """``df`` in the layer tables' storage encoding: every
+    ``TimestampType`` column cast to ``timestamp_ntz``, which parquet
+    stores as INT64 ``TIMESTAMP(MICROS, isAdjustedToUTC=false)`` —
+    the reference's naive ``TIMESTAMP``, with footer min/max, where
+    Spark's default INT96 has none.  The cast keeps the wall clock of
+    the session time zone, which :func:`tune` sets to UTC; readers
+    pass ``TimestampType`` schemas, and Spark reads the naive value
+    back as that UTC instant.  DuckDB reads it as a naive
+    ``TIMESTAMP``, as it read INT96.  (Spark's
+    ``outputTimestampType=TIMESTAMP_MICROS`` writes
+    isAdjustedToUTC=true instead, which DuckDB returns as
+    ``TIMESTAMPTZ``.)"""
+    tune(df.sparkSession)
+    ts = {f.name: F.col(f.name).cast("timestamp_ntz")
+          for f in df.schema if isinstance(f.dataType, TimestampType)}
+    return df.withColumns(ts) if ts else df
+
+
 def anti_join_new(new_df: DataFrame, existing: DataFrame | None,
-                  keys: list[str]) -> DataFrame:
+                  keys: list[str], after: datetime | None = None
+                  ) -> DataFrame:
     """Rows of ``new_df`` whose key is absent from ``existing``.
 
     The Spark-native ``ON CONFLICT DO NOTHING`` half: dedup within
@@ -497,7 +648,16 @@ def anti_join_new(new_df: DataFrame, existing: DataFrame | None,
     ``existing`` only needs its key columns — select them so the
     scan is pruned to the key column and, for small key sets, the
     anti join broadcasts.
+
+    ``after`` bounds the first key: only batch rows with a key past
+    it are kept, so only the destination's keys past it can clash,
+    and ``existing`` is read through :func:`rows_after` — not at all
+    when its footers hold no key past ``after``, which is every
+    steady increment of a self-watermarked table.
     """
+    if after is not None:
+        new_df = new_df.where(F.col(keys[0]) > F.lit(after))
+        existing = rows_after(existing, keys[0], after)
     batch = new_df.dropDuplicates(keys)
     if existing is None:
         return batch
@@ -506,16 +666,20 @@ def anti_join_new(new_df: DataFrame, existing: DataFrame | None,
 
 def insert_if_absent(spark: SparkSession, new_df: DataFrame, warehouse: str,
                      layer: str, name: str, keys: list[str],
-                     partition_by: list[str] | None = None) -> None:
-    """Idempotent append: anti-join against destination, append rest.
+                     partition_by: list[str] | None = None,
+                     after: datetime | None = None) -> None:
+    """Idempotent append: anti-join against destination, append rest,
+    in the storage encoding of :func:`naive_timestamps`.
 
     The destination is read key columns only, typed from the batch's
-    own key fields, so the anti-join never infers a schema; a stored
-    key must therefore keep the type its writer gave it."""
+    own key fields, so the anti-join never infers a schema.
+    ``after`` bounds the anti-join by the first key (see
+    :func:`anti_join_new`)."""
     path = table_path(warehouse, layer, name)
     existing = read_layer_table(spark, warehouse, layer, name,
                                 schema=key_schema(new_df.schema, keys))
-    to_write = anti_join_new(new_df, existing, keys)
+    to_write = naive_timestamps(anti_join_new(new_df, existing, keys,
+                                              after))
     writer = to_write.write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -671,7 +835,8 @@ def _segment_partition_cols(path: str) -> list[str]:
 def compact_batch_segments(spark: SparkSession, warehouse: str,
                            layer: str, name: str, upto_bid: int,
                            partition_by: list[str] | None = None,
-                           write_width: int | None = None) -> int:
+                           write_width: int | None = None,
+                           schema: StructType | None = None) -> int:
     """LSM-style maintenance for :func:`append_batch_segment` tables:
     fold every ``_bid <= upto_bid`` segment (and any previous base)
     into the single base partition ``_bid=-1``, leaving younger
@@ -709,13 +874,18 @@ def compact_batch_segments(spark: SparkSession, warehouse: str,
     over the stream's life is O(batches/N x index) — compacting
     every batch would re-introduce the quadratic total-write-volume
     shape segment appends were built to remove.
+
+    ``schema`` is the segments' schema without ``_bid`` (the appended
+    frames'); given, the read runs no schema-inference job.  A table
+    with no data files compacts nothing; any other read error
+    raises, as in :func:`read_layer_table`.
     """
     path = table_path(warehouse, layer, name)
     recover_atomic(path)
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
+    if not _has_data_files(spark, path):
         return 0
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if "_bid" not in df.columns:
         return 0
     bid = F.col("_bid").cast("long")
@@ -769,7 +939,8 @@ def maybe_compact_segments(spark: SparkSession, warehouse: str,
                            layer: str, name: str, batch_id: int,
                            every: int, horizon: int = 1,
                            partition_by: list[str] | None = None,
-                           write_width: int | None = None) -> int:
+                           write_width: int | None = None,
+                           schema: StructType | None = None) -> int:
     """The wired compaction POLICY for the streaming index tables:
     from inside foreachBatch, fold everything at or below the replay
     horizon once every ``every`` batches — keeping the read-path
@@ -801,7 +972,7 @@ def maybe_compact_segments(spark: SparkSession, warehouse: str,
         return 0
     return compact_batch_segments(spark, warehouse, layer, name, upto,
                                   partition_by=partition_by,
-                                  write_width=write_width)
+                                  write_width=write_width, schema=schema)
 
 
 def export_csv(df: DataFrame, path: str, order_by: list[str],

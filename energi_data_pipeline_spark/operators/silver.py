@@ -3,9 +3,9 @@
 Re-expresses silver_transform.py:61-106 as pure DataFrame
 transforms.  Both builders take an optional watermark and filter
 ``ts > watermark``.  The filter bounds what an increment builds and
-writes, not what it reads: bronze is written unpartitioned and Spark
-pushes no predicate into its INT96 minute column, so every increment
-scans all of bronze.
+writes; what it reads is bounded by the caller, which hands them only
+the bronze files whose footers hold minutes past the watermark
+(io.rows_after in pipelines.medallion).
 
 :data:`DIM_TIME_SCHEMA` and :data:`FACT_SCHEMA` declare what the two
 builders write (the fact columns are named once, in

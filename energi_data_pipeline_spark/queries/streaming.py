@@ -1271,16 +1271,13 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
         # instead of republishing the whole index snapshot, whose
         # total write volume is O(batches x index): quadratic in
         # stream length, the scale-killer shape flagged in round 4.
-        idx_bands = read_layer_table(sess, wh, "silver", "lsh_bands")
-        # band is the partitionBy column; re-cast on read-back so the
-        # union/join keeps its int type even when
-        # partitionColumnTypeInference is disabled (same read-back
-        # typing fix as emb_index's bucket column).
+        # Both index reads pass the batch's own schema: no
+        # schema-inference job, and the band partition column comes
+        # back typed int from the schema, not from the directory name.
+        idx_bands = read_layer_table(sess, wh, "silver", "lsh_bands",
+                                     schema=batch_bands.schema)
         all_bands = (batch_bands if idx_bands is None
-                     else idx_bands.select(
-                         "doc_id", F.col("band").cast("int").alias("band"),
-                         "key")
-                     .unionByName(batch_bands))
+                     else idx_bands.unionByName(batch_bands))
         # the batch side of the candidate probe is one micro-batch of
         # band rows — broadcast it explicitly so the accumulated index
         # side is scanned once and hash-probed map-side, never
@@ -1305,7 +1302,8 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
                         & (F.col("r.doc_id") < F.col("l.doc_id")))
                 .select(F.col("l.doc_id").alias("doc_id"),
                         F.col("r.doc_id").alias("partner_id")))
-        idx_sigs = read_layer_table(sess, wh, "silver", "lsh_index")
+        idx_sigs = read_layer_table(sess, wh, "silver", "lsh_index",
+                                    schema=batch_sigs.schema)
         sigs_all = (batch_sigs if idx_sigs is None
                     else idx_sigs.unionByName(batch_sigs))
         batch_sig_probe = batch_sigs.alias("a")
@@ -1400,11 +1398,10 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
         # 3-batch replay this never fires (a stream shorter than the
         # cycle needs no compaction — and pays none); longer streams
         # fold their cold segments every cycle.
-        for lyr, tbl in (("gold", "dup_verdicts"),
-                         ("silver", "lsh_index"),
-                         ("silver", "lsh_bands")):
+        for sdf, lyr, tbl, _pby, _lbl in appends:
             maybe_compact_segments(sess, wh, lyr, tbl, bid,
-                                   every=SEGMENT_COMPACT_EVERY)
+                                   every=SEGMENT_COMPACT_EVERY,
+                                   schema=sdf.schema)
         mark("compact")
         if segment_listing is not None:
             # rehearsal probe (r12 verdict #6): per-table _bid
@@ -1570,14 +1567,12 @@ def stream_incremental_embedding_index(spark, sf_dir,
         # the broadcast hints below (r12 ADVICE — see the LSH twin)
         n_batch = batch_vec.count()
         mark("bucket")
-        index = read_layer_table(sess, wh, "silver", "emb_index")
-        # bucket comes back as a partition directory value — re-cast
-        # so the union's type matches the batch side exactly
+        # typed by the batch's schema, as in the LSH twin: no
+        # inference job, and the bucket partition column reads bigint
+        index = read_layer_table(sess, wh, "silver", "emb_index",
+                                 schema=batch_vec.schema)
         known = (batch_vec if index is None
-                 else index.select(
-                     "vec_id", "embedding", "nrm",
-                     F.col("bucket").cast("bigint").alias("bucket"))
-                 .unionByName(batch_vec))
+                 else index.unionByName(batch_vec))
         partner = known.select(
             F.col("vec_id").alias("b_id"),
             F.col("embedding").alias("b_emb"),
@@ -1640,10 +1635,10 @@ def stream_incremental_embedding_index(spark, sf_dir,
             mark(lbl)
         # wired compaction policy, same cycle as the LSH twin: bounds
         # the listing for streams longer than the compaction cycle
-        for lyr, tbl in (("gold", "emb_verdicts"),
-                         ("silver", "emb_index")):
+        for sdf, lyr, tbl, _pby, _lbl in appends:
             maybe_compact_segments(sess, wh, lyr, tbl, bid,
-                                   every=SEGMENT_COMPACT_EVERY)
+                                   every=SEGMENT_COMPACT_EVERY,
+                                   schema=sdf.schema)
         mark("compact")
         if stage_times is not None:
             stage_times.append({

@@ -100,6 +100,49 @@ def test_corrupt_part_file_raises(spark, tmp_path, typed):
         df.collect()
 
 
+def _segments(spark, wh, n=3):
+    """A segment-append table of ``n`` batches; returns its schema."""
+    from energi_data_pipeline_spark.io import append_batch_segment
+
+    for b in range(n):
+        batch = spark.range(b * 10, b * 10 + 10).withColumnRenamed("id", "k")
+        append_batch_segment(spark, batch, wh, "silver", "seg", b)
+    return batch.schema
+
+
+@pytest.mark.parametrize("typed", [False, True])
+def test_compaction_of_a_corrupt_segment_raises(spark, tmp_path, typed):
+    """A truncated part file makes compaction fail loudly, never
+    report "nothing to compact"."""
+    from energi_data_pipeline_spark.io import compact_batch_segments
+
+    wh = str(tmp_path)
+    schema = _segments(spark, wh)
+    seg = os.path.join(table_path(wh, "silver", "seg"), "_bid=0")
+    for part in os.listdir(seg):
+        if part.endswith(".parquet"):
+            with open(os.path.join(seg, part), "r+b") as fh:
+                fh.truncate(os.path.getsize(fh.name) // 2)
+    with pytest.raises(Exception):
+        compact_batch_segments(spark, wh, "silver", "seg", upto_bid=1,
+                               schema=schema if typed else None)
+
+
+def test_typed_compaction_runs_no_inference_job(spark, tmp_path):
+    from energi_data_pipeline_spark.io import compact_batch_segments
+
+    wh = str(tmp_path)
+    schema = _segments(spark, wh)
+    assert compact_batch_segments(spark, wh, "silver", "missing", 1,
+                                  schema=schema) == 0
+    with job_group(spark, "typed-compaction") as jobs:
+        assert compact_batch_segments(spark, wh, "silver", "seg", 1,
+                                      schema=schema) == 2
+    assert jobs() and inference_jobs(jobs()) == []
+    got = read_layer_table(spark, wh, "silver", "seg", schema=schema)
+    assert sorted(r.k for r in got.collect()) == list(range(30))
+
+
 def test_typed_read_runs_no_job(spark, tmp_path):
     wh = str(tmp_path)
     spark.range(10).withColumnRenamed("id", "k") \

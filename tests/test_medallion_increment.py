@@ -1,17 +1,23 @@
 """A steady-state medallion increment: its Spark job budget, its
-idempotency, the schemas its typed reads pass, and the reference's
-lookback rule at an increment boundary."""
+idempotency (a crash between the dim and fact inserts included), the
+schemas its typed reads pass, and the reference's lookback rule at an
+increment boundary."""
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
-from energi_data_pipeline_spark.io import parquet_row_count, table_path
+import pytest
+
+from energi_data_pipeline_spark.io import (max_watermark, parquet_row_count,
+                                           read_layer_table, table_path)
 from energi_data_pipeline_spark.operators.gold import (GOLD_SCHEMA,
                                                        build_gold)
 from energi_data_pipeline_spark.operators.silver import (
     DIM_TIME_SCHEMA, FACT_SCHEMA, build_dim_time, build_fact)
-from energi_data_pipeline_spark.pipelines.medallion import run_all
+from energi_data_pipeline_spark.pipelines import medallion
+from energi_data_pipeline_spark.pipelines.medallion import (
+    FACT_KEY, run_all, run_bronze, run_silver)
 from energi_data_pipeline_spark.sources.normalize import BRONZE_FULL_SCHEMA
 from energi_data_pipeline_spark.sources.rest import FixtureSource
 
@@ -27,9 +33,10 @@ T1 = datetime(2025, 11, 29, 10, 50)
 TABLES = [("bronze", "power_system_raw"), ("silver", "dim_time"),
           ("silver", "fact_power_system"), ("gold", "power_system_5min_avg")]
 
-#: jobs one steady-state increment may run: 18 measured (watermark
-#: reads 1 each, anti-join inserts 3-4 each, the silver stats 2)
-MAX_JOBS = 20
+#: jobs one steady-state increment may run: 10 measured (the bronze
+#: insert 3, the dim and fact inserts 2 each, the gold insert 3; the
+#: watermarks and the silver stats read footers and run none)
+MAX_JOBS = 11
 
 
 def upto(records, t: datetime) -> list[dict]:
@@ -70,6 +77,13 @@ def test_steady_increment_job_budget_and_idempotency(spark, tmp_path):
         run_all(spark, wh, FixtureSource(records))
     assert len(jobs()) <= MAX_JOBS, len(jobs())
     assert inference_jobs(jobs()) == []
+    fact = read_layer_table(spark, wh, "silver", "fact_power_system",
+                            schema=FACT_KEY)
+    with job_group(spark, "footer-watermark") as jobs:
+        wm = max_watermark(fact, "time_id", None)
+    assert jobs() == []
+    assert wm == fact.agg({"time_id": "max"}).first()[0].astimezone(
+        timezone.utc)
 
     before = row_counts(wh)
     run_all(spark, wh, FixtureSource(records))
@@ -78,6 +92,40 @@ def test_steady_increment_job_budget_and_idempotency(spark, tmp_path):
     # each table unchanged
     run_all(spark, wh, ReplaySource(records))
     assert row_counts(wh) == before
+
+
+def test_crash_between_dim_and_fact_inserts(spark, tmp_path, monkeypatch):
+    """A crash after the dim insert leaves dim keys past the fact
+    watermark.  The next increment's dim insert still anti-joins
+    them (its footers show keys past the watermark, so it reads
+    those files), and a full replay then adds no row."""
+    records = make_power_records()
+    wh = str(tmp_path / "wh")
+    run_all(spark, wh, FixtureSource(upto(records, T1)))
+    run_bronze(spark, wh, FixtureSource(records))
+    insert = medallion.insert_if_absent
+
+    def crash_at_fact(spark, df, warehouse, layer, name, **kw):
+        if name == "fact_power_system":
+            raise RuntimeError("crash between the dim and fact inserts")
+        insert(spark, df, warehouse, layer, name, **kw)
+    monkeypatch.setattr(medallion, "insert_if_absent", crash_at_fact)
+    with pytest.raises(RuntimeError, match="crash"):
+        run_silver(spark, wh)
+    monkeypatch.undo()
+    dim = read_layer_table(spark, wh, "silver", "dim_time",
+                           schema=DIM_TIME_SCHEMA)
+    fact = read_layer_table(spark, wh, "silver", "fact_power_system",
+                            schema=FACT_KEY)
+    assert max_watermark(dim, "time_id", None) \
+        > max_watermark(fact, "time_id", None)
+
+    run_all(spark, wh, FixtureSource(records))
+    minutes = {r["Minutes1UTC"] for r in records if r["Minutes1UTC"]}
+    after = row_counts(wh)
+    assert after[:3] == [len(minutes)] * 3
+    run_all(spark, wh, ReplaySource(records))
+    assert row_counts(wh) == after
 
 
 def test_increments_ingest_every_record_in_any_local_zone(spark, tmp_path):
