@@ -20,6 +20,15 @@ key-bounded anti-join read those footers on the driver
 (:func:`footer_stats`, :func:`rows_after`) instead of scanning the
 key column; a frame the footers cannot answer for (a legacy INT96
 file, a non-local URI, a derived frame) is scanned as before.
+
+Writers: one per table, as in the reference, whose ACID comes from a
+single local DuckDB file.  A table is published by appends
+(:func:`insert_if_absent`, :func:`append_batch_segment`) or by a
+snapshot swap (:func:`publish_atomic`, which the ``_bid`` segment
+compaction also uses); readers see the old snapshot or the new one,
+never a mix, but nothing here serializes two writers of one table.
+Concurrent or object-store writers need a transactional table format
+(Delta, Iceberg) behind the Data Sources API.
 """
 
 from __future__ import annotations
@@ -991,10 +1000,11 @@ def export_csv(df: DataFrame, path: str, order_by: list[str],
 
 def merge_upsert_plan(target: DataFrame, source: DataFrame,
                       keys: list[str]) -> DataFrame:
-    """MERGE semantics as a relational plan: source rows REPLACE
-    matching target rows (last-writer-wins full-row update) and are
-    INSERTED when no target row matches; unmatched target rows pass
-    through.
+    """MERGE semantics as a relational plan: a source row UPDATES the
+    matching target row column by column, where a NULL in the source
+    keeps the target's value (``coalesce(source, target)`` — what the
+    ``core_merge_upsert`` oracle computes), and is INSERTED when no
+    target row matches; unmatched target rows pass through.
 
     One full-outer join on the merge keys is the whole plan — at
     100 TB that is a single co-partitioned shuffle on the key (and
@@ -1003,7 +1013,7 @@ def merge_upsert_plan(target: DataFrame, source: DataFrame,
     """
     if target.columns != source.columns:
         raise ValueError(
-            f"merge_upsert: schemas differ: {target.columns} vs "
+            f"merge_upsert_plan: schemas differ: {target.columns} vs "
             f"{source.columns}")
     vals = [c for c in target.columns if c not in keys]
     tgt, src = target.alias("t"), source.alias("s")
@@ -1018,14 +1028,12 @@ def publish_atomic(df: DataFrame, path: str,
                    partition_by: list[str] | None = None) -> None:
     """Write a table snapshot and publish it atomically.
 
-    The anti-join/merge write paths are read-modify-write: a crash
-    mid-write must never leave readers a half table (the reference
-    has the same single-writer constraint via DuckDB's transactional
-    file — SURVEY §7 "What's hard" #3).  Spark-native equivalent
-    without a lakehouse format: write the new snapshot to a
-    temporary sibling directory, then ``os.rename`` it into place —
-    atomic on POSIX within a filesystem.  Readers see the old table
-    or the new one, never a mix.
+    A snapshot rewrite is read-modify-write: a crash mid-write must
+    never leave readers a half table (SURVEY §7 "What's hard" #3).
+    Spark-native equivalent without a lakehouse format: write the new
+    snapshot to a temporary sibling directory, then ``os.rename`` it
+    into place — atomic on POSIX within a filesystem.  Readers see
+    the old table or the new one, never a mix.
 
     Crash-safety of the two-rename swap itself: the previous
     snapshot moves to the FIXED name ``{path}.__old`` (not a random
@@ -1034,9 +1042,6 @@ def publish_atomic(df: DataFrame, path: str,
     :func:`recover_atomic` — which every reader calls — by renaming
     ``__old`` back into place.  So the contract holds under any
     single fault: old or new, never a mix, never a missing table.
-    (Concurrent WRITERS still need a transactional table format such
-    as Delta/Iceberg — single-writer is the documented contract,
-    matching the reference.)
     """
     import shutil
     import uuid as _uuid
@@ -1074,259 +1079,3 @@ def recover_atomic(path: str) -> bool:
         os.rename(old, path)
         return True
     return False
-
-
-def merge_upsert(spark: SparkSession, source: DataFrame, warehouse: str,
-                 layer: str, name: str, keys: list[str]) -> None:
-    """Upsert ``source`` into a managed layer table atomically:
-    :func:`merge_upsert_plan` against the current snapshot, published
-    via :func:`publish_atomic`."""
-    path = table_path(warehouse, layer, name)
-    existing = read_layer_table(spark, warehouse, layer, name)
-    merged = (source if existing is None
-              else merge_upsert_plan(existing, source, keys))
-    # safe ordering: the merge plan reads the CURRENT directory while
-    # writing the staged snapshot; the rename swap happens only after
-    # that write (and therefore the read) completes
-    publish_atomic(merged, path)
-
-
-# ------------------------------------------- multi-writer serialization
-class table_lock:
-    """Advisory writer lock for a managed table, used by
-    :func:`merge_upsert_concurrent` (ONLY that wrapper takes it —
-    bare ``merge_upsert`` / ``insert_if_absent`` / ``compact_table``
-    remain single-writer; run them under ``with table_lock(path):``
-    yourself to serialize against the locked writer).  It closes the
-    lost-update gap for writers sharing one POSIX filesystem (the
-    reference's own scope — its ACID comes from a single local
-    DuckDB file).
-
-    Mechanics: kernel ``flock(LOCK_EX)`` on ``{path}.__lock``.  The
-    kernel owns liveness, which removes the whole stale-break
-    protocol (and its unavoidable check-then-act races):
-
-    * a DEAD owner's lock is released by the kernel automatically —
-      there is nothing to "break", so two waiters can never race a
-      break and both enter the critical section;
-    * a LIVE owner is never stolen from, no matter how old its lock
-      file looks — waiters simply block until ``timeout_s``;
-    * the lock file's ``pid ts token`` content is observability
-      only; a torn/garbled write cannot wedge or corrupt exclusion
-      (``stale_s`` is retained for API compatibility but unused);
-    * after acquiring the flock the fd's inode is checked against
-      the path — a release (unlink) that raced our open orphans the
-      fd, which we detect and retry, so lock-file recreation cannot
-      let two writers hold "the" lock on different inodes;
-    * release checks the recorded token before unlinking, so a
-      process only ever removes its OWN lock file.
-
-    NOT a distributed lock: on object stores / multi-node writers
-    use a transactional table format (Delta/Iceberg) — that boundary
-    is documented, not papered over.
-    """
-
-    def __init__(self, path: str, timeout_s: float = 60.0,
-                 stale_s: float = 300.0):
-        self.lock_path = f"{path}.__lock"
-        self.timeout_s = timeout_s
-        self.stale_s = stale_s  # unused; kept for API compatibility
-        self.token: str | None = None
-        self._fd: int | None = None
-
-    def __enter__(self):
-        import fcntl
-        import time
-        import uuid as _uuid
-
-        deadline = time.monotonic() + self.timeout_s
-        while True:
-            fd = os.open(self.lock_path, os.O_CREAT | os.O_RDWR)
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except OSError:
-                os.close(fd)
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"writer lock busy: {self.lock_path}")
-                time.sleep(0.05)
-                continue
-            # flock held — but only on THIS inode.  If a racing
-            # release unlinked the path between our open and flock,
-            # the lock we hold guards an orphaned inode while a new
-            # file (lockable by anyone) sits at the path: retry.
-            try:
-                if os.fstat(fd).st_ino != os.stat(self.lock_path).st_ino:
-                    raise FileNotFoundError
-            except FileNotFoundError:
-                os.close(fd)
-                # same deadline/backoff as the flock-busy branch —
-                # sustained lock churn must not bypass timeout_s or
-                # busy-spin
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"writer lock busy: {self.lock_path}")
-                time.sleep(0.05)
-                continue
-            token = _uuid.uuid4().hex
-            os.ftruncate(fd, 0)
-            os.write(fd, f"{os.getpid()} {time.time()} "
-                         f"{token}".encode())
-            self.token = token
-            self._fd = fd
-            return self
-
-    def __exit__(self, *exc):
-        # Unlink BEFORE dropping the flock: a waiter whose open fd
-        # already points at this inode will briefly flock the orphan,
-        # fail the inode check above, and retry on the fresh path.
-        try:
-            with open(self.lock_path, encoding="utf-8") as fh:
-                _pid, _ts, tok = fh.read().split()
-            if tok == self.token:
-                os.unlink(self.lock_path)
-        except (OSError, ValueError):
-            pass
-        if self._fd is not None:
-            try:
-                os.close(self._fd)  # drops the flock
-            except OSError:
-                pass
-            self._fd = None
-        return False
-
-
-def merge_upsert_concurrent(spark: SparkSession, source: DataFrame,
-                            warehouse: str, layer: str, name: str,
-                            keys: list[str],
-                            timeout_s: float = 60.0) -> None:
-    """:func:`merge_upsert` made safe under concurrent writers on a
-    shared filesystem: the whole read-merge-publish cycle runs under
-    the table's writer lock, so two upserts serialize instead of the
-    second one reading a pre-first-publish snapshot and silently
-    dropping the first writer's rows (lost update)."""
-    path = table_path(warehouse, layer, name)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with table_lock(path, timeout_s=timeout_s):
-        merge_upsert(spark, source, warehouse, layer, name, keys)
-
-
-# ----------------------------------------------- snapshot versioning
-def publish_version(df: DataFrame, path: str, keep: int = 3) -> int:
-    """Write ``df`` as the next numbered snapshot of a versioned
-    table and atomically flip the ``_CURRENT`` pointer to it.
-
-    Lakehouse-lite time travel without a table format dependency:
-    each publish writes ``v=<n>/`` (immutable), then renames a
-    one-line pointer file into place — readers that resolved the
-    pointer keep reading their (immutable) snapshot while new
-    readers see the new one; a crash before the pointer flip leaves
-    the previous version current.  ``keep`` bounds retained history
-    (old versions vacuumed AFTER the flip).  Concurrent writers
-    still need a real transactional format (Delta/Iceberg) — same
-    single-writer contract as the reference.  Returns the new
-    version number.
-
-    Unlike :func:`publish_atomic` (directory rename — atomic on
-    POSIX, nonexistent on object stores), this pointer-flip protocol
-    is the OBJECT-STORE-SAFE publish: immutable ``v=<n>/`` objects
-    plus one single-object pointer write, which S3-class stores
-    apply atomically.  On a cluster writing to an object store,
-    prefer versioned publishes (or a lakehouse format) over the
-    rename swap.
-    """
-    import shutil
-
-    os.makedirs(path, exist_ok=True)
-    versions = sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(path)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit())
-    new_v = (versions[-1] + 1) if versions else 0
-    df.write.mode("overwrite").parquet(os.path.join(path, f"v={new_v}"))
-    pointer_tmp = os.path.join(path, f"_CURRENT.__tmp_{new_v}")
-    with open(pointer_tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(new_v))
-    os.rename(pointer_tmp, os.path.join(path, "_CURRENT"))  # atomic flip
-    for old in versions[:max(0, len(versions) + 1 - keep)]:
-        shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
-    return new_v
-
-
-def read_version(spark: SparkSession, path: str,
-                 version: int | None = None) -> DataFrame:
-    """Read a versioned table: the ``_CURRENT`` snapshot by default,
-    or time-travel to an explicit retained ``version``."""
-    if version is None:
-        with open(os.path.join(path, "_CURRENT"), encoding="utf-8") as fh:
-            version = int(fh.read().strip())
-    vdir = os.path.join(path, f"v={version}")
-    if not os.path.isdir(vdir):
-        raise FileNotFoundError(
-            f"version {version} not retained at {path} "
-            f"(older than the keep window, or never written)")
-    return spark.read.parquet(vdir)
-
-
-def _partition_columns(path: str) -> list[str]:
-    """Hive-style partition columns of a table directory, derived by
-    descending the first ``k=v`` directory chain.  Empty for flat
-    (unpartitioned) tables.  Driver-side metadata peek only — no
-    data files are opened."""
-    cols: list[str] = []
-    cur = path
-    while True:
-        subs = [e for e in os.scandir(cur)
-                if e.is_dir() and "=" in e.name
-                and not e.name.startswith((".", "_"))]
-        if not subs:
-            return cols
-        cols.append(subs[0].name.split("=", 1)[0])
-        cur = subs[0].path
-
-
-def compact_table(spark: SparkSession, path: str,
-                  target_file_bytes: int = 128 << 20) -> int:
-    """Small-file compaction: rewrite a table directory into
-    ``ceil(total_bytes / target_file_bytes)`` parquet files and swap
-    it in atomically (:func:`publish_atomic`).
-
-    Incremental writers (insert_if_absent per micro-batch, per-batch
-    merges) accrete files far smaller than a scan-efficient split;
-    at 100 TB a table of 4 MB files pays ~30x the open/footer cost
-    of 128 MB files and floods the driver with splits.  Compaction
-    is the standard maintenance pass (OPTIMIZE in lakehouse
-    formats).  Returns the target file count.  Single-writer
-    contract, like every publish in this module.
-
-    Partition-aware: bytes are summed with a recursive walk (data
-    files of ``partition_by`` tables live in ``k=v`` subdirs), the
-    partition layout is re-derived from the directory chain, and the
-    rewrite preserves it — each Hive partition is hash-routed whole
-    to one task (``repartition(n, cols)``) so it compacts to one
-    file per partition and downstream cursor predicates keep
-    pruning.  Flat tables keep the shuffle-free ``coalesce`` path.
-    """
-    import math
-
-    recover_atomic(path)
-    n_bytes = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _dirs, files in os.walk(path)
-        for f in files if not f.startswith((".", "_")))
-    n_files = max(1, math.ceil(n_bytes / target_file_bytes))
-    parts = _partition_columns(path)
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev_infer = spark.conf.get(infer_key, "true")
-    if parts:
-        # keep partition values EXACTLY as written: type inference
-        # would read source='01' back as int 1 and the rewrite would
-        # re-encode the directory names, silently changing the data
-        spark.conf.set(infer_key, "false")
-    try:
-        df = spark.read.parquet(path)
-        out = (df.repartition(n_files, *[F.col(c) for c in parts])
-               if parts else df.coalesce(n_files))
-        publish_atomic(out, path, partition_by=parts or None)
-    finally:
-        spark.conf.set(infer_key, prev_infer)
-    return n_files

@@ -97,22 +97,24 @@ def _local_min_label(edge_rows) -> list:
     return [(x, best[find(x)]) for x in parent]
 
 
-def _local_labels_df(edges: DataFrame, src: str, edge_rows):
+def _local_labels_df(pairs: DataFrame, col: str, edge_rows):
     """Driver-side union-find labels as a BROADCAST-HINTED local
-    DataFrame ``(id, cluster_id)`` typed like the source vertex
-    column.  The hint matters for composed consumers (r15 verdict):
-    the label table is bounded by the localization gate (a few MB),
+    DataFrame ``(id, cluster_id)`` typed like ``pairs[col]``, a
+    vertex column after ``src`` and ``dst`` are coerced to their
+    common type — the type the distributed path labels with.  The
+    hint matters for composed consumers (r15 verdict): the label
+    table is bounded by the localization gate (a few MB),
     but without the hint AQE re-plans every label join from size
     estimates — ``curation_cluster_representatives`` paid 12
     exchanges re-joining labels the driver already holds.  The hint
     is inert when the labels ARE the final result."""
     from pyspark.sql import types as T
 
-    id_type = edges.schema[src].dataType
+    id_type = pairs.schema[col].dataType
     schema = T.StructType([
         T.StructField("id", id_type),
         T.StructField("cluster_id", id_type)])
-    local_labels = edges.sparkSession.createDataFrame(
+    local_labels = pairs.sparkSession.createDataFrame(
         _local_min_label(edge_rows), schema)
     return F.broadcast(local_labels)
 
@@ -159,7 +161,7 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     # count is exact and the collect is bounded by local_limit rows.
     if local_limit and sym.count() <= 2 * local_limit:
         return _local_labels_df(
-            edges, src, ((r["u"], r["v"]) for r in sym.collect()))
+            sym, "u", ((r["u"], r["v"]) for r in sym.collect()))
 
     labels = (sym.select(F.col("u").alias("id")).distinct()
               .withColumn("label", F.col("id"))).cache()
@@ -329,7 +331,7 @@ def connected_components_star(edges: DataFrame, src: str, dst: str,
     # already existed).
     if local_limit and n_cur <= local_limit:
         children = _local_labels_df(
-            edges, src, ((r["a"], r["b"]) for r in cur.collect()))
+            cur, "a", ((r["a"], r["b"]) for r in cur.collect()))
         selves = (verts.join(children.select("id"), "id", "left_anti")
                   .withColumn("cluster_id", F.col("id")))
         return children.union(selves)

@@ -51,26 +51,7 @@ FACT_KEY = key_schema(FACT_SCHEMA, ["time_id"])
 GOLD_KEY = key_schema(GOLD_SCHEMA, ["time_id"])
 
 
-def _layer_io(table_format: str):
-    """(read_layer_table, insert_if_absent) for the chosen storage
-    format.  ``"parquet"`` (default): the rename-based layout —
-    correct on any single POSIX filesystem, which is the reference's
-    own scope.  ``"commitlog"``: the put-if-absent commit-log format
-    (commitlog.CommitLogTable) for object-store deployments where
-    atomic rename does not exist; same layer/table addressing, same
-    idempotent-append semantics, plus lock-free multi-writer safety
-    (r07 verdict #5)."""
-    if table_format == "parquet":
-        return read_layer_table, insert_if_absent
-    if table_format == "commitlog":
-        from .. import commitlog
-
-        return commitlog.read_layer_table, commitlog.insert_if_absent
-    raise ValueError(f"unknown table_format {table_format!r}")
-
-
-def run_bronze(spark: SparkSession, warehouse: str, source,
-               table_format: str = "parquet") -> int:
+def run_bronze(spark: SparkSession, warehouse: str, source) -> int:
     """bronze_ingest.py equivalent: fetch records after the cursor,
     normalize, dedup the cursor-boundary rows, append.
 
@@ -79,51 +60,49 @@ def run_bronze(spark: SparkSession, warehouse: str, source,
     reference's external dlt state directory entirely.
     """
     t0 = time.time()
-    read_t, insert_t = _layer_io(table_format)
-    bronze = read_t(spark, warehouse, "bronze", "power_system_raw",
-                    schema=BRONZE_KEY)
+    bronze = read_layer_table(spark, warehouse, "bronze",
+                              "power_system_raw", schema=BRONZE_KEY)
     cursor = max_watermark(bronze, "minutes1_utc", None)
     cursor_str = format_cursor(cursor) if cursor else INITIAL_CURSOR
     records = source.fetch(cursor_str)
     df = records_to_bronze(spark, records)
-    insert_t(spark, df, warehouse, "bronze", "power_system_raw",
-             keys=["minutes1_utc"])
+    insert_if_absent(spark, df, warehouse, "bronze", "power_system_raw",
+                     keys=["minutes1_utc"])
     print(f"bronze: {len(records)} records in {time.time() - t0:.2f}s")
     return len(records)
 
 
-def silver_step(spark: SparkSession, warehouse: str, bronze: DataFrame,
-                table_format: str = "parquet") -> None:
+def silver_step(spark: SparkSession, warehouse: str,
+                bronze: DataFrame) -> None:
     """The silver upsert of ``bronze`` rows past the fact watermark:
     dim insert + fact insert.  Shared by :func:`run_silver` (all of
     bronze) and the streaming micro-batch (one batch of it)."""
-    read_t, insert_t = _layer_io(table_format)
-    fact_dst = read_t(spark, warehouse, "silver", "fact_power_system",
-                      schema=FACT_KEY)
+    fact_dst = read_layer_table(spark, warehouse, "silver",
+                                "fact_power_system", schema=FACT_KEY)
     wm = max_watermark(fact_dst, "time_id", EPOCH)
     bronze = rows_after(bronze, "minutes1_utc", wm)
     if bronze is None:
         return
-    insert_t(spark, build_dim_time(bronze, watermark=wm), warehouse,
-             "silver", "dim_time", keys=["time_id"], after=wm)
-    insert_t(spark, build_fact(bronze, watermark=wm), warehouse,
-             "silver", "fact_power_system", keys=["time_id"], after=wm)
+    insert_if_absent(spark, build_dim_time(bronze, watermark=wm),
+                     warehouse, "silver", "dim_time", keys=["time_id"],
+                     after=wm)
+    insert_if_absent(spark, build_fact(bronze, watermark=wm), warehouse,
+                     "silver", "fact_power_system", keys=["time_id"],
+                     after=wm)
 
 
-def run_silver(spark: SparkSession, warehouse: str,
-               table_format: str = "parquet") -> None:
+def run_silver(spark: SparkSession, warehouse: str) -> None:
     """silver_transform.py equivalent: watermark from the fact table,
     dim upsert + fact insert, stats report."""
-    read_t, _ = _layer_io(table_format)
-    bronze = read_t(spark, warehouse, "bronze", "power_system_raw",
-                    schema=BRONZE_FULL_SCHEMA)
+    bronze = read_layer_table(spark, warehouse, "bronze",
+                              "power_system_raw", schema=BRONZE_FULL_SCHEMA)
     if bronze is None:
         print("silver: no bronze data")
         return
-    silver_step(spark, warehouse, bronze, table_format)
+    silver_step(spark, warehouse, bronze)
 
-    fact = read_t(spark, warehouse, "silver", "fact_power_system",
-                  schema=FACT_KEY)
+    fact = read_layer_table(spark, warehouse, "silver",
+                            "fact_power_system", schema=FACT_KEY)
     if fact is None:
         print("silver: no facts")
         return
@@ -132,59 +111,50 @@ def run_silver(spark: SparkSession, warehouse: str,
     print(f"silver: {total} facts, {earliest} .. {latest}")
 
 
-def gold_step(spark: SparkSession, warehouse: str, scaled: bool = False,
-              table_format: str = "parquet") -> bool:
+def gold_step(spark: SparkSession, warehouse: str,
+              scaled: bool = False) -> bool:
     """The gold upsert: watermark from the gold table, lookback-
     extended window build, trim, idempotent insert.  Shared by
     :func:`run_gold` and the streaming micro-batch; False when
     silver holds no data yet."""
-    read_t, insert_t = _layer_io(table_format)
-    fact = read_t(spark, warehouse, "silver", "fact_power_system",
-                  schema=FACT_SCHEMA)
-    dim = read_t(spark, warehouse, "silver", "dim_time",
-                 schema=DIM_TIME_SCHEMA)
+    fact = read_layer_table(spark, warehouse, "silver",
+                            "fact_power_system", schema=FACT_SCHEMA)
+    dim = read_layer_table(spark, warehouse, "silver", "dim_time",
+                           schema=DIM_TIME_SCHEMA)
     if fact is None or dim is None:
         return False
-    gold_dst = read_t(spark, warehouse, "gold", "power_system_5min_avg",
-                      schema=GOLD_KEY)
+    gold_dst = read_layer_table(spark, warehouse, "gold",
+                                "power_system_5min_avg", schema=GOLD_KEY)
     wm = max_watermark(gold_dst, "time_id", EPOCH)
     gold = build_gold(fact, dim, watermark=wm, scaled=scaled)
-    insert_t(spark, gold, warehouse, "gold",
-             "power_system_5min_avg", keys=["time_id"], after=wm)
+    insert_if_absent(spark, gold, warehouse, "gold",
+                     "power_system_5min_avg", keys=["time_id"], after=wm)
     return True
 
 
 def run_gold(spark: SparkSession, warehouse: str,
-             scaled: bool = False,
-             table_format: str = "parquet") -> None:
+             scaled: bool = False) -> None:
     """gold_aggr.py equivalent (:func:`gold_step`)."""
-    if gold_step(spark, warehouse, scaled, table_format):
+    if gold_step(spark, warehouse, scaled):
         print("gold: 5-minute moving averages updated")
     else:
         print("gold: no silver data")
 
 
 def export_ml_features(spark: SparkSession, warehouse: str,
-                       out_path: str, single_file: bool = True,
-                       table_format: str = "parquet") -> None:
+                       out_path: str, single_file: bool = True) -> None:
     """gold_aggr.py:226-255: ordered 13-column CSV export."""
-    read_t, _ = _layer_io(table_format)
-    gold = read_t(spark, warehouse, "gold", "power_system_5min_avg",
-                  schema=GOLD_SCHEMA)
+    gold = read_layer_table(spark, warehouse, "gold",
+                            "power_system_5min_avg", schema=GOLD_SCHEMA)
     export_csv(gold.select(*EXPORT_COLUMNS), out_path,
                order_by=["time_id"], single_file=single_file)
 
 
 def run_all(spark: SparkSession, warehouse: str, source,
-            csv_path: str | None = None,
-            table_format: str = "parquet") -> None:
-    """Sequential orchestration (the reference's __main__ blocks).
-
-    ``table_format="commitlog"`` runs the whole pipeline on the
-    put-if-absent commit-log format (see _layer_io)."""
-    run_bronze(spark, warehouse, source, table_format=table_format)
-    run_silver(spark, warehouse, table_format=table_format)
-    run_gold(spark, warehouse, table_format=table_format)
+            csv_path: str | None = None) -> None:
+    """Sequential orchestration (the reference's __main__ blocks)."""
+    run_bronze(spark, warehouse, source)
+    run_silver(spark, warehouse)
+    run_gold(spark, warehouse)
     if csv_path:
-        export_ml_features(spark, warehouse, csv_path,
-                           table_format=table_format)
+        export_ml_features(spark, warehouse, csv_path)

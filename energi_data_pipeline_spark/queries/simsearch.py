@@ -508,10 +508,12 @@ def sims_ivf_ann(spark, sf_dir):
     the corpus for assignment (map-only argmin per vector — the
     window is per-vector over {CENT_STRIDE}-ish candidate rows, never
     a corpus-wide sort); the cell id then becomes the shuffle key and
-    each reducer scans one cell.  The query sample, by contrast, is
-    corpus-proportional, so the cell join is unhinted (AQE broadcasts
-    it while it fits).  Ties and float drift are pinned by rounding
-    cosines to 6 decimals and breaking by id on both engines."""
+    each reducer scans one cell.  The cell table, by contrast, is
+    corpus-proportional (about 48 bytes a vector), so the member join
+    broadcasts it only while it fits ``broadcast_budget_bytes`` and
+    falls back to a shuffle join past that.  Ties and float drift
+    are pinned by rounding cosines to 6 decimals and breaking by id
+    on both engines."""
     from ..io import broadcast_budget_bytes
 
     emb = spread(t(spark, sf_dir, "embeddings"))

@@ -727,12 +727,12 @@ def stream_latest_state(spark, sf_dir):
     managed table with ORDERED last-writer-wins (greatest (ts,
     event_id) survives — so replays and out-of-order batches cannot
     regress a key), and publishes the merged WHOLE rows atomically
-    via the crash-safe snapshot swap (not merge_upsert's per-column
-    coalesce, which would resurrect an old non-NULL value over a
-    key's legitimately-NULL newest event).  This is the foreachBatch
-    + upsert pattern (tests/test_streaming_merge.py) promoted to an
-    oracle-paired operator: the final table must equal the batch
-    latest-per-key query over the same events.
+    via the crash-safe snapshot swap (not merge_upsert_plan's
+    per-column coalesce, which would resurrect an old non-NULL value
+    over a key's legitimately-NULL newest event).  This is the
+    foreachBatch + upsert pattern as an oracle-paired operator: the
+    final table must equal the batch latest-per-key query over the
+    same events.
 
     Scale shape: the per-batch reduction is a window over the
     micro-batch only; the merge is one co-partitioned full-outer

@@ -232,3 +232,24 @@ def test_local_and_distributed_schemas_match(spark):
     assert local.schema == dist.schema
     assert ({tuple(r) for r in local.collect()}
             == {tuple(r) for r in dist.collect()})
+
+
+def test_local_labels_take_the_common_id_type(spark):
+    """An int ``src`` beside a long ``dst`` holding ids past 2^31:
+    the driver-side union-find labels carry the long type the
+    distributed path widens to, and the same rows, on both CC
+    operators."""
+    from energi_data_pipeline_spark.operators.graph import (
+        connected_components_star)
+
+    big = 1 << 33
+    edges = spark.createDataFrame(
+        [(1, big), (2, big + 1), (2, 3)], "src int, dst long")
+    want = {(1, 1), (big, 1), (2, 2), (3, 2), (big + 1, 2)}
+    for cc in (connected_components, connected_components_star):
+        local = cc(edges, "src", "dst")
+        dist = cc(edges, "src", "dst", local_limit=0)
+        assert local.schema == dist.schema
+        assert local.schema["id"].dataType.typeName() == "long"
+        assert {tuple(r) for r in local.collect()} == want
+        assert {tuple(r) for r in dist.collect()} == want

@@ -1,9 +1,11 @@
-"""merge_upsert: MERGE-plan semantics + atomic snapshot publish.
+"""Table writes: the MERGE plan, the atomic snapshot publish and the
+``_bid`` segment appends with their compaction.
 
 The reference's only conflict primitive is ON CONFLICT DO NOTHING
-(first-writer-wins); merge_upsert adds the UPDATE half (SURVEY §7
-"What's hard" #3) with a crash-safe publish: staged write + rename
-swap, so readers see the old or the new snapshot, never a mix.
+(first-writer-wins); merge_upsert_plan adds the UPDATE half (SURVEY
+§7 "What's hard" #3), and publish_atomic is the crash-safe publish:
+staged write + rename swap, so readers see the old or the new
+snapshot, never a mix.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ from pathlib import Path
 
 import pytest
 
-from energi_data_pipeline_spark.io import (merge_upsert, merge_upsert_plan,
+from energi_data_pipeline_spark.io import (merge_upsert_plan,
                                            publish_atomic, table_path)
 
 
@@ -25,12 +27,13 @@ def test_merge_plan_update_insert_keep(spark):
     target = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "k int, tag string, v int")
     source = spark.createDataFrame(
-        [(2, "B", 99), (4, "d", 40)], "k int, tag string, v int")
+        [(2, "B", 99), (3, None, 33), (4, "d", 40)],
+        "k int, tag string, v int")
     out = merge_upsert_plan(target, source, ["k"])
     assert _rows(out) == {
         (1, "a", 10),      # unmatched target kept
         (2, "B", 99),      # matched -> source replaces
-        (3, "c", 30),
+        (3, "c", 33),      # matched, NULL in source -> target's tag kept
         (4, "d", 40),      # source-only -> inserted
     }
 
@@ -75,16 +78,6 @@ def test_publish_atomic_recovers_hard_killed_swap(spark, tmp_path):
     assert leftovers == []
 
 
-def test_merge_upsert_end_to_end(spark, tmp_path):
-    wh = str(tmp_path)
-    s1 = spark.createDataFrame([(1, 100), (2, 200)], "k int, v int")
-    merge_upsert(spark, s1, wh, "gold", "acct", ["k"])
-    s2 = spark.createDataFrame([(2, 999), (3, 300)], "k int, v int")
-    merge_upsert(spark, s2, wh, "gold", "acct", ["k"])
-    got = spark.read.parquet(table_path(wh, "gold", "acct"))
-    assert _rows(got) == {(1, 100), (2, 999), (3, 300)}
-
-
 # ------------------------------------------------- property testing
 from hypothesis import HealthCheck, given, settings, strategies as st
 
@@ -117,256 +110,6 @@ def test_merge_plan_matches_dict_semantics(spark, target, source):
     want = dict(t_map)
     want.update(s_map)
     assert out == set(want.items())
-
-
-# ------------------------------------------------ snapshot versioning
-def test_publish_version_time_travel(spark, tmp_path):
-    from energi_data_pipeline_spark.io import publish_version, read_version
-
-    path = str(tmp_path / "vt")
-    assert publish_version(
-        spark.createDataFrame([(1,)], "k int"), path) == 0
-    assert publish_version(
-        spark.createDataFrame([(2,)], "k int"), path) == 1
-    assert _rows(read_version(spark, path)) == {(2,)}          # current
-    assert _rows(read_version(spark, path, 0)) == {(1,)}       # travel
-
-
-def test_publish_version_vacuums_old(spark, tmp_path):
-    import pytest as _pytest
-    from energi_data_pipeline_spark.io import publish_version, read_version
-
-    path = str(tmp_path / "vt")
-    for i in range(5):
-        publish_version(
-            spark.createDataFrame([(i,)], "k int"), path, keep=2)
-    assert _rows(read_version(spark, path)) == {(4,)}
-    assert _rows(read_version(spark, path, 3)) == {(3,)}
-    with _pytest.raises(FileNotFoundError, match="not retained"):
-        read_version(spark, path, 0)
-
-
-def test_compact_table_reduces_files_preserves_rows(spark, tmp_path):
-    from energi_data_pipeline_spark.io import compact_table
-
-    path = str(tmp_path / "t")
-    # accrete many tiny files, as per-batch appends do
-    spark.range(0, 1000).selectExpr("id", "id * 2 AS v") \
-        .repartition(16).write.parquet(path)
-    import os
-    n_before = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert n_before >= 16
-    before = {tuple(r) for r in spark.read.parquet(path).collect()}
-
-    n_target = compact_table(spark, path, target_file_bytes=1 << 30)
-
-    assert n_target == 1
-    n_after = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert n_after == 1
-    after = {tuple(r) for r in spark.read.parquet(path).collect()}
-    assert after == before
-
-
-def test_compact_table_preserves_partition_layout(spark, tmp_path):
-    """ADVICE r3 (medium): compacting a date-partitioned table must
-    keep the Hive layout (k=v dirs) — and size itself from the data
-    files inside those dirs — or downstream cursor predicates lose
-    partition pruning."""
-    from energi_data_pipeline_spark.io import compact_table
-
-    path = str(tmp_path / "tp")
-    spark.range(0, 300) \
-        .selectExpr("id", "CAST(id % 3 AS INT) AS d") \
-        .repartition(8).write.partitionBy("d").parquet(path)
-    import os
-    before = {tuple(r) for r in spark.read.parquet(path).collect()}
-    part_dirs_before = sorted(
-        e for e in os.listdir(path) if e.startswith("d="))
-    assert part_dirs_before == ["d=0", "d=1", "d=2"]
-    # each partition dir holds several small files
-    assert sum(f.endswith(".parquet")
-               for f in os.listdir(os.path.join(path, "d=0"))) > 1
-
-    compact_table(spark, path, target_file_bytes=1 << 30)
-
-    part_dirs_after = sorted(
-        e for e in os.listdir(path) if e.startswith("d="))
-    assert part_dirs_after == ["d=0", "d=1", "d=2"]
-    # no stray data files at the table root (layout preserved)
-    assert not any(f.endswith(".parquet") for f in os.listdir(path))
-    # compacted: one file per partition
-    for d in part_dirs_after:
-        assert sum(f.endswith(".parquet")
-                   for f in os.listdir(os.path.join(path, d))) == 1
-    after = {tuple(r) for r in spark.read.parquet(path).collect()}
-    assert after == before
-
-
-def test_concurrent_merge_upsert_serializes_writers(spark, tmp_path):
-    """Two writers upserting DISJOINT keys concurrently: without the
-    writer lock the read-modify-write races and the slower writer's
-    snapshot can drop the faster one's rows (lost update).  The
-    locked variant must land both."""
-    import threading
-
-    from energi_data_pipeline_spark.io import (merge_upsert_concurrent,
-                                               read_layer_table)
-
-    wh = str(tmp_path / "wh")
-    # seed the table so both writers take the read-merge path
-    merge_upsert_concurrent(
-        spark, spark.createDataFrame([(0, 0)], "k int, v int"),
-        wh, "gold", "acct", keys=["k"])
-
-    errs: list[Exception] = []
-
-    def writer(lo: int) -> None:
-        try:
-            df = spark.createDataFrame(
-                [(k, k * 10) for k in range(lo, lo + 20)], "k int, v int")
-            merge_upsert_concurrent(spark, df, wh, "gold", "acct",
-                                    keys=["k"], timeout_s=120.0)
-        except Exception as ex:  # surfaced below
-            errs.append(ex)
-
-    ts = [threading.Thread(target=writer, args=(lo,))
-          for lo in (100, 200)]
-    for th in ts:
-        th.start()
-    for th in ts:
-        th.join()
-    assert not errs, errs
-
-    got = {r.k for r in read_layer_table(spark, wh, "gold", "acct")
-           .collect()}
-    assert got == {0} | set(range(100, 120)) | set(range(200, 220))
-
-
-def test_table_lock_breaks_stale_and_releases_on_error(tmp_path):
-    import os
-
-    from energi_data_pipeline_spark.io import table_lock
-
-    import subprocess
-
-    path = str(tmp_path / "t")
-    # stale lock from a DEAD pid is broken, not deadlocked on
-    dead = subprocess.Popen(["true"])
-    dead.wait()
-    with open(path + ".__lock", "w", encoding="utf-8") as fh:
-        fh.write(f"{dead.pid} 0.0 deadtoken")
-    with table_lock(path, timeout_s=5.0):
-        assert os.path.exists(path + ".__lock")
-    assert not os.path.exists(path + ".__lock")
-    # the lock is released when the guarded block raises
-    try:
-        with table_lock(path, timeout_s=5.0):
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert not os.path.exists(path + ".__lock")
-    # a LIVE lock times out instead of being stolen — even when its
-    # recorded age exceeds stale_s (no stealing from live writers)
-    with table_lock(path, timeout_s=5.0):
-        import pytest
-
-        with open(path + ".__lock", encoding="utf-8") as fh:
-            pid, _ts, tok = fh.read().split()
-        with open(path + ".__lock", "w", encoding="utf-8") as fh:
-            fh.write(f"{pid} 0.0 {tok}")  # ancient ts, live pid
-        with pytest.raises(TimeoutError):
-            table_lock(path, timeout_s=0.2, stale_s=0.01).__enter__()
-    # release-by-token still worked after the rewrite above
-    assert not os.path.exists(path + ".__lock")
-
-
-def test_table_lock_release_checks_ownership(tmp_path):
-    import os
-
-    from energi_data_pipeline_spark.io import table_lock
-
-    path = str(tmp_path / "t2")
-    lk = table_lock(path, timeout_s=5.0)
-    lk.__enter__()
-    # another process "stole" the path (e.g. after a false break):
-    # our release must NOT unlink a lock we no longer own
-    with open(path + ".__lock", "w", encoding="utf-8") as fh:
-        fh.write(f"{os.getpid()} 0.0 someoneelsestoken")
-    lk.__exit__(None, None, None)
-    assert os.path.exists(path + ".__lock")
-    os.unlink(path + ".__lock")
-
-
-def test_compact_table_preserves_stringy_partition_values(spark, tmp_path):
-    """Partition values that LOOK numeric (source='01') must survive
-    compaction verbatim: type inference would read them back as int
-    1 and re-encode the directory as d=1, silently changing data."""
-    import os
-
-    from energi_data_pipeline_spark.io import compact_table
-
-    path = str(tmp_path / "ts")
-    spark.createDataFrame(
-        [(1, "01"), (2, "01"), (3, "2")], "id int, d string") \
-        .repartition(4).write.partitionBy("d").parquet(path)
-    assert sorted(e for e in os.listdir(path)
-                  if e.startswith("d=")) == ["d=01", "d=2"]
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    spark.conf.set(infer_key, "false")
-    try:
-        before = {tuple(r) for r in spark.read.parquet(path).collect()}
-
-        compact_table(spark, path, target_file_bytes=1 << 30)
-
-        # the directory VALUES survive verbatim — without the
-        # inference guard the rewrite re-encodes d=01 as d=1
-        assert sorted(e for e in os.listdir(path)
-                      if e.startswith("d=")) == ["d=01", "d=2"]
-        after = {tuple(r) for r in spark.read.parquet(path).collect()}
-        assert after == before
-        assert ("01" in {d for _i, d in after})
-    finally:
-        spark.conf.set(infer_key, "true")
-
-
-def test_table_lock_released_when_owner_killed(tmp_path):
-    """The flock rewrite's headline property: a lock whose owner dies
-    WITHOUT cleanup (kill -9) is released by the kernel — no stale-
-    break protocol, no TOCTOU window."""
-    import os
-    import subprocess
-    import sys
-    import textwrap
-    import time
-
-    from energi_data_pipeline_spark.io import table_lock
-
-    repo_root = str(Path(__file__).resolve().parents[1])
-    path = str(tmp_path / "t3")
-    child = subprocess.Popen(
-        [sys.executable, "-c", textwrap.dedent(f"""
-            import sys, time
-            sys.path.insert(0, {repo_root!r})
-            from energi_data_pipeline_spark.io import table_lock
-            lk = table_lock({path!r}, timeout_s=30.0)
-            lk.__enter__()
-            print("HELD", flush=True)
-            time.sleep(60)
-        """)],
-        stdout=subprocess.PIPE, text=True)
-    assert child.stdout.readline().strip() == "HELD"
-    # lock is genuinely held: a short acquire attempt times out
-    import pytest
-
-    with pytest.raises(TimeoutError):
-        table_lock(path, timeout_s=0.3).__enter__()
-    # kill -9 the owner; the kernel drops its flock with the fds
-    child.kill()
-    child.wait()
-    t0 = time.time()
-    with table_lock(path, timeout_s=10.0):
-        pass  # acquired despite the owner never releasing
-    assert time.time() - t0 < 5.0
 
 
 # ----------------- append_batch_segment: idempotent-by-construction

@@ -1,58 +1,12 @@
-"""foreachBatch + merge_upsert: a stream maintaining a LATEST-STATE
-table (continuously-updated current values), complementing the
-medallion's append-only insert-if-absent path.  Replays are
-idempotent because the merge is last-writer-wins on the key.
+"""Streaming upserts: the latest-state merge behind the
+``stream_latest_state`` registry entry (whole-row, ordered
+last-writer-wins) and the incremental index streams, whose verdicts
+must not depend on how the corpus is split into micro-batches.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
-
-import pandas as pd
-
-from energi_data_pipeline_spark.io import merge_upsert, table_path
-
-
-def _write_batches(tmp_path, batches):
-    import os
-
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, rows in enumerate(batches):
-        p = src / f"b{i}.parquet"
-        pd.DataFrame(rows, columns=["k", "v"]).astype(
-            {"k": "int64", "v": "int64"}).to_parquet(p, index=False)
-        os.utime(p, (1_000_000 + i, 1_000_000 + i))
-    return src
-
-
-def test_stream_foreachbatch_merge_latest_state(spark, tmp_path):
-    src = _write_batches(tmp_path, [
-        [(1, 10), (2, 20)],
-        [(2, 21), (3, 30)],          # 2 updated, 3 inserted
-        [(1, 12)],                   # 1 updated
-    ])
-    wh = str(tmp_path / "wh")
-
-    def upsert_batch(batch_df, _batch_id):
-        # within a micro-batch, several versions of a key may arrive;
-        # keep the newest deterministically before merging
-        latest = (batch_df.sort("k", "v")
-                  .groupBy("k").agg({"v": "max"})
-                  .withColumnRenamed("max(v)", "v"))
-        merge_upsert(batch_df.sparkSession, latest, wh, "gold",
-                     "latest_state", keys=["k"])
-
-    q = (spark.readStream.schema("k long, v long")
-         .option("maxFilesPerTrigger", "1").parquet(str(src))
-         .writeStream.foreachBatch(upsert_batch)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-
-    got = {tuple(r) for r in spark.read.parquet(
-        table_path(wh, "gold", "latest_state")).collect()}
-    assert got == {(1, 12), (2, 21), (3, 30)}
 
 
 def test_merge_latest_rows_null_newest_wins(spark):
