@@ -150,17 +150,11 @@ def jvm_heap_bytes(spark) -> int:
     heaps (a 64g-executor / 2g-driver deployment must budget against
     the 2g driver, not the executors).  Falls back to Spark's 1g
     default when neither conf is set."""
-    is_local = False
-    try:
-        is_local = spark.conf.get("spark.master", "").startswith("local")
-    except Exception:
-        pass
+    # conf.get with a default does not raise for an unset key
+    is_local = spark.conf.get("spark.master", "").startswith("local")
 
     def _get(key):
-        try:
-            v = spark.conf.get(key, None)
-        except Exception:
-            v = None
+        v = spark.conf.get(key, None)
         return _parse_mem_bytes(v) if v else None
 
     driver = _get("spark.driver.memory")

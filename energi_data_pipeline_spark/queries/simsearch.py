@@ -530,15 +530,21 @@ def sims_ivf_ann(spark, sf_dir):
     # r16 (same family as sims_ivfpq_ann): min-struct aggregation
     # argmax instead of window rk=1, computed ONCE and cached — the
     # member join and the query side both read the cache instead of
-    # re-running the corpus x centroids assignment
+    # re-running the corpus x centroids assignment.  A zero-norm
+    # vector or centroid has no cosine: try_divide yields NULL where
+    # the oracle's division does (ANSI `/` would raise), and the
+    # leading is-NULL field ranks a NULL after every real cosine, as
+    # the oracle's DESC order does — all-NULL falls to the lowest
+    # cent_id.
     cell = (
         vec.crossJoin(F.broadcast(cent))
         .select("vec_id", "cent_id",
-                F.round(_dot("embedding", "c_emb")
-                        / (F.col("nrm") * F.col("c_nrm")), 6)
+                F.round(F.try_divide(_dot("embedding", "c_emb"),
+                                     F.col("nrm") * F.col("c_nrm")), 6)
                 .alias("c_cos"))
         .groupBy("vec_id")
-        .agg(F.min(F.struct((-F.col("c_cos")).alias("nc"),
+        .agg(F.min(F.struct(F.col("c_cos").isNull().alias("none"),
+                            (-F.col("c_cos")).alias("nc"),
                             F.col("cent_id").alias("c"))).alias("b"))
         .select("vec_id", F.col("b.c").alias("cell_id"))
         .cache())
@@ -558,9 +564,10 @@ def sims_ivf_ann(spark, sf_dir):
         .select("query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 F.col("cell_id"),
-                F.round(_dot("q_emb", "embedding")
-                        / (F.col("q_nrm") * F.col("nrm")), 6)
+                F.round(F.try_divide(_dot("q_emb", "embedding"),
+                                     F.col("q_nrm") * F.col("nrm")), 6)
                 .alias("cosine")))
+    # desc() puts NULL cosines last, as the oracle's DESC does
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
     return (pairs.withColumn("rank", F.row_number().over(w).cast("int"))

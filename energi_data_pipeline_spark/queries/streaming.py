@@ -12,8 +12,9 @@ is still deterministic, so it gets a full DuckDB oracle.
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import functions as F
@@ -80,6 +81,25 @@ def _with_event_time(df, ltz: bool = False):
     return df
 
 
+def write_replay_batch(df, src_dir: str, b: int) -> None:
+    """Write ``df`` as the ``b``-th batch of a file-source replay:
+    one parquet file in ``src_dir`` whose mtime orders it after
+    batches ``0..b-1``.  The file source delivers files in mtime
+    order, so with ``maxFilesPerTrigger=1`` on the reader each file
+    is one micro-batch, in ascending ``b``."""
+    stage = tempfile.mkdtemp(prefix="replay_stage_")
+    try:
+        df.coalesce(1).write.mode("overwrite").parquet(stage)
+        part = next(f for f in os.listdir(stage)
+                    if f.endswith(".parquet"))
+        dst = os.path.join(src_dir, f"batch{b:04d}.parquet")
+        shutil.move(os.path.join(stage, part), dst)
+        mtime = 1_700_000_000 + 100 * b
+        os.utime(dst, (mtime, mtime))
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 def _sliced_events_src(spark, sf_dir: str, n_batches: int) -> str:
     """Ascending-ts single-file slices of ``events.parquet`` in a
     fresh temp dir (caller removes it): the replay source for the
@@ -89,9 +109,6 @@ def _sliced_events_src(spark, sf_dir: str, n_batches: int) -> str:
     nothing and the N-batch replay provably emits the same rows as
     the one-trigger run — the only thing that changes is how many
     micro-batches the engine schedules."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     src = tempfile.mkdtemp(prefix="events_slices_")
@@ -105,42 +122,14 @@ def _sliced_events_src(spark, sf_dir: str, n_batches: int) -> str:
             "_b", F.ntile(n_batches).over(
                 Window.orderBy("ts", "event_id"))) \
             .localCheckpoint(eager=True)
-        now = 1_700_000_000
-        for b in range(1, n_batches + 1):
-            stage = tempfile.mkdtemp(prefix="events_slice_stage_")
-            try:
-                (dn.filter(F.col("_b") == b).drop("_b")
-                 .coalesce(1).write.mode("overwrite").parquet(stage))
-                part = next(f for f in os.listdir(stage)
-                            if f.endswith(".parquet"))
-                dst = os.path.join(src, f"batch{b:03d}.parquet")
-                shutil.move(os.path.join(stage, part), dst)
-                os.utime(dst, (now + 100 * b, now + 100 * b))
-            finally:
-                shutil.rmtree(stage, ignore_errors=True)
+        for b in range(n_batches):
+            write_replay_batch(dn.filter(F.col("_b") == b + 1).drop("_b"),
+                               src, b)
         dn.unpersist()
         return src
     except BaseException:
         shutil.rmtree(src, ignore_errors=True)
         raise
-
-
-def _record_batch_times(q, batch_times: list | None) -> None:
-    """Append per-trigger (rows, triggerExecution-ms) telemetry from
-    a drained query's progress history: the per-micro-batch evidence
-    for the amortization rows.  Best-effort — telemetry must never
-    fail a measurement."""
-    if batch_times is None:
-        return
-    try:
-        for p in q.recentProgress:
-            d = p if isinstance(p, dict) else json.loads(p.json)
-            batch_times.append(
-                {"rows": d.get("numInputRows", 0),
-                 "trigger_ms": (d.get("durationMs") or {})
-                 .get("triggerExecution")})
-    except Exception:
-        pass
 
 
 STREAM_SQL = """
@@ -237,8 +226,7 @@ def stream_sessionization(spark, sf_dir):
 
 
 def run_sessionize_stream(spark, src_dir, glob="events.parquet",
-                          max_files_per_trigger=None, checkpoint=None,
-                          batch_times: list | None = None):
+                          max_files_per_trigger=None, checkpoint=None):
     """Build + drain the sessionization stream; see
     :func:`stream_sessionization`.  ``max_files_per_trigger`` forces
     multiple micro-batches under Trigger.AvailableNow (state-carry
@@ -369,7 +357,6 @@ def run_sessionize_stream(spark, src_dir, glob="events.parquet",
             writer = writer.option("checkpointLocation", checkpoint)
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-        _record_batch_times(q, batch_times)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink)
@@ -563,8 +550,7 @@ WHERE c.event_type = 'click' AND p.event_type = 'purchase'
 
 
 @query("stream_stream_join", SS_JOIN_SQL)
-def stream_stream_join(spark, sf_dir, n_batches: int = 1,
-                       batch_times: list | None = None):
+def stream_stream_join(spark, sf_dir, n_batches: int = 1):
     """STREAM-STREAM inner join: clicks matched to same-user purchases
     within the following hour.  Both sides carry a watermark and the
     join condition bounds event time, so Spark can size and EVICT the
@@ -583,8 +569,6 @@ def stream_stream_join(spark, sf_dir, n_batches: int = 1,
     and any batch-k+1 purchase within the join window implies
     click_ts >= that watermark, so no still-matchable click is ever
     dropped."""
-    import shutil
-
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
     schema = _stream_schema(spark, path)
@@ -623,7 +607,6 @@ def stream_stream_join(spark, sf_dir, n_batches: int = 1,
                  .outputMode("append").trigger(availableNow=True)
                  .start())
             q.awaitTermination()
-            _record_batch_times(q, batch_times)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
     finally:
@@ -739,9 +722,6 @@ def stream_latest_state(spark, sf_dir):
     join on the key (AQE broadcasts the batch-derived side — the
     small one — at runtime); state lives in the table itself, not
     the state store, so the stream restarts stateless."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
     from ..io import publish_atomic, read_layer_table, table_path
 
@@ -810,8 +790,7 @@ WHERE purchase_ts IS NOT NULL
 
 
 @query("stream_stream_left_outer", SS_LEFT_SQL)
-def stream_stream_left_outer(spark, sf_dir, n_batches: int = 1,
-                             batch_times: list | None = None):
+def stream_stream_left_outer(spark, sf_dir, n_batches: int = 1):
     """Stream-stream LEFT OUTER join: every click, matched to
     same-user purchases within the following hour — and emitted
     WITH NULLS once the watermark proves no match can still arrive.
@@ -837,8 +816,6 @@ def stream_stream_left_outer(spark, sf_dir, n_batches: int = 1,
     watermark proves no in-window purchase can still arrive, which
     is the same cutoff the final batch applies — identical rows,
     different scheduling."""
-    import shutil
-
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
     schema = _stream_schema(spark, path)
@@ -878,7 +855,6 @@ def stream_stream_left_outer(spark, sf_dir, n_batches: int = 1,
                  .outputMode("append").trigger(availableNow=True)
                  .start())
             q.awaitTermination()
-            _record_batch_times(q, batch_times)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
     finally:
@@ -1035,7 +1011,6 @@ def _debug_segment_keys(id_col: str) -> list[str] | None:
     index streams: under SPARK_GRAFT_DEBUG_SEGMENT_KEYS=1 every
     append verifies its keys are absent from earlier segments
     (io.append_batch_segment's contract; O(index) cost, debug only)."""
-    import os
     return ([id_col] if os.environ.get("SPARK_GRAFT_DEBUG_SEGMENT_KEYS")
             else None)
 
@@ -1075,12 +1050,6 @@ def _est_row_bytes(df, overrides: dict[str, int] | None = None) -> int:
     return total
 
 
-#: when set to a list by measurement tooling, every gate decision is
-#: appended as {est_bytes, budget, hinted} — the evidence trail for
-#: the x10 knee run (r13 verdict #6); None in production.
-_BCAST_GATE_LOG: list | None = None
-
-
 def _bounded_broadcast(budget_gated_side, est_bytes: int):
     """Broadcast-hint a micro-batch-side relation only while its
     ESTIMATED in-memory size fits the heap-derived budget (r12
@@ -1094,13 +1063,8 @@ def _bounded_broadcast(budget_gated_side, est_bytes: int):
     from ..io import broadcast_budget_bytes
 
     budget = broadcast_budget_bytes(budget_gated_side.sparkSession)
-    hinted = est_bytes <= budget
-    if _BCAST_GATE_LOG is not None:
-        _BCAST_GATE_LOG.append({"est_bytes": int(est_bytes),
-                                "budget": int(budget),
-                                "hinted": hinted})
-    return F.broadcast(budget_gated_side) if hinted \
-        else budget_gated_side
+    return (F.broadcast(budget_gated_side) if est_bytes <= budget
+            else budget_gated_side)
 
 
 def _flag_batch_members(batch_ids, member_ids, id_col: str,
@@ -1140,12 +1104,135 @@ def _flag_batch_members(batch_ids, member_ids, id_col: str,
 SEGMENT_COMPACT_EVERY = 4
 
 
+def _run_index_stream(spark, path: str, corpus, id_col: str,
+                      n_batches: int, verdict_table: str, step,
+                      batch_times: list | None,
+                      stage_times: list | None):
+    """The one driver of the streaming near-dup indexes.
+
+    Replays ``corpus`` (read from ``path``) as ``n_batches``
+    ascending-``id_col`` single-file batches — the verdict rule
+    "partner id < mine" needs lower ids indexed first — and drains
+    them through one ``foreachBatch`` query.  Per micro-batch,
+    ``step(batch_df, wh, mark)`` builds the batch's verdict frame
+    and its index appends, a list of ``(frame, layer, table,
+    partition_by)``; the driver then publishes the verdicts as the
+    gold ``verdict_table`` segment, appends the index segments and
+    runs the compaction policy.  Returns the verdict table, read
+    once and checkpointed before the temp dirs go.
+
+    ``batch_times`` / ``stage_times``, when given, receive the
+    per-batch wall and the per-batch step walls between ``mark``
+    calls (the step's own marks, then ``publish_verdicts``,
+    ``append_index`` and ``compact``).  They observe the one path
+    that always runs; they add no job."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ..io import (append_batch_segment, maybe_compact_segments,
+                      read_layer_table)
+
+    src = tempfile.mkdtemp(prefix="index_stream_src_")
+    wh = tempfile.mkdtemp(prefix="index_stream_wh_")
+    ckpt = tempfile.mkdtemp(prefix="index_stream_ckpt_")
+
+    def run_batch(batch_df, bid):
+        sess = batch_df.sparkSession
+        marks = [("start", time.perf_counter())]
+
+        def mark(label):
+            marks.append((label, time.perf_counter()))
+
+        verdicts, appends = step(batch_df, wh, mark)
+        # idempotent-by-construction segment appends (round-11): each
+        # batch owns the _bid=<batch_id> partition of its tables, so
+        # a replay overwrites its own segment in O(batch) instead of
+        # anti-joining the whole accumulated index.  Batches are
+        # ascending-id spans, key-disjoint by construction, which is
+        # exactly append_batch_segment's contract (asserted under
+        # SPARK_GRAFT_DEBUG_SEGMENT_KEYS=1 via the keys= debug arg).
+        keys = _debug_segment_keys(id_col)
+        # The VERDICTS write goes FIRST and alone: its un-checkpointed
+        # lineage scans the index tables, and on a crash-replay of
+        # this batch the listing includes the stale _bid=N files that
+        # the index appends' dynamic overwrite would delete mid-scan
+        # (review r13: concurrent verdicts+index writes turn the
+        # replay-repair path into a FileNotFoundException / torn
+        # read).  Only the INDEX appends run concurrently: distinct
+        # tables, eagerly checkpointed inputs, and nothing in flight
+        # scans them — a batch pays one write-round of scheduling
+        # floor for all of them.
+        append_batch_segment(sess, verdicts, wh, "gold", verdict_table,
+                             bid, keys=keys)
+        mark("publish_verdicts")
+        with ThreadPoolExecutor(max_workers=len(appends)) as pool:
+            futs = [pool.submit(append_batch_segment, sess, sdf, wh,
+                                layer, table, bid, partition_by=pby,
+                                keys=keys)
+                    for sdf, layer, table, pby in appends]
+            for f in futs:
+                f.result()  # surface the first failure
+        mark("append_index")
+        # wired compaction policy (r11 verdict #4): bound the segment
+        # listing at O(SEGMENT_COMPACT_EVERY + horizon) directories
+        # per table over the stream's life.  A stream shorter than
+        # the cycle never compacts — and pays nothing for it.
+        for sdf, layer, table, _pby in [
+                (verdicts, "gold", verdict_table, None), *appends]:
+            maybe_compact_segments(sess, wh, layer, table, bid,
+                                   every=SEGMENT_COMPACT_EVERY,
+                                   schema=sdf.schema)
+        mark("compact")
+        if stage_times is not None:
+            stage_times.append({
+                label: round(t1 - t0, 3)
+                for (_, t0), (label, t1) in zip(marks, marks[1:])})
+        if batch_times is not None:
+            batch_times.append(round(marks[-1][1] - marks[0][1], 3))
+
+    prev_parts = None
+    try:
+        max_id = corpus.agg(F.max(id_col)).first()[0]
+        span = (max_id + n_batches) // n_batches
+        for b in range(n_batches):
+            write_replay_batch(
+                corpus.filter((F.col(id_col) >= b * span)
+                              & (F.col(id_col) < (b + 1) * span)),
+                src, b)
+        # input-sized shuffle width for the per-batch jobs (the same
+        # 128 MB/partition rule the stateful streams use): a
+        # micro-batch of a few thousand rows through 32-wide
+        # exchanges pays ~5 AQE stage-scheduling floors per job
+        # across ~5 jobs per batch — measured 13.3s -> 9.4s for the
+        # LSH stream at sf0.1 (round-10 A/B).  At 100 TB the
+        # byte-sized rule scales the width back up.
+        prev_parts = _stateful_shuffle_partitions(spark, path)
+        # maxFilesPerTrigger is a SOURCE option: it must be set on the
+        # readStream (on the writer it is silently ignored and the
+        # whole replay collapses into ONE micro-batch — round-6 fix;
+        # the incremental-vs-batch equivalence invariant caught
+        # nothing, because a single batch trivially equals the batch
+        # result)
+        q = (spark.readStream.schema(corpus.schema)
+             .option("maxFilesPerTrigger", "1").parquet(src)
+             .writeStream.foreachBatch(run_batch)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        out = read_layer_table(spark, wh, "gold", verdict_table)
+        return out.localCheckpoint(eager=True)
+    finally:
+        if prev_parts is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        for d in (ckpt, wh, src):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 @query("stream_incremental_lsh_dedup", INCR_LSH_SQL)
 def stream_incremental_lsh_dedup(spark, sf_dir,
                                  n_batches: int = INCR_LSH_BATCHES,
                                  batch_times: list | None = None,
-                                 stage_times: list | None = None,
-                                 segment_listing: list | None = None):
+                                 stage_times: list | None = None):
     """Streaming near-dup INDEX MAINTENANCE — the production shape
     of MinHash-LSH dedup: documents arrive in micro-batches; each
     batch is signed, checked against the ACCUMULATED signature index
@@ -1167,46 +1254,21 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
     is small — AQE broadcasts it; the index side shuffles on the
     band key only) + one key-only anti-join append.  State lives in
     the index TABLE, not the state store, so the stream restarts
-    stateless and the index is queryable mid-stream."""
-    import os as _os
-    import shutil
-    import tempfile
-
+    stateless and the index is queryable mid-stream.  The replay,
+    appends and compaction are :func:`_run_index_stream`'s; the
+    step marks are ``sign`` and ``bands``."""
     from ..functions.hashing import base_hashes, minhash_from_hashes
-    from ..io import (append_batch_segment, maybe_compact_segments,
-                      read_layer_table)
+    from ..io import read_layer_table
     from .dedup import docs_corpus_size, minhash_params
     from .dedup import shingles_from_tokens
     from .text import tokens_col
 
     tune(spark)
-    src = tempfile.mkdtemp(prefix="incr_lsh_src_")
-    wh = tempfile.mkdtemp(prefix="incr_lsh_wh_")
-    ckpt = tempfile.mkdtemp(prefix="incr_lsh_ckpt_")
-
-    d = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
-    schema = d.schema
+    path = os.path.join(sf_dir, "documents.parquet")
     # corpus-adaptive signature width/banding, same floor-preserving
     # rule as the batch LSH family (dedup.minhash_params)
     nh, nb = minhash_params(docs_corpus_size(sf_dir))
     rpb = nh // nb
-    max_id = d.agg(F.max("doc_id")).first()[0]
-    span = (max_id + n_batches) // n_batches
-    # replay the corpus as ascending-id single-file batches; mtimes
-    # force the file source to deliver them in id order (the verdict
-    # rule "partner id < mine" needs lower ids indexed first)
-    now = 1_700_000_000
-    for b in range(n_batches):
-        stage = tempfile.mkdtemp(prefix="incr_lsh_stage_")
-        (d.filter((F.col("doc_id") >= b * span)
-                  & (F.col("doc_id") < (b + 1) * span))
-         .coalesce(1).write.mode("overwrite").parquet(stage))
-        part = next(f for f in _os.listdir(stage)
-                    if f.endswith(".parquet"))
-        dst = _os.path.join(src, f"batch{b}.parquet")
-        shutil.move(_os.path.join(stage, part), dst)
-        _os.utime(dst, (now + 100 * b, now + 100 * b))
-        shutil.rmtree(stage, ignore_errors=True)
 
     def sign(df):
         hashed = df.select(
@@ -1231,15 +1293,7 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
                 for b in range(nb)])).alias("bk")
         ).select("doc_id", "bk.band", "bk.key")
 
-    def process_batch(batch_df, bid):
-        import time as _time
-
-        marks = [("start", _time.perf_counter())]
-
-        def mark(label):
-            if stage_times is not None:
-                marks.append((label, _time.perf_counter()))
-
+    def step(batch_df, wh, mark):
         sess = batch_df.sparkSession
         # a micro-batch arrives as ONE file = ONE partition (each
         # replay batch is a single coalesced parquet), so without a
@@ -1334,127 +1388,15 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
         verdicts = _flag_batch_members(
             batch_sigs.select("doc_id"), dup_ids,
             "doc_id", "is_dup_of_earlier", n_batch)
-        if stage_times is not None:
-            # instrumented runs materialize HERE so the detection
-            # join cost and the verdict-segment write cost are
-            # separately observable (r11 verdict #3: the fused stage
-            # was 44% of the wall and never decomposed); the append
-            # then re-reads the checkpointed rows.  The production /
-            # headline path skips the extra job and fuses detect +
-            # publish into the single write action.
-            verdicts = verdicts.localCheckpoint(eager=True)
-        mark("detect_verdicts")
-        # idempotent-by-construction segment appends (round-11): each
-        # batch owns the _bid=<batch_id> partition of its tables, so
-        # a replay overwrites its own segment in O(batch) — the
-        # previous insert_if_absent anti-joins re-read the WHOLE
-        # accumulated index per batch (O(index), ~2.3s/run of the
-        # sf0.1 stage wall) purely for replay insurance.  Batches are
-        # ascending-id spans, key-disjoint by construction, which is
-        # exactly append_batch_segment's contract (asserted under
-        # SPARK_GRAFT_DEBUG_SEGMENT_KEYS=1 via the keys= debug arg).
-        dbg_keys = _debug_segment_keys("doc_id")
-        appends = [
-            (verdicts, "gold", "dup_verdicts", None,
-             "publish_verdicts"),
-            (batch_sigs, "silver", "lsh_index", None,
-             "append_sig_index"),
-            (batch_bands, "silver", "lsh_bands", ["band"],
-             "append_band_postings"),
-        ]
-        if stage_times is not None:
-            # instrumented runs keep the appends SERIAL so each
-            # stage's cost is separately observable
-            for sdf, lyr, tbl, pby, lbl in appends:
-                append_batch_segment(sess, sdf, wh, lyr, tbl, bid,
-                                     partition_by=pby, keys=dbg_keys)
-                mark(lbl)
-        else:
-            # Production path: the VERDICTS write goes FIRST and
-            # alone — its un-checkpointed lineage scans the two
-            # index tables, and on a crash-replay of this batch the
-            # listing includes the stale _bid=N files that the index
-            # appends' dynamic overwrite would delete mid-scan
-            # (review r13: concurrent verdicts+index writes turn the
-            # replay-repair path into a FileNotFoundException / torn
-            # read).  Only the two INDEX appends run concurrently:
-            # distinct tables, both inputs eagerly checkpointed, and
-            # neither is scanned by anything in flight — a batch
-            # pays two write-rounds of scheduling floor, not three.
-            append_batch_segment(sess, verdicts, wh, "gold",
-                                 "dup_verdicts", bid, keys=dbg_keys)
-            from concurrent.futures import ThreadPoolExecutor
+        # lsh_bands last: perfbench sizes the index warehouse after
+        # its compaction call, the last of the batch
+        return verdicts, [
+            (batch_sigs, "silver", "lsh_index", None),
+            (batch_bands, "silver", "lsh_bands", ["band"])]
 
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [pool.submit(append_batch_segment, sess, sdf,
-                                    wh, lyr, tbl, bid,
-                                    partition_by=pby, keys=dbg_keys)
-                        for sdf, lyr, tbl, pby, _ in appends[1:]]
-                for f in futs:
-                    f.result()  # surface the first failure
-        # wired compaction policy (r11 verdict #4): bound the segment
-        # listing at O(SEGMENT_COMPACT_EVERY + horizon) directories
-        # per index table over the stream's life.  At the default
-        # 3-batch replay this never fires (a stream shorter than the
-        # cycle needs no compaction — and pays none); longer streams
-        # fold their cold segments every cycle.
-        for sdf, lyr, tbl, _pby, _lbl in appends:
-            maybe_compact_segments(sess, wh, lyr, tbl, bid,
-                                   every=SEGMENT_COMPACT_EVERY,
-                                   schema=sdf.schema)
-        mark("compact")
-        if segment_listing is not None:
-            # rehearsal probe (r12 verdict #6): per-table _bid
-            # directory counts AFTER this batch's appends+compaction
-            # — the listing-bound contract measured in motion
-            from ..io import table_path as _tp
-            segment_listing.append({
-                tbl: sum(1 for e in _os.listdir(_tp(wh, lyr, tbl))
-                         if e.startswith("_bid="))
-                for lyr, tbl in (("gold", "dup_verdicts"),
-                                 ("silver", "lsh_index"),
-                                 ("silver", "lsh_bands"))})
-        if stage_times is not None:
-            stage_times.append({
-                lbl: round(t1 - t0, 3)
-                for (_, t0), (lbl, t1) in zip(marks, marks[1:])})
-
-    def timed_batch(batch_df, bid):
-        import time as _time
-
-        t0 = _time.perf_counter()
-        process_batch(batch_df, bid)
-        if batch_times is not None:
-            batch_times.append(round(_time.perf_counter() - t0, 3))
-
-    # input-sized shuffle width for the per-batch jobs (the same
-    # 128 MB/partition rule the stateful streams use): a micro-batch
-    # of a few thousand docs through 32-wide exchanges pays ~5 AQE
-    # stage-scheduling floors per job across ~5 jobs per batch —
-    # measured 13.3s -> 9.4s at sf0.1 (round-10 A/B).  At 100 TB the
-    # byte-sized rule scales the width back up; restored in finally.
-    prev_parts = _stateful_shuffle_partitions(
-        spark, _os.path.join(sf_dir, "documents.parquet"))
-    try:
-        # maxFilesPerTrigger is a SOURCE option: it must be set on the
-        # readStream (on the writer it is silently ignored and the
-        # whole replay collapses into ONE micro-batch — round-6 fix;
-        # the incremental-vs-batch equivalence invariant is what
-        # caught nothing here, because a single batch trivially
-        # equals the batch result)
-        q = (spark.readStream.schema(schema)
-             .option("maxFilesPerTrigger", "1").parquet(src)
-             .writeStream.foreachBatch(timed_batch)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        out = read_layer_table(spark, wh, "gold", "dup_verdicts")
-        return out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(wh, ignore_errors=True)
-        shutil.rmtree(src, ignore_errors=True)
+    return _run_index_stream(
+        spark, path, spark.read.parquet(path), "doc_id", n_batches,
+        "dup_verdicts", step, batch_times, stage_times)
 
 
 # ------------------- streaming incremental embedding near-dup index
@@ -1510,50 +1452,21 @@ def stream_incremental_embedding_index(spark, sf_dir,
     Scale shape: per batch, signature+bucket is map-only; the
     candidate join shuffles on the bucket key only (batch side small
     — AQE broadcasts it); the index table is the queryable state,
-    so restarts are stateless and dedup decisions are auditable."""
-    import os as _os
-    import shutil
-    import tempfile
-
-    from ..io import (append_batch_segment, maybe_compact_segments,
-                      read_layer_table)
+    so restarts are stateless and dedup decisions are auditable.
+    The replay, appends and compaction are
+    :func:`_run_index_stream`'s; the step mark is ``bucket``."""
+    from ..io import read_layer_table
 
     tune(spark)
-    src = tempfile.mkdtemp(prefix="emb_idx_src_")
-    wh = tempfile.mkdtemp(prefix="emb_idx_wh_")
-    ckpt = tempfile.mkdtemp(prefix="emb_idx_ckpt_")
-
-    d = spark.read.parquet(_os.path.join(sf_dir, "embeddings.parquet"))
-    schema = d.schema
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    d = spark.read.parquet(path)
     planes = neardup_planes(corpus_size(sf_dir))
     # vector width for the per-batch broadcast byte estimates (one
     # setup-time row fetch; every corpus row shares the dimension)
     first_emb = d.select("embedding").first()
     dim = len(first_emb[0]) if first_emb and first_emb[0] else 0
-    max_id = d.agg(F.max("vec_id")).first()[0]
-    span = (max_id + n_batches) // n_batches
-    now = 1_700_000_000
-    for b in range(n_batches):
-        stage = tempfile.mkdtemp(prefix="emb_idx_stage_")
-        (d.filter((F.col("vec_id") >= b * span)
-                  & (F.col("vec_id") < (b + 1) * span))
-         .coalesce(1).write.mode("overwrite").parquet(stage))
-        part = next(f for f in _os.listdir(stage)
-                    if f.endswith(".parquet"))
-        dst = _os.path.join(src, f"batch{b}.parquet")
-        shutil.move(_os.path.join(stage, part), dst)
-        _os.utime(dst, (now + 100 * b, now + 100 * b))
-        shutil.rmtree(stage, ignore_errors=True)
 
-    def process_batch(batch_df, bid):
-        import time as _time
-
-        marks = [("start", _time.perf_counter())]
-
-        def mark(label):
-            if stage_times is not None:
-                marks.append((label, _time.perf_counter()))
-
+    def step(batch_df, wh, mark):
         sess = batch_df.sparkSession
         # single-file micro-batch = single partition: fan out before
         # the per-vector norm/plane math (same fix as the LSH twin's
@@ -1601,80 +1514,14 @@ def stream_incremental_embedding_index(spark, sf_dir,
         verdicts = _flag_batch_members(
             batch_vec.select("vec_id"), dup_ids,
             "vec_id", "is_dup_of_earlier", n_batch)
-        if stage_times is not None:
-            # instrumented runs materialize HERE so the in-bucket
-            # cosine detect cost and the verdict-segment write are
-            # separately observable (same decomposition the LSH twin
-            # got in r12; production path fuses detect+publish)
-            verdicts = verdicts.localCheckpoint(eager=True)
-        mark("detect_verdicts")
-        # idempotent-by-construction segment appends (round-11, same
-        # rationale as the LSH twin): replays overwrite their own
-        # _bid partition instead of anti-joining the whole index.
-        # Batches are ascending-id spans, key-disjoint by
-        # construction (asserted under SPARK_GRAFT_DEBUG_SEGMENT_KEYS).
-        dbg_keys = _debug_segment_keys("vec_id")
         # append the batch delta only (bucket-partitioned index) —
         # the full-snapshot republish was O(batches x index) total
         # write volume, quadratic in stream length
-        appends = [
-            (verdicts, "gold", "emb_verdicts", None,
-             "publish_verdicts"),
-            (batch_vec, "silver", "emb_index", ["bucket"],
-             "append_vec_index"),
-        ]
-        # SERIAL, verdicts first (review r13, same reasoning as the
-        # LSH twin): the verdicts lineage scans emb_index, and a
-        # crash-replay's stale _bid=N files must not be deleted by a
-        # concurrent index overwrite mid-scan.  With only one index
-        # append after the verdicts barrier there is nothing left to
-        # parallelize here.
-        for sdf, lyr, tbl, pby, lbl in appends:
-            append_batch_segment(sess, sdf, wh, lyr, tbl, bid,
-                                 partition_by=pby, keys=dbg_keys)
-            mark(lbl)
-        # wired compaction policy, same cycle as the LSH twin: bounds
-        # the listing for streams longer than the compaction cycle
-        for sdf, lyr, tbl, _pby, _lbl in appends:
-            maybe_compact_segments(sess, wh, lyr, tbl, bid,
-                                   every=SEGMENT_COMPACT_EVERY,
-                                   schema=sdf.schema)
-        mark("compact")
-        if stage_times is not None:
-            stage_times.append({
-                lbl: round(t1 - t0, 3)
-                for (_, t0), (lbl, t1) in zip(marks, marks[1:])})
+        return verdicts, [(batch_vec, "silver", "emb_index", ["bucket"])]
 
-    def timed_batch(batch_df, bid):
-        import time as _time
-
-        t0 = _time.perf_counter()
-        process_batch(batch_df, bid)
-        if batch_times is not None:
-            batch_times.append(round(_time.perf_counter() - t0, 3))
-
-    # input-sized shuffle width for the per-batch jobs (see the LSH
-    # twin's A/B: micro-batch exchanges at session width are mostly
-    # AQE stage-scheduling floor); restored in finally
-    prev_parts = _stateful_shuffle_partitions(
-        spark, _os.path.join(sf_dir, "embeddings.parquet"))
-    try:
-        # maxFilesPerTrigger: source option (same round-6 fix as the
-        # LSH stream — on the writer it is ignored and the replay
-        # runs as one batch)
-        q = (spark.readStream.schema(schema)
-             .option("maxFilesPerTrigger", "1").parquet(src)
-             .writeStream.foreachBatch(timed_batch)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-        out = read_layer_table(spark, wh, "gold", "emb_verdicts")
-        return out.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(wh, ignore_errors=True)
-        shutil.rmtree(src, ignore_errors=True)
+    return _run_index_stream(
+        spark, path, d, "vec_id", n_batches, "emb_verdicts", step,
+        batch_times, stage_times)
 
 
 # stream_incremental_embedding_index's oracle bakes the test-scale

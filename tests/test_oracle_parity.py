@@ -220,3 +220,50 @@ def test_gate_bool_exprs_match_entries(spark):
         .filter(F.size(tokens_col(F.col("text"))) == 0)
         .select("doc_id").collect())}
     assert missing == zero
+
+
+def test_ivf_ann_zero_norm_centroid_matches_oracle(spark, tmp_path):
+    """A centroid with an all-zero embedding has no cosine: the
+    oracle's division yields NULL, which its ``ORDER BY ... DESC``
+    ranks after every real cosine.  So no vector joins the zero
+    centroid's cell unless all its cosines are NULL (the zero vector
+    itself, which falls to the lowest ``cent_id``), and a query's
+    pair with the zero vector surfaces with a NULL cosine, ranked
+    last."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from energi_data_pipeline_spark.queries.simsearch import (
+        CENT_STRIDE, QUERY_STRIDE)
+
+    dim, n = 8, 70
+    zero = CENT_STRIDE
+    rng = np.random.default_rng(7)
+    e1, e2 = np.eye(dim)[0], np.eye(dim)[1]
+    emb = [e1 + 0.3 * rng.standard_normal(dim) for _ in range(n)]
+    # cell 0 holds the e2 vectors, cell 2*CENT_STRIDE the e1 ones
+    for i in (0, 1, 2, 3):
+        emb[i] = e2 + 0.3 * rng.standard_normal(dim)
+    emb[2 * CENT_STRIDE] = e1
+    emb[zero] = np.zeros(dim)
+    assert zero % QUERY_STRIDE != 0  # a centroid, not a query
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(n), type=pa.int64()),
+        "embedding": pa.array([list(map(float, v)) for v in emb],
+                              type=pa.list_(pa.float32())),
+    }), str(tmp_path / "embeddings.parquet"))
+
+    qd = REGISTRY["sims_ivf_ann"]
+    con = duck_connection(str(tmp_path))
+    try:
+        df = qd.fn(spark, str(tmp_path))
+        res = compare(df, con, qd.oracle)
+        assert res["ok"], res
+        got = {(r.query_id, r.neighbor_id): (r.cell_id, r.cosine)
+               for r in df.collect()}
+    finally:
+        con.close()
+        spark.catalog.clearCache()
+    # the zero vector sits in the lowest cell, beside query 0
+    assert got[(0, zero)] == (0, None)

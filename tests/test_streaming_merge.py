@@ -94,3 +94,51 @@ def test_incremental_emb_index_disjoint_keys_contract(spark, monkeypatch):
             st.stream_incremental_embedding_index(spark, sf)
             .collect()}
     assert got == want and len(got) > 0
+
+
+def test_instrumented_lsh_stream_is_the_production_path(spark,
+                                                         monkeypatch):
+    """``stage_times``/``batch_times`` only observe: a run that passes
+    them checkpoints and appends exactly as often as one that does
+    not, emits the same verdicts, and records one stage record per
+    micro-batch with the production path's step marks."""
+    import energi_data_pipeline_spark.io as eio
+    import energi_data_pipeline_spark.queries.streaming as st
+
+    from .conftest import SF0001
+
+    df_cls = type(spark.range(1))
+    calls = {"localCheckpoint": 0, "append_batch_segment": 0}
+
+    def counted(name, fn):
+        def wrapper(*a, **kw):
+            calls[name] += 1
+            return fn(*a, **kw)
+        return wrapper
+
+    monkeypatch.setattr(df_cls, "localCheckpoint",
+                        counted("localCheckpoint",
+                                df_cls.localCheckpoint))
+    monkeypatch.setattr(eio, "append_batch_segment",
+                        counted("append_batch_segment",
+                                eio.append_batch_segment))
+
+    def run(**kw):
+        calls.update(localCheckpoint=0, append_batch_segment=0)
+        rows = {tuple(r) for r in
+                st.stream_incremental_lsh_dedup(spark, SF0001, **kw)
+                .collect()}
+        return rows, dict(calls)
+
+    stage_times: list = []
+    batch_times: list = []
+    timed, timed_calls = run(stage_times=stage_times,
+                             batch_times=batch_times)
+    plain, plain_calls = run()
+    assert timed == plain and len(plain) > 0
+    assert timed_calls == plain_calls
+    assert plain_calls["append_batch_segment"] == 3 * st.INCR_LSH_BATCHES
+    assert len(stage_times) == len(batch_times) == st.INCR_LSH_BATCHES
+    for rec in stage_times:
+        assert list(rec) == ["sign", "bands", "publish_verdicts",
+                             "append_index", "compact"]

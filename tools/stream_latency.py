@@ -80,6 +80,8 @@ def medallion_latency(spark, days_per_batch: float,
     batches, foreachBatch silver+gold, per-batch wall recorded."""
     from energi_data_pipeline_spark.sources.normalize import \
         records_to_bronze
+    from energi_data_pipeline_spark.queries.streaming import \
+        write_replay_batch
     from energi_data_pipeline_spark.streaming.pipeline import process_batch
 
     wh = tempfile.mkdtemp(prefix="lat_wh_")
@@ -87,20 +89,13 @@ def medallion_latency(spark, days_per_batch: float,
     bronze_dir = os.path.join(wh, "bronze", "power_system_raw")
     os.makedirs(bronze_dir)
     day0 = datetime(2025, 1, 1)
-    now = 1_700_000_000
     schema = None
     for b in range(n_batches):
         recs = gen_day_records(day0 + timedelta(days=b * days_per_batch),
                                days_per_batch, seed=100 + b)
         df = records_to_bronze(spark, recs)
         schema = df.schema
-        stage = tempfile.mkdtemp(prefix="lat_stage_")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        dst = os.path.join(bronze_dir, f"batch{b:04d}.parquet")
-        shutil.move(os.path.join(stage, part), dst)
-        os.utime(dst, (now + 100 * b, now + 100 * b))
-        shutil.rmtree(stage, ignore_errors=True)
+        write_replay_batch(df, bronze_dir, b)
 
     times: list[float] = []
 
