@@ -7,4 +7,4 @@ whole-stage codegen — no Python UDFs on the hot path.
 
 from .timeparts import dow_sunday0, is_weekend, season  # noqa: F401
 from .guards import guarded_ratio  # noqa: F401
-from .hashing import stable_hash64, minhash_sig  # noqa: F401
+from .hashing import stable_hash64  # noqa: F401

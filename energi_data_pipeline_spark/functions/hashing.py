@@ -36,25 +36,13 @@ def minhash_seed(k: int) -> tuple[int, int]:
     return (_A0 + 2 * k, _B0 + 17 * k)
 
 
-def minhash_sig(tokens: Column, num_hashes: int) -> Column:
-    """MinHash signature (array<bigint>) over an array of strings.
-
-    For each of ``num_hashes`` universal hashes, the minimum of
-    ``(a*(h(t) mod p) + b) mod p`` over the token set.  Identical
-    SQL runs in DuckDB (list_transform/list_min) for the oracle.
-    """
-    hs = base_hashes(tokens)
-    return F.array(*[minhash_from_hashes(hs, k) for k in range(num_hashes)])
-
-
 def base_hashes(tokens: Column) -> Column:
     """``array<bigint>`` of 31-bit base hashes for a token array.
 
-    Split out from the signature so the md5 work (the expensive
-    part) runs ONCE per token; the k universal-hash minima are then
-    cheap arithmetic over this array.  Callers should materialize it
-    through a separate projection so one md5 pass per hash function
-    cannot be inlined back in.
+    The md5 work (the expensive part) runs ONCE per token; the k
+    universal-hash minima are then cheap arithmetic over this array.
+    Project it as its own column (``queries.dedup.minhash_signatures``)
+    so each minimum reads the array instead of repeating the md5 pass.
     """
     # single-arg closure: a multi-arg lambda would be taken as the
     # (element, index) form by the higher-order-function binder

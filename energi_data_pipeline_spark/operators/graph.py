@@ -38,13 +38,9 @@ def _truncate(df: DataFrame) -> DataFrame:
     files in the checkpoint store.  Set it on any session that
     configures a checkpoint dir for these loops; our own session
     factory does (session.py)."""
-    sc = df.sparkSession.sparkContext
-    try:
-        reliable = sc.getCheckpointDir() is not None
-    except Exception:
-        reliable = False
-    return df.checkpoint(eager=True) if reliable \
-        else df.localCheckpoint(eager=True)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 #: distinct-edge count under which min-label propagation localizes

@@ -248,74 +248,60 @@ _DRIVER_VERIFIED = frozenset({
 #: rotation mislabeled the CC convergence rewrite as "does not alter
 #: results" and rotated its consumers out of the window).
 _VERIFY_CHANGED_PINS: tuple[str, ...] = (
-    # r15: the label-sum convergence proof is now gated to INTEGRAL
-    # label types only (a DECIMAL with nonzero scale is rounded by
-    # the cast and could falsely prove convergence — r14 ADVICE);
-    # every CC consumer re-earns a driver row
-    "dedup_connected_components", "dedup_cluster_keep_best",
-    "dedup_cluster_size_histogram", "curation_cluster_representatives",
-    # r15: the kmeans magnitude-guard memo is keyed on the corpus
-    # FILE fingerprint instead of the directory path (r14 ADVICE:
-    # an in-place rewrite must re-earn the guard)
-    "sims_kmeans_lloyd",
-    # r15: _tfidf_w's persist level is corpus-adaptive (serialized
-    # MEMORY_AND_DISK under the heap-fraction budget, DISK_ONLY
-    # past it — r14 verdict #2); both posting-join consumers re-earn
-    "text_tfidf_cosine_pairs", "sims_hybrid_rrf",
-    # r15: same adaptive level for the dense-feature stage shared by
-    # the classifier trainer and gate
-    "curation_quality_classifier", "curation_classifier_gate",
+    # the MinHash-LSH kernel (dedup.minhash_signatures / band_long /
+    # candidate_pairs, exact array<bigint> band keys) replaced the
+    # signing and banding of every entry below; the CC consumers also
+    # lost the broad handler around operators.graph's checkpoint-dir
+    # check
+    "dedup_minhash_signature", "dedup_minhash_lsh_pairs",
+    "dedup_lsh_banding_sweep", "dedup_minhash_calibration",
+    "dedup_minhash_bbit", "dedup_connected_components",
+    "dedup_connected_components_star", "dedup_cluster_keep_best",
+    "dedup_cluster_size_histogram", "curation_pipeline",
+    "curation_funnel_report", "curation_split_leakage",
+    "curation_dataset_card", "curation_cluster_representatives",
+    "stream_incremental_lsh_dedup",
 )
 
 _VERIFY_FRONT_WINDOW: tuple[str, ...] = _VERIFY_CHANGED_PINS + (
-    # ROUND-15 ROTATION: all 50 rows of the r14 window landed green
-    # in CORRECTNESS_r14 (50/50, zero err).  After the 9 changed-code
-    # pins above, the window fills with the 41 STALEST entries —
-    # exactly the backlog the r14 verdict names (15 r03 rows incl.
-    # all 14 TPC-H shapes, the 21 r04 rows, then the oldest r05
-    # rows) — which CLEARS the r03/r04 vintage entirely: after this
-    # round no entry's latest driver green row predates r05.
-    "mm_resize_stride",
-    "tpch_q10_returned_items",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q18_large_volume_customer",
-    "tpch_q1_pricing_summary",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_national_market_share",
-    "dedup_lsh_banding_sweep",
-    "dedup_minhash_calibration",
-    "dedup_simhash_pairs",
-    "ext_asof_join_tolerance",
-    "ext_cumulative_distinct",
-    "ext_mode_per_group",
-    "ext_nth_value_frames",
-    "ext_ntile_deciles",
-    "ext_outlier_mad",
-    "ext_reaggregate_partials",
-    "ext_rfm_segmentation",
-    "ext_skew_stats",
-    "ext_snapshot_diff",
-    "ext_string_agg_ordered",
-    "mm_audio_silence",
-    "mm_content_defined_chunks",
-    "mm_format_stats",
-    "stream_latest_state",
-    "stream_session_window_builtin",
-    "stream_topk_per_window",
-    "stream_tumbling_append_finalized",
-    "curation_dataset_card",
-    "curation_dataset_split",
-    "curation_decontaminate",
-    "curation_dup_rate_by_source",
-    "curation_funnel_report",
+    # After the 15 changed-code pins above, the window fills with the
+    # 35 STALEST entries by newest green CORRECTNESS_r* row (oldest
+    # round, then name): the r05 backlog, then r06-r09.
+    "curation_mixture_sample",
+    "curation_quota_sample",
+    "curation_sequence_pack",
+    "curation_shard_manifest",
+    "curation_source_league",
+    "curation_token_budget",
+    "ext_activity_streaks",
+    "ext_benford_audit",
+    "ext_categorical_drift",
+    "ext_cdc_apply",
+    "ext_dq_quarantine",
+    "ext_event_transition_matrix",
+    "ext_gap_fill_linear",
+    "ext_histogram_log_bins",
+    "ext_mom_growth",
+    "ext_null_profile",
+    "ext_pagerank_power",
+    "ext_pareto_share",
+    "ext_reorder_gap",
+    "ext_rolling_active_users",
+    "ext_running_drawdown",
+    "ext_seasonality_profile",
+    "ext_top_percent_per_group",
+    "mm_png_header_parse",
+    "mm_scene_cuts",
+    "mm_wav_header_parse",
+    "curation_weighted_sample",
+    "sketch_kmv_distinct",
+    "dedup_exact_substring_spans",
+    "dedup_simhash",
+    "sketch_bloom_semijoin",
+    "sketch_countmin_heavy_hitters",
+    "sketch_hll_distinct",
+    "dedup_containment",
+    "dedup_embedding_cosine",
 )
 
 

@@ -9,16 +9,20 @@ The LLM-pipeline dedup family (BASELINE.json north star):
 * n-gram Jaccard        — relational shingle-join similarity
 
 Scale shape: signatures/fingerprints are map-only stages; candidate
-generation joins on (band, band_hash) or shingle keys — the classic
-shuffle-on-small-keys pattern that scales linearly with corpus size
-instead of the quadratic all-pairs compare.  All of it is Catalyst
-expressions; the oracle runs the identical logic in DuckDB SQL
-(list_transform/list_min + the same md5-derived 56-bit hashes).
+generation joins on (band, band key) — a MinHash band key is the
+band's exact minhash values (``band_long``) — or on shingle keys:
+the classic shuffle-on-small-keys pattern that scales linearly with
+corpus size instead of the quadratic all-pairs compare.  All of it
+is Catalyst expressions; the oracle runs the identical logic in
+DuckDB SQL (list_transform/list_min + the same md5-derived 56-bit
+hashes).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window, functions as F
+from functools import reduce
+
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import (MERSENNE_P, base_hashes,
                                  minhash_from_hashes, minhash_seed,
@@ -120,6 +124,56 @@ def shingles_from_tokens(tk):
             " ", F.element_at(tk, i), F.element_at(tk, i + 1),
             F.element_at(tk, i + 2)),
     ))
+
+
+# ------------------------------------------------- MinHash-LSH kernel
+# Every MinHash consumer (the batch pair query, the banding sweep and
+# the streaming index) signs and bands through these three functions.
+# They are plain lazy projections/joins: Catalyst does not inline a
+# non-cheap projection (the split, the md5 pass) that is referenced
+# more than once, so no cache is needed to keep one split and one md5
+# pass per document.
+
+def minhash_signatures(df, nh: int):
+    """``doc_id, mh0..mh{nh-1}`` for a ``doc_id, text`` frame: tokens
+    -> 3-token shingles -> 31-bit base hashes -> ``nh`` minima."""
+    toks = df.select("doc_id", tokens_col(F.col("text")).alias("tk"))
+    hashed = toks.select(
+        "doc_id",
+        base_hashes(shingles_from_tokens(F.col("tk"))).alias("hl"))
+    return hashed.select(
+        "doc_id",
+        *[minhash_from_hashes(F.col("hl"), k).alias(f"mh{k}")
+          for k in range(nh)])
+
+
+def band_long(sigs, nh: int, nb: int):
+    """One ``doc_id, band, key`` row per (doc, band).  The key is the
+    band's ``nh // nb`` minhash values as ``array<bigint>``: two docs
+    share a band exactly when those values are equal, so the bucket
+    join needs no hashed or string-built key."""
+    rpb = nh // nb
+    return sigs.select(
+        "doc_id",
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"),
+                     F.array(*[F.col(f"mh{b * rpb + r}")
+                               for r in range(rpb)]).alias("key"))
+            for b in range(nb)])).alias("bk"),
+    ).select("doc_id", "bk.band", "bk.key")
+
+
+def candidate_pairs(long):
+    """Distinct ``doc_a < doc_b`` pairs sharing at least one band."""
+    l, r = long.alias("l"), long.alias("r")
+    return (
+        l.join(r, (F.col("l.band") == F.col("r.band"))
+               & (F.col("l.key") == F.col("r.key"))
+               & (F.col("l.doc_id") < F.col("r.doc_id")))
+        .select(F.col("l.doc_id").alias("doc_a"),
+                F.col("r.doc_id").alias("doc_b"))
+        .distinct()
+    )
 
 
 # ------------------------------------------------------------ exact
@@ -237,27 +291,9 @@ MINHASH_SQL_COLS = ",\n               ".join(
 def dedup_minhash_signature(spark, sf_dir):
     """MinHash signatures (3-token shingles -> 8 universal hashes).
     Map-only; the signature replaces the document for all downstream
-    similarity work (constant width regardless of doc length).
-
-    The token array and the base-hash array are cached as
-    optimization barriers: without them CollapseProject inlines the
-    split into the shingle lambda (one split per element access) and
-    the md5 pass into all 8 minhash columns (8 md5 passes per doc) —
-    measured 7x slower at sf0.1."""
+    similarity work (constant width regardless of doc length)."""
     nh, _ = minhash_params(docs_corpus_size(sf_dir))
-    d = spread(t(spark, sf_dir, "documents"))
-    toks = d.select(
-        "doc_id", tokens_col(F.col("text")).alias("tk")).cache()
-    hashed = toks.select(
-        "doc_id",
-        base_hashes(shingles_from_tokens(F.col("tk"))).alias("hl"),
-    ).cache()
-    hashed.count()
-    return hashed.select(
-        "doc_id",
-        *[minhash_from_hashes(F.col("hl"), k).alias(f"mh{k}")
-          for k in range(nh)],
-    )
+    return minhash_signatures(spread(t(spark, sf_dir, "documents")), nh)
 
 
 # ------------------------------------------------------ minhash-LSH
@@ -313,32 +349,10 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
     agreement.  The join key space is tiny vs all-pairs — this is
     the 100 TB-safe near-dup shape."""
     nh, nb = minhash_params(docs_corpus_size(sf_dir))
-    rpb = nh // nb
     # the signature table feeds three plan branches (banding + both
-    # sides of the pair join) — materialize it once, it's tiny
+    # sides of the verify join) — materialize it once, it's tiny
     sigs = dedup_minhash_signature(spark, sf_dir).cache()
-    band_cols = [
-        F.md5(F.concat_ws("_", *[
-            F.col(f"mh{b * rpb + r}").cast("string")
-            for r in range(rpb)])).alias(f"band{b}")
-        for b in range(nb)
-    ]
-    banded = sigs.select("doc_id", *band_cols)
-    long = banded.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("key"))
-            for b in range(nb)])).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-    l, r = long.alias("l"), long.alias("r")
-    pairs = (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.key") == F.col("r.key"))
-               & (F.col("l.doc_id") < F.col("r.doc_id")))
-        .select(F.col("l.doc_id").alias("doc_a"),
-                F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    pairs = candidate_pairs(band_long(sigs, nh, nb))
     a = sigs.alias("a")
     b = sigs.alias("b")
     agree = sum(
@@ -392,7 +406,7 @@ def dedup_simhash(spark, sf_dir):
     hashed = d.select("doc_id", hs.alias("hs"))
 
     def bit_set(b: int):
-        # single-arg closure (see functions.hashing.minhash_sig)
+        # single-arg closure (see functions.hashing.base_hashes)
         return lambda h: h.bitwiseAND(F.lit(1 << b)) != 0
 
     bits = [
@@ -1051,11 +1065,10 @@ def dedup_minhash_calibration(spark, sf_dir):
     build side) and intersects JVM-side."""
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
     d = spread(t(spark, sf_dir, "documents"))
-    toks = d.select(
-        "doc_id", tokens_col(F.col("text")).alias("tk")).cache()
+    toks = d.select("doc_id", tokens_col(F.col("text")).alias("tk"))
+    # both sides of the truth join read the shingle sets
     sh = toks.select(
         "doc_id", shingles_from_tokens(F.col("tk")).alias("sh")).cache()
-    sh.count()
     a = sh.select(F.col("doc_id").alias("doc_a"),
                   F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"),
@@ -1201,36 +1214,15 @@ def dedup_lsh_banding_sweep(spark, sf_dir):
     configuration is one banded self-join counted — the same
     bounded bucket-join shape as the production pair query, never
     all-pairs."""
-    sigs = dedup_minhash_signature(spark, sf_dir).cache()
-    sigs.count()
-    out = None
-    for b_cnt, r_cnt in SWEEP_CONFIGS:
-        band_cols = [
-            F.md5(F.concat_ws("_", *[
-                F.col(f"mh{b * r_cnt + r}").cast("string")
-                for r in range(r_cnt)])).alias(f"band{b}")
-            for b in range(b_cnt)
-        ]
-        banded = sigs.select("doc_id", *band_cols)
-        long = banded.select(
-            "doc_id",
-            F.explode(F.array(*[
-                F.struct(F.lit(b).alias("band"),
-                         F.col(f"band{b}").alias("key"))
-                for b in range(b_cnt)])).alias("bk"),
-        ).select("doc_id", "bk.band", "bk.key")
-        l, r = long.alias("l"), long.alias("r")
-        n = (l.join(r, (F.col("l.band") == F.col("r.band"))
-                    & (F.col("l.key") == F.col("r.key"))
-                    & (F.col("l.doc_id") < F.col("r.doc_id")))
-             .select(F.col("l.doc_id"), F.col("r.doc_id"))
-             .distinct().count())
-        row = (sigs.sparkSession.range(1).select(
-            F.lit(b_cnt).cast("int").alias("n_bands"),
-            F.lit(r_cnt).cast("int").alias("rows_per_band"),
-            F.lit(n).cast("bigint").alias("n_candidates")))
-        out = row if out is None else out.unionByName(row)
-    return out
+    sigs = minhash_signatures(
+        spread(t(spark, sf_dir, "documents")), NUM_HASHES).cache()
+    counts = [
+        candidate_pairs(band_long(sigs, NUM_HASHES, b_cnt)).agg(
+            F.lit(b_cnt).alias("n_bands"),
+            F.lit(r_cnt).alias("rows_per_band"),
+            F.count(F.lit(1)).alias("n_candidates"))
+        for b_cnt, r_cnt in SWEEP_CONFIGS]
+    return reduce(DataFrame.unionByName, counts)
 
 
 # ------------------------------------- b-bit minwise hashing

@@ -1016,8 +1016,8 @@ def _debug_segment_keys(id_col: str) -> list[str] | None:
 
 
 #: conservative payload estimate for variable-width values whose
-#: size the schema can't know (strings: the widest we broadcast is
-#: the 32-char md5 band key; arrays take a per-call override)
+#: size the schema can't know (strings and structs; arrays whose
+#: length the caller knows take a per-call override)
 _VAR_WIDTH_DEFAULT_BYTES = 48
 
 
@@ -1250,18 +1250,17 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
     that query's SQL verbatim.
 
     Scale shape: per micro-batch work is batch-signatures (map-only)
-    + a band-key join of the batch against the index (the batch side
+    + a join of the batch's band rows against the index on the exact
+    (band, minhash values) key of ``dedup.band_long`` (the batch side
     is small — AQE broadcasts it; the index side shuffles on the
     band key only) + one key-only anti-join append.  State lives in
     the index TABLE, not the state store, so the stream restarts
     stateless and the index is queryable mid-stream.  The replay,
     appends and compaction are :func:`_run_index_stream`'s; the
     step marks are ``sign`` and ``bands``."""
-    from ..functions.hashing import base_hashes, minhash_from_hashes
     from ..io import read_layer_table
-    from .dedup import docs_corpus_size, minhash_params
-    from .dedup import shingles_from_tokens
-    from .text import tokens_col
+    from .dedup import (band_long, docs_corpus_size, minhash_params,
+                        minhash_signatures)
 
     tune(spark)
     path = os.path.join(sf_dir, "documents.parquet")
@@ -1269,29 +1268,6 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
     # rule as the batch LSH family (dedup.minhash_params)
     nh, nb = minhash_params(docs_corpus_size(sf_dir))
     rpb = nh // nb
-
-    def sign(df):
-        hashed = df.select(
-            "doc_id",
-            base_hashes(shingles_from_tokens(
-                tokens_col(F.col("text")))).alias("hl"))
-        return hashed.select(
-            "doc_id",
-            *[minhash_from_hashes(F.col("hl"), k).alias(f"mh{k}")
-              for k in range(nh)])
-
-    def band_long(sigs):
-        return sigs.select(
-            "doc_id",
-            F.explode(F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(F.concat_ws("_", *[
-                        F.col(f"mh{b * rpb + r}")
-                        .cast("string")
-                        for r in range(rpb)])).alias("key"))
-                for b in range(nb)])).alias("bk")
-        ).select("doc_id", "bk.band", "bk.key")
 
     def step(batch_df, wh, mark):
         sess = batch_df.sparkSession
@@ -1302,8 +1278,8 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
         # decomposition), ~0.35s once fanned out.  At production
         # rates a trigger's files exceed the core count and the
         # repartition is a no-op guard (io.spread contract).
-        batch_sigs = sign(_io_spread(batch_df)).localCheckpoint(
-            eager=True)
+        batch_sigs = minhash_signatures(
+            _io_spread(batch_df), nh).localCheckpoint(eager=True)
         # one narrow count over the materialized checkpoint (tens of
         # ms) sizes every batch-side broadcast hint below: the hints
         # are only safe while the trigger is small, and that must be
@@ -1313,10 +1289,13 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
         mark("sign")
         # bands stay eagerly checkpointed: they feed THREE consumers
         # (both sides of the candidate join + the posting-segment
-        # append), and the md5 band-key recompute measured costlier
-        # than the one extra job (round-11 A/B: 5.6-7.1s -> 8.4-8.6s
-        # per replay when lazy)
-        batch_bands = band_long(batch_sigs).localCheckpoint(eager=True)
+        # append), and even with exact array keys (no md5 to redo)
+        # the recompute measured costlier than the one extra job:
+        # 4-batch replay at sf0.1, 12 alternating in-process pairs,
+        # median 8.26 s checkpointed vs 9.07 s lazy, lazy faster in
+        # 4 of 12 (round-11, md5 keys: 5.6-7.1 s vs 8.4-8.6 s)
+        batch_bands = band_long(batch_sigs, nh, nb).localCheckpoint(
+            eager=True)
         mark("bands")
         # The index is TWO append-only tables: signatures (verify
         # side) and the band-long posting list (candidate side,
@@ -1339,11 +1318,13 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
         # exchange IS the cost; AQE would usually reach the same plan
         # but only after a replanning round per batch).  The hint is
         # byte-budget gated (r12 ADVICE): n_batch*nb band rows, each
-        # sized off the schema (long id + int band + md5 key string)
-        # must fit the heap-derived budget, else AQE plans it.
+        # sized off the schema (long id + int band) plus the key's
+        # rpb longs and its array header, must fit the heap-derived
+        # budget, else AQE plans it.
         bl = _bounded_broadcast(
             batch_bands,
-            n_batch * nb * _est_row_bytes(batch_bands)).alias("l")
+            n_batch * nb * _est_row_bytes(
+                batch_bands, {"key": 8 * rpb + 16})).alias("l")
         kl = all_bands.alias("r")
         # NOT distinct here: a pair colliding in several bands is
         # re-verified once per band, but candidates are a tiny

@@ -902,6 +902,7 @@ def test_bpe_heldout_broadcasts_vocab_not_corpus(spark, registry):
 #:             replication (the query side must never broadcast)
 EXPLODE_IN_BROADCAST_ALLOWLIST = {
     "dedup_minhash_lsh_pairs": "bands",
+    "dedup_lsh_banding_sweep": "bands (three bandings, nb<=4)",
     "dedup_minhash_calibration": "bands",
     "dedup_simhash_pairs": "bands",
     "dedup_minhash_bbit": "bands",
