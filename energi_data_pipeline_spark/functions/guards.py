@@ -14,3 +14,10 @@ from pyspark.sql import Column, functions as F
 def guarded_ratio(num: Column, den: Column, default: float) -> Column:
     """``CASE WHEN den > 0 THEN num/den ELSE default END``."""
     return F.when(den > 0, num / den).otherwise(F.lit(float(default)))
+
+
+def guarded_ratio_sql(num: str, den: str, default: float) -> str:
+    """:func:`guarded_ratio` as Spark SQL text (``D``: a DOUBLE
+    literal, as ``F.lit(float)``; a bare ``0.0`` is a DECIMAL)."""
+    return (f"CASE WHEN ({den}) > 0 THEN ({num}) / ({den}) "
+            f"ELSE {float(default)!r}D END")

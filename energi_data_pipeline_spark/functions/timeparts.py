@@ -8,6 +8,10 @@ here (SURVEY.md §4.2.3):
   ``dayofweek`` is 1=Sunday..7=Saturday -> subtract 1.
 * ``season`` bucket boundaries are month-set CASEs, copied verbatim
   ({12,1,2}=0 winter, {3,4,5}=1 spring, {6,7,8}=2 summer, else 3).
+
+Each rule has a Column form and a Spark SQL text form (``*_sql``,
+taking the timestamp as SQL text) for the builders written as one
+statement; tests/test_sql_forms.py pins the two equal.
 """
 
 from __future__ import annotations
@@ -35,3 +39,20 @@ def season(ts: Column) -> Column:
         .otherwise(F.lit(3))
         .cast("int")
     )
+
+
+def dow_sunday0_sql(ts: str) -> str:
+    """:func:`dow_sunday0` as Spark SQL text."""
+    return f"CAST(dayofweek({ts}) - 1 AS INT)"
+
+
+def is_weekend_sql(ts: str) -> str:
+    """:func:`is_weekend` as Spark SQL text."""
+    return f"{dow_sunday0_sql(ts)} IN (0, 6)"
+
+
+def season_sql(ts: str) -> str:
+    """:func:`season` as Spark SQL text."""
+    return (f"CAST(CASE WHEN month({ts}) IN (12, 1, 2) THEN 0 "
+            f"WHEN month({ts}) IN (3, 4, 5) THEN 1 "
+            f"WHEN month({ts}) IN (6, 7, 8) THEN 2 ELSE 3 END AS INT)")

@@ -15,11 +15,15 @@ The anti-join reads only the destination's key columns, typed from
 the batch, so it never runs a schema-inference job.  Layer tables
 store timestamps naive, as parquet INT64 ``TIMESTAMP(MICROS,
 isAdjustedToUTC=false)`` (:func:`naive_timestamps`), whose footers
-carry per-row-group min/max.  A watermark, a stats line and the
-key-bounded anti-join read those footers on the driver
-(:func:`footer_stats`, :func:`rows_after`) instead of scanning the
-key column; a frame the footers cannot answer for (a legacy INT96
-file, a non-local URI, a derived frame) is scanned as before.
+carry per-row-group min/max.  A watermark, a stats line
+(:func:`layer_span`) and the key-bounded anti-join
+(:func:`insert_if_absent`'s ``after``) of a local layer table list
+its data files on the driver and read their footers: no DataFrame, no
+py4j round trip, no Spark job, and no destination read at all when no
+file holds a key past the bound.  A URI warehouse or a footer-less
+(legacy INT96) file falls back to a Spark read of the key column,
+whose files' footers answer where they can (:func:`footer_stats`,
+:func:`rows_after`) and a scan where they cannot.
 
 Writers: one per table, as in the reference, whose ACID comes from a
 single local DuckDB file.  A table is published by appends
@@ -39,7 +43,7 @@ import urllib.parse
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 from .session import tune
 
@@ -398,22 +402,27 @@ def _hidden(name: str) -> bool:
                                     and "=" not in name)
 
 
+def _data_files(path: str) -> list[str] | None:
+    """The files a scan of the local table directory ``path`` reads
+    (``os.walk``); None for a URI (``file://``, ``hdfs://`` …).  The
+    session's Hadoop FileSystem pays a py4j round trip per listed
+    file: 5 ms against 0.06 ms on a 48-file table."""
+    if urllib.parse.urlparse(path).scheme:
+        return None
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        files += [os.path.join(root, f) for f in names if not _hidden(f)]
+    return files
+
+
 def _has_data_files(spark: SparkSession, path: str) -> bool:
     """True when the directory ``path`` holds a file a scan would
-    read; False when it is missing or holds only metadata.
-
-    A plain local path is walked with ``os.walk``; a URI
-    (``file://``, ``hdfs://``, ``s3a://`` …) through the session's
-    Hadoop FileSystem, the one the read itself will use.  The local
-    walk is kept because the Hadoop one pays a py4j round trip per
-    listed file: 5 ms against 0.06 ms on a 48-file table, on every
-    layer read of an increment."""
-    if not urllib.parse.urlparse(path).scheme:
-        for _root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not _hidden(d)]
-            if any(not _hidden(f) for f in files):
-                return True
-        return False
+    read; a URI is listed by the session's Hadoop FileSystem, the one
+    the read itself will use."""
+    files = _data_files(path)
+    if files is not None:
+        return bool(files)
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(jpath):
@@ -440,7 +449,7 @@ def read_layer_table(spark: SparkSession, warehouse: str, layer: str,
     part file, a schema clash — raises; it never reads as "absent".
 
     ``schema`` is the table's schema, or the subset of its columns
-    the caller needs (a watermark needs only the key).  Given, Spark
+    the caller needs (an anti-join needs only the key).  Given, Spark
     reads the files with it and runs no schema-inference job; None
     infers the schema from the files.
 
@@ -461,8 +470,8 @@ def read_layer_table(spark: SparkSession, warehouse: str, layer: str,
 
 
 def key_schema(schema: StructType, keys: list[str]) -> StructType:
-    """The ``keys`` fields of ``schema``: the typed read a watermark
-    or an anti-join needs."""
+    """The ``keys`` fields of ``schema``: the typed read an anti-join
+    needs."""
     return StructType([schema[k] for k in keys])
 
 
@@ -471,9 +480,9 @@ _EPOCH_UTC = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 @functools.lru_cache(maxsize=4096)
 def _footer_span_at(path: str, column: str, _mtime_ns: int,
-                    _size: int) -> tuple[int, int | None, int | None] | None:
+                    _size: int) -> tuple | None:
     """(rows, min, max) of the timestamp ``column`` in one parquet
-    file, min and max as epoch microseconds (None when it holds no
+    file, min and max as aware UTC datetimes (None when it holds no
     value).  None when the footer cannot say: the column is absent
     or not an INT64 microsecond timestamp (a legacy INT96 key has no
     statistics), or a row group holding values has no min/max."""
@@ -498,7 +507,9 @@ def _footer_span_at(path: str, column: str, _mtime_ns: int,
             hi = st.max_raw if hi is None else max(hi, st.max_raw)
         elif st is None or st.null_count != md.row_group(rg).num_rows:
             return None
-    return md.num_rows, lo, hi
+    return md.num_rows, *(None if v is None else
+                          _EPOCH_UTC + timedelta(microseconds=v)
+                          for v in (lo, hi))
 
 
 def _scan_files(df: DataFrame) -> list[str] | None:
@@ -523,28 +534,54 @@ def _scan_files(df: DataFrame) -> list[str] | None:
     return paths
 
 
-def _file_spans(df: DataFrame, col: str) -> list[tuple] | None:
-    """Per file of ``df``: (path, rows, min, max) of the
-    ``TimestampType`` column ``col``, min and max as aware UTC
-    datetimes, from the parquet footers (pyarrow, cached per file
+def _spans(files: list[str], col: str) -> list[tuple] | None:
+    """Per file: (path, rows, min, max) of the timestamp column
+    ``col`` from the parquet footers (pyarrow, cached per file
     identity like :func:`parquet_row_count`); None when they cannot
     answer for every file."""
-    if not isinstance(df.schema[col].dataType, TimestampType):
-        return None
-    files = _scan_files(df)
-    if files is None:
-        return None
     spans = []
     for path in files:
         st = os.stat(path)
         span = _footer_span_at(path, col, st.st_mtime_ns, st.st_size)
         if span is None:
             return None
-        rows, lo, hi = span
-        spans.append((path, rows, *(
-            None if v is None else _EPOCH_UTC + timedelta(microseconds=v)
-            for v in (lo, hi))))
+        spans.append((path, *span))
     return spans
+
+
+def _file_spans(df: DataFrame, col: str) -> list[tuple] | None:
+    """:func:`_spans` of the files ``df`` scans; None unless ``df`` is
+    a bare scan of local parquet files and ``col`` a ``TimestampType``
+    column."""
+    files = (_scan_files(df)
+             if isinstance(df.schema[col].dataType, TimestampType) else None)
+    return None if files is None else _spans(files, col)
+
+
+def _key_spans(spark: SparkSession, warehouse: str, layer: str, name: str,
+               schema: StructType) -> tuple:
+    """``(spans, df)`` of a layer table's ``TimestampType`` key, the
+    first column of ``schema``: a local table's listed files and
+    their footers, with no DataFrame (df None); else (a URI, a legacy
+    INT96 key) the table read with ``schema`` and its scan's spans."""
+    col = schema.names[0]
+    path = table_path(warehouse, layer, name)
+    recover_atomic(path)
+    files = _data_files(path)
+    spans = None if files is None else _spans(files, col)
+    if spans is not None:
+        return spans, None
+    df = read_layer_table(spark, warehouse, layer, name, schema=schema)
+    return (None if df is None else _file_spans(df, col)), df
+
+
+def _fold(spans: list[tuple]) -> tuple:
+    """``(COUNT(*), MIN, MAX)`` over per-file spans."""
+    return (sum(n for _p, n, _lo, _hi in spans),
+            min((lo for _p, _n, lo, _hi in spans if lo is not None),
+                default=None),
+            max((hi for _p, _n, _lo, hi in spans if hi is not None),
+                default=None))
 
 
 def footer_stats(df: DataFrame, col: str) -> tuple | None:
@@ -555,13 +592,39 @@ def footer_stats(df: DataFrame, col: str) -> tuple | None:
     is not a ``TimestampType`` column, or a file has no min/max for
     it (a legacy INT96 timestamp)."""
     spans = _file_spans(df, col)
+    return None if spans is None else _fold(spans)
+
+
+def layer_span(spark: SparkSession, warehouse: str, layer: str, name: str,
+               col: str) -> tuple:
+    """``(COUNT(*), MIN(col), MAX(col))`` of a layer table's
+    ``TimestampType`` key ``col`` as :func:`footer_stats` gives it,
+    ``(0, None, None)`` when absent; MAX is the table's self-watermark
+    (silver_transform.py:54-58).  Footers answer with no Spark job
+    (:func:`_key_spans`); where they cannot, the key is scanned."""
+    spans, df = _key_spans(spark, warehouse, layer, name,
+                           StructType([StructField(col, TimestampType())]))
+    if spans is not None:
+        return _fold(spans)
+    if df is None:
+        return 0, None, None
+    n, lo, hi = df.agg(F.count(F.lit(1)), F.min(col), F.max(col)).first()
+    return n, *(v and v.astimezone(timezone.utc) for v in (lo, hi))
+
+
+def _rows_after(spark: SparkSession, schema: StructType,
+                spans: list | None, df: DataFrame | None, col: str,
+                after: datetime) -> DataFrame | None:
+    """The rows with ``col > after``: of the files in ``spans`` whose
+    footer max is past ``after``, read with ``schema`` (None when no
+    file's is); without spans, of ``df`` (None when absent)."""
     if spans is None:
-        return None
-    return (sum(n for _p, n, _lo, _hi in spans),
-            min((lo for _p, _n, lo, _hi in spans if lo is not None),
-                default=None),
-            max((hi for _p, _n, _lo, hi in spans if hi is not None),
-                default=None))
+        return None if df is None else df.where(F.col(col) > F.lit(after))
+    # a naive bound is local time, as PySpark reads a naive literal
+    bound = after.astimezone(timezone.utc)
+    files = [p for p, _n, _lo, hi in spans if hi is not None and hi > bound]
+    return (spark.read.schema(schema).parquet(*files)
+            .where(F.col(col) > F.lit(after)) if files else None)
 
 
 def rows_after(df: DataFrame | None, col: str,
@@ -577,17 +640,8 @@ def rows_after(df: DataFrame | None, col: str,
     history.  Otherwise the whole frame is filtered."""
     if df is None:
         return None
-    spans = _file_spans(df, col)
-    if spans is not None:
-        # a naive bound is local time, as PySpark reads a naive literal
-        bound = after.astimezone(timezone.utc)
-        files = [p for p, _n, _lo, hi in spans
-                 if hi is not None and hi > bound]
-        if not files:
-            return None
-        if len(files) < len(spans):
-            df = df.sparkSession.read.schema(df.schema).parquet(*files)
-    return df.where(F.col(col) > F.lit(after))
+    return _rows_after(df.sparkSession, df.schema, _file_spans(df, col),
+                       df, col, after)
 
 
 def max_watermark(df: DataFrame | None, col: str, default):
@@ -641,49 +695,34 @@ def naive_timestamps(df: DataFrame) -> DataFrame:
     return df.withColumns(ts) if ts else df
 
 
-def anti_join_new(new_df: DataFrame, existing: DataFrame | None,
-                  keys: list[str], after: datetime | None = None
-                  ) -> DataFrame:
-    """Rows of ``new_df`` whose key is absent from ``existing``.
-
-    The Spark-native ``ON CONFLICT DO NOTHING`` half: dedup within
-    the batch (first writer wins) then drop keys already present.
-    ``existing`` only needs its key columns — select them so the
-    scan is pruned to the key column and, for small key sets, the
-    anti join broadcasts.
-
-    ``after`` bounds the first key: only batch rows with a key past
-    it are kept, so only the destination's keys past it can clash,
-    and ``existing`` is read through :func:`rows_after` — not at all
-    when its footers hold no key past ``after``, which is every
-    steady increment of a self-watermarked table.
-    """
-    if after is not None:
-        new_df = new_df.where(F.col(keys[0]) > F.lit(after))
-        existing = rows_after(existing, keys[0], after)
-    batch = new_df.dropDuplicates(keys)
-    if existing is None:
-        return batch
-    return batch.join(existing.select(*keys), on=keys, how="left_anti")
-
-
 def insert_if_absent(spark: SparkSession, new_df: DataFrame, warehouse: str,
                      layer: str, name: str, keys: list[str],
                      partition_by: list[str] | None = None,
                      after: datetime | None = None) -> None:
-    """Idempotent append: anti-join against destination, append rest,
-    in the storage encoding of :func:`naive_timestamps`.
+    """Idempotent append, the Spark-native ``ON CONFLICT DO NOTHING``:
+    dedup within the batch (first writer wins), left-anti join
+    against the destination's keys, append the rest in the storage
+    encoding of :func:`naive_timestamps`.  The destination is read
+    key columns only, typed from the batch's own key fields, so the
+    anti-join never infers a schema.
 
-    The destination is read key columns only, typed from the batch's
-    own key fields, so the anti-join never infers a schema.
-    ``after`` bounds the anti-join by the first key (see
-    :func:`anti_join_new`)."""
+    ``after`` bounds that read on a ``TimestampType`` first key, and
+    the caller vouches for it: no non-NULL first key of ``new_df`` is
+    at or before it.  Only the destination files holding a key past
+    it are read (:func:`_key_spans`) — none in a steady increment of a
+    self-watermarked table.  A NULL key never clashes: the batch keeps
+    one NULL-keyed row, as without ``after``."""
     path = table_path(warehouse, layer, name)
-    existing = read_layer_table(spark, warehouse, layer, name,
-                                schema=key_schema(new_df.schema, keys))
-    to_write = naive_timestamps(anti_join_new(new_df, existing, keys,
-                                              after))
-    writer = to_write.write.mode("append")
+    schema = key_schema(new_df.schema, keys)
+    existing = (
+        read_layer_table(spark, warehouse, layer, name, schema=schema)
+        if after is None else _rows_after(
+            spark, schema, *_key_spans(spark, warehouse, layer, name,
+                                       schema), keys[0], after))
+    batch = new_df.dropDuplicates(keys)
+    if existing is not None:
+        batch = batch.join(existing, on=keys, how="left_anti")
+    writer = naive_timestamps(batch).write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -982,13 +1021,16 @@ def export_csv(df: DataFrame, path: str, order_by: list[str],
                single_file: bool = True) -> None:
     """Ordered CSV with header (gold_aggr.py:234-254).
 
-    ``single_file`` mirrors the reference's one-file COPY; at 100 TB
-    call with ``single_file=False`` to keep the range-partitioned
-    sort distributed (one sorted file per range partition).
+    ``single_file`` mirrors the reference's one-file COPY, sorted
+    within the one partition (one job; a global sort samples and
+    shuffles first); at 100 TB call with ``single_file=False`` to keep
+    the range-partitioned sort distributed (one sorted file per range
+    partition).
     """
-    out = df.orderBy(*order_by)
     if single_file:
-        out = out.coalesce(1)
+        out = df.coalesce(1).sortWithinPartitions(*order_by)
+    else:
+        out = df.orderBy(*order_by)
     out.write.mode("overwrite").option("header", True).csv(path)
 
 

@@ -1,19 +1,22 @@
 """Gold layer: fact ⋈ dim -> derived measures -> 5-row moving
 averages + volatility -> incremental trim.
 
-Faithful re-expression of gold_aggr.py:66-221 (semantics only):
+Faithful re-expression of gold_aggr.py:66-221, like the reference
+as SQL text: :func:`build_gold` is one parameterized ``spark.sql``
+statement, analyzed once instead of step by step through the Column
+API (the same Catalyst plan; Spark SQL, SIGMOD'15).
 
-* ``time_series`` CTE  -> :func:`build_time_series` (join + derived
+* ``time_series`` CTE  -> :data:`DERIVED` (join + derived
   measures with the reference's asymmetric CASE guards)
 * ``aggregated`` CTE   -> 18 trailing 5-ROW window aggregates
   (rows frame, NOT a time range — gaps mean "last 5 observations",
   SURVEY.md §4.2.2) + row-level ``wind_solar_ratio``
 * warm-up protocol     -> read from ``watermark - lookback`` then
   trim ``time_id > watermark`` after windowing
-  (gold_aggr.py:98,219)
+  (gold_aggr.py:98,219); both bounds are statement parameters.
 
 Scale notes: the dim side is broadcast (tiny); the global window is
-the parity mode — production mode routes through
+the parity mode — production mode feeds the same time series through
 ``windows.with_trailing_partitioned`` (one task per day instead of
 one task total).
 """
@@ -26,8 +29,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (BooleanType, DoubleType, IntegerType,
                                StructField, StructType, TimestampType)
 
-from ..functions.guards import guarded_ratio
-from .windows import trailing_window, with_trailing_partitioned
+from ..functions.guards import guarded_ratio_sql
+from .windows import with_trailing_partitioned
 
 WINDOW_ROWS = 5  # "5-minute" = 5-row trailing frame (gold_aggr.py:104+)
 LOOKBACK = timedelta(minutes=4)  # warm-up lookback (gold_aggr.py:98)
@@ -72,57 +75,52 @@ GOLD_SCHEMA = StructType(
        StructField("season", IntegerType())])
 
 
-def build_time_series(fact: DataFrame, dim: DataFrame,
-                      read_from=None) -> DataFrame:
-    """The ``time_series`` CTE (gold_aggr.py:68-98).
-
-    ``read_from`` is ``watermark - 4 minutes`` — the warm-up
-    lookback predicate pushed into the fact scan.
-    """
-    fs = fact
-    if read_from is not None:
-        fs = fs.filter(F.col("time_id") > F.lit(read_from))
-    total = F.col("production_large_plants") + F.col("production_small_plants")
-    renewables = (F.col("solar_production") + F.col("offshore_wind_production")
-                  + F.col("onshore_wind_production"))
-    wind = F.col("offshore_wind_production") + F.col("onshore_wind_production")
-    enriched = fs.select(
-        "time_id",
-        "co2_emission",
-        total.alias("total_production"),
-        # ELSE 0 guard — gold_aggr.py:73-78 (asymmetric vs the ratio below)
-        guarded_ratio(renewables, total, 0.0).alias("renewable_ratio"),
-        "solar_production",
-        wind.alias("wind_production"),
-        "offshore_wind_production",
-        "onshore_wind_production",
-        "production_large_plants",
-        "production_small_plants",
-        "exchange_sum",
-        "exchange_germany",
-        "exchange_netherlands",
-        "exchange_great_brt",
-        "exchange_norway",
-        "exchange_sweden",
-        "exchange_dk1_dk2",
-    )
-    dim_cols = dim.select(
-        "time_id",
-        F.col("day_of_week"),
-        F.col("hour").alias("hour_of_day"),
-        F.col("is_weekend"),
-        F.col("season"),
-    )
-    # dim_time is one row per minute — a year is ~526k rows / a few MB:
-    # always broadcast, the fact side never shuffles for this join.
-    return enriched.join(F.broadcast(dim_cols), "time_id", "inner")
-
-
 def _window_aggs(w) -> list:
     aggs = [F.avg(src).over(w).alias(dst) for dst, src in AVG_MEASURES.items()]
     aggs += [F.stddev(src).over(w).alias(dst)
              for dst, src in STDDEV_MEASURES.items()]
     return aggs
+
+
+def _window_aggs_sql() -> str:
+    """:func:`_window_aggs` over the global trailing frame, as SQL."""
+    frame = (f"OVER (ORDER BY time_id ROWS BETWEEN {WINDOW_ROWS - 1} "
+             "PRECEDING AND CURRENT ROW)")
+    return ", ".join(
+        [f"avg({src}) {frame} AS {dst}" for dst, src in AVG_MEASURES.items()]
+        + [f"stddev({src}) {frame} AS {dst}"
+           for dst, src in STDDEV_MEASURES.items()])
+
+
+_TOTAL = "production_large_plants + production_small_plants"
+
+#: the ``time_series`` CTE's derived measures (gold_aggr.py:68-98), as
+#: SQL over the fact columns, which the CTE also passes through
+DERIVED = {
+    "total_production": _TOTAL,
+    # ELSE 0 guard — gold_aggr.py:73-78 (asymmetric vs the ratio below)
+    "renewable_ratio": guarded_ratio_sql(
+        "solar_production + offshore_wind_production"
+        " + onshore_wind_production", _TOTAL, 0.0),
+    "wind_production": "offshore_wind_production + onshore_wind_production",
+}
+
+
+def _time_series_sql(lookback: bool) -> str:
+    """The ``time_series`` CTE over ``{fact}`` and ``{dim}`` plus the
+    row-level ``wind_solar_ratio`` with its ELSE 1 default
+    (gold_aggr.py:180-184).  With ``lookback`` the fact scan starts
+    past ``:read_from``, the warm-up bound ``watermark - 4 minutes``.
+    dim_time is one row per minute — a year is ~526k rows / a few MB:
+    always broadcast, the fact side never shuffles for this join."""
+    where = "WHERE time_id > :read_from" if lookback else ""
+    cols = ", ".join(f"{sql} AS {name}" for name, sql in DERIVED.items())
+    ratio = guarded_ratio_sql("wind_production", "solar_production", 1.0)
+    return f"""
+        SELECT /*+ BROADCAST(d) */ *, {ratio} AS wind_solar_ratio
+        FROM (SELECT *, {cols} FROM {{fact}} {where})
+        JOIN (SELECT time_id, day_of_week, hour AS hour_of_day,
+                     is_weekend, season FROM {{dim}}) d USING (time_id)"""
 
 
 def build_gold(fact: DataFrame, dim: DataFrame, watermark=None,
@@ -133,30 +131,29 @@ def build_gold(fact: DataFrame, dim: DataFrame, watermark=None,
     partitioned by day + cross-day warm-up replay (100 TB path);
     ``scaled=False`` is the oracle-exact single-window parity path.
     """
-    read_from = (watermark - LOOKBACK) if watermark is not None else None
-    ts = build_time_series(fact, dim, read_from)
-
-    # wind_solar_ratio is row-level (current row, not averaged) with
-    # the ELSE 1 default — gold_aggr.py:180-184.
-    ts = ts.withColumn(
-        "wind_solar_ratio",
-        guarded_ratio(F.col("wind_production"), F.col("solar_production"), 1.0),
-    )
-
+    spark = fact.sparkSession
+    series = _time_series_sql(watermark is not None)
+    args = ({} if watermark is None
+            else {"read_from": watermark - LOOKBACK})
     if scaled:
         agged = with_trailing_partitioned(
-            ts, "time_id", WINDOW_ROWS, _window_aggs)
-    else:
-        w = trailing_window(["time_id"], WINDOW_ROWS)
-        agged = ts.select("*", *_window_aggs(w))
-
-    out_cols = (["time_id"] + list(AVG_MEASURES) + list(STDDEV_MEASURES)
-                + ["wind_solar_ratio"] + TIME_FEATURES)
-    out = agged.select(*out_cols)
-    if watermark is not None:
+            spark.sql(series, args=args, fact=fact, dim=dim),
+            "time_id", WINDOW_ROWS, _window_aggs)
+        out = agged.select(*GOLD_SCHEMA.names)
+        if watermark is None:
+            return out
         # trim warm-up rows after windowing (gold_aggr.py:219)
-        out = out.filter(F.col("time_id") > F.lit(watermark))
-    return out
+        return out.filter(F.col("time_id") > F.lit(watermark))
+    trim = ""
+    if watermark is not None:
+        trim = "WHERE time_id > :wm"
+        args["wm"] = watermark
+    return spark.sql(f"""
+        SELECT * FROM (
+            SELECT time_id, {_window_aggs_sql()}, wind_solar_ratio,
+                   {", ".join(TIME_FEATURES)}
+            FROM ({series}))
+        {trim}""", args=args, fact=fact, dim=dim)
 
 
 #: The 13-column ML feature export (gold_aggr.py:236-251).

@@ -1,10 +1,13 @@
 """Silver layer: bronze -> star schema (dim_time + fact).
 
-Re-expresses silver_transform.py:61-106 as pure DataFrame
-transforms.  Both builders take an optional watermark and filter
-``ts > watermark``.  The filter bounds what an increment builds and
-writes; what it reads is bounded by the caller, which hands them only
-the bronze files whose footers hold minutes past the watermark
+Re-expresses silver_transform.py:61-106, like the reference, as SQL
+text: each builder is one parameterized ``spark.sql`` statement over
+the bronze frame, so it is analyzed once instead of step by step
+through the Column API (the same Catalyst plan; Spark SQL, SIGMOD'15).
+Both builders take an optional watermark, a bound parameter of the
+filter ``ts > watermark``.  The filter bounds what an increment builds
+and writes; what it reads is bounded by the caller, which hands them
+only the bronze files whose footers hold minutes past the watermark
 (io.rows_after in pipelines.medallion).
 
 :data:`DIM_TIME_SCHEMA` and :data:`FACT_SCHEMA` declare what the two
@@ -15,27 +18,12 @@ instead of inferring them from the files.
 
 from __future__ import annotations
 
-import functools
-import operator
-
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (BooleanType, DateType, DoubleType,
                                IntegerType, StructField, StructType,
                                TimestampType)
 
-from ..functions.timeparts import dow_sunday0, is_weekend, season
-
-
-def time_features(ts: Column) -> list[Column]:
-    """The dim_time derived columns (silver_transform.py:65-78)."""
-    return [
-        F.to_date(ts).alias("date"),
-        F.hour(ts).cast("int").alias("hour"),
-        F.minute(ts).cast("int").alias("minute"),
-        dow_sunday0(ts).alias("day_of_week"),
-        is_weekend(ts).alias("is_weekend"),
-        season(ts).alias("season"),
-    ]
+from ..functions.timeparts import dow_sunday0_sql, is_weekend_sql, season_sql
 
 
 #: what :func:`build_dim_time` writes
@@ -58,11 +46,17 @@ def build_dim_time(bronze: DataFrame, ts_col: str = "minutes1_utc",
     keys (the fact builder does) — a NULL-keyed dim row is possible,
     matching silver_transform.py:61-82 vs :104.
     """
-    df = bronze
-    if watermark is not None:
-        df = df.filter(F.col(ts_col) > F.lit(watermark))
-    ts = F.col(ts_col)
-    return df.select(ts.alias("time_id"), *time_features(ts)).distinct()
+    ts = f"`{ts_col}`"
+    where, args = ("", {}) if watermark is None else (
+        f"WHERE {ts} > :wm", {"wm": watermark})
+    return bronze.sparkSession.sql(f"""
+        SELECT DISTINCT {ts} AS time_id, to_date({ts}) AS date,
+               CAST(hour({ts}) AS INT) AS hour,
+               CAST(minute({ts}) AS INT) AS minute,
+               {dow_sunday0_sql(ts)} AS day_of_week,
+               {is_weekend_sql(ts)} AS is_weekend,
+               {season_sql(ts)} AS season
+        FROM {{bronze}} {where}""", args=args, bronze=bronze)
 
 
 #: the 13 fact measures :func:`build_fact` writes, in column order:
@@ -94,11 +88,12 @@ def build_fact(bronze: DataFrame, ts_col: str = "minutes1_utc",
                watermark=None) -> DataFrame:
     """Projection / rename / arithmetic + NULL-key filter
     (silver_transform.py:85-106)."""
-    df = bronze
-    if watermark is not None:
-        df = df.filter(F.col(ts_col) > F.lit(watermark))
-    df = df.filter(F.col(ts_col).isNotNull())
-    return df.select(
-        F.col(ts_col).alias("time_id"),
-        *[functools.reduce(operator.add, map(F.col, src)).alias(name)
-          for name, src in FACT_MEASURES.items()])
+    ts = f"`{ts_col}`"
+    where, args = ("", {}) if watermark is None else (
+        f"{ts} > :wm AND", {"wm": watermark})
+    measures = ", ".join(f"{' + '.join(src)} AS {name}"
+                         for name, src in FACT_MEASURES.items())
+    return bronze.sparkSession.sql(
+        f"SELECT {ts} AS time_id, {measures} FROM {{bronze}} "
+        f"WHERE {where} {ts} IS NOT NULL",
+        args=args, bronze=bronze)

@@ -4,11 +4,11 @@ The reference's gold layer is 18 window aggregates over
 ``ORDER BY time_id ROWS BETWEEN 4 PRECEDING AND CURRENT ROW`` with
 **no PARTITION BY** (gold_aggr.py:104-177).  An unpartitioned window
 collapses to one task in Spark — fine at parity-test scale, fatal at
-100 TB.  This module provides both:
+100 TB.  The global window, used where oracle-exact ordering
+matters (driver correctness gate), is plain SQL
+(operators.gold).  This module holds the scale path:
 
-* :func:`trailing_exprs` — the plain global-window expressions used
-  where oracle-exact ordering matters (driver correctness gate).
-* :func:`with_trailing_partitioned` — the scale path: partition the
+* :func:`with_trailing_partitioned` — partition the
   window by a bucket (e.g. ``to_date(ts)``), compute everything in
   ONE bucket-parallel window pass, then repair the first ``k-1``
   rows of every bucket (whose frames reach earlier buckets — the
@@ -24,15 +24,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
-
-
-def trailing_window(order_cols: list[str], k: int,
-                    partition_by: list[str] | None = None):
-    """``ROWS BETWEEN k-1 PRECEDING AND CURRENT ROW`` window spec."""
-    w = Window.orderBy(*order_cols)
-    if partition_by:
-        w = Window.partitionBy(*partition_by).orderBy(*order_cols)
-    return w.rowsBetween(-(k - 1), 0)
 
 
 def with_trailing_partitioned(

@@ -11,44 +11,45 @@ protocol, no external state store.
 
 Reads: every read passes a schema the engine already knows — bronze
 ``BRONZE_FULL_SCHEMA``, fact, dim and gold the schemas declared next
-to their builders, and a destination read only for its watermark its
-key column alone — so no read runs a schema-inference job.  Bronze is
-ingested through Arrow (sources.normalize).
+to their builders, and an anti-join's destination its key column
+alone — so no read runs a schema-inference job.  A watermark and the
+silver stats line read no table: they come from a driver-side listing
+of the table's data files and their parquet footers (io.layer_span).
+Bronze is ingested through Arrow (sources.normalize), and each layer
+builder is one parameterized SQL statement (operators.silver,
+operators.gold).
 
 Scale: every layer table is written unpartitioned, with its time key
 stored as a naive INT64 timestamp whose parquet footers carry min/max
-(io.naive_timestamps).  A watermark and the silver stats line are
-read from those footers, with no Spark job.  Silver reads only the
-bronze files holding minutes past its watermark, and the dim, fact
-and gold anti-joins only the destination files holding keys past
-theirs — none in a steady increment (io.rows_after).  Gold still
-scans the fact and dim tables; at the benchmark's few-file scale,
-choosing their newest files measured slower than the scan.  dim_time
-broadcasts; the ``scaled`` gold window runs partitioned-by-day with
-warm-up replay (operators.windows).
+(io.naive_timestamps).  Silver reads only the bronze files holding
+minutes past its watermark.  Each anti-join reads only the destination
+files whose footer max is past its bound: the watermark for dim, fact
+and gold, and for bronze the instant before the batch's first minute,
+which the fetched records already hold on the driver — none in a
+steady increment (io.insert_if_absent).  Gold still scans the fact and
+dim tables; at the benchmark's few-file scale, choosing their newest
+files measured slower than the scan.  dim_time broadcasts; the
+``scaled`` gold window runs partitioned-by-day with warm-up replay
+(operators.windows).
 """
 
 from __future__ import annotations
 
 import time
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..io import (export_csv, footer_stats, insert_if_absent, key_schema,
-                  max_watermark, read_layer_table, rows_after)
+from ..io import (export_csv, insert_if_absent, layer_span,
+                  read_layer_table, rows_after)
 from ..operators.gold import EXPORT_COLUMNS, GOLD_SCHEMA, build_gold
 from ..operators.silver import (DIM_TIME_SCHEMA, FACT_SCHEMA,
                                 build_dim_time, build_fact)
-from ..sources.normalize import BRONZE_FULL_SCHEMA, records_to_bronze
+from ..sources.normalize import (BRONZE_FULL_SCHEMA, first_minute,
+                                 records_to_bronze)
 from ..sources.rest import INITIAL_CURSOR, format_cursor
 
 EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
-
-#: the watermark reads: a destination's key column alone
-BRONZE_KEY = key_schema(BRONZE_FULL_SCHEMA, ["minutes1_utc"])
-FACT_KEY = key_schema(FACT_SCHEMA, ["time_id"])
-GOLD_KEY = key_schema(GOLD_SCHEMA, ["time_id"])
 
 
 def run_bronze(spark: SparkSession, warehouse: str, source) -> int:
@@ -57,17 +58,22 @@ def run_bronze(spark: SparkSession, warehouse: str, source) -> int:
 
     The cursor is MAX(minutes1_utc) of the bronze table itself —
     the same self-watermark silver/gold already use, which drops the
-    reference's external dlt state directory entirely.
+    reference's external dlt state directory entirely.  The append's
+    anti-join reads only the bronze files holding a minute at or past
+    the batch's first, which is none when the source honours the
+    cursor.
     """
     t0 = time.time()
-    bronze = read_layer_table(spark, warehouse, "bronze",
-                              "power_system_raw", schema=BRONZE_KEY)
-    cursor = max_watermark(bronze, "minutes1_utc", None)
+    cursor = layer_span(spark, warehouse, "bronze", "power_system_raw",
+                        "minutes1_utc")[2]
     cursor_str = format_cursor(cursor) if cursor else INITIAL_CURSOR
     records = source.fetch(cursor_str)
     df = records_to_bronze(spark, records)
+    first = first_minute(records)
+    # the last instant before the batch's first minute
+    after = None if first is None else first - timedelta(microseconds=1)
     insert_if_absent(spark, df, warehouse, "bronze", "power_system_raw",
-                     keys=["minutes1_utc"])
+                     keys=["minutes1_utc"], after=after)
     print(f"bronze: {len(records)} records in {time.time() - t0:.2f}s")
     return len(records)
 
@@ -77,9 +83,8 @@ def silver_step(spark: SparkSession, warehouse: str,
     """The silver upsert of ``bronze`` rows past the fact watermark:
     dim insert + fact insert.  Shared by :func:`run_silver` (all of
     bronze) and the streaming micro-batch (one batch of it)."""
-    fact_dst = read_layer_table(spark, warehouse, "silver",
-                                "fact_power_system", schema=FACT_KEY)
-    wm = max_watermark(fact_dst, "time_id", EPOCH)
+    wm = layer_span(spark, warehouse, "silver", "fact_power_system",
+                    "time_id")[2] or EPOCH
     bronze = rows_after(bronze, "minutes1_utc", wm)
     if bronze is None:
         return
@@ -101,13 +106,11 @@ def run_silver(spark: SparkSession, warehouse: str) -> None:
         return
     silver_step(spark, warehouse, bronze)
 
-    fact = read_layer_table(spark, warehouse, "silver",
-                            "fact_power_system", schema=FACT_KEY)
-    if fact is None:
+    total, earliest, latest = layer_span(spark, warehouse, "silver",
+                                         "fact_power_system", "time_id")
+    if not total:
         print("silver: no facts")
         return
-    total, earliest, latest = footer_stats(fact, "time_id") or fact.agg(
-        F.count(F.lit(1)), F.min("time_id"), F.max("time_id")).first()
     print(f"silver: {total} facts, {earliest} .. {latest}")
 
 
@@ -123,9 +126,8 @@ def gold_step(spark: SparkSession, warehouse: str,
                            schema=DIM_TIME_SCHEMA)
     if fact is None or dim is None:
         return False
-    gold_dst = read_layer_table(spark, warehouse, "gold",
-                                "power_system_5min_avg", schema=GOLD_KEY)
-    wm = max_watermark(gold_dst, "time_id", EPOCH)
+    wm = layer_span(spark, warehouse, "gold", "power_system_5min_avg",
+                    "time_id")[2] or EPOCH
     gold = build_gold(fact, dim, watermark=wm, scaled=scaled)
     insert_if_absent(spark, gold, warehouse, "gold",
                      "power_system_5min_avg", keys=["time_id"], after=wm)

@@ -234,7 +234,7 @@ def dedup_incremental_exact(spark, sf_dir):
     EXISTING corpus keep-set, never a full-corpus re-dedup.  A doc
     survives (``is_new``) iff it is the first holder of its content
     key within the batch (first-writer-wins, as
-    ``io.anti_join_new``) AND the key is absent from the corpus.
+    ``io.insert_if_absent``) AND the key is absent from the corpus.
 
     Scale shape: the corpus side is reduced map-side to DISTINCT
     md5 keys (one narrow column — the keep-set a real pipeline

@@ -66,10 +66,7 @@ def tune(spark: SparkSession, force: bool = False) -> SparkSession:
     except TypeError:
         pass  # not weakref-able on this build: fall through, re-set
     for k, v in RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # conf not runtime-settable on this build — keep going
+        spark.conf.set(k, v)
     try:
         _TUNED.add(spark)
     except TypeError:

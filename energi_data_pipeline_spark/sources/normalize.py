@@ -15,7 +15,7 @@ import functools
 import hashlib
 import json
 import re
-from datetime import datetime
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (DoubleType, MapType, StringType,
@@ -90,6 +90,17 @@ def _minute(ts):
     if ts is not None:
         ts = ts.replace(second=0, microsecond=0)
     return ts
+
+
+def first_minute(records: list[dict]) -> datetime | None:
+    """The earliest bronze minute of ``records`` (as
+    :func:`records_to_bronze` stores it: a naive minute names the UTC
+    minute) as an aware UTC datetime; None when no record has one."""
+    minutes = [_minute(v) for rec in records for k, v in rec.items()
+               if v is not None and snake_case(k) == "minutes1_utc"]
+    return min((m.replace(tzinfo=timezone.utc) if m.tzinfo is None
+                else m.astimezone(timezone.utc) for m in minutes),
+               default=None)
 
 
 def records_to_bronze(spark: SparkSession, records: list[dict],

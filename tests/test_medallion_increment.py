@@ -1,15 +1,18 @@
 """A steady-state medallion increment: its Spark job budget, its
 idempotency (a crash between the dim and fact inserts included), the
-schemas its typed reads pass, and the reference's lookback rule at an
-increment boundary."""
+schemas its typed reads pass, NULL-minute records, a ``file://``
+warehouse, and the reference's lookback rule at an increment
+boundary."""
 
 from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
+import duckdb
 import pytest
 
-from energi_data_pipeline_spark.io import (max_watermark, parquet_row_count,
+from energi_data_pipeline_spark.io import (key_schema, max_watermark,
+                                           parquet_row_count,
                                            read_layer_table, table_path)
 from energi_data_pipeline_spark.operators.gold import (GOLD_SCHEMA,
                                                        build_gold)
@@ -17,7 +20,7 @@ from energi_data_pipeline_spark.operators.silver import (
     DIM_TIME_SCHEMA, FACT_SCHEMA, build_dim_time, build_fact)
 from energi_data_pipeline_spark.pipelines import medallion
 from energi_data_pipeline_spark.pipelines.medallion import (
-    FACT_KEY, run_all, run_bronze, run_silver)
+    run_all, run_bronze, run_silver)
 from energi_data_pipeline_spark.sources.normalize import BRONZE_FULL_SCHEMA
 from energi_data_pipeline_spark.sources.rest import FixtureSource
 
@@ -30,13 +33,17 @@ from .test_pipeline_golden import (gold_rows_duck, gold_rows_spark,
 #: the fixture's mid-span split (as in test_pipeline_golden)
 T1 = datetime(2025, 11, 29, 10, 50)
 
+#: a fact watermark read: the fact table's key column alone
+FACT_KEY = key_schema(FACT_SCHEMA, ["time_id"])
+
 TABLES = [("bronze", "power_system_raw"), ("silver", "dim_time"),
           ("silver", "fact_power_system"), ("gold", "power_system_5min_avg")]
 
-#: jobs one steady-state increment may run: 10 measured (the bronze
-#: insert 3, the dim and fact inserts 2 each, the gold insert 3; the
-#: watermarks and the silver stats read footers and run none)
-MAX_JOBS = 11
+#: jobs one steady-state increment may run: 9 measured (the bronze
+#: insert 2, the dim and fact inserts 2 each, the gold insert 3; the
+#: watermarks, the silver stats and the anti-join bounds read footers
+#: and run none)
+MAX_JOBS = 9
 
 
 def upto(records, t: datetime) -> list[dict]:
@@ -49,12 +56,30 @@ def row_counts(wh: str) -> list[int]:
             for layer, name in TABLES]
 
 
+def table_rows(wh: str) -> list[list[tuple]]:
+    """Every row of the four layer tables, each table in one order."""
+    con = duckdb.connect()
+    return [sorted(con.execute(
+        f"SELECT * FROM read_parquet('{table_path(wh, layer, name)}"
+        "/*.parquet')").fetchall(), key=repr)
+        for layer, name in TABLES]
+
+
 class ReplaySource(FixtureSource):
     """Re-delivers every record whatever the cursor, so a rerun hands
     the whole history to the anti-joins."""
 
     def fetch(self, cursor) -> list[dict]:
         return super().fetch("1970-01-01T00:00")
+
+
+class NullMinuteSource(FixtureSource):
+    """Delivers, with the records after the cursor, every record that
+    has no minute (the fixture holds one)."""
+
+    def fetch(self, cursor) -> list[dict]:
+        return super().fetch(cursor) + [
+            r for r in self.records if r["Minutes1UTC"] is None]
 
 
 def _plain(schema):
@@ -126,6 +151,44 @@ def test_crash_between_dim_and_fact_inserts(spark, tmp_path, monkeypatch):
     assert after[:3] == [len(minutes)] * 3
     run_all(spark, wh, ReplaySource(records))
     assert row_counts(wh) == after
+
+
+def test_null_minute_records_are_kept_per_increment(spark, tmp_path):
+    """The bronze insert keeps one NULL-minute row per batch: a NULL
+    key clashes with nothing.  Its anti-join, bounded by the batch's
+    first minute, neither drops nor repeats a keyed row, and silver
+    leaves the NULL rows out."""
+    records = make_power_records()
+    nulls = [r for r in records if r["Minutes1UTC"] is None]
+    assert nulls
+    wh = str(tmp_path / "wh")
+    run_all(spark, wh, NullMinuteSource(upto(records, T1) + nulls))
+    run_all(spark, wh, NullMinuteSource(records))
+    got = duckdb.sql(
+        "SELECT minutes1_utc, co2_emission FROM read_parquet("
+        f"'{table_path(wh, 'bronze', 'power_system_raw')}/*.parquet')"
+    ).fetchall()
+    want = [(datetime.fromisoformat(r["Minutes1UTC"]), r["CO2Emission"])
+            for r in records if r["Minutes1UTC"]]
+    want += [(None, nulls[0]["CO2Emission"])] * 2
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    assert row_counts(wh)[1:3] == [len(want) - 2] * 2
+
+
+def test_uri_warehouse_matches_plain_path(spark, tmp_path):
+    """A ``file://`` warehouse is listed through Spark, not on the
+    driver: two increments write the tables the same run writes on
+    the plain path, and a replay of every record appends nothing."""
+    records = make_power_records()
+    plain, uri = tmp_path / "plain", tmp_path / "uri"
+    for wh in (str(plain), uri.as_uri()):
+        run_all(spark, wh, FixtureSource(upto(records, T1)))
+        run_all(spark, wh, FixtureSource(records))
+    before = table_rows(str(uri))
+    assert before == table_rows(str(plain))
+    assert all(before)
+    run_all(spark, uri.as_uri(), ReplaySource(records))
+    assert table_rows(str(uri)) == before
 
 
 def test_increments_ingest_every_record_in_any_local_zone(spark, tmp_path):

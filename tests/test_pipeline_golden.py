@@ -16,6 +16,7 @@ from energi_data_pipeline_spark.streaming.pipeline import run_streaming
 
 from . import reference_oracle
 from .fixtures import make_power_records
+from .test_layer_reads import job_group
 
 def contiguous_split(records, after: datetime) -> datetime:
     """First timestamp past ``after`` whose 4 preceding minutes all
@@ -175,7 +176,11 @@ def test_csv_export(spark, tmp_path, records):
     wh = str(tmp_path / "wh")
     run_all(spark, wh, FixtureSource(records))
     out = str(tmp_path / "ml_features")
-    export_ml_features(spark, wh, out)
+    with job_group(spark, "csv-export") as jobs:
+        export_ml_features(spark, wh, out)
+    # merged to one partition and sorted there: no range-bound
+    # sampling job, no shuffle
+    assert len(jobs()) == 1
     files = glob.glob(f"{out}/*.csv")
     assert len(files) == 1  # coalesce(1) single-file parity
     with open(files[0]) as fh:
