@@ -133,21 +133,16 @@ def build_gold(fact: DataFrame, dim: DataFrame, watermark=None,
     """
     spark = fact.sparkSession
     series = _time_series_sql(watermark is not None)
-    args = ({} if watermark is None
-            else {"read_from": watermark - LOOKBACK})
+    args = ({} if watermark is None else
+            {"read_from": watermark - LOOKBACK, "wm": watermark})
+    trim = "" if watermark is None else "WHERE time_id > :wm"
     if scaled:
-        agged = with_trailing_partitioned(
+        out = with_trailing_partitioned(
             spark.sql(series, args=args, fact=fact, dim=dim),
-            "time_id", WINDOW_ROWS, _window_aggs)
-        out = agged.select(*GOLD_SCHEMA.names)
-        if watermark is None:
-            return out
+            "time_id", WINDOW_ROWS, _window_aggs).select(*GOLD_SCHEMA.names)
         # trim warm-up rows after windowing (gold_aggr.py:219)
-        return out.filter(F.col("time_id") > F.lit(watermark))
-    trim = ""
-    if watermark is not None:
-        trim = "WHERE time_id > :wm"
-        args["wm"] = watermark
+        return out if watermark is None else out.filter(
+            F.col("time_id") > F.lit(watermark))
     return spark.sql(f"""
         SELECT * FROM (
             SELECT time_id, {_window_aggs_sql()}, wind_solar_ratio,
