@@ -8,7 +8,7 @@ Both builders take an optional watermark, a bound parameter of the
 filter ``ts > watermark``.  The filter bounds what an increment builds
 and writes; what it reads is bounded by the caller, which hands them
 only the bronze files whose footers hold minutes past the watermark
-(io.rows_after in pipelines.medallion).
+(io.read_layer_after in pipelines.medallion).
 
 :data:`DIM_TIME_SCHEMA` and :data:`FACT_SCHEMA` declare what the two
 builders write (the fact columns are named once, in

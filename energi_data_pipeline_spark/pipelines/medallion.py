@@ -13,8 +13,9 @@ Reads: every read passes a schema the engine already knows — bronze
 ``BRONZE_FULL_SCHEMA``, fact, dim and gold the schemas declared next
 to their builders, and an anti-join's destination its key column
 alone — so no read runs a schema-inference job.  A watermark and the
-silver stats line read no table: they come from a driver-side listing
-of the table's data files and their parquet footers (io.layer_span).
+silver stats line read no table: they come from the listing of the
+table's data files and their parquet footers (io.layer_span), which
+also choose the files of every bounded read (io.read_layer_after).
 Bronze is ingested through Arrow (sources.normalize), and each layer
 builder is one parameterized SQL statement (operators.silver,
 operators.gold).
@@ -26,9 +27,10 @@ minutes past its watermark.  Each anti-join reads only the destination
 files whose footer max is past its bound: the watermark for dim, fact
 and gold, and for bronze the instant before the batch's first minute,
 which the fetched records already hold on the driver — none in a
-steady increment (io.insert_if_absent).  Gold still scans the fact and
-dim tables; at the benchmark's few-file scale, choosing their newest
-files measured slower than the scan.  dim_time broadcasts; the
+steady increment (io.insert_if_absent).  An increment with nothing
+new runs no Spark job and writes no file.  Gold still scans the fact
+and dim tables; at the benchmark's few-file scale, choosing their
+newest files measured slower than the scan.  dim_time broadcasts; the
 ``scaled`` gold window runs partitioned-by-day with warm-up replay
 (operators.windows).
 """
@@ -41,7 +43,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import (export_csv, insert_if_absent, layer_span,
-                  read_layer_table, rows_after)
+                  read_layer_after, read_layer_table)
 from ..operators.gold import EXPORT_COLUMNS, GOLD_SCHEMA, build_gold
 from ..operators.silver import (DIM_TIME_SCHEMA, FACT_SCHEMA,
                                 build_dim_time, build_fact)
@@ -61,13 +63,16 @@ def run_bronze(spark: SparkSession, warehouse: str, source) -> int:
     reference's external dlt state directory entirely.  The append's
     anti-join reads only the bronze files holding a minute at or past
     the batch's first, which is none when the source honours the
-    cursor.
+    cursor.  An empty fetch writes nothing.
     """
     t0 = time.time()
     cursor = layer_span(spark, warehouse, "bronze", "power_system_raw",
                         "minutes1_utc")[2]
     cursor_str = format_cursor(cursor) if cursor else INITIAL_CURSOR
     records = source.fetch(cursor_str)
+    if not records:
+        print("bronze: no new records")
+        return 0
     df = records_to_bronze(spark, records)
     first = first_minute(records)
     # the last instant before the batch's first minute
@@ -79,15 +84,19 @@ def run_bronze(spark: SparkSession, warehouse: str, source) -> int:
 
 
 def silver_step(spark: SparkSession, warehouse: str,
-                bronze: DataFrame) -> None:
-    """The silver upsert of ``bronze`` rows past the fact watermark:
-    dim insert + fact insert.  Shared by :func:`run_silver` (all of
-    bronze) and the streaming micro-batch (one batch of it)."""
+                bronze: DataFrame | None = None) -> None:
+    """The silver upsert of the bronze rows past the fact watermark:
+    dim insert + fact insert.  ``bronze`` is one streaming
+    micro-batch; None reads the bronze files whose footers hold a
+    minute past the watermark (:func:`run_silver`).  The builders
+    filter ``> watermark`` either way."""
     wm = layer_span(spark, warehouse, "silver", "fact_power_system",
                     "time_id")[2] or EPOCH
-    bronze = rows_after(bronze, "minutes1_utc", wm)
     if bronze is None:
-        return
+        bronze = read_layer_after(spark, warehouse, "bronze",
+                                  "power_system_raw", BRONZE_FULL_SCHEMA, wm)
+        if bronze is None:
+            return
     insert_if_absent(spark, build_dim_time(bronze, watermark=wm),
                      warehouse, "silver", "dim_time", keys=["time_id"],
                      after=wm)
@@ -99,12 +108,7 @@ def silver_step(spark: SparkSession, warehouse: str,
 def run_silver(spark: SparkSession, warehouse: str) -> None:
     """silver_transform.py equivalent: watermark from the fact table,
     dim upsert + fact insert, stats report."""
-    bronze = read_layer_table(spark, warehouse, "bronze",
-                              "power_system_raw", schema=BRONZE_FULL_SCHEMA)
-    if bronze is None:
-        print("silver: no bronze data")
-        return
-    silver_step(spark, warehouse, bronze)
+    silver_step(spark, warehouse)
 
     total, earliest, latest = layer_span(spark, warehouse, "silver",
                                          "fact_power_system", "time_id")
@@ -119,15 +123,21 @@ def gold_step(spark: SparkSession, warehouse: str,
     """The gold upsert: watermark from the gold table, lookback-
     extended window build, trim, idempotent insert.  Shared by
     :func:`run_gold` and the streaming micro-batch; False when
-    silver holds no data yet."""
+    silver holds no data yet.  A gold row's time_id is a fact row's,
+    so nothing is built while the fact table's footer max is not past
+    the gold watermark."""
+    latest = layer_span(spark, warehouse, "silver", "fact_power_system",
+                        "time_id")[2]
+    if latest is None:
+        return False
+    wm = layer_span(spark, warehouse, "gold", "power_system_5min_avg",
+                    "time_id")[2] or EPOCH
+    if latest <= wm:
+        return True
     fact = read_layer_table(spark, warehouse, "silver",
                             "fact_power_system", schema=FACT_SCHEMA)
     dim = read_layer_table(spark, warehouse, "silver", "dim_time",
                            schema=DIM_TIME_SCHEMA)
-    if fact is None or dim is None:
-        return False
-    wm = layer_span(spark, warehouse, "gold", "power_system_5min_avg",
-                    "time_id")[2] or EPOCH
     gold = build_gold(fact, dim, watermark=wm, scaled=scaled)
     insert_if_absent(spark, gold, warehouse, "gold",
                      "power_system_5min_avg", keys=["time_id"], after=wm)

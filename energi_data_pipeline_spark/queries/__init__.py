@@ -261,11 +261,14 @@ _VERIFY_CHANGED_PINS: tuple[str, ...] = (
     "curation_funnel_report", "curation_split_leakage",
     "curation_dataset_card", "curation_cluster_representatives",
     "stream_incremental_lsh_dedup",
+    # lost its eager count and its token cache (its consumer
+    # curation_funnel_report is pinned above)
+    "curation_decontaminate",
 )
 
 _VERIFY_FRONT_WINDOW: tuple[str, ...] = _VERIFY_CHANGED_PINS + (
-    # After the 15 changed-code pins above, the window fills with the
-    # 35 STALEST entries by newest green CORRECTNESS_r* row (oldest
+    # After the 16 changed-code pins above, the window fills with the
+    # 34 STALEST entries by newest green CORRECTNESS_r* row (oldest
     # round, then name): the r05 backlog, then r06-r09.
     "curation_mixture_sample",
     "curation_quota_sample",
@@ -301,7 +304,6 @@ _VERIFY_FRONT_WINDOW: tuple[str, ...] = _VERIFY_CHANGED_PINS + (
     "sketch_countmin_heavy_hitters",
     "sketch_hll_distinct",
     "dedup_containment",
-    "dedup_embedding_cosine",
 )
 
 

@@ -172,16 +172,15 @@ def curation_decontaminate(spark, sf_dir):
     sets are tiny and fixed-size, so the semi-ish join on the
     shingle key is the scan-the-corpus-once pattern (AQE broadcasts
     the eval shingles; unhinted, since 'tiny' is a property of eval
-    sets, not a structural guarantee).  The shingle arrays reuse the
-    MinHash family's cache-barrier pattern: the token split and the
-    shingle transform each evaluate once per document, never once
-    per element access."""
+    sets, not a structural guarantee).  The token split and the
+    shingle transform each evaluate once per document: Catalyst does
+    not inline a non-cheap projection referenced twice, and the lazy
+    cache on the shingle arrays serves both the eval and the train
+    branch.  Building the query runs no Spark job."""
     d = spread(t(spark, sf_dir, "documents"))
-    toks = d.select(
-        "doc_id", tokens_col(F.col("text")).alias("tk")).cache()
+    toks = d.select("doc_id", tokens_col(F.col("text")).alias("tk"))
     sh = toks.select(
         "doc_id", shingles_from_tokens(F.col("tk")).alias("sh")).cache()
-    sh.count()  # materialize before eval/train branches race it
     eval_g = (sh.filter(F.col("doc_id") % EVAL_STRIDE == 0)
               .select(F.explode("sh").alias("g")).distinct())
     train = sh.filter(F.col("doc_id") % EVAL_STRIDE != 0)

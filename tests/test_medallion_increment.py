@@ -1,17 +1,19 @@
-"""A steady-state medallion increment: its Spark job budget, its
-idempotency (a crash between the dim and fact inserts included), the
-schemas its typed reads pass, NULL-minute records, a ``file://``
-warehouse, and the reference's lookback rule at an increment
-boundary."""
+"""A steady-state medallion increment: its Spark job budget (none for
+an idle one), its idempotency (a crash between the dim and fact
+inserts included), the schemas its typed reads pass, NULL-minute
+records, a ``file://`` warehouse, and the reference's lookback rule at
+an increment boundary."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timedelta, timezone
 
 import duckdb
 import pytest
 
-from energi_data_pipeline_spark.io import (key_schema, max_watermark,
+from energi_data_pipeline_spark.io import (key_schema, layer_span,
+                                           max_watermark,
                                            parquet_row_count,
                                            read_layer_table, table_path)
 from energi_data_pipeline_spark.operators.gold import (GOLD_SCHEMA,
@@ -56,6 +58,12 @@ def row_counts(wh: str) -> list[int]:
             for layer, name in TABLES]
 
 
+def part_files(wh: str) -> list[int]:
+    return [sum(f.endswith(".parquet")
+                for f in os.listdir(table_path(wh, layer, name)))
+            for layer, name in TABLES]
+
+
 def table_rows(wh: str) -> list[list[tuple]]:
     """Every row of the four layer tables, each table in one order."""
     con = duckdb.connect()
@@ -94,19 +102,32 @@ def test_declared_schemas_match_builders(spark):
     assert _plain(build_gold(fact, dim).schema) == _plain(GOLD_SCHEMA)
 
 
-def test_steady_increment_job_budget_and_idempotency(spark, tmp_path):
+def test_steady_increment_job_budget_and_idempotency(spark, tmp_path,
+                                                     monkeypatch):
     records = make_power_records()
     wh = str(tmp_path / "wh")
     run_all(spark, wh, FixtureSource(upto(records, T1)))
+    # no read asks Spark which files a frame scans: the listing knows
+    asked = []
+    frame = type(spark.range(1))
+    input_files = frame.inputFiles
+
+    def counted(df):
+        asked.append(df)
+        return input_files(df)
+    monkeypatch.setattr(frame, "inputFiles", counted)
     with job_group(spark, "steady-increment") as jobs:
         run_all(spark, wh, FixtureSource(records))
+    monkeypatch.undo()
     assert len(jobs()) <= MAX_JOBS, len(jobs())
     assert inference_jobs(jobs()) == []
+    assert asked == []
+    with job_group(spark, "footer-watermark") as jobs:
+        wm = layer_span(spark, wh, "silver", "fact_power_system",
+                        "time_id")[2]
+    assert jobs() == []
     fact = read_layer_table(spark, wh, "silver", "fact_power_system",
                             schema=FACT_KEY)
-    with job_group(spark, "footer-watermark") as jobs:
-        wm = max_watermark(fact, "time_id", None)
-    assert jobs() == []
     assert wm == fact.agg({"time_id": "max"}).first()[0].astimezone(
         timezone.utc)
 
@@ -117,6 +138,21 @@ def test_steady_increment_job_budget_and_idempotency(spark, tmp_path):
     # each table unchanged
     run_all(spark, wh, ReplaySource(records))
     assert row_counts(wh) == before
+
+
+def test_idle_increment_runs_no_job_and_writes_nothing(spark, tmp_path):
+    """An increment whose fetch brings no record submits no Spark job
+    and adds no file to any layer table: bronze skips the empty
+    fetch, silver finds no bronze file past its watermark, and gold
+    finds no fact past its own."""
+    records = make_power_records()
+    wh = str(tmp_path / "wh")
+    run_all(spark, wh, FixtureSource(records))
+    before = part_files(wh)
+    with job_group(spark, "idle-increment") as jobs:
+        run_all(spark, wh, FixtureSource(records))
+    assert jobs() == []
+    assert part_files(wh) == before
 
 
 def test_crash_between_dim_and_fact_inserts(spark, tmp_path, monkeypatch):
@@ -176,9 +212,10 @@ def test_null_minute_records_are_kept_per_increment(spark, tmp_path):
 
 
 def test_uri_warehouse_matches_plain_path(spark, tmp_path):
-    """A ``file://`` warehouse is listed through Spark, not on the
-    driver: two increments write the tables the same run writes on
-    the plain path, and a replay of every record appends nothing."""
+    """A ``file://`` warehouse is listed by Spark's Hadoop FileSystem
+    and its footers read on the driver: two increments write the
+    tables the same run writes on the plain path, and a replay of
+    every record appends nothing."""
     records = make_power_records()
     plain, uri = tmp_path / "plain", tmp_path / "uri"
     for wh in (str(plain), uri.as_uri()):

@@ -45,8 +45,9 @@ def test_band_keys_are_exact(spark, nh, nb):
 
 
 def test_minhash_queries_build_without_jobs(spark):
-    """Building the MinHash queries submits no Spark job: signing,
-    banding and the sweep's counts all run when the result is
+    """Building the MinHash queries and the shingle-overlap
+    decontamination submits no Spark job: signing, banding, the
+    sweep's counts and the shingle arrays all run when the result is
     consumed, not while the plan is constructed."""
     from energi_data_pipeline_spark.queries import load_all
     from energi_data_pipeline_spark.queries.core import t
@@ -58,7 +59,7 @@ def test_minhash_queries_build_without_jobs(spark):
     try:
         for name in ("dedup_minhash_signature", "dedup_minhash_lsh_pairs",
                      "dedup_lsh_banding_sweep",
-                     "dedup_minhash_calibration"):
+                     "dedup_minhash_calibration", "curation_decontaminate"):
             with job_group(spark, f"build:{name}") as jobs:
                 registry[name].fn(spark, SF0001)
                 assert jobs() == [], name
