@@ -553,17 +553,27 @@ def read_layer_after(spark: SparkSession, warehouse: str, layer: str,
     timestamp column, so this choice of files is what bounds the read
     by the increment instead of the table's history.  Where the
     footers cannot answer, every file is read and filtered.  A naive
-    ``after`` is local time, as PySpark reads a naive literal."""
+    ``after`` is local time, as PySpark reads a naive literal.
+
+    The row predicate ``col > after`` is kept only where a chosen
+    file straddles the bound (its footer min is at or before
+    ``after``) or the footers cannot answer.  Otherwise every
+    non-NULL key read is past the bound, and ``col IS NOT NULL`` is
+    exact: the plan then carries no per-increment literal, so its
+    generated code is compiled once per session, not per increment."""
     col = schema.names[0]
     files, spans = _key_spans(spark, warehouse, layer, name, col)
+    cond = F.col(col) > F.lit(after)
     if spans is not None:
         bound = after.astimezone(timezone.utc)
-        files = [p for p, _n, _lo, hi in spans
-                 if hi is not None and hi > bound]
+        chosen = [(p, lo) for p, _n, lo, hi in spans
+                  if hi is not None and hi > bound]
+        files = [p for p, _lo in chosen]
+        if all(lo > bound for _p, lo in chosen):
+            cond = F.col(col).isNotNull()
     if not files:
         return None
-    return (spark.read.schema(schema).parquet(*files)
-            .where(F.col(col) > F.lit(after)))
+    return spark.read.schema(schema).parquet(*files).where(cond)
 
 
 def max_watermark(df: DataFrame | None, col: str, default):
@@ -629,7 +639,13 @@ def insert_if_absent(spark: SparkSession, new_df: DataFrame, warehouse: str,
     at or before it.  Only the destination files holding a key past
     it are read (:func:`read_layer_after`) — none in a steady
     increment of a self-watermarked table.  A NULL key never clashes:
-    the batch keeps one NULL-keyed row, as without ``after``."""
+    the batch keeps one NULL-keyed row, as without ``after``.
+
+    When the anti-join runs and leaves no row (a replay, or the
+    repair of a crash), nothing is written: one emptiness job instead
+    of an empty part file.  A steady increment, whose bounds lie at
+    or past every destination key, reads no destination file and runs
+    no such job."""
     path = table_path(warehouse, layer, name)
     schema = key_schema(new_df.schema, keys)
     existing = (
@@ -639,10 +655,30 @@ def insert_if_absent(spark: SparkSession, new_df: DataFrame, warehouse: str,
     batch = new_df.dropDuplicates(keys)
     if existing is not None:
         batch = batch.join(existing, on=keys, how="left_anti")
+        if batch.isEmpty():
+            return
     writer = naive_timestamps(batch).write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+
+
+def run_concurrently(spark: SparkSession, calls: list) -> None:
+    """Run the independent zero-argument ``calls`` (writes of
+    distinct tables) on a thread pool, each under the caller's job
+    group, description and other local properties
+    (``inheritable_thread_target``; a bare pool's thread submits its
+    jobs with none of them).  Every call is waited for, then the
+    first failure, in the order of ``calls``, is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futs = [pool.submit(inheritable_thread_target(spark)(call))
+                for call in calls]
+    for f in futs:
+        f.result()
 
 
 def append_batch_segment(spark: SparkSession, df: DataFrame,

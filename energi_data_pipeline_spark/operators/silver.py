@@ -4,11 +4,12 @@ Re-expresses silver_transform.py:61-106, like the reference, as SQL
 text: each builder is one parameterized ``spark.sql`` statement over
 the bronze frame, so it is analyzed once instead of step by step
 through the Column API (the same Catalyst plan; Spark SQL, SIGMOD'15).
-Both builders take an optional watermark, a bound parameter of the
-filter ``ts > watermark``.  The filter bounds what an increment builds
-and writes; what it reads is bounded by the caller, which hands them
-only the bronze files whose footers hold minutes past the watermark
-(io.read_layer_after in pipelines.medallion).
+The builders do not filter by time: what an increment builds is the
+bronze frame the caller hands them, the rows past the silver
+watermark (io.read_layer_after in pipelines.medallion, or a filtered
+micro-batch).  With no watermark literal in their text, a builder's
+plan is the same every increment and its generated code is compiled
+once.
 
 :data:`DIM_TIME_SCHEMA` and :data:`FACT_SCHEMA` declare what the two
 builders write (the fact columns are named once, in
@@ -38,8 +39,8 @@ DIM_TIME_SCHEMA = StructType([
 ])
 
 
-def build_dim_time(bronze: DataFrame, ts_col: str = "minutes1_utc",
-                   watermark=None) -> DataFrame:
+def build_dim_time(bronze: DataFrame,
+                   ts_col: str = "minutes1_utc") -> DataFrame:
     """``SELECT DISTINCT`` time features (silver_transform.py:61-82).
 
     Note: like the reference, the dim builder does *not* filter NULL
@@ -47,8 +48,6 @@ def build_dim_time(bronze: DataFrame, ts_col: str = "minutes1_utc",
     matching silver_transform.py:61-82 vs :104.
     """
     ts = f"`{ts_col}`"
-    where, args = ("", {}) if watermark is None else (
-        f"WHERE {ts} > :wm", {"wm": watermark})
     return bronze.sparkSession.sql(f"""
         SELECT DISTINCT {ts} AS time_id, to_date({ts}) AS date,
                CAST(hour({ts}) AS INT) AS hour,
@@ -56,7 +55,7 @@ def build_dim_time(bronze: DataFrame, ts_col: str = "minutes1_utc",
                {dow_sunday0_sql(ts)} AS day_of_week,
                {is_weekend_sql(ts)} AS is_weekend,
                {season_sql(ts)} AS season
-        FROM {{bronze}} {where}""", args=args, bronze=bronze)
+        FROM {{bronze}}""", bronze=bronze)
 
 
 #: the 13 fact measures :func:`build_fact` writes, in column order:
@@ -84,16 +83,13 @@ FACT_SCHEMA = StructType(
     + [StructField(c, DoubleType()) for c in FACT_MEASURES])
 
 
-def build_fact(bronze: DataFrame, ts_col: str = "minutes1_utc",
-               watermark=None) -> DataFrame:
+def build_fact(bronze: DataFrame,
+               ts_col: str = "minutes1_utc") -> DataFrame:
     """Projection / rename / arithmetic + NULL-key filter
     (silver_transform.py:85-106)."""
     ts = f"`{ts_col}`"
-    where, args = ("", {}) if watermark is None else (
-        f"{ts} > :wm AND", {"wm": watermark})
     measures = ", ".join(f"{' + '.join(src)} AS {name}"
                          for name, src in FACT_MEASURES.items())
     return bronze.sparkSession.sql(
         f"SELECT {ts} AS time_id, {measures} FROM {{bronze}} "
-        f"WHERE {where} {ts} IS NOT NULL",
-        args=args, bronze=bronze)
+        f"WHERE {ts} IS NOT NULL", bronze=bronze)

@@ -3,11 +3,15 @@ reference's three entry points (SURVEY.md §3).
 
 Storage model: a warehouse directory of parquet tables in
 ``bronze/ silver/ gold/`` layers (the reference's DuckDB schemas,
-silver_transform.py:19).  Every layer is written with
+silver_transform.py:19).  Every table is written with
 ``insert_if_absent`` (anti-join append = ON CONFLICT DO NOTHING) and
 reads incrementally from its own destination watermark
 (COALESCE(MAX(time_id), epoch)) — the reference's self-watermarking
-protocol, no external state store.
+protocol, no external state store.  The two silver tables, dim_time
+and fact_power_system, share one bronze read past the lower of their
+watermarks and insert concurrently (io.run_concurrently): they read
+the same rows and write different tables, so a crash between them is
+repaired by the next increment whichever finished first.
 
 Reads: every read passes a schema the engine already knows — bronze
 ``BRONZE_FULL_SCHEMA``, fact, dim and gold the schemas declared next
@@ -16,18 +20,23 @@ alone — so no read runs a schema-inference job.  A watermark and the
 silver stats line read no table: they come from the listing of the
 table's data files and their parquet footers (io.layer_span), which
 also choose the files of every bounded read (io.read_layer_after).
-Bronze is ingested through Arrow (sources.normalize), and each layer
-builder is one parameterized SQL statement (operators.silver,
-operators.gold).
+Bronze is ingested through Arrow (sources.normalize) as one
+partition, so its dedup needs no exchange, and each layer builder is
+one SQL statement (operators.silver, operators.gold).  The silver
+plans carry no per-increment literal: the builders do not filter,
+and a bronze read whose files all lie past the watermark filters
+``IS NOT NULL`` (io.read_layer_after), so their generated code is
+compiled once per session.
 
 Scale: every layer table is written unpartitioned, with its time key
 stored as a naive INT64 timestamp whose parquet footers carry min/max
 (io.naive_timestamps).  Silver reads only the bronze files holding
 minutes past its watermark.  Each anti-join reads only the destination
 files whose footer max is past its bound: the watermark for dim, fact
-and gold, and for bronze the instant before the batch's first minute,
-which the fetched records already hold on the driver — none in a
-steady increment (io.insert_if_absent).  An increment with nothing
+and gold, and for bronze the instant before the batch's first minute
+past the cursor, which the fetched records already hold on the
+driver — none in a steady increment, the live API's re-delivered
+cursor minute included (io.insert_if_absent).  An increment with nothing
 new runs no Spark job and writes no file.  Gold still scans the fact
 and dim tables; at the benchmark's few-file scale, choosing their
 newest files measured slower than the scan.  dim_time broadcasts; the
@@ -37,44 +46,56 @@ newest files measured slower than the scan.  dim_time broadcasts; the
 
 from __future__ import annotations
 
+import functools
 import time
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io import (export_csv, insert_if_absent, layer_span,
-                  read_layer_after, read_layer_table)
+                  read_layer_after, read_layer_table, run_concurrently)
 from ..operators.gold import EXPORT_COLUMNS, GOLD_SCHEMA, build_gold
 from ..operators.silver import (DIM_TIME_SCHEMA, FACT_SCHEMA,
                                 build_dim_time, build_fact)
-from ..sources.normalize import (BRONZE_FULL_SCHEMA, first_minute,
-                                 records_to_bronze)
+from ..sources.normalize import (BRONZE_FULL_SCHEMA, batch_load_id,
+                                 record_minute, records_to_bronze)
 from ..sources.rest import INITIAL_CURSOR, format_cursor
 
 EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 def run_bronze(spark: SparkSession, warehouse: str, source) -> int:
-    """bronze_ingest.py equivalent: fetch records after the cursor,
-    normalize, dedup the cursor-boundary rows, append.
+    """bronze_ingest.py equivalent: fetch records from the cursor,
+    normalize, drop the cursor-minute rows, append.
 
     The cursor is MAX(minutes1_utc) of the bronze table itself —
     the same self-watermark silver/gold already use, which drops the
-    reference's external dlt state directory entirely.  The append's
-    anti-join reads only the bronze files holding a minute at or past
-    the batch's first, which is none when the source honours the
-    cursor.  An empty fetch writes nothing.
+    reference's external dlt state directory entirely.  The live
+    API's ``start=`` is inclusive, so a fetch re-delivers the cursor
+    minute; bronze already holds that key, and its rows are dropped
+    here, on the driver.  The append's anti-join then reads only the
+    bronze files holding a minute at or past the batch's first, which
+    is none unless the source re-delivers older minutes (a replay).
+    A fetch with nothing past the cursor writes nothing.
     """
     t0 = time.time()
     cursor = layer_span(spark, warehouse, "bronze", "power_system_raw",
                         "minutes1_utc")[2]
     cursor_str = format_cursor(cursor) if cursor else INITIAL_CURSOR
-    records = source.fetch(cursor_str)
+    fetched = source.fetch(cursor_str)
+    minutes = [record_minute(r) for r in fetched]
+    records = [r for r, m in zip(fetched, minutes)
+               if cursor is None or m != cursor]
     if not records:
         print("bronze: no new records")
         return 0
-    df = records_to_bronze(spark, records)
-    first = first_minute(records)
+    # the load id names the batch as fetched.  The batch is one
+    # partition already on the driver: reported as SinglePartition,
+    # its dedup needs no exchange (one job, one file)
+    df = records_to_bronze(spark, records,
+                           load_id=batch_load_id(fetched)).coalesce(1)
+    first = min((m for m in minutes if m is not None and m != cursor),
+                default=None)
     # the last instant before the batch's first minute
     after = None if first is None else first - timedelta(microseconds=1)
     insert_if_absent(spark, df, warehouse, "bronze", "power_system_raw",
@@ -85,29 +106,36 @@ def run_bronze(spark: SparkSession, warehouse: str, source) -> int:
 
 def silver_step(spark: SparkSession, warehouse: str,
                 bronze: DataFrame | None = None) -> None:
-    """The silver upsert of the bronze rows past the fact watermark:
-    dim insert + fact insert.  ``bronze`` is one streaming
-    micro-batch; None reads the bronze files whose footers hold a
-    minute past the watermark (:func:`run_silver`).  The builders
-    filter ``> watermark`` either way."""
-    wm = layer_span(spark, warehouse, "silver", "fact_power_system",
-                    "time_id")[2] or EPOCH
+    """The silver upsert of the bronze rows past the silver
+    watermark: the dim and fact inserts, run concurrently.
+
+    The watermark ``lo`` is the lower of the two tables' own footer
+    maxima; a completed increment leaves them equal.  ``bronze`` is
+    one streaming micro-batch, filtered ``> lo`` here; None reads the
+    bronze files whose footers hold a minute past ``lo``
+    (:func:`run_silver`).  Each insert anti-joins past ``lo``, so
+    after a crash between the two the lagging table's rows are
+    rebuilt and the leading table's already-held keys dropped,
+    whichever table led."""
+    lo = min(layer_span(spark, warehouse, "silver", name, "time_id")[2]
+             or EPOCH for name in ("dim_time", "fact_power_system"))
     if bronze is None:
         bronze = read_layer_after(spark, warehouse, "bronze",
-                                  "power_system_raw", BRONZE_FULL_SCHEMA, wm)
+                                  "power_system_raw", BRONZE_FULL_SCHEMA, lo)
         if bronze is None:
             return
-    insert_if_absent(spark, build_dim_time(bronze, watermark=wm),
-                     warehouse, "silver", "dim_time", keys=["time_id"],
-                     after=wm)
-    insert_if_absent(spark, build_fact(bronze, watermark=wm), warehouse,
-                     "silver", "fact_power_system", keys=["time_id"],
-                     after=wm)
+    else:
+        bronze = bronze.where(F.col("minutes1_utc") > F.lit(lo))
+    run_concurrently(spark, [
+        functools.partial(insert_if_absent, spark, build(bronze), warehouse,
+                          "silver", name, keys=["time_id"], after=lo)
+        for name, build in (("dim_time", build_dim_time),
+                            ("fact_power_system", build_fact))])
 
 
 def run_silver(spark: SparkSession, warehouse: str) -> None:
-    """silver_transform.py equivalent: watermark from the fact table,
-    dim upsert + fact insert, stats report."""
+    """silver_transform.py equivalent: watermark from the silver
+    tables, dim upsert + fact insert, stats report."""
     silver_step(spark, warehouse)
 
     total, earliest, latest = layer_span(spark, warehouse, "silver",

@@ -1126,11 +1126,11 @@ def _run_index_stream(spark, path: str, corpus, id_col: str,
     calls (the step's own marks, then ``publish_verdicts``,
     ``append_index`` and ``compact``).  They observe the one path
     that always runs; they add no job."""
+    import functools
     import time
-    from concurrent.futures import ThreadPoolExecutor
 
     from ..io import (append_batch_segment, maybe_compact_segments,
-                      read_layer_table)
+                      read_layer_table, run_concurrently)
 
     src = tempfile.mkdtemp(prefix="index_stream_src_")
     wh = tempfile.mkdtemp(prefix="index_stream_wh_")
@@ -1165,13 +1165,10 @@ def _run_index_stream(spark, path: str, corpus, id_col: str,
         append_batch_segment(sess, verdicts, wh, "gold", verdict_table,
                              bid, keys=keys)
         mark("publish_verdicts")
-        with ThreadPoolExecutor(max_workers=len(appends)) as pool:
-            futs = [pool.submit(append_batch_segment, sess, sdf, wh,
-                                layer, table, bid, partition_by=pby,
-                                keys=keys)
-                    for sdf, layer, table, pby in appends]
-            for f in futs:
-                f.result()  # surface the first failure
+        run_concurrently(sess, [
+            functools.partial(append_batch_segment, sess, sdf, wh, layer,
+                              table, bid, partition_by=pby, keys=keys)
+            for sdf, layer, table, pby in appends])
         mark("append_index")
         # wired compaction policy (r11 verdict #4): bound the segment
         # listing at O(SEGMENT_COMPACT_EVERY + horizon) directories

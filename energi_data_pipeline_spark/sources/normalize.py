@@ -92,15 +92,16 @@ def _minute(ts):
     return ts
 
 
-def first_minute(records: list[dict]) -> datetime | None:
-    """The earliest bronze minute of ``records`` (as
-    :func:`records_to_bronze` stores it: a naive minute names the UTC
-    minute) as an aware UTC datetime; None when no record has one."""
-    minutes = [_minute(v) for rec in records for k, v in rec.items()
-               if v is not None and snake_case(k) == "minutes1_utc"]
-    return min((m.replace(tzinfo=timezone.utc) if m.tzinfo is None
-                else m.astimezone(timezone.utc) for m in minutes),
-               default=None)
+def record_minute(rec: dict) -> datetime | None:
+    """The bronze minute of one record (as :func:`records_to_bronze`
+    stores it: a naive minute names the UTC minute) as an aware UTC
+    datetime; None when it has none."""
+    m = _minute({snake_case(k): v for k, v in rec.items()}
+                .get("minutes1_utc"))
+    if m is None:
+        return None
+    return (m.replace(tzinfo=timezone.utc) if m.tzinfo is None
+            else m.astimezone(timezone.utc))
 
 
 def records_to_bronze(spark: SparkSession, records: list[dict],

@@ -12,25 +12,28 @@ from datetime import datetime, timedelta, timezone
 import duckdb
 import pytest
 
-from energi_data_pipeline_spark.io import (key_schema, layer_span,
-                                           max_watermark,
+from energi_data_pipeline_spark.io import (insert_if_absent, key_schema,
+                                           layer_span, max_watermark,
                                            parquet_row_count,
-                                           read_layer_table, table_path)
+                                           read_layer_after,
+                                           read_layer_table,
+                                           run_concurrently, table_path)
 from energi_data_pipeline_spark.operators.gold import (GOLD_SCHEMA,
                                                        build_gold)
 from energi_data_pipeline_spark.operators.silver import (
     DIM_TIME_SCHEMA, FACT_SCHEMA, build_dim_time, build_fact)
 from energi_data_pipeline_spark.pipelines import medallion
 from energi_data_pipeline_spark.pipelines.medallion import (
-    run_all, run_bronze, run_silver)
+    run_all, run_bronze, run_silver, silver_step)
 from energi_data_pipeline_spark.sources.normalize import BRONZE_FULL_SCHEMA
-from energi_data_pipeline_spark.sources.rest import FixtureSource
+from energi_data_pipeline_spark.sources.rest import (FixtureSource,
+                                                     format_cursor)
 
 from . import reference_oracle
 from .fixtures import make_power_records
 from .test_layer_reads import inference_jobs, job_group, local_tz
-from .test_pipeline_golden import (gold_rows_duck, gold_rows_spark,
-                                   rows_close)
+from .test_pipeline_golden import (contiguous_split, gold_rows_duck,
+                                   gold_rows_spark, rows_close)
 
 #: the fixture's mid-span split (as in test_pipeline_golden)
 T1 = datetime(2025, 11, 29, 10, 50)
@@ -41,11 +44,12 @@ FACT_KEY = key_schema(FACT_SCHEMA, ["time_id"])
 TABLES = [("bronze", "power_system_raw"), ("silver", "dim_time"),
           ("silver", "fact_power_system"), ("gold", "power_system_5min_avg")]
 
-#: jobs one steady-state increment may run: 9 measured (the bronze
-#: insert 2, the dim and fact inserts 2 each, the gold insert 3; the
-#: watermarks, the silver stats and the anti-join bounds read footers
-#: and run none)
-MAX_JOBS = 9
+#: jobs one steady-state increment runs, all in the caller's job
+#: group: the bronze insert 1 (a one-partition batch dedups with no
+#: exchange), the dim and fact inserts 2 each (run concurrently), the
+#: gold insert 3; the watermarks, the silver stats and the anti-join
+#: bounds read footers and run none
+MAX_JOBS = 8
 
 
 def upto(records, t: datetime) -> list[dict]:
@@ -79,6 +83,18 @@ class ReplaySource(FixtureSource):
 
     def fetch(self, cursor) -> list[dict]:
         return super().fetch("1970-01-01T00:00")
+
+
+class InclusiveSource(FixtureSource):
+    """Delivers the records at the cursor minute too, as the live
+    API's inclusive ``start=`` does: every fetch re-delivers the
+    newest minute bronze holds."""
+
+    def fetch(self, cursor) -> list[dict]:
+        cur = format_cursor(cursor)
+        return [r for r in self.records
+                if r["Minutes1UTC"] and r["Minutes1UTC"][:16] == cur] \
+            + super().fetch(cursor)
 
 
 class NullMinuteSource(FixtureSource):
@@ -119,7 +135,7 @@ def test_steady_increment_job_budget_and_idempotency(spark, tmp_path,
     with job_group(spark, "steady-increment") as jobs:
         run_all(spark, wh, FixtureSource(records))
     monkeypatch.undo()
-    assert len(jobs()) <= MAX_JOBS, len(jobs())
+    assert len(jobs()) == MAX_JOBS, len(jobs())
     assert inference_jobs(jobs()) == []
     assert asked == []
     with job_group(spark, "footer-watermark") as jobs:
@@ -138,6 +154,79 @@ def test_steady_increment_job_budget_and_idempotency(spark, tmp_path,
     # each table unchanged
     run_all(spark, wh, ReplaySource(records))
     assert row_counts(wh) == before
+
+
+def test_inclusive_cursor_increment_keeps_the_budget(spark, tmp_path):
+    """A source whose cursor is inclusive, as the live API's is,
+    re-delivers bronze's newest minute on every fetch.  ``run_bronze``
+    drops it on the driver, so a steady increment still runs exactly
+    ``MAX_JOBS`` jobs (its bronze anti-join reads no file), one that
+    brings only that minute runs none and writes nothing, and the
+    tables hold the rows an exclusive cursor leaves (the load ids
+    aside: each names the batch as fetched)."""
+    records = make_power_records()
+    wh, ref = str(tmp_path / "wh"), str(tmp_path / "ref")
+    run_all(spark, wh, InclusiveSource(upto(records, T1)))
+    with job_group(spark, "inclusive-increment") as jobs:
+        run_all(spark, wh, InclusiveSource(records))
+    assert len(jobs()) == MAX_JOBS, len(jobs())
+    before = part_files(wh)
+    with job_group(spark, "inclusive-idle") as jobs:
+        run_all(spark, wh, InclusiveSource(records))
+    assert jobs() == []
+    assert part_files(wh) == before
+
+    for batch in (upto(records, T1), records):
+        run_all(spark, ref, FixtureSource(batch))
+    got, want = table_rows(wh), table_rows(ref)
+    assert got[1:] == want[1:]
+    load_id = BRONZE_FULL_SCHEMA.names.index("_load_id")
+    assert [r[:load_id] for r in got[0]] == [r[:load_id] for r in want[0]]
+
+
+def test_concurrent_calls_keep_the_callers_job_group(spark):
+    """Jobs submitted through ``run_concurrently`` run in the caller's
+    job group (a bare pool's threads submit theirs in none), every
+    call is waited for, and the first failure is re-raised."""
+    with job_group(spark, "concurrent-calls") as jobs:
+        run_concurrently(spark, [spark.range(5).collect,
+                                 spark.range(7).collect])
+    assert len(jobs()) >= 2
+
+    done = []
+
+    def fail(msg):
+        raise ValueError(msg)
+
+    def slow():
+        spark.range(3).collect()
+        done.append(True)
+    with pytest.raises(ValueError, match="first"):
+        run_concurrently(spark, [lambda: fail("first"), slow,
+                                 lambda: fail("second")])
+    assert done == [True]
+
+
+def test_warm_silver_step_compiles_no_class(spark, tmp_path):
+    """The silver plans carry no per-increment literal: once two
+    increments have run, a third one's silver step compiles no
+    generated class (Janino compiles counted by Spark's
+    ``CodegenMetrics``)."""
+    records = make_power_records()
+    minutes = sorted({datetime.fromisoformat(r["Minutes1UTC"])
+                      for r in records if r["Minutes1UTC"]})
+    wh = str(tmp_path / "wh")
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    for k in range(1, 5):
+        run_bronze(spark, wh, FixtureSource(
+            upto(records, minutes[len(minutes) * k // 4 - 1])))
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        silver_step(spark, wh)
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount() - before
+    assert compiled == 0
+    assert [parquet_row_count(table_path(wh, "silver", name))
+            for name in ("dim_time", "fact_power_system")] \
+        == [len(minutes)] * 2
 
 
 def test_idle_increment_runs_no_job_and_writes_nothing(spark, tmp_path):
@@ -187,6 +276,73 @@ def test_crash_between_dim_and_fact_inserts(spark, tmp_path, monkeypatch):
     assert after[:3] == [len(minutes)] * 3
     run_all(spark, wh, ReplaySource(records))
     assert row_counts(wh) == after
+
+
+def test_fact_ahead_of_dim_is_repaired(spark, tmp_path):
+    """Dim and fact insert concurrently, so a crash can leave the fact
+    table ahead of dim.  The next increment reads bronze past the
+    lower, dim's, watermark: every minute reaches dim, the fact
+    anti-join drops what fact already holds, and gold equals both a
+    rebuild over the full silver tables and the oracle."""
+    records = make_power_records()
+    # a gap-free boundary, where the incremental gold equals a rebuild
+    t1 = contiguous_split(records, datetime(2025, 11, 29, 10, 30))
+    wh = str(tmp_path / "wh")
+    run_all(spark, wh, FixtureSource(upto(records, t1)))
+    run_bronze(spark, wh, FixtureSource(records))
+    wm = layer_span(spark, wh, "silver", "fact_power_system", "time_id")[2]
+    bronze = read_layer_after(spark, wh, "bronze", "power_system_raw",
+                              BRONZE_FULL_SCHEMA, wm)
+    insert_if_absent(spark, build_fact(bronze), wh, "silver",
+                     "fact_power_system", keys=["time_id"], after=wm)
+    spans = [layer_span(spark, wh, "silver", name, "time_id")[2]
+             for name in ("dim_time", "fact_power_system")]
+    assert spans[0] == wm < spans[1]
+
+    run_all(spark, wh, FixtureSource(records))
+    minutes = {datetime.fromisoformat(r["Minutes1UTC"])
+               for r in records if r["Minutes1UTC"]}
+    after = row_counts(wh)
+    assert after[:3] == [len(minutes)] * 3
+    assert {t for (t,) in duckdb.sql(
+        "SELECT time_id FROM read_parquet("
+        f"'{table_path(wh, 'silver', 'dim_time')}/*.parquet')"
+    ).fetchall()} == minutes
+
+    fact = read_layer_table(spark, wh, "silver", "fact_power_system",
+                            schema=FACT_SCHEMA)
+    dim = read_layer_table(spark, wh, "silver", "dim_time",
+                           schema=DIM_TIME_SCHEMA)
+    # collected timestamps are naive local time: name the UTC minute
+    rebuilt = sorted(
+        (r[0].astimezone(timezone.utc).replace(tzinfo=None), *r[1:])
+        for r in build_gold(fact, dim).collect())
+    gold = gold_rows_spark(spark, wh)
+    assert rows_close(gold, rebuilt)
+    bronze_path = table_path(wh, "bronze", "power_system_raw")
+    oracle = reference_oracle.connect(bronze_path)
+    reference_oracle.set_bronze_view(oracle, bronze_path, upto=t1)
+    reference_oracle.run_silver(oracle)
+    reference_oracle.run_gold(oracle)
+    reference_oracle.set_bronze_view(oracle, bronze_path)
+    reference_oracle.run_silver(oracle)
+    reference_oracle.run_gold(oracle)
+    assert rows_close(gold, gold_rows_duck(oracle))
+
+    run_all(spark, wh, ReplaySource(records))
+    assert row_counts(wh) == after
+
+
+def test_replay_appends_no_part_file(spark, tmp_path):
+    """A replay of every record adds no row and no file: each
+    anti-join that leaves nothing writes nothing, where an append
+    of the empty batch would add an empty part file."""
+    records = make_power_records()
+    wh = str(tmp_path / "wh")
+    run_all(spark, wh, FixtureSource(records))
+    before = part_files(wh), row_counts(wh)
+    run_all(spark, wh, ReplaySource(records))
+    assert (part_files(wh), row_counts(wh)) == before
 
 
 def test_null_minute_records_are_kept_per_increment(spark, tmp_path):
