@@ -264,12 +264,25 @@ _VERIFY_CHANGED_PINS: tuple[str, ...] = (
     # lost its eager count and its token cache (its consumer
     # curation_funnel_report is pinned above)
     "curation_decontaminate",
+    # the embedding family's primitives (simsearch._cosine, the IVF
+    # cells/members and the PQ codes) replaced every copied cosine,
+    # cell assignment and code assignment below, including the
+    # composed entries and the streaming and multimodal cosines
+    "sims_cosine_topk_bruteforce", "sims_ann_lsh_bucketed",
+    "dedup_embedding_cosine", "sims_ivf_ann",
+    "sims_knn_label_consistency", "sims_pq_adc",
+    "sims_label_centroid_margin", "sims_recall_eval",
+    "dedup_incremental_embedding", "sims_ivf_multiprobe",
+    "sims_pq_distortion", "sims_range_search", "sims_embedding_drift",
+    "sims_cosine_histogram", "sims_matryoshka_recall",
+    "dedup_semantic_cells", "sims_ivfpq_ann", "sims_hybrid_rrf",
+    "stream_incremental_embedding_index", "pipeline_text_to_ann",
 )
 
 _VERIFY_FRONT_WINDOW: tuple[str, ...] = _VERIFY_CHANGED_PINS + (
-    # After the 16 changed-code pins above, the window fills with the
-    # 34 STALEST entries by newest green CORRECTNESS_r* row (oldest
-    # round, then name): the r05 backlog, then r06-r09.
+    # After the 36 changed-code pins above, the window fills with the
+    # 14 STALEST entries by newest green CORRECTNESS_r* row (oldest
+    # round, then name): the head of the r05 backlog.
     "curation_mixture_sample",
     "curation_quota_sample",
     "curation_sequence_pack",
@@ -284,26 +297,6 @@ _VERIFY_FRONT_WINDOW: tuple[str, ...] = _VERIFY_CHANGED_PINS + (
     "ext_event_transition_matrix",
     "ext_gap_fill_linear",
     "ext_histogram_log_bins",
-    "ext_mom_growth",
-    "ext_null_profile",
-    "ext_pagerank_power",
-    "ext_pareto_share",
-    "ext_reorder_gap",
-    "ext_rolling_active_users",
-    "ext_running_drawdown",
-    "ext_seasonality_profile",
-    "ext_top_percent_per_group",
-    "mm_png_header_parse",
-    "mm_scene_cuts",
-    "mm_wav_header_parse",
-    "curation_weighted_sample",
-    "sketch_kmv_distinct",
-    "dedup_exact_substring_spans",
-    "dedup_simhash",
-    "sketch_bloom_semijoin",
-    "sketch_countmin_heavy_hitters",
-    "sketch_hll_distinct",
-    "dedup_containment",
 )
 
 

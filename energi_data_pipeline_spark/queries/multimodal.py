@@ -427,7 +427,7 @@ def mm_embed_documents(spark, sf_dir):
 
 
 # ---------------------- text -> embedding -> ANN integration
-from .simsearch import _dot as _sdot, _norm as _snorm  # noqa: E402
+from .simsearch import _cosine, _norm as _snorm  # noqa: E402
 
 T2A_PLANES = 4
 T2A_DUP_T = 0.5
@@ -524,8 +524,7 @@ def pipeline_text_to_ann(spark, sf_dir):
         v.join(other, (F.col("bucket") == F.col("n_bucket"))
                & (F.col("neighbor_id") != F.col("doc_id")))
         .select("doc_id", "neighbor_id",
-                F.round(_sdot("emb", "n_emb")
-                        / (F.col("nrm") * F.col("n_nrm")), 6)
+                _cosine("emb", "n_emb", "nrm", "n_nrm")
                 .alias("cosine")))
     from pyspark.sql import Window
     w = Window.partitionBy("doc_id").orderBy(

@@ -15,6 +15,28 @@ Float determinism: elements are cast float->double (exact) before
 multiplying; the fold accumulates left-to-right in Spark while
 DuckDB's SUM-over-unnest order is unspecified, so cosine values are
 rounded to 6 decimals on both sides and ranking ties broken by id.
+
+Three primitives, each written once, carry the embedding family:
+
+* :func:`_cosine` is the only cosine expression.  A zero-norm vector
+  has no direction: its cosine is NULL on both engines, never a
+  ``DIVIDE_BY_ZERO``.
+* the IVF coarse quantizer — :func:`_ivf_assign` scores every vector
+  against the broadcast stride centroids (map-only, the centroid
+  table is dimension-sized), :func:`_ivf_cells` takes the cached
+  per-vector argmax, and :func:`_ivf_members` joins a vector stream
+  to its cell, broadcasting the corpus-proportional cell table only
+  under the heap-derived byte budget (a shuffle join past it).
+* the PQ code assignment — :func:`_pq_d2` scores each vector block
+  against the broadcast stride codebook and :func:`_pq_codes` takes
+  the per-(vector, block) argmin.
+
+Every argmin/argmax is a min-struct aggregation: its struct order is
+the oracle's ``ORDER BY`` with the id as the last field, plus a
+leading is-NULL field where a NULL cosine must rank after every real
+one.  It reduces map-side before the shuffle.  A struct buffer is
+not hash-aggregatable, so Spark plans it as a SortAggregate: it
+sorts as a rank-1 window would, without the window operators.
 """
 
 from __future__ import annotations
@@ -127,6 +149,104 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
+def _cosine(a, b, na, nb):
+    """Cosine of embeddings ``a`` and ``b`` with norms ``na`` and
+    ``nb`` (column names or Columns), rounded to 6 decimals.
+    ``try_divide`` yields NULL where a norm is zero, as the oracle's
+    division does; ANSI ``/`` would raise ``DIVIDE_BY_ZERO``."""
+    na, nb = (F.col(x) if isinstance(x, str) else x for x in (na, nb))
+    return F.round(F.try_divide(_dot(a, b), na * nb), 6)
+
+
+def _ivf_assign(vec, n):
+    """The scored coarse-quantizer stream ``(vec_id, cent_id, c_cos)``
+    of ``vec`` (``vec_id, embedding, nrm``; ``n`` vectors): every
+    vector against the centroids, every ``cent_stride_for(n)``-th
+    vector.  The centroid table is dimension-sized and broadcasts
+    onto the corpus, so the assignment is map-only."""
+    cent = vec.filter(F.col("vec_id") % cent_stride_for(n) == 0).select(
+        F.col("vec_id").alias("cent_id"),
+        F.col("embedding").alias("c_emb"),
+        F.col("nrm").alias("c_nrm"))
+    return (vec.crossJoin(F.broadcast(cent))
+            .select("vec_id", "cent_id",
+                    _cosine("embedding", "c_emb", "nrm", "c_nrm")
+                    .alias("c_cos")))
+
+
+def _ivf_cells(vec, n):
+    """Cached ``(vec_id, cell_id)``: each vector's nearest centroid.
+    The min-struct on ``(c_cos IS NULL, -c_cos, cent_id)`` is the
+    oracle's ``ORDER BY cosine DESC, cent_id`` rk=1 row: a NULL
+    cosine ranks after every real one, and a vector with no real
+    cosine falls to the lowest ``cent_id``.  Cached, so every
+    consumer reads one assignment pass."""
+    return (_ivf_assign(vec, n)
+            .groupBy("vec_id")
+            .agg(F.min(F.struct(F.col("c_cos").isNull().alias("none"),
+                                (-F.col("c_cos")).alias("nc"),
+                                F.col("cent_id").alias("c"))).alias("b"))
+            .select("vec_id", F.col("b.c").alias("cell_id"))
+            .cache())
+
+
+def _ivf_members(rows, cell, n):
+    """``rows`` (keyed by ``vec_id``) joined to their ``cell``.  The
+    cell table is corpus-proportional (about 48 bytes a vector), so
+    it broadcasts only while ``n`` such rows fit
+    ``broadcast_budget_bytes``; past that the join shuffles."""
+    from ..io import broadcast_budget_bytes
+
+    cell_below_budget = cell
+    if n * 48 <= broadcast_budget_bytes(rows.sparkSession):
+        cell = F.broadcast(cell_below_budget)
+    return rows.join(cell, "vec_id")
+
+
+def _block_d2(a_sub, b_sub):
+    """Exact squared L2 distance between two sub-vectors, JVM-side."""
+    diffs = F.zip_with(
+        a_sub, b_sub,
+        lambda x, y: (x.cast("double") - y.cast("double"))
+        * (x.cast("double") - y.cast("double")))
+    return F.round(
+        F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x), 6)
+
+
+def _pq_d2(vec, n, queries=False):
+    """Block distances ``(vec_id, m, cent_id, d2)`` of every vector of
+    ``vec`` (``vec_id, embedding``; ``n`` vectors) — of the query
+    sample only when ``queries`` — to the codebook: every
+    ``cb_stride_for(n)``-th vector, one centroid per block.  The
+    codebook is bounded by construction and broadcasts."""
+    blocks = F.explode(F.sequence(F.lit(0), F.lit(M_BLOCKS - 1)))
+    # one row per (vector, block): slice indexes are 1-based
+    sub = F.expr(f"slice(embedding, m * {BLOCK_DIM} + 1, {BLOCK_DIM})")
+    pcent = (vec.filter(F.col("vec_id") % cb_stride_for(n) == 0)
+             .withColumn("m", blocks)
+             .select(F.col("vec_id").alias("cent_id"), "m",
+                     sub.alias("c_sub")))
+    rows = vec.filter(F.col("vec_id") % QUERY_STRIDE == 0) \
+        if queries else vec
+    return (rows.withColumn("m", blocks)
+            .select("vec_id", "m", sub.alias("sub"))
+            .join(F.broadcast(pcent), "m")
+            .select("vec_id", "m", "cent_id",
+                    _block_d2(F.col("sub"), F.col("c_sub")).alias("d2")))
+
+
+def _pq_codes(vec, n):
+    """Each vector's PQ code ``(vec_id, m, cent_id, d2)``: per block,
+    the min-struct on ``(d2, cent_id)`` — the oracle's
+    ``ORDER BY d2, cent_id`` rk=1 row, combined map-side."""
+    return (_pq_d2(vec, n)
+            .groupBy("vec_id", "m")
+            .agg(F.min(F.struct(F.col("d2").alias("d"),
+                                F.col("cent_id").alias("c"))).alias("b"))
+            .select("vec_id", "m", F.col("b.c").alias("cent_id"),
+                    F.col("b.d").alias("d2")))
+
+
 COSINE_TOPK_SQL = f"""
 WITH vec AS (
   SELECT vec_id, embedding,
@@ -185,9 +305,7 @@ def sims_cosine_topk_bruteforce(spark, sf_dir):
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot("q_emb", "embedding")
-                / (F.col("q_nrm") * F.col("nrm")), 6).alias("cosine"))
+            _cosine("q_emb", "embedding", "q_nrm", "nrm").alias("cosine"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
@@ -323,9 +441,7 @@ def sims_ann_lsh_bucketed(spark, sf_dir):
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             "bucket",
-            F.round(
-                _dot("q_emb", "embedding")
-                / (F.col("q_nrm") * F.col("nrm")), 6).alias("cosine"))
+            _cosine("q_emb", "embedding", "q_nrm", "nrm").alias("cosine"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
@@ -413,9 +529,7 @@ def dedup_embedding_cosine(spark, sf_dir):
                  & (F.col("neighbor_id") != F.col("vec_id")))
         .select(
             "vec_id", "neighbor_id",
-            F.round(
-                _dot("embedding", "n_emb")
-                / (F.col("nrm") * F.col("n_nrm")), 6).alias("cosine"))
+            _cosine("embedding", "n_emb", "nrm", "n_nrm").alias("cosine"))
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
@@ -503,55 +617,17 @@ def sims_ivf_ann(spark, sf_dir):
 
     This is the second scale path next to sign-LSH: cells adapt to
     the data distribution (centroids are corpus points) where LSH
-    planes are data-oblivious.  The plan has exactly the 100 TB
-    shape: the centroid table is dimension-sized and BROADCASTS onto
-    the corpus for assignment (map-only argmin per vector — the
-    window is per-vector over {CENT_STRIDE}-ish candidate rows, never
-    a corpus-wide sort); the cell id then becomes the shuffle key and
-    each reducer scans one cell.  The cell table, by contrast, is
-    corpus-proportional (about 48 bytes a vector), so the member join
-    broadcasts it only while it fits ``broadcast_budget_bytes`` and
-    falls back to a shuffle join past that.  Ties and float drift
-    are pinned by rounding cosines to 6 decimals and breaking by id
-    on both engines."""
-    from ..io import broadcast_budget_bytes
-
+    planes are data-oblivious.  Cells come from :func:`_ivf_cells`
+    and :func:`_ivf_members` (broadcast centroids, cached argmax,
+    budget-gated member join); the cell id is then the shuffle key
+    and each reducer scans one cell.  A NULL cosine (zero-norm
+    vector) ranks last, as the oracle's DESC order does."""
     emb = spread(t(spark, sf_dir, "embeddings"))
     vec = emb.select(
         "vec_id", "embedding",
         _norm("embedding").alias("nrm")).cache()
     n = corpus_size(sf_dir)
-    cent = vec.filter(
-        F.col("vec_id") % cent_stride_for(n) == 0
-    ).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"))
-    # r16 (same family as sims_ivfpq_ann): min-struct aggregation
-    # argmax instead of window rk=1, computed ONCE and cached — the
-    # member join and the query side both read the cache instead of
-    # re-running the corpus x centroids assignment.  A zero-norm
-    # vector or centroid has no cosine: try_divide yields NULL where
-    # the oracle's division does (ANSI `/` would raise), and the
-    # leading is-NULL field ranks a NULL after every real cosine, as
-    # the oracle's DESC order does — all-NULL falls to the lowest
-    # cent_id.
-    cell = (
-        vec.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cent_id",
-                F.round(F.try_divide(_dot("embedding", "c_emb"),
-                                     F.col("nrm") * F.col("c_nrm")), 6)
-                .alias("c_cos"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct(F.col("c_cos").isNull().alias("none"),
-                            (-F.col("c_cos")).alias("nc"),
-                            F.col("cent_id").alias("c"))).alias("b"))
-        .select("vec_id", F.col("b.c").alias("cell_id"))
-        .cache())
-    cell_below_budget = cell
-    cell_j = (F.broadcast(cell_below_budget)
-              if n * 48 <= broadcast_budget_bytes(spark) else cell)
-    member = vec.join(cell_j, "vec_id")
+    member = _ivf_members(vec, _ivf_cells(vec, n), n)
     queries = (member.filter(F.col("vec_id") % QUERY_STRIDE == 0)
                .select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").alias("q_emb"),
@@ -564,10 +640,8 @@ def sims_ivf_ann(spark, sf_dir):
         .select("query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 F.col("cell_id"),
-                F.round(F.try_divide(_dot("q_emb", "embedding"),
-                                     F.col("q_nrm") * F.col("nrm")), 6)
+                _cosine("q_emb", "embedding", "q_nrm", "nrm")
                 .alias("cosine")))
-    # desc() puts NULL cosines last, as the oracle's DESC does
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
     return (pairs.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -702,9 +776,7 @@ def sims_knn_label_consistency(spark, sf_dir):
             "query_id", "q_label",
             F.col("label").alias("n_label"),
             F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot("q_emb", "embedding")
-                / (F.col("q_nrm") * F.col("nrm")), 6).alias("cosine")))
+            _cosine("q_emb", "embedding", "q_nrm", "nrm").alias("cosine")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
     matches = F.sum(
@@ -789,16 +861,6 @@ FROM ranked WHERE rank <= {TOP_K}
 """
 
 
-def _block_d2(a_sub, b_sub):
-    """Exact squared L2 distance between two sub-vectors, JVM-side."""
-    diffs = F.zip_with(
-        a_sub, b_sub,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")))
-    return F.round(
-        F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x), 6)
-
-
 @query("sims_pq_adc", PQ_ADC_SQL)
 def sims_pq_adc(spark, sf_dir):
     """Product-quantization ANN with asymmetric distance computation
@@ -819,31 +881,14 @@ def sims_pq_adc(spark, sf_dir):
     shuffles on the code key beyond that.  The per-candidate ADC
     sum accumulates the 6-rounded block distances in
     DECIMAL(38,10), so ranking order (and the hash) is
-    order-independent and engine-exact.  The code-assignment pass
-    broadcasts the codebook onto the corpus exactly like the IVF
-    centroid assignment (bounded side, policy-compliant hint)."""
+    order-independent and engine-exact.  Codes and query distances
+    come from :func:`_pq_codes` and :func:`_pq_d2`."""
     emb = spread(t(spark, sf_dir, "embeddings"))
     vec = emb.select("vec_id", "embedding").cache()
-    blocks = F.explode(F.sequence(F.lit(0), F.lit(M_BLOCKS - 1)))
-    # one row per (vector, block): slice indexes are 1-based
-    sub = F.expr(f"slice(embedding, m * {BLOCK_DIM} + 1, {BLOCK_DIM})")
-    v_blocks = (vec.withColumn("m", blocks)
-                .select("vec_id", "m", sub.alias("sub")))
-    cent = (vec.filter(F.col("vec_id") % cb_stride_for(corpus_size(sf_dir)) == 0)
-            .withColumn("m", blocks)
-            .select(F.col("vec_id").alias("cent_id"), "m",
-                    sub.alias("c_sub")))
-    assign = (
-        v_blocks.join(F.broadcast(cent), "m")
-        .select("vec_id", "m", "cent_id",
-                _block_d2(F.col("sub"), F.col("c_sub")).alias("d2")))
-    aw = Window.partitionBy("vec_id", "m").orderBy("d2", "cent_id")
-    codes = (assign.withColumn("rk", F.row_number().over(aw))
-             .filter(F.col("rk") == 1)
-             .select("vec_id", "m", "cent_id"))
-    qd = (assign.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-          .select(F.col("vec_id").alias("query_id"), "m", "cent_id",
-                  "d2"))
+    n = corpus_size(sf_dir)
+    codes = _pq_codes(vec, n).drop("d2")
+    qd = _pq_d2(vec, n, queries=True).withColumnRenamed(
+        "vec_id", "query_id")
     adc = (
         codes.join(qd, ["m", "cent_id"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -917,8 +962,8 @@ def sims_label_centroid_margin(spark, sf_dir):
     with map-side partial sums (DECIMAL-accumulated so the mean is
     order-exact), folding the corpus to labels x dims rows; the
     scoring pass replicates the label-count-bounded centroid table
-    onto the corpus (the one genuinely bounded broadcast) and keeps
-    a per-vector window over label-count rows.  Nothing ever pairs
+    onto the corpus (the one genuinely bounded broadcast) and folds
+    label-count rows per vector in one aggregation.  Nothing ever pairs
     corpus rows with corpus rows."""
     emb = spread(t(spark, sf_dir, "embeddings"))
     pos = emb.select(
@@ -939,25 +984,23 @@ def sims_label_centroid_margin(spark, sf_dir):
     scored = (
         vec.crossJoin(F.broadcast(cent))
         .select("vec_id", "label", "c_label",
-                F.round(_dot("embedding", "c_emb")
-                        / (F.col("nrm") * F.col("c_nrm")), 6)
+                _cosine("embedding", "c_emb", "nrm", "c_nrm")
                 .alias("cosine")))
-    # r16: own-cosine and best-other collapse into ONE conditional
-    # aggregation over the scored stream — the old shape read the
-    # corpus x centroids cross twice (own filter + other window) and
-    # joined the halves back.  min-struct on (-cosine, c_label) is
-    # the window's orderBy(cosine DESC, c_label) rk=1 row; the
-    # null-filters reproduce the old INNER join (a row needs both an
-    # own-label centroid and at least one other label).
+    # own-cosine and best-other in ONE conditional aggregation over
+    # the scored stream.  The oracle's INNER join keeps a vector that
+    # has an own-label row and at least one other label, whatever
+    # their cosines (a zero vector's are NULL): existence is the
+    # filter, not a non-NULL cos_own.  Best-other is the cell
+    # argmax's min-struct (see _ivf_cells) over the other labels.
+    own = F.col("label") == F.col("c_label")
     agg = (scored.groupBy("vec_id", "label")
-           .agg(F.max(F.when(F.col("label") == F.col("c_label"),
-                             F.col("cosine"))).alias("cos_own"),
-                F.min(F.when(F.col("label") != F.col("c_label"),
-                             F.struct((-F.col("cosine")).alias("nc"),
-                                      F.col("c_label").alias("l"))))
-                .alias("bo")))
-    return (agg.filter(F.col("cos_own").isNotNull()
-                       & F.col("bo").isNotNull())
+           .agg(F.bool_or(own).alias("has_own"),
+                F.max(F.when(own, F.col("cosine"))).alias("cos_own"),
+                F.min(F.when(~own, F.struct(
+                    F.col("cosine").isNull().alias("none"),
+                    (-F.col("cosine")).alias("nc"),
+                    F.col("c_label").alias("l")))).alias("bo")))
+    return (agg.filter(F.col("has_own") & F.col("bo").isNotNull())
             .select("vec_id", "label", "cos_own",
                     F.col("bo.l").alias("best_other_label"),
                     (-F.col("bo.nc")).alias("cos_other"),
@@ -1110,8 +1153,7 @@ def dedup_incremental_embedding(spark, sf_dir):
         batch.join(corpus, F.col("c_bucket") == F.col("bucket"))
         .select("vec_id",
                 "corpus_id",
-                F.round(_dot("embedding", "c_emb")
-                        / (F.col("nrm") * F.col("c_nrm")), 6)
+                _cosine("embedding", "c_emb", "nrm", "c_nrm")
                 .alias("cosine")))
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cosine").desc(), "corpus_id")
@@ -1185,29 +1227,21 @@ def sims_ivf_multiprobe(spark, sf_dir):
     nprobe x cell size, still nothing like a linear scan.  Paired
     with sims_recall_eval's methodology this quantifies the dial.
 
-    Scale shape: identical to single-probe IVF — centroid broadcast
-    for assignment, cell id as the shuffle key — except the query
-    side fans out {NPROBE} rows per query before the cell join.
-    Corpus cells stay disjoint (rk=1), so no pair dedup is needed."""
+    Scale shape: identical to single-probe IVF — the scored stream
+    of :func:`_ivf_assign`, cell id as the shuffle key — except the
+    query side fans out {NPROBE} rows per query before the cell
+    join, so the argmax is a per-vector window whose rk=1 row is the
+    cell.  The window is cached: the assignment runs once.  Corpus
+    cells stay disjoint (rk=1), so no pair dedup is needed."""
     emb = spread(t(spark, sf_dir, "embeddings"))
     vec = emb.select(
         "vec_id", "embedding",
         _norm("embedding").alias("nrm")).cache()
-    cent = vec.filter(
-        F.col("vec_id") % cent_stride_for(corpus_size(sf_dir)) == 0
-    ).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"))
+    # desc() puts a NULL cosine last, as the oracle's DESC does
     aw = Window.partitionBy("vec_id").orderBy(
         F.col("c_cos").desc(), F.col("cent_id"))
-    assign = (
-        vec.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cent_id",
-                F.round(_dot("embedding", "c_emb")
-                        / (F.col("nrm") * F.col("c_nrm")), 6)
-                .alias("c_cos"))
-        .withColumn("rk", F.row_number().over(aw))).cache()
+    assign = (_ivf_assign(vec, corpus_size(sf_dir))
+              .withColumn("rk", F.row_number().over(aw)).cache())
     cell = (assign.filter(F.col("rk") == 1)
             .select("vec_id", F.col("cent_id").alias("cell_id")))
     member = vec.join(cell, "vec_id")
@@ -1225,8 +1259,7 @@ def sims_ivf_multiprobe(spark, sf_dir):
               & (F.col("vec_id") != F.col("query_id")))
         .select("query_id",
                 F.col("vec_id").alias("neighbor_id"),
-                F.round(_dot("q_emb", "embedding")
-                        / (F.col("q_nrm") * F.col("nrm")), 6)
+                _cosine("q_emb", "embedding", "q_nrm", "nrm")
                 .alias("cosine")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
@@ -1271,27 +1304,11 @@ def sims_pq_distortion(spark, sf_dir):
     Completes the PQ family: adc = search, calibration-style
     distortion = audit.
 
-    Scale shape: identical to the assignment pass of sims_pq_adc
-    (codebook broadcast, per-(vector, block) argmin window), folded
+    Scale shape: the code assignment of :func:`_pq_codes`, folded
     to one DECIMAL-exact row per vector."""
     emb = spread(t(spark, sf_dir, "embeddings"))
     vec = emb.select("vec_id", "embedding").cache()
-    blocks = F.explode(F.sequence(F.lit(0), F.lit(M_BLOCKS - 1)))
-    sub = F.expr(f"slice(embedding, m * {BLOCK_DIM} + 1, {BLOCK_DIM})")
-    v_blocks = (vec.withColumn("m", blocks)
-                .select("vec_id", "m", sub.alias("sub")))
-    cent = (vec.filter(F.col("vec_id") % cb_stride_for(corpus_size(sf_dir)) == 0)
-            .withColumn("m", blocks)
-            .select(F.col("vec_id").alias("cent_id"), "m",
-                    sub.alias("c_sub")))
-    assign = (
-        v_blocks.join(F.broadcast(cent), "m")
-        .select("vec_id", "m", "cent_id",
-                _block_d2(F.col("sub"), F.col("c_sub")).alias("d2")))
-    aw = Window.partitionBy("vec_id", "m").orderBy("d2", "cent_id")
-    codes = (assign.withColumn("rk", F.row_number().over(aw))
-             .filter(F.col("rk") == 1))
-    return (codes.groupBy("vec_id")
+    return (_pq_codes(vec, corpus_size(sf_dir)).groupBy("vec_id")
             .agg(F.round(F.sum(F.col("d2").cast("decimal(38,10)"))
                          .cast("double"), 6).alias("distortion")))
 
@@ -1349,9 +1366,7 @@ def sims_range_search(spark, sf_dir):
         F.col("nrm").alias("q_nrm"),
         F.col("bucket").alias("q_bucket"),
     ).filter(F.col("query_id") % QUERY_STRIDE == 0)
-    cos = F.round(
-        _dot("q_emb", "embedding")
-        / (F.col("q_nrm") * F.col("nrm")), 6)
+    cos = _cosine("q_emb", "embedding", "q_nrm", "nrm")
     return (
         queries
         .join(vec, (F.col("bucket") == F.col("q_bucket"))
@@ -1436,9 +1451,7 @@ def sims_embedding_drift(spark, sf_dir):
     u = vecs.filter(~F.col("is_ref")).select(
         "label", F.col("emb").alias("u_emb"),
         F.col("n_vecs").alias("n_cur"))
-    cos = F.round(
-        _dot("r_emb", "u_emb")
-        / (_norm("r_emb") * _norm("u_emb")), 6)
+    cos = _cosine("r_emb", "u_emb", _norm("r_emb"), _norm("u_emb"))
     return (r.join(u, "label")
             .select("label",
                     F.col("n_ref").cast("bigint").alias("n_ref"),
@@ -1528,8 +1541,7 @@ def sims_cosine_histogram(spark, sf_dir):
                        F.col("embedding").alias("b_emb"),
                        F.col("nrm").alias("b_nrm"),
                        F.col("bucket").alias("b_bucket"))
-    cos = F.round(_dot("embedding", "b_emb")
-                  / (F.col("nrm") * F.col("b_nrm")), 6)
+    cos = _cosine("embedding", "b_emb", "nrm", "b_nrm")
     pairs = (vec.join(other, (F.col("bucket") == F.col("b_bucket"))
                       & (F.col("vec_id") < F.col("b_id")))
              .select(F.floor(cos * 10).cast("int").alias("bin")))
@@ -1625,11 +1637,9 @@ def sims_matryoshka_recall(spark, sf_dir):
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.round(_dot("q_emb", "embedding")
-                    / (F.col("q_nrm") * F.col("nrm")), 6)
+            _cosine("q_emb", "embedding", "q_nrm", "nrm")
             .alias("cos_full"),
-            F.round(_dot("q_emb_t", "emb_t")
-                    / (F.col("q_nrm_t") * F.col("nrm_t")), 6)
+            _cosine("q_emb_t", "emb_t", "q_nrm_t", "nrm_t")
             .alias("cos_trunc")))
     best = pairs.groupBy("query_id").agg(
         F.min(F.struct((-F.col("cos_full")).alias("c"),
@@ -1759,58 +1769,26 @@ def dedup_semantic_cells(spark, sf_dir):
     the paper's sequential greedy scan, which has no parallel
     equivalent.
 
-    Scale shape: identical to the IVF index build — centroids are
-    dimension-sized and broadcast for the map-only assignment; the
-    cell id is the shuffle key and the pair compare happens only
-    inside a cell (cells are corpus/CENT_STRIDE, so per-cell work is
-    bounded by the stride, not the corpus).  One aggregation
-    (max-cosine-to-lower) reduces the pair stream back to one row
-    per vector before the verdict.
-
-    Stage-count revision (r16, same family as sims_ivfpq_ann): the
-    cell table fed THREE plan branches unpersisted, so the full
-    corpus x centroids assignment ran three times (three
-    BroadcastNestedLoopJoin subtrees in the r15 audit plan); it is
-    now computed ONCE via a min-struct aggregation (lexicographic
-    struct min on (-cos, cent_id) = the window's
-    orderBy(cos DESC, cent_id) rk=1 row, without the two sorts and
-    the window exchange) and cached, with the member join's cell
-    side broadcast under the heap-derived byte budget (plain
-    shuffled join past it)."""
-    from ..io import broadcast_budget_bytes
-
+    Scale shape: identical to the IVF index build — the cells of
+    :func:`_ivf_cells`, joined to their members by
+    :func:`_ivf_members`; the cell id is the shuffle key and the pair
+    compare happens only inside a cell (cells are corpus/CENT_STRIDE,
+    so per-cell work is bounded by the stride, not the corpus).  One
+    aggregation (max-cosine-to-lower) reduces the pair stream back to
+    one row per vector before the verdict; a NULL cosine (zero-norm
+    vector) drops out of the max, as in the oracle's MAX."""
     emb = spread(t(spark, sf_dir, "embeddings"))
     vec = emb.select(
         "vec_id", "embedding",
         _norm("embedding").alias("nrm")).cache()
     n = corpus_size(sf_dir)
-    cent = vec.filter(
-        F.col("vec_id") % cent_stride_for(n) == 0
-    ).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"))
-    cell = (
-        vec.crossJoin(F.broadcast(cent))
-        .select("vec_id", "cent_id",
-                F.round(_dot("embedding", "c_emb")
-                        / (F.col("nrm") * F.col("c_nrm")), 6)
-                .alias("c_cos"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct((-F.col("c_cos")).alias("nc"),
-                            F.col("cent_id").alias("c"))).alias("b"))
-        .select("vec_id", F.col("b.c").alias("cell_id"))
-        .cache())
-    cell_below_budget = cell
-    cell_j = (F.broadcast(cell_below_budget)
-              if n * 48 <= broadcast_budget_bytes(spark) else cell)
-    member = vec.join(cell_j, "vec_id")
+    cell = _ivf_cells(vec, n)
+    member = _ivf_members(vec, cell, n)
     lower = member.select(F.col("vec_id").alias("b_id"),
                           F.col("embedding").alias("b_emb"),
                           F.col("nrm").alias("b_nrm"),
                           F.col("cell_id").alias("b_cell"))
-    pair_cos = F.round(_dot("embedding", "b_emb")
-                       / (F.col("nrm") * F.col("b_nrm")), 6)
+    pair_cos = _cosine("embedding", "b_emb", "nrm", "b_nrm")
     lower_cos = (
         member.join(lower, (F.col("cell_id") == F.col("b_cell"))
                     & (F.col("b_id") < F.col("vec_id")))
@@ -1893,94 +1871,33 @@ def sims_ivfpq_ann(spark, sf_dir):
     cell assignment, sims_pq_adc's code/ADC machinery); the oracle
     composes the same CTEs, so the integration is hash-checked.
 
-    Scale shape: both centroid tables are sub-corpus-cardinality and
-    broadcast for their map-only assignments (IVF cells ~ sqrt(n)
-    via cent_stride_for, PQ codebook bounded by CB_STRIDE); the ADC
-    join keys are (block, code) + the cell equality, so the shuffle
-    carries code-width rows and each reducer scores one cell's
-    candidates.  ADC sums accumulate 6-rounded block distances in
-    DECIMAL — order-independent, engine-exact.
-
-    Stage-count revision (r16 — the r15 verdict's item 3: 29
-    Exchange mentions and an 8-core/32-core ratio of 0.72 meant task
-    scheduling exceeded compute at sf0.1):
-
-    * both argmins (cell assignment, PQ codes) are min-STRUCT
-      aggregations with map-side combine instead of
-      row_number-over-window — lexicographic struct min on
-      (distance, cent_id) picks exactly the window's
-      orderBy(d2, cent_id) rk=1 row, without the two sorts and the
-      full-stream window exchange each window paid;
-    * the cell table is computed ONCE and cached (the old plan
-      re-ran a corpus x centroids assignment for each of its two
-      consumers — visible as two BroadcastNestedLoopJoin subtrees);
-    * the query side's block distances are recomputed over the
-      stride-filtered vectors only (identical expression on
-      identical inputs -> identical d2), mirroring the pushdown the
-      optimizer already applied, so no shared `assign` frame holds
-      the two legs together;
-    * the three-way SMJ chain (vec_id, then (m, cent_id), then
-      query_id — six exchanges) collapses into ONE equi-join on
-      (m, cent_id, cell) between code rows and the query-sided
-      distance table, with every small side broadcast under the
-      heap-derived byte budget (ncell / qcell / the fused query
-      side; each falls back to a plain shuffled equi-join past the
-      budget — the 100 TB degrade is the old shape, minus the
-      duplicated subtrees).
-
-    Plan: 11 -> 5 shuffle Exchange nodes, 13 -> 3 Sorts, zero
-    duplicated assignment subtrees (plans/r16/sims_ivfpq_ann_*)."""
+    Scale shape: the cells of :func:`_ivf_cells` and the codes of
+    :func:`_pq_codes`, both argmins min-struct aggregations over
+    broadcast quantizer tables (IVF cells ~ sqrt(n) via
+    cent_stride_for, PQ codebook bounded by CB_STRIDE).  The ADC
+    join is ONE equi-join on (block, code, cell) between the
+    cell-tagged code rows (:func:`_ivf_members`) and the query-sided
+    distance table; each small side broadcasts under the
+    heap-derived byte budget and falls back to a plain shuffled
+    equi-join past it.  ADC sums accumulate 6-rounded block
+    distances in DECIMAL — order-independent, engine-exact (plans in
+    plans/r16 and plans/r17)."""
     from ..io import broadcast_budget_bytes
 
     emb = spread(t(spark, sf_dir, "embeddings"))
     vec = emb.select("vec_id", "embedding",
                      _norm("embedding").alias("nrm")).cache()
     n = corpus_size(sf_dir)
-    stride = cent_stride_for(n)
-    icent = vec.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"))
-    c_cos = F.round(_dot("embedding", "c_emb")
-                    / (F.col("nrm") * F.col("c_nrm")), 6)
-    cell = (vec.crossJoin(F.broadcast(icent))
-            .select("vec_id", "cent_id", c_cos.alias("c_cos"))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct((-F.col("c_cos")).alias("nc"),
-                                F.col("cent_id").alias("c")))
-                 .alias("b"))
-            .select("vec_id", F.col("b.c").alias("cell_id"))
-            .cache())
-    blocks = F.explode(F.sequence(F.lit(0), F.lit(M_BLOCKS - 1)))
-    sub = F.expr(f"slice(embedding, m * {BLOCK_DIM} + 1, {BLOCK_DIM})")
-    pcent = (vec.filter(F.col("vec_id") % cb_stride_for(n) == 0)
-             .withColumn("m", blocks)
-             .select(F.col("vec_id").alias("cent_id"), "m",
-                     sub.alias("c_sub")))
-    d2 = _block_d2(F.col("sub"), F.col("c_sub")).alias("d2")
-    codes = (vec.withColumn("m", blocks)
-             .select("vec_id", "m", sub.alias("sub"))
-             .join(F.broadcast(pcent), "m")
-             .select("vec_id", "m", "cent_id", d2)
-             .groupBy("vec_id", "m")
-             .agg(F.min(F.struct(F.col("d2").alias("d"),
-                                 F.col("cent_id").alias("c")))
-                  .alias("b"))
-             .select("vec_id", "m", F.col("b.c").alias("cent_id")))
-    qd = (vec.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-          .withColumn("m", blocks)
-          .select(F.col("vec_id").alias("query_id"), "m",
-                  sub.alias("sub"))
-          .join(F.broadcast(pcent), "m")
-          .select("query_id", "m", "cent_id", d2))
+    cell = _ivf_cells(vec, n)
+    codes_n = _ivf_members(_pq_codes(vec, n).drop("d2"), cell, n)
+    qd = _pq_d2(vec, n, queries=True).withColumnRenamed(
+        "vec_id", "query_id")
     qcell = cell.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("cell_id").alias("q_cell"))
-    ncell = cell.select(F.col("vec_id").alias("n_id"),
-                        F.col("cell_id").alias("n_cell"))
-    # broadcast knees: ~48 B per hashed (id, cell) row, 64 B per
-    # query-sided (query, m, cent, d2, cell) row; each side reverts
-    # to a plain shuffled equi-join past the heap-derived budget
+    # query-side broadcast knees: ~48 B per (query, cell) row, 64 B
+    # per query-sided (query, m, cent, d2, cell) row; each side
+    # reverts to a plain shuffled equi-join past the budget
     budget = broadcast_budget_bytes(spark)
     n_q = n // QUERY_STRIDE + 1
     n_cb = n // cb_stride_for(n) + 1
@@ -1988,17 +1905,12 @@ def sims_ivfpq_ann(spark, sf_dir):
         qcell_below_budget = qcell
         qcell = F.broadcast(qcell_below_budget)
     cq = qd.join(qcell, "query_id")
-    if n * 48 <= budget:
-        ncell_below_budget = ncell
-        ncell = F.broadcast(ncell_below_budget)
-    codes_n = codes.join(ncell, codes.vec_id == F.col("n_id")) \
-        .drop("n_id")
     if n_q * M_BLOCKS * n_cb * 64 <= budget:
         cq_below_budget = cq
         cq = F.broadcast(cq_below_budget)
     adc = (codes_n.join(cq, (codes_n.m == cq.m)
                         & (codes_n.cent_id == cq.cent_id)
-                        & (F.col("n_cell") == F.col("q_cell"))
+                        & (F.col("cell_id") == F.col("q_cell"))
                         & (F.col("vec_id") != F.col("query_id")))
            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
            .agg(F.sum(F.col("d2").cast("decimal(38,10)")).alias("s")))

@@ -1379,7 +1379,7 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
 
 # ------------------- streaming incremental embedding near-dup index
 from .simsearch import (NEARDUP_PLANES, NEARDUP_T,  # noqa: E402
-                        _bucket_col, _dot, _norm, corpus_size,
+                        _bucket_col, _cosine, _norm, corpus_size,
                         neardup_planes)
 from .simsearch import _bucket_sql as _emb_bucket_sql  # noqa: E402
 
@@ -1469,8 +1469,7 @@ def stream_incremental_embedding_index(spark, sf_dir,
             F.col("embedding").alias("b_emb"),
             F.col("nrm").alias("b_nrm"),
             F.col("bucket").alias("b_bucket"))
-        cos = F.round(_dot("embedding", "b_emb")
-                      / (F.col("nrm") * F.col("b_nrm")), 6)
+        cos = _cosine("embedding", "b_emb", "nrm", "b_nrm")
         # broadcast the MICRO-BATCH side (eagerly checkpointed, size
         # known and trigger-bounded) so the accumulated index side is
         # scanned once and hash-probed map-side, never shuffled on

@@ -4,11 +4,13 @@ uses sf0.01)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from energi_data_pipeline_spark.queries import load_all
 from .conftest import SF0001
-from .parity import compare, duck_connection
+from .parity import TABLES, compare, duck_connection
 
 REGISTRY = load_all()
 ORACLED = [n for n, qd in REGISTRY.items() if qd.oracle is not None]
@@ -267,3 +269,53 @@ def test_ivf_ann_zero_norm_centroid_matches_oracle(spark, tmp_path):
         spark.catalog.clearCache()
     # the zero vector sits in the lowest cell, beside query 0
     assert got[(0, zero)] == (0, None)
+
+
+#: a corpus vector that is neither a centroid, a codebook seed nor a
+#: query at sf0.001 — zeroing it tests the vector side of every
+#: cosine, where the test above zeroes a centroid
+ZERO_VEC = 33
+
+EMBEDDINGS_ONLY = sorted(
+    n for n in ORACLED
+    if {t for t in TABLES
+        if re.search(rf"\b{t}\b", REGISTRY[n].oracle)} == {"embeddings"})
+
+
+@pytest.fixture(scope="module")
+def zeroed_corpus(tmp_path_factory):
+    """sf0.001's ``embeddings`` with vector ZERO_VEC set to all zeros."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from energi_data_pipeline_spark.queries.simsearch import (
+        CB_STRIDE, CENT_STRIDE, QUERY_STRIDE)
+
+    assert all(ZERO_VEC % s for s in (CB_STRIDE, CENT_STRIDE,
+                                      QUERY_STRIDE))
+    tbl = pq.read_table(f"{SF0001}/embeddings.parquet")
+    emb = tbl.column("embedding").to_pylist()
+    ids = tbl.column("vec_id").to_pylist()
+    emb[ids.index(ZERO_VEC)] = [0.0] * len(emb[ids.index(ZERO_VEC)])
+    out = tmp_path_factory.mktemp("zeroed")
+    pq.write_table(tbl.set_column(
+        tbl.schema.get_field_index("embedding"), "embedding",
+        pa.array(emb, type=tbl.schema.field("embedding").type)),
+        str(out / "embeddings.parquet"))
+    con = duck_connection(str(out))
+    yield str(out), con
+    con.close()
+
+
+@pytest.mark.parametrize("name", EMBEDDINGS_ONLY)
+def test_zero_norm_vector_matches_oracle(spark, zeroed_corpus, name):
+    """A zero vector has no cosine: every entry over the embeddings
+    alone returns the oracle's rows (its NULL cosines included)
+    instead of raising ``DIVIDE_BY_ZERO``."""
+    sf_dir, con = zeroed_corpus
+    try:
+        res = compare(REGISTRY[name].fn(spark, sf_dir), con,
+                      REGISTRY[name].oracle)
+    finally:
+        spark.catalog.clearCache()
+    assert res["ok"], f"{name}: {res}"

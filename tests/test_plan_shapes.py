@@ -77,9 +77,9 @@ BOUNDED_BROADCAST_SIDES = {
     "total", "head",                 # one-row corpus-total aggregates
     "type_avg",                      # per-p_type agg (fixed key space)
     "donors_src",                    # k-1 rows per window bucket
-    "icent", "pcent",                # IVF cells / PQ codebook (same
-                                     # class as "cent": sub-corpus
-                                     # quantizer tables)
+    "pcent",                         # PQ codebook (same class as
+                                     # "cent": a sub-corpus quantizer
+                                     # table)
     "scalar",                        # dataset-card one-row aggregates
     "nn", "dang",                    # PageRank one-row scalars
                                      # (node count; dangling mass)
@@ -139,8 +139,8 @@ BOUNDED_BROADCAST_SIDES = {
                                      # the heap budget; window form
                                      # past it
     "cell_below_budget",             # IVF cell-assignment table
-    "ncell_below_budget",            # (vec_id, cell_id): broadcast
-    "qcell_below_budget",            # ONLY under the heap budget at
+    "qcell_below_budget",            # (vec_id, cell_id): broadcast
+                                     # ONLY under the heap budget at
                                      # ~48 B/row, plain shuffled join
                                      # past it (simsearch r16)
     "cq_below_budget",               # query-sided (query, m, cent,
@@ -786,12 +786,13 @@ def test_tfidf_w_vocab_budget_degrade(spark, monkeypatch):
 
 def test_ivfpq_and_cells_broadcast_budget_degrade(spark, registry,
                                                   monkeypatch):
-    # r16: every new broadcast knee (ncell/qcell/cq in ivfpq, the
-    # cell side in semantic cells) must fall back to a plain
-    # shuffled equi-join past the budget with identical rows
+    # every broadcast knee (the cell side of simsearch._ivf_members,
+    # qcell/cq in ivfpq) must fall back to a plain shuffled
+    # equi-join past the budget with identical rows
     from tests.conftest import SF0001
 
-    for name in ("sims_ivfpq_ann", "dedup_semantic_cells"):
+    for name in ("sims_ivfpq_ann", "dedup_semantic_cells",
+                 "sims_ivf_ann"):
         base = sorted(map(tuple,
                           registry[name].fn(spark, SF0001).collect()))
         spark.catalog.clearCache()
