@@ -192,6 +192,23 @@ def broadcast_budget_bytes(spark, heap_bytes: int | None = None) -> int:
     return min(BCAST_BUDGET_CAP, int(heap * BCAST_HEAP_FRACTION))
 
 
+def broadcast_within_budget(budget_gated_side, est_bytes: int,
+                            past=lambda s: s):
+    """The one broadcast-vs-shuffle gate for a join side whose size
+    scales with the data: broadcast-hint ``budget_gated_side`` while
+    its caller-estimated in-memory size ``est_bytes`` fits
+    :func:`broadcast_budget_bytes`, else return ``past(side)`` — by
+    default the side unhinted, so AQE's runtime sizes decide; a
+    caller whose planner estimate is known to be wrong passes its
+    own shuffle strategy (a ``shuffle_hash`` or ``merge`` hint).  A
+    side with one row by construction (a global aggregate, a
+    ``limit(1)``) needs neither: the planner already broadcasts it."""
+    budget = broadcast_budget_bytes(budget_gated_side.sparkSession)
+    if est_bytes <= budget:
+        return F.broadcast(budget_gated_side)
+    return past(budget_gated_side)
+
+
 #: fraction of the (per-JVM) heap one operator-internal cache may
 #: claim IN MEMORY before the persist degrades to DISK_ONLY.  The
 #: cached blocks live in the unified storage pool (evictable by

@@ -277,27 +277,26 @@ _VERIFY_CHANGED_PINS: tuple[str, ...] = (
     "sims_cosine_histogram", "sims_matryoshka_recall",
     "dedup_semantic_cells", "sims_ivfpq_ann", "sims_hybrid_rrf",
     "stream_incremental_embedding_index", "pipeline_text_to_ann",
+    # the one broadcast gate (io.broadcast_within_budget) replaced the
+    # gram, TF-IDF and BPE budget decisions, the TF-IDF cosines became
+    # zero-norm safe, and the one-row broadcast hints were dropped;
+    # the window holds 50, so four entries green in r16 whose
+    # executed plans are unchanged (curation_quality_classifier,
+    # ext_skew_stats, tpch_q15_top_supplier,
+    # tpch_q22_global_sales_opportunity) wait for the next rotation
+    "dedup_ngram_jaccard", "dedup_containment",
+    "text_tfidf_cosine_pairs", "text_bpe_learn_merges",
+    "text_bpe_apply_merges", "text_bpe_encode_heldout",
+    "text_tfidf_top_terms", "text_unigram_logprob",
+    "text_vocab_coverage", "curation_token_budget",
+    "ext_benford_audit", "ext_categorical_drift", "ext_pagerank_power",
+    "ext_association_rules",
 )
 
-_VERIFY_FRONT_WINDOW: tuple[str, ...] = _VERIFY_CHANGED_PINS + (
-    # After the 36 changed-code pins above, the window fills with the
-    # 14 STALEST entries by newest green CORRECTNESS_r* row (oldest
-    # round, then name): the head of the r05 backlog.
-    "curation_mixture_sample",
-    "curation_quota_sample",
-    "curation_sequence_pack",
-    "curation_shard_manifest",
-    "curation_source_league",
-    "curation_token_budget",
-    "ext_activity_streaks",
-    "ext_benford_audit",
-    "ext_categorical_drift",
-    "ext_cdc_apply",
-    "ext_dq_quarantine",
-    "ext_event_transition_matrix",
-    "ext_gap_fill_linear",
-    "ext_histogram_log_bins",
-)
+#: The 50 changed-code pins fill the whole window; the stalest fill
+#: (oldest green CORRECTNESS_r* round, then name) is empty until the
+#: next rotation clears pins.
+_VERIFY_FRONT_WINDOW: tuple[str, ...] = _VERIFY_CHANGED_PINS
 
 
 def load_all() -> dict[str, QueryDef]:

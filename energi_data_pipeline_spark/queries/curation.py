@@ -661,7 +661,7 @@ def curation_token_budget(spark, sf_dir):
         F.sum(F.col("weight").cast("decimal(38,10)"))
         .cast("double").alias("total_w"))
     frac = F.round(F.col("weight") / F.col("total_w"), 6)
-    return (w.crossJoin(F.broadcast(total))
+    return (w.crossJoin(total)
             .select("source",
                     F.col("n_tokens").cast("bigint").alias("n_tokens"),
                     "weight",
@@ -921,7 +921,7 @@ def curation_dataset_card(spark, sf_dir):
          .agg(F.count(F.lit(1)).cast("bigint").alias("near_dup_pairs")))
     out = base
     for scalar in (q, r, b, e, p):
-        out = out.crossJoin(F.broadcast(scalar))
+        out = out.crossJoin(scalar)
     return out.select(
         "n_docs", "n_tokens", "n_chars", "n_sources", "n_langs",
         F.round(F.col("n_tokens").cast("double") / F.col("n_docs"), 6)
@@ -1337,7 +1337,7 @@ def curation_quality_classifier(spark, sf_dir):
                 .select(F.transform(F.col("pw"),
                                     lambda s: s["w"])
                         .alias("w_arr")))
-            cur = fxv.crossJoin(F.broadcast(wrow))
+            cur = fxv.crossJoin(wrow)
             w_expr = F.col("w_arr")
             w_sql = "w_arr"
         # fixed-point margin as ONE F.expr SQL string — identical

@@ -456,7 +456,6 @@ JACCARD_T = 0.5
 #: while a long-doc corpus now correctly refuses the broadcast at
 #: ANY document count.
 GRAM_ROW_BCAST_BYTES = 32
-GRAM_BCAST_MAX_BYTES = 1_500_000_000
 
 #: estimated SERIALIZED gram-stream bytes per byte of document text,
 #: for the adaptive persist level of the exploded (doc, source, n,
@@ -494,55 +493,49 @@ GRAM_MERGE_TARGET_BYTES = 512 * 1024 * 1024
 GRAM_MERGE_MAX_PARTITIONS = 4096
 
 
-def gram_join_side(gram_build_below_knee, sf_dir,
-                   keys=("src_b", "h_b")):
+def gram_join_side(build_side, sf_dir, keys=("src_b", "h_b")):
     """Apply the corpus-adaptive join strategy to the build side of
-    a gram-stream self-join: the side is only ever broadcast while
+    a gram-stream self-join: :func:`io.broadcast_within_budget` at
     its ESTIMATED hashed size — exploded gram mass derived from
-    footer text bytes — fits the byte budget, never open-ended and
-    never keyed on document count alone.  The budget is derived
-    from the session's actual heap (io.broadcast_budget_bytes,
-    capped at GRAM_BCAST_MAX_BYTES == io.BCAST_BUDGET_CAP) so a
-    smaller-heap deployment refuses the broadcast instead of
-    inheriting the 8 GiB calibration (VERDICT r07 #9)."""
+    footer text bytes, never document count alone — and past the
+    budget a sort-merge join at a width scaled to that mass."""
     import os
 
-    from ..io import broadcast_budget_bytes, parquet_column_bytes
+    from ..io import broadcast_within_budget, parquet_column_bytes
 
-    text_bytes = parquet_column_bytes(
-        os.path.join(sf_dir, "documents.parquet"), "text")
-    budget = broadcast_budget_bytes(
-        gram_build_below_knee.sparkSession)
-    est_bytes = text_bytes * GRAM_ROW_BCAST_BYTES
-    if est_bytes <= budget:
-        return F.broadcast(gram_build_below_knee)
-    # Past the knee the exchange width must scale with gram mass,
-    # not inherit spark.sql.shuffle.partitions — see
-    # GRAM_MERGE_TARGET_BYTES.  Repartitioning the build side on
-    # its join keys pins the width; ENSURE_REQUIREMENTS then
-    # shuffles the probe side to the same width, so both sort runs
-    # shrink together.  Missing key columns mean the caller would
-    # silently lose this OOM guard (the exact x100 failure the
-    # width exists to prevent), so that is a loud warning, not a
-    # quiet fallback — only plan-shape tests probing the knee with
-    # a stub side should ever hit it.
-    side = gram_build_below_knee
-    if all(k in side.columns for k in keys):
-        width = min(GRAM_MERGE_MAX_PARTITIONS, max(
-            side.sparkSession.sparkContext.defaultParallelism,
-            -(-est_bytes // GRAM_MERGE_TARGET_BYTES)))
-        side = side.repartition(int(width), *keys)
-    else:
-        import warnings
+    est_bytes = parquet_column_bytes(
+        os.path.join(sf_dir, "documents.parquet"),
+        "text") * GRAM_ROW_BCAST_BYTES
 
-        warnings.warn(
-            "gram_join_side: join keys %r absent from build side %r "
-            "— post-knee exchange width NOT applied; past the "
-            "broadcast knee this plan inherits the session shuffle "
-            "width and can OOM at scale (pass keys= matching the "
-            "join columns)" % (keys, side.columns),
-            stacklevel=2)
-    return side.hint("merge")
+    def past(side):
+        # Past the knee the exchange width must scale with gram mass,
+        # not inherit spark.sql.shuffle.partitions — see
+        # GRAM_MERGE_TARGET_BYTES.  Repartitioning the build side on
+        # its join keys pins the width; ENSURE_REQUIREMENTS then
+        # shuffles the probe side to the same width, so both sort
+        # runs shrink together.  Missing key columns mean the caller
+        # would silently lose this OOM guard (the exact x100 failure
+        # the width exists to prevent), so that is a loud warning,
+        # not a quiet fallback — only plan-shape tests probing the
+        # knee with a stub side should ever hit it.
+        if all(k in side.columns for k in keys):
+            width = min(GRAM_MERGE_MAX_PARTITIONS, max(
+                side.sparkSession.sparkContext.defaultParallelism,
+                -(-est_bytes // GRAM_MERGE_TARGET_BYTES)))
+            side = side.repartition(int(width), *keys)
+        else:
+            import warnings
+
+            warnings.warn(
+                "gram_join_side: join keys %r absent from build side "
+                "%r — post-knee exchange width NOT applied; past the "
+                "broadcast knee this plan inherits the session shuffle "
+                "width and can OOM at scale (pass keys= matching the "
+                "join columns)" % (keys, side.columns),
+                stacklevel=4)
+        return side.hint("merge")
+
+    return broadcast_within_budget(build_side, est_bytes, past=past)
 
 
 @query(
@@ -947,7 +940,7 @@ def containment_inter(spark, sf_dir, slice_of=None):
     gl = gl.persist(_gram_cache_level(spark, sf_dir))
     a = gl.select(F.col("doc_id").alias("doc_a"), "source",
                   F.col("n").alias("n_a"), "h")
-    # corpus-adaptive join strategy — see GRAM_BCAST_MAX_BYTES
+    # corpus-adaptive join strategy — see gram_join_side
     b = gram_join_side(
         gl.select(F.col("doc_id").alias("doc_b"),
                   F.col("source").alias("src_b"),

@@ -1186,7 +1186,7 @@ def ext_skew_stats(spark, sf_dir):
     w = Window.orderBy(F.col("cnt").desc(), "user_id")
     return (
         topk.withColumn("rank", F.row_number().over(w).cast("int"))
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select("rank", "user_id",
                 F.col("cnt").cast("bigint").alias("cnt"),
                 F.col("n_keys").cast("bigint").alias("n_keys"),
@@ -1733,7 +1733,7 @@ def ext_benford_audit(spark, sf_dir):
     total = counts.agg(F.sum("n").alias("t"))
     share = F.col("n").cast("double") / F.col("t")
     benford = F.log10(1 + 1.0 / F.col("d"))
-    return (counts.crossJoin(F.broadcast(total))
+    return (counts.crossJoin(total)
             .select(F.col("d").alias("first_digit"),
                     F.col("n").cast("bigint").alias("n"),
                     F.round(share, 6).alias("observed_share"),
@@ -2051,7 +2051,7 @@ def ext_association_rules(spark, sf_dir):
                          F.col("c").alias("cb"))
     nd = F.col("n").cast("double")
     return (pairs.join(ca, "part_a").join(cb, "part_b")
-            .crossJoin(F.broadcast(total))
+            .crossJoin(total)
             .select("part_a", "part_b",
                     F.col("n").cast("bigint").alias("n_orders"),
                     F.round(nd / F.col("t"), 6).alias("support"),
@@ -2436,7 +2436,7 @@ def ext_categorical_drift(spark, sf_dir):
     total = orders.agg(F.count(F.lit(1)).alias("gt"))
     overall = (orders.groupBy("o_orderpriority")
                .agg(F.count(F.lit(1)).alias("c"))
-               .crossJoin(F.broadcast(total))
+               .crossJoin(total)
                .select("o_orderpriority",
                        (F.col("c").cast("double") / F.col("gt"))
                        .alias("base_share")))
@@ -2653,7 +2653,7 @@ def ext_pagerank_power(spark, sf_dir):
     nodes = ev.select(F.col("event_type").alias("node")).distinct() \
         .localCheckpoint(eager=True)
     nn = nodes.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
-    pr = (nodes.crossJoin(F.broadcast(nn))
+    pr = (nodes.crossJoin(nn)
           .select("node", (F.lit(1.0) / F.col("n_nodes")).alias("pr")))
     out_nodes = tot.select(F.col("from_type").alias("node"))
     for _ in range(PR_ITERS):
@@ -2668,8 +2668,8 @@ def ext_pagerank_power(spark, sf_dir):
                     F.sum(F.floor(F.col("pr") * F.lit(1000000000000)
                                   + 0.5).cast("long")).cast("double")
                     / F.lit(1000000000000), F.lit(0.0)).alias("m")))
-        pr = (nodes.crossJoin(F.broadcast(nn))
-              .crossJoin(F.broadcast(dang))
+        pr = (nodes.crossJoin(nn)
+              .crossJoin(dang)
               .join(contrib, "node", "left")
               .select("node",
                       (F.lit(0.15) / F.col("n_nodes")

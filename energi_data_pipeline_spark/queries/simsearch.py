@@ -115,6 +115,25 @@ def corpus_size(sf_dir: str) -> int:
     return parquet_row_count(os.path.join(sf_dir, "embeddings.parquet"))
 
 
+def _block_pairs(vec, n, **q_cols):
+    """Every (strided query, corpus vector) pair of ``vec`` but the
+    self-pairs, without a cartesian product: the corpus splits into
+    :func:`blocks_for` ``(n)`` blocks by ``pmod(vec_id)``, each query
+    is replicated once per block, and the two meet in one equi-join
+    on the block id.  ``q_cols`` maps each query-side alias to its
+    ``vec`` column; the query's id is ``query_id``."""
+    blocks = blocks_for(n)
+    corpus = vec.withColumn(
+        "blk", F.pmod(F.col("vec_id"), F.lit(blocks)).cast("int"))
+    queries = (vec.filter(F.col("vec_id") % QUERY_STRIDE == 0)
+               .select(F.col("vec_id").alias("query_id"),
+                       *[F.col(c).alias(a) for a, c in q_cols.items()])
+               .withColumn("blk", F.explode(
+                   F.sequence(F.lit(0), F.lit(blocks - 1)))))
+    return (queries.join(corpus, "blk")
+            .filter(F.col("vec_id") != F.col("query_id")))
+
+
 DOT_SQL_FRAGMENT = """
   (SELECT SUM(a_e * b_e) FROM (
      SELECT CAST(UNNEST(a.embedding) AS DOUBLE) AS a_e,
@@ -193,14 +212,11 @@ def _ivf_cells(vec, n):
 def _ivf_members(rows, cell, n):
     """``rows`` (keyed by ``vec_id``) joined to their ``cell``.  The
     cell table is corpus-proportional (about 48 bytes a vector), so
-    it broadcasts only while ``n`` such rows fit
-    ``broadcast_budget_bytes``; past that the join shuffles."""
-    from ..io import broadcast_budget_bytes
+    it goes through :func:`io.broadcast_within_budget` at ``n`` such
+    rows."""
+    from ..io import broadcast_within_budget
 
-    cell_below_budget = cell
-    if n * 48 <= broadcast_budget_bytes(rows.sparkSession):
-        cell = F.broadcast(cell_below_budget)
-    return rows.join(cell, "vec_id")
+    return rows.join(broadcast_within_budget(cell, n * 48), "vec_id")
 
 
 def _block_d2(a_sub, b_sub):
@@ -288,20 +304,9 @@ def sims_cosine_topk_bruteforce(spark, sf_dir):
     vec = emb.select(
         "vec_id", "embedding",
         _norm("embedding").alias("nrm"))
-    corpus = vec.withColumn(
-        "blk", F.pmod(F.col("vec_id"),
-                      F.lit(blocks_for(corpus_size(sf_dir)))).cast("int"))
-    queries = (vec.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("q_emb"),
-                       F.col("nrm").alias("q_nrm"))
-               .withColumn("blk", F.explode(
-                   F.sequence(F.lit(0), F.lit(
-                       blocks_for(corpus_size(sf_dir)) - 1)))))
     pairs = (
-        queries
-        .join(corpus, "blk")
-        .filter(F.col("vec_id") != F.col("query_id"))
+        _block_pairs(vec, corpus_size(sf_dir),
+                     q_emb="embedding", q_nrm="nrm")
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -757,21 +762,9 @@ def sims_knn_label_consistency(spark, sf_dir):
     vec = emb.select(
         "vec_id", "embedding", "label",
         _norm("embedding").alias("nrm"))
-    corpus = vec.withColumn(
-        "blk", F.pmod(F.col("vec_id"),
-                      F.lit(blocks_for(corpus_size(sf_dir)))).cast("int"))
-    queries = (vec.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("label").alias("q_label"),
-                       F.col("embedding").alias("q_emb"),
-                       F.col("nrm").alias("q_nrm"))
-               .withColumn("blk", F.explode(
-                   F.sequence(F.lit(0), F.lit(
-                       blocks_for(corpus_size(sf_dir)) - 1)))))
     pairs = (
-        queries
-        .join(corpus, "blk")
-        .filter(F.col("vec_id") != F.col("query_id"))
+        _block_pairs(vec, corpus_size(sf_dir), q_label="label",
+                     q_emb="embedding", q_nrm="nrm")
         .select(
             "query_id", "q_label",
             F.col("label").alias("n_label"),
@@ -1619,21 +1612,9 @@ def sims_matryoshka_recall(spark, sf_dir):
         # their 0/0 cosine canonicalizes differently per engine —
         # excluded on both sides (see vecnz in the oracle).
         .filter((F.col("nrm") > 0) & (F.col("nrm_t") > 0)))
-    corpus = vec.withColumn(
-        "blk", F.pmod(F.col("vec_id"),
-                      F.lit(blocks_for(corpus_size(sf_dir)))).cast("int"))
-    queries = (vec.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("q_emb"),
-                       F.col("emb_t").alias("q_emb_t"),
-                       F.col("nrm").alias("q_nrm"),
-                       F.col("nrm_t").alias("q_nrm_t"))
-               .withColumn("blk", F.explode(
-                   F.sequence(F.lit(0), F.lit(
-                       blocks_for(corpus_size(sf_dir)) - 1)))))
     pairs = (
-        queries.join(corpus, "blk")
-        .filter(F.col("vec_id") != F.col("query_id"))
+        _block_pairs(vec, corpus_size(sf_dir), q_emb="embedding",
+                     q_emb_t="emb_t", q_nrm="nrm", q_nrm_t="nrm_t")
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -1877,12 +1858,11 @@ def sims_ivfpq_ann(spark, sf_dir):
     cent_stride_for, PQ codebook bounded by CB_STRIDE).  The ADC
     join is ONE equi-join on (block, code, cell) between the
     cell-tagged code rows (:func:`_ivf_members`) and the query-sided
-    distance table; each small side broadcasts under the
-    heap-derived byte budget and falls back to a plain shuffled
-    equi-join past it.  ADC sums accumulate 6-rounded block
-    distances in DECIMAL — order-independent, engine-exact (plans in
-    plans/r16 and plans/r17)."""
-    from ..io import broadcast_budget_bytes
+    distance table; each small side goes through
+    :func:`io.broadcast_within_budget`.  ADC sums accumulate
+    6-rounded block distances in DECIMAL — order-independent,
+    engine-exact (plans in plans/r16 to plans/r18)."""
+    from ..io import broadcast_within_budget
 
     emb = spread(t(spark, sf_dir, "embeddings"))
     vec = emb.select("vec_id", "embedding",
@@ -1895,19 +1875,13 @@ def sims_ivfpq_ann(spark, sf_dir):
     qcell = cell.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("cell_id").alias("q_cell"))
-    # query-side broadcast knees: ~48 B per (query, cell) row, 64 B
-    # per query-sided (query, m, cent, d2, cell) row; each side
-    # reverts to a plain shuffled equi-join past the budget
-    budget = broadcast_budget_bytes(spark)
+    # query-side budget gates: ~48 B per (query, cell) row, 64 B
+    # per query-sided (query, m, cent, d2, cell) row
     n_q = n // QUERY_STRIDE + 1
     n_cb = n // cb_stride_for(n) + 1
-    if n_q * 48 <= budget:
-        qcell_below_budget = qcell
-        qcell = F.broadcast(qcell_below_budget)
-    cq = qd.join(qcell, "query_id")
-    if n_q * M_BLOCKS * n_cb * 64 <= budget:
-        cq_below_budget = cq
-        cq = F.broadcast(cq_below_budget)
+    qcell = broadcast_within_budget(qcell, n_q * 48)
+    cq = broadcast_within_budget(qd.join(qcell, "query_id"),
+                                 n_q * M_BLOCKS * n_cb * 64)
     adc = (codes_n.join(cq, (codes_n.m == cq.m)
                         & (codes_n.cent_id == cq.cent_id)
                         & (F.col("cell_id") == F.col("q_cell"))

@@ -19,7 +19,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from ..io import spread as _io_spread
+from ..io import broadcast_within_budget, spread as _io_spread
 from ..session import tune
 from . import query, register_oracle_knee
 
@@ -1050,23 +1050,6 @@ def _est_row_bytes(df, overrides: dict[str, int] | None = None) -> int:
     return total
 
 
-def _bounded_broadcast(budget_gated_side, est_bytes: int):
-    """Broadcast-hint a micro-batch-side relation only while its
-    ESTIMATED in-memory size fits the heap-derived budget (r12
-    ADVICE): the index streams' batch-side hints were keyed on "a
-    trigger is one file" — an operational bound
-    (maxFilesPerTrigger=1 in this harness), not a structural one.  A
-    production trigger spanning many files must fall back to AQE's
-    size-based planning instead of force-broadcasting an arbitrarily
-    large micro-batch (embedding arrays included) — the same byte-
-    budget policy as dedup.gram_join_side and the wq/vocab gates."""
-    from ..io import broadcast_budget_bytes
-
-    budget = broadcast_budget_bytes(budget_gated_side.sparkSession)
-    return (F.broadcast(budget_gated_side) if est_bytes <= budget
-            else budget_gated_side)
-
-
 def _flag_batch_members(batch_ids, member_ids, id_col: str,
                         flag_col: str, n_batch_rows: int):
     """Per-batch boolean flag column: TRUE for batch rows whose id
@@ -1086,7 +1069,7 @@ def _flag_batch_members(batch_ids, member_ids, id_col: str,
     batch_dup_flags = (member_ids.distinct()
                        .withColumn("dup", F.lit(True)))
     return (batch_ids
-            .join(_bounded_broadcast(
+            .join(broadcast_within_budget(
                       batch_dup_flags,
                       n_batch_rows * _est_row_bytes(batch_dup_flags)),
                   id_col, "left")
@@ -1318,7 +1301,7 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
         # sized off the schema (long id + int band) plus the key's
         # rpb longs and its array header, must fit the heap-derived
         # budget, else AQE plans it.
-        bl = _bounded_broadcast(
+        bl = broadcast_within_budget(
             batch_bands,
             n_batch * nb * _est_row_bytes(
                 batch_bands, {"key": 8 * rpb + 16})).alias("l")
@@ -1354,8 +1337,8 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
         # n_batch signature rows, sized off the schema (id + nh
         # minhash longs)
         cand_batch_sigs = cand.join(
-            _bounded_broadcast(batch_sig_probe,
-                               n_batch * _est_row_bytes(batch_sigs)),
+            broadcast_within_budget(
+                batch_sig_probe, n_batch * _est_row_bytes(batch_sigs)),
             cand.doc_id == F.col("a.doc_id"))
         dup_ids = (index_sig_side
                    .join(cand_batch_sigs,
@@ -1480,7 +1463,7 @@ def stream_incremental_embedding_index(spark, sf_dir,
         # one width the schema can't know) — a giant trigger falls
         # back to AQE
         dup_ids = (partner
-                   .join(_bounded_broadcast(
+                   .join(broadcast_within_budget(
                              batch_vec,
                              n_batch * _est_row_bytes(
                                  batch_vec, {"embedding": dim * 8})),

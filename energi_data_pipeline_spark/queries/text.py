@@ -244,8 +244,9 @@ FROM scored WHERE rn <= {TOP_TERMS}
 def text_tfidf_top_terms(spark, sf_dir):
     """Per-document top-{TOP_TERMS} terms by TF-IDF, fully
     relational: term frequencies and document frequencies are two
-    hash aggregations over the exploded token stream, the (scalar)
-    corpus size rides a broadcast, and ranking is a per-doc window.
+    hash aggregations over the exploded token stream, the one-row
+    corpus size is cross-joined (the planner broadcasts it unhinted),
+    and ranking is a per-doc window.
     The vocabulary side (df) grows with the corpus under Heaps' law,
     so the tf⋈df join is unhinted — both aggregations already
     shuffle on ``term``, so at scale the join reuses that
@@ -268,7 +269,7 @@ def text_tfidf_top_terms(spark, sf_dir):
     w = Window.partitionBy("doc_id").orderBy(F.desc(score), "term")
     return (
         tf.join(df, "term")
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= TOP_TERMS)
         .select("doc_id", "term", F.round(score, 6).alias("tfidf"),
@@ -752,8 +753,8 @@ def text_unigram_logprob(spark, sf_dir):
     and the score join runs on the already-shuffled ``term`` key.
     The vocabulary side grows Heaps-law-slowly, so it is left
     UNHINTED (AQE broadcasts it while it fits); the corpus-total is
-    a one-row scalar aggregate — genuinely bounded, so its broadcast
-    hint is policy-compliant.  The per-doc sum accumulates in
+    a one-row aggregate, which the planner broadcasts without a
+    hint.  The per-doc sum accumulates in
     DECIMAL(38,10) (order-independent), so the hash matches the
     oracle bit-for-bit despite summing floats."""
     d = t(spark, sf_dir, "documents")
@@ -767,7 +768,7 @@ def text_unigram_logprob(spark, sf_dir):
         F.count(F.lit(1)).alias("tf_doc"))
     scored = (
         dt.join(tf, "term")
-        .crossJoin(F.broadcast(total))
+        .crossJoin(total)
         .select("doc_id", "tf_doc",
                 (F.col("tf_doc") * F.log(F.col("c") / F.col("n")))
                 .alias("lp")))
@@ -1070,7 +1071,7 @@ def text_vocab_coverage(spark, sf_dir):
                        F.count(F.lit(1)).alias("v"))
     head = ranked.filter(F.col("rnk") <= VOCAB_TOP).agg(
         F.sum("c").alias("hc"))
-    return (total.crossJoin(F.broadcast(head))
+    return (total.crossJoin(head)
             .select(F.col("v").cast("bigint").alias("vocab_size"),
                     F.col("t").cast("bigint").alias("n_tokens"),
                     F.round(F.col("hc").cast("double") / F.col("t"), 6)
@@ -1206,9 +1207,7 @@ TFIDF_W_CACHE_FACTOR = 4
 #: disjoint substrings, so vocab rows <= text_bytes / 2 (1-char
 #: token + separator is the densest packing) and each hashed row
 #: costs ~48 B overhead + the term bytes -> <= 28x text bytes; 32
-#: adds margin.  Past the heap-derived budget the build falls back
-#: to the window-over-the-stream shape, which never materializes the
-#: vocabulary anywhere.
+#: adds margin.  Past the budget the vocabulary join is left to AQE.
 VOCAB_BCAST_FACTOR = 32
 
 TFIDF_COS_SQL = f"""
@@ -1299,7 +1298,9 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
     bit-identical (asserted against the unpruned plan), while the
     join sides shrink by the hapax mass of the vocabulary (Zipf:
     roughly half of distinct terms).  Norms still use the full
-    weight table."""
+    weight table.  A zero-norm document (every weight 0) has no
+    cosine: ``try_divide`` yields NULL, as the oracle's division
+    does, and the pair fails the threshold."""
     w = _tfidf_w(spark, sf_dir)
     wp = w.filter(F.col("dfq") > 1)
     wb = wp.select(F.col("doc_id").alias("doc_b"),
@@ -1319,7 +1320,8 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
                         .cast("long")).cast("double") / 1e8)
                  .alias("dot"),
                  F.count(F.lit(1)).alias("shared_terms")))
-    cos = F.round(F.col("dot") / (F.col("nrm_a") * F.col("nrm_b")), 6)
+    cos = F.round(F.try_divide(F.col("dot"),
+                               F.col("nrm_a") * F.col("nrm_b")), 6)
     return (dots.select("doc_a", "doc_b",
                         F.col("shared_terms").cast("int")
                         .alias("shared_terms"),
@@ -1342,19 +1344,13 @@ def _tfidf_w(spark, sf_dir):
       (doc_id in the hash) and map-side partial agg shrinks the
       exploded token stream before it moves.
     * df: tf rows are unique per (doc, term), so document frequency
-      is COUNT(*) over a term window — the window-over-the-stream
-      trick from dedup_ngram_jaccard (SURVEY §8 r3 #2) replacing the
-      old groupBy(term).countDistinct + join-back (a two-phase
-      distinct aggregate plus a third shuffle of tf by term).
+      is a plain COUNT(*) per term, not a two-phase countDistinct.
       INVARIANT (ADVICE r07): COUNT(*) == COUNT(DISTINCT doc_id)
       per term only because doc_id never spans two sources in the
       data model, so tf is unique per (doc_id, term) as well as per
-      (doc_id, source, term) — test_text_parity pins doc_id
-      uniqueness across sources so a data-model change fails loudly
-      instead of silently inflating every df.  The
-      window's exchange carries tf-cardinality rows and its per-term
-      mass is bounded by docs-per-term (<= n_docs even for
-      stopwords), so the shape survives scale-up.
+      (doc_id, source, term) — test_doc_id_unique_across_sources
+      pins doc_id uniqueness across sources so a data-model change
+      fails loudly instead of silently inflating every df.
     * nrm: the per-doc norm is a SECOND window (partitionBy doc_id)
       over the same stream instead of a groupBy + two join-backs
       onto the pair results — one tf-cardinality exchange replaces
@@ -1378,19 +1374,19 @@ def _tfidf_w(spark, sf_dir):
       so the tf aggregate AND the norm window reuse the one exchange
       instead of paying one each;
     * dfq comes from a combine-aggregated vocabulary table
-      (groupBy(term).count — tf rows are unique per (doc, term), the
-      same invariant the window form relied on) broadcast-joined
-      back, replacing the window's full-stream exchange on term with
-      a vocab-mass one; the broadcast is budget-gated on a PROVABLE
-      footer-bytes bound (VOCAB_BCAST_FACTOR) and degrades to the
-      r07 window-over-the-stream shape past it.
+      (groupBy(term).count) joined back through
+      io.broadcast_within_budget at a PROVABLE footer-bytes bound
+      (VOCAB_BCAST_FACTOR), replacing the r07 window's full-stream
+      exchange on term with a vocab-mass one; past the budget AQE
+      plans the same join, which under a 1-byte budget at sf0.1 was
+      also faster than the window form.
 
     Measured (interleaved A/B at sf0.1, caches dropped, 3 reps):
     build 0.92 -> 0.59 s min, full pairs query 1.48 -> 1.19 s min,
     bit-identical output (exceptAll both ways = 0)."""
     import os
 
-    from ..io import (adaptive_cache_level, broadcast_budget_bytes,
+    from ..io import (adaptive_cache_level, broadcast_within_budget,
                       parquet_column_bytes, parquet_row_count,
                       spread_by)
 
@@ -1405,14 +1401,9 @@ def _tfidf_w(spark, sf_dir):
                               lambda x: F.lower(x))).alias("term"))
     tf = toks.groupBy("doc_id", "source", "term").agg(
         F.count(F.lit(1)).alias("tfq"))
-    if (text_bytes * VOCAB_BCAST_FACTOR
-            <= broadcast_budget_bytes(spark)):
-        vocab_below_budget = tf.groupBy("term").agg(
-            F.count(F.lit(1)).alias("dfq"))
-        tfd = tf.join(F.broadcast(vocab_below_budget), "term")
-    else:
-        tfd = tf.withColumn(
-            "dfq", F.count(F.lit(1)).over(Window.partitionBy("term")))
+    vocab = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfq"))
+    tfd = tf.join(broadcast_within_budget(
+        vocab, text_bytes * VOCAB_BCAST_FACTOR), "term")
     w = tfd.select("doc_id", "source", "term", "dfq",
                    F.round(F.col("tfq")
                            * F.log(F.lit(float(n_docs))
@@ -1448,19 +1439,19 @@ def tfidf_query_cosine(spark, sf_dir, stride):
 
     Scale shape: same posting-list join bound as the full-pairs
     operator with one side down-sampled by the stride; the weight
-    table and norms are the shared corpus-scan stages.  The join
-    strategy is corpus-adaptive like dedup's gram_join_side: the
-    query-side posting mass is estimated from footer text bytes
-    (x POSTING_BCAST_FACTOR / stride) and BROADCAST while it fits
-    the heap-derived budget — measured 3x faster than the previous
-    unconditional shuffle_hash at sf0.1, where co-shuffling the
-    FULL posting list by (source, term) dominated the leg — else
-    shuffle-hash with the query side as the build relation (the
-    planner left alone broadcasts the full posting list, a
-    corpus-sized driver broadcast, wrong at any scale)."""
+    table and norms are the shared corpus-scan stages.  The query
+    side goes through io.broadcast_within_budget at its posting mass
+    estimated from footer text bytes (x POSTING_BCAST_FACTOR /
+    stride) — measured 3x faster than an unconditional shuffle_hash
+    at sf0.1, where co-shuffling the FULL posting list by (source,
+    term) dominated the leg — and past the budget it is the
+    shuffle-hash build relation (the planner left alone broadcasts
+    the full posting list, a corpus-sized driver broadcast, wrong at
+    any scale).  A zero-norm document's cosine is NULL, as in the
+    oracle, and fails the threshold."""
     import os
 
-    from ..io import (broadcast_budget_bytes, parquet_column_bytes)
+    from ..io import broadcast_within_budget, parquet_column_bytes
 
     w = _tfidf_w(spark, sf_dir)
     wp = w.filter(F.col("dfq") > 1)
@@ -1472,11 +1463,9 @@ def tfidf_query_cosine(spark, sf_dir, stride):
                   F.col("nrm").alias("nrm_q")))
     text_bytes = parquet_column_bytes(
         os.path.join(sf_dir, "documents.parquet"), "text")
-    est = text_bytes * POSTING_BCAST_FACTOR // stride
-    if est <= broadcast_budget_bytes(spark):
-        wq = F.broadcast(wq)
-    else:
-        wq = wq.hint("shuffle_hash")
+    wq = broadcast_within_budget(
+        wq, text_bytes * POSTING_BCAST_FACTOR // stride,
+        past=lambda s: s.hint("shuffle_hash"))
     dots = (wq.join(wp, (F.col("term") == F.col("q_term"))
                     & (F.col("source") == F.col("q_source"))
                     & (F.col("doc_id") != F.col("query_id")))
@@ -1485,7 +1474,8 @@ def tfidf_query_cosine(spark, sf_dir, stride):
             .agg((F.sum(F.floor(F.col("w_q") * F.col("w") * 1e8 + 0.5)
                         .cast("long")).cast("double") / 1e8)
                  .alias("dot")))
-    cos = F.round(F.col("dot") / (F.col("nrm_q") * F.col("nrm_c")), 6)
+    cos = F.round(F.try_divide(F.col("dot"),
+                               F.col("nrm_q") * F.col("nrm_c")), 6)
     return (dots.select("query_id", "cand", cos.alias("cosine"))
             .filter(F.col("cosine") >= TFIDF_COS_T))
 
@@ -1566,8 +1556,8 @@ def text_bpe_learn_merges(spark, sf_dir):
     shuffle with map-side combine); merge learning then runs on the
     word-frequency table — vocabulary-cardinality, exactly how
     production BPE trainers operate.  Pair counting per iteration is
-    a vocabulary-sized explode + aggregate; the chosen pair is a
-    one-row broadcast."""
+    a vocabulary-sized explode + aggregate; the chosen pair is one
+    row, which the planner broadcasts unhinted."""
     return _bpe_learn(spark, sf_dir)[0]
 
 
@@ -1665,7 +1655,7 @@ def _bpe_learn(spark, sf_dir, parity: str | None = None):
         merged = F.concat(F.lit(" "),
                           F.replace(F.col("p"), F.lit(" "), F.lit("")),
                           F.lit(" "))
-        seq = (seq.crossJoin(F.broadcast(best))
+        seq = (seq.crossJoin(best)
                .select("wd", "cnt", F.trim(F.replace(
                    F.concat(F.lit(" "), F.col("seq"), F.lit(" ")),
                    joined, merged)).alias("seq"))
@@ -1732,10 +1722,10 @@ def text_bpe_apply_merges(spark, sf_dir):
     vocab side is a checkpointed RDD with no stats, and parquet scan
     stats never model explode fan-out — the round-10 explain pass
     caught exactly this BuildLeft shape, a driver-OOM at any real
-    corpus).  The vocab broadcasts while the corpus text-byte upper
-    bound (vocab char mass can never exceed it) fits the
-    heap-derived budget — every replicated test corpus stays under
-    it — else the vocab becomes the shuffle-hash BUILD side against
+    corpus).  The vocab goes through io.broadcast_within_budget at
+    the corpus text-byte upper bound (vocab char mass can never
+    exceed it) — every replicated test corpus stays under the
+    budget — and past it the vocab is the shuffle-hash BUILD side against
     the streamed corpus, the standard dictionary-join shape (one
     build row per word, so per-key build mass is skew-free; AQE
     splits probe-side stopword skew).  Documents whose every
@@ -1755,7 +1745,7 @@ def text_bpe_apply_merges(spark, sf_dir):
         F.size(F.split(F.col("seq"), " ")).cast("bigint")
         .alias("n_sym"))
     toks = _doc_pretokens(spread(t(spark, sf_dir, "documents")))
-    return _encode_corpus_with_vocab(spark, sf_dir, toks, vocab)
+    return _encode_corpus_with_vocab(sf_dir, toks, vocab)
 
 
 def _doc_pretokens(d):
@@ -1768,27 +1758,23 @@ def _doc_pretokens(d):
         .filter(F.length("wd") > 0))
 
 
-def _encode_corpus_with_vocab(spark, sf_dir, toks, vocab):
+def _encode_corpus_with_vocab(sf_dir, toks, vocab):
     """Corpus-encode tail shared by the apply and held-out entries:
     join the pretoken stream against the (wd, n_sym) encoder table
     and fold to per-doc counts.  The dictionary join side is chosen
-    EXPLICITLY — broadcast while the corpus text-byte upper bound
-    (vocab char mass can never exceed it) fits the heap budget, else
-    the vocab becomes the shuffle-hash BUILD side — because the
-    checkpointed vocab has no stats and the planner would otherwise
-    broadcast the exploded corpus (the round-10 BuildLeft bug,
-    plan-shape-pinned).  Keeping this policy in ONE place is the
-    point: a budget change must not fork between the two encoders."""
+    EXPLICITLY — io.broadcast_within_budget at the corpus text-byte
+    upper bound, else the vocab is the shuffle-hash BUILD side —
+    because the checkpointed vocab has no stats and the planner
+    would otherwise broadcast the exploded corpus (the round-10
+    BuildLeft bug, plan-shape-pinned)."""
     import os
 
-    from ..io import broadcast_budget_bytes, parquet_column_bytes
+    from ..io import broadcast_within_budget, parquet_column_bytes
 
-    text_bytes = parquet_column_bytes(
-        os.path.join(sf_dir, "documents.parquet"), "text")
-    if text_bytes <= broadcast_budget_bytes(spark):
-        vocab = F.broadcast(vocab)
-    else:
-        vocab = vocab.hint("shuffle_hash")
+    vocab = broadcast_within_budget(
+        vocab, parquet_column_bytes(
+            os.path.join(sf_dir, "documents.parquet"), "text"),
+        past=lambda s: s.hint("shuffle_hash"))
     return (toks.join(vocab, "wd")
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_pretokens"),
@@ -1854,7 +1840,8 @@ def text_bpe_encode_heldout(spark, sf_dir):
 
     The rank-ordered application is ONE JVM-side fold: the merge
     table (BPE_MERGES rows, constant by construction) collapses to a
-    single rank-sorted array row, cross-joined (broadcast) onto the
+    single rank-sorted array row, cross-joined (the planner
+    broadcasts the one row unhinted) onto the
     vocab DELTA — vocabulary-cardinality, never the corpus — and
     F.aggregate replays training's boundary-padded replace per rank.
     Training keeps the padded form trimmed/re-padded per iteration;
@@ -1866,9 +1853,8 @@ def text_bpe_encode_heldout(spark, sf_dir):
     Scale shape: two corpus scans (the distinct-word pass and the
     encode join — how production encoders work: encode each distinct
     word once, look up everywhere); the delta fold is
-    vocabulary-sized; the encoder join side follows the same
-    explicit budget policy as the apply entry (broadcast under the
-    heap budget, else shuffle-hash build on the vocab)."""
+    vocabulary-sized; the encoder join side is the apply entry's
+    (_encode_corpus_with_vocab)."""
     merges, vocab_seq = _bpe_learn(spark, sf_dir, parity="even")
     seen = vocab_seq.select("wd", "seq")
     toks = _doc_pretokens(
@@ -1896,10 +1882,10 @@ def text_bpe_encode_heldout(spark, sf_dir):
         lambda acc, p: F.replace(
             acc, pad(p), pad(F.replace(p, F.lit(" "), F.lit("")))),
         lambda acc: F.trim(acc))
-    applied = (delta0.crossJoin(F.broadcast(mrow))
+    applied = (delta0.crossJoin(mrow)
                .select("wd", enc.alias("seq")))
     vocab = (seen.unionByName(applied)
              .select("wd",
                      F.size(F.split(F.col("seq"), " ")).cast("bigint")
                      .alias("n_sym")))
-    return _encode_corpus_with_vocab(spark, sf_dir, toks, vocab)
+    return _encode_corpus_with_vocab(sf_dir, toks, vocab)

@@ -14,15 +14,19 @@ warehouse workload:
 * Q5  — 6-way snowflake join (region→nation broadcast; the big
         shuffle join is orders⋈lineitem);
 
-Broadcast policy: explicit `F.broadcast()` hints appear ONLY on
-sides whose size is bounded independent of scale factor (nation,
-region, scalar/near-scalar aggregates).  Customer, supplier and
-part — and any subset or per-key aggregate of them — grow linearly
-with SF, so a hardcoded hint would OOM the executors at 100 TB;
-those joins carry no hint and AQE converts them to broadcast at
-runtime whenever the side is actually small (plan-asserted in
-tests/test_plan_shapes.py).
 * Q10 — join + group-by-customer + top-k revenue.
+
+Broadcast policy (docs/DEPLOY.md): a broadcast hint appears ONLY on
+sides whose size is bounded independent of scale factor (nation,
+region).  A one-row side (Q15's best revenue, Q22's average balance)
+carries none: the planner already sizes it at one row and broadcasts
+it.  Customer, supplier and part — and any subset or per-key
+aggregate of them — grow linearly with SF, so a hardcoded hint would
+OOM the executors at 100 TB; those joins carry no hint and AQE
+converts them to broadcast at runtime whenever the side is actually
+small (plan-asserted in tests/test_plan_shapes.py).  A side that
+scales with the data but should broadcast while it fits goes through
+the one budget gate, ``io.broadcast_within_budget``.
 
 Float parity: money sums go through DECIMAL(38,10) (exact,
 order-independent); averages divide the exact decimal by the count
@@ -589,7 +593,7 @@ def tpch_q22_global_sales_opportunity(spark, sf_dir):
     avg_bal = (cust.filter(F.col("c_acctbal") > 0.0)
                .agg(F.avg("c_acctbal").alias("a")))
     eligible = (
-        cust.crossJoin(F.broadcast(avg_bal))
+        cust.crossJoin(avg_bal)
         .filter(F.col("c_acctbal") > F.col("a"))
         .join(orders.filter(F.col("o_totalprice") > Q22_BIG_ORDER)
               .select("o_custkey"),
@@ -728,7 +732,7 @@ def tpch_q15_top_supplier(spark, sf_dir):
                   "total_revenue")))
     best = revenue.agg(F.max("total_revenue").alias("best"))
     return (
-        revenue.crossJoin(F.broadcast(best))
+        revenue.crossJoin(best)
         .filter(F.col("total_revenue") == F.col("best"))
         .join(supp,
               F.col("supplier_no") == F.col("s_suppkey"))

@@ -271,6 +271,48 @@ def test_ivf_ann_zero_norm_centroid_matches_oracle(spark, tmp_path):
     assert got[(0, zero)] == (0, None)
 
 
+def test_tfidf_zero_norm_document_matches_oracle(spark, tmp_path):
+    """A document whose every term occurs in every document has all
+    TF-IDF weights 0, so its norm is 0, yet it still shares terms
+    with the others.  Its cosine is NULL on both engines and fails
+    the threshold; the pairs query and the query-sided ranking (the
+    lexical leg of ``sims_hybrid_rrf``) must return the oracle's
+    rows instead of raising ``DIVIDE_BY_ZERO``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from energi_data_pipeline_spark.queries.text import (
+        tfidf_query_cosine)
+
+    texts = ["alpha beta", "alpha beta", "alpha beta gamma"]
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(len(texts)), type=pa.int64()),
+        "text": pa.array(texts),
+        "lang": pa.array(["en"] * len(texts)),
+        "source": pa.array(["web"] * len(texts)),
+        "n_chars": pa.array(map(len, texts), type=pa.int64()),
+    }), str(tmp_path / "documents.parquet"))
+
+    pairs_sql = REGISTRY["text_tfidf_cosine_pairs"].oracle
+    query_sql = f"""
+WITH lex_pairs AS ({pairs_sql})
+SELECT doc_a AS query_id, doc_b AS cand, cosine FROM lex_pairs
+UNION ALL
+SELECT doc_b AS query_id, doc_a AS cand, cosine FROM lex_pairs
+"""
+    con = duck_connection(str(tmp_path))
+    try:
+        res = compare(REGISTRY["text_tfidf_cosine_pairs"].fn(
+            spark, str(tmp_path)), con, pairs_sql)
+        assert res["ok"], res
+        res = compare(tfidf_query_cosine(spark, str(tmp_path), 1), con,
+                      query_sql)
+        assert res["ok"], res
+    finally:
+        con.close()
+        spark.catalog.clearCache()
+
+
 #: a corpus vector that is neither a centroid, a codebook seed nor a
 #: query at sf0.001 — zeroing it tests the vector side of every
 #: cosine, where the test above zeroes a centroid

@@ -68,84 +68,33 @@ def test_star_joins_broadcast_small_dims(spark, registry):
 #: is bounded independent of scale factor.  Hardcoded hints on
 #: customer/supplier/part subsets or corpus-derived samples OOM the
 #: executors at 100 TB (the round-2 systemic finding) — AQE already
-#: broadcasts those at runtime whenever they actually fit.
+#: broadcasts those at runtime whenever they actually fit.  A one-row
+#: side (a global aggregate, a limit(1)) carries no hint: the planner
+#: sizes it at one row and broadcasts it anyway.
 BOUNDED_BROADCAST_SIDES = {
     "nation", "nations", "region",   # fixed-cardinality TPC-H dims
-    "dim", "dim_cols",               # dim_time (time-range bounded)
+    "n",                             # Q7's two-nation filter
+    "dim",                           # dim_time (time-range bounded)
     "cent",                          # IVF / PQ coarse centroids
-    "best", "avg_bal", "n",          # scalar / one-row aggregates
-    "total", "head",                 # one-row corpus-total aggregates
-    "type_avg",                      # per-p_type agg (fixed key space)
-    "donors_src",                    # k-1 rows per window bucket
     "pcent",                         # PQ codebook (same class as
                                      # "cent": a sub-corpus quantizer
                                      # table)
-    "scalar",                        # dataset-card one-row aggregates
-    "nn", "dang",                    # PageRank one-row scalars
-                                     # (node count; dangling mass)
-    "gram_build_below_knee",         # gram-stream self-join build,
-                                     # broadcast ONLY under the
-                                     # heap-derived byte budget
-                                     # (dedup.gram_join_side)
-    "wq",                            # stride-reduced query postings,
-                                     # broadcast ONLY under the same
-                                     # heap-derived budget
-                                     # (text.tfidf_query_cosine)
+    "type_avg",                      # per-p_type agg (fixed key space)
     "cells",                         # count-min grid: CM_DEPTH x
                                      # CM_WIDTH cells by construction
     "hit",                           # Bloom bit-position set:
                                      # <= BLOOM_BITS rows by
                                      # construction
-    "wrow",                          # classifier GD weights: ONE row
-                                     # holding a D+1 array (model
-                                     # parameters, bounded by
-                                     # construction — curation.py
-                                     # chained-GD re-entry)
-    "mrow",                          # BPE merge rules collapsed to
-                                     # ONE row holding a BPE_MERGES-
-                                     # element array (constant by
-                                     # construction — text.py held-out
-                                     # encode fold)
-    "vocab",                         # BPE word->pieces vocabulary:
-                                     # broadcast ONLY when the corpus
-                                     # text-byte upper bound fits the
-                                     # heap-derived broadcast budget,
-                                     # else shuffle-hash build on the
-                                     # vocab side (text.py BPE apply
-                                     # join-side policy; plan pinned by
-                                     # test_bpe_apply_broadcasts_vocab_
-                                     # not_corpus)
-    # --- streaming index maintenance (r12 verdict #3 + r13 ADVICE):
-    # every batch-side hint (batch_vec / batch_bands /
-    # batch_sig_probe / batch_dup_flags) now routes through ONE
-    # helper that gates the hint on the measured batch row count x
-    # bytes-per-row against the heap-derived budget — a giant
-    # production trigger falls back to AQE instead of force-
-    # broadcasting an unbounded micro-batch
-    "budget_gated_side",             # streaming._bounded_broadcast:
-                                     # hint applied only under the
-                                     # heap-derived byte budget (same
-                                     # class as gram_build_below_knee
-                                     # / wq / vocab)
-    # --- r16 additions, each bounded or budget-gated:
     "local_labels",                  # CC localization label table:
                                      # bounded by CC_LOCAL_EDGE_LIMIT
                                      # (graph._local_labels_df — the
                                      # collect itself is count-gated)
-    "vocab_below_budget",            # TF-IDF term->df vocabulary:
-                                     # broadcast ONLY under the
-                                     # PROVABLE text-byte bound
-                                     # (text.VOCAB_BCAST_FACTOR) vs
-                                     # the heap budget; window form
-                                     # past it
-    "cell_below_budget",             # IVF cell-assignment table
-    "qcell_below_budget",            # (vec_id, cell_id): broadcast
-                                     # ONLY under the heap budget at
-                                     # ~48 B/row, plain shuffled join
-                                     # past it (simsearch r16)
-    "cq_below_budget",               # query-sided (query, m, cent,
-                                     # d2, cell) table: same gate at
-                                     # its own row estimate
+    "budget_gated_side",             # io.broadcast_within_budget, the
+                                     # one gate for every side that
+                                     # scales with the data: hinted
+                                     # only while the caller's size
+                                     # estimate fits the heap-derived
+                                     # byte budget
 }
 
 
@@ -162,6 +111,24 @@ def test_no_hardcoded_broadcast_on_scaling_sides():
                 if ident not in BOUNDED_BROADCAST_SIDES:
                     offenders.append(f"{src.name}:{i} broadcast({ident})")
     assert not offenders, offenders
+
+
+def test_budget_decision_lives_in_io():
+    # one broadcast-vs-shuffle gate: every budget-keyed join side goes
+    # through io.broadcast_within_budget, so no other module reads the
+    # byte budget and decides on its own
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent \
+        / "energi_data_pipeline_spark"
+    callers = sorted(
+        f"{src.relative_to(pkg)}:{i}"
+        for src in pkg.rglob("*.py")
+        for i, line in enumerate(src.read_text().splitlines(), 1)
+        if re.search(r"\bbroadcast_budget_bytes\(", line))
+    assert callers and all(c.startswith("io.py:") for c in callers), \
+        callers
 
 
 def test_unhinted_dim_joins_still_broadcast_at_test_scale(
@@ -547,14 +514,15 @@ def test_gram_broadcast_knee_keys_on_text_mass(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from energi_data_pipeline_spark.io import BCAST_BUDGET_CAP
     from energi_data_pipeline_spark.queries.dedup import (
-        GRAM_BCAST_MAX_BYTES, GRAM_ROW_BCAST_BYTES, gram_join_side)
+        GRAM_ROW_BCAST_BYTES, gram_join_side)
     from tests.conftest import SF001
 
     big = "abc def ghi " * (1 << 17)  # ~1.5 MiB of text per doc
     n_docs = 40  # 40 docs ~ 60 MB text >> 46 MB budget, << 150k docs
     assert n_docs * len(big) * GRAM_ROW_BCAST_BYTES \
-        > GRAM_BCAST_MAX_BYTES
+        > BCAST_BUDGET_CAP
     pq.write_table(pa.table({
         "doc_id": pa.array(range(n_docs), type=pa.int64()),
         "source": pa.array(["s"] * n_docs),
@@ -768,31 +736,34 @@ def test_tfidf_query_join_strategy_knee(spark, monkeypatch):
 
 def test_tfidf_w_vocab_budget_degrade(spark, monkeypatch):
     # r16: _tfidf_w's document-frequency leg is a combine-aggregated
-    # vocabulary broadcast-joined back UNDER the byte budget and the
-    # r07 window-over-the-stream shape past it — the two paths must
-    # produce bit-identical weight tables (same dfq, same w, same
-    # nrm doubles: identical expressions, different join plan only)
+    # vocabulary broadcast-joined back UNDER the byte budget and left
+    # to AQE past it — the two plans must produce bit-identical
+    # weight tables (same dfq, same w, same nrm doubles: identical
+    # expressions, different join plan only)
     from energi_data_pipeline_spark.queries.text import _tfidf_w
     from tests.conftest import SF001
 
     broad = sorted(map(tuple, _tfidf_w(spark, SF001).collect()))
     spark.catalog.clearCache()
     monkeypatch.setenv("SPARK_GRAFT_BCAST_BUDGET_BYTES", "1")
-    window = sorted(map(tuple, _tfidf_w(spark, SF001).collect()))
+    past = sorted(map(tuple, _tfidf_w(spark, SF001).collect()))
     spark.catalog.clearCache()
     assert len(broad) > 0
-    assert window == broad
+    assert past == broad
 
 
 def test_ivfpq_and_cells_broadcast_budget_degrade(spark, registry,
                                                   monkeypatch):
-    # every broadcast knee (the cell side of simsearch._ivf_members,
-    # qcell/cq in ivfpq) must fall back to a plain shuffled
-    # equi-join past the budget with identical rows
+    # every budget gate (the cell side of simsearch._ivf_members,
+    # qcell/cq in ivfpq, the TF-IDF vocabulary and query postings,
+    # the BPE vocabulary, the gram-stream build side) must give the
+    # same rows past the budget as under it
     from tests.conftest import SF0001
 
     for name in ("sims_ivfpq_ann", "dedup_semantic_cells",
-                 "sims_ivf_ann"):
+                 "sims_ivf_ann", "text_tfidf_cosine_pairs",
+                 "sims_hybrid_rrf", "text_bpe_apply_merges",
+                 "dedup_ngram_jaccard"):
         base = sorted(map(tuple,
                           registry[name].fn(spark, SF0001).collect()))
         spark.catalog.clearCache()
@@ -1051,14 +1022,13 @@ def test_stream_batch_broadcast_budget_gate(spark):
     # over budget: NO hint — AQE's runtime sizes decide.
     from pyspark.sql import functions as F
 
-    from energi_data_pipeline_spark.queries.streaming import \
-        _bounded_broadcast
+    from energi_data_pipeline_spark.io import broadcast_within_budget
 
     side = spark.range(10).select(F.col("id").alias("vec_id"))
-    under = (_bounded_broadcast(side, 10 * 100)
+    under = (broadcast_within_budget(side, 10 * 100)
              ._jdf.queryExecution().logical().toString())
     assert "broadcast" in under.lower(), under
-    over = (_bounded_broadcast(side, 1 << 62)
+    over = (broadcast_within_budget(side, 1 << 62)
             ._jdf.queryExecution().logical().toString())
     assert "broadcast" not in over.lower(), over
 
