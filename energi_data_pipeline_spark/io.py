@@ -41,11 +41,14 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import urllib.parse
 from datetime import datetime, timedelta, timezone
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructField, StructType, TimestampType
+from pyspark.sql.types import (LongType, StructField, StructType,
+                               TimestampType)
 
 from .session import tune
 
@@ -258,60 +261,135 @@ def parquet_column_bytes(path: str, column: str) -> int:
     return _parquet_col_bytes_at(_file_ids(path), column)
 
 
-@functools.lru_cache(maxsize=256)
-def _nanos_columns_at(path: str, _mtime_ns: int,
-                      _size: int) -> tuple[str, ...]:
+@functools.lru_cache(maxsize=1024)
+def _arrow_schema_at(path: str, _mtime_ns: int, _size: int):
     import pyarrow.parquet as pq
 
-    return tuple(f.name for f in pq.read_schema(path)
-                 if str(f.type).startswith("timestamp[ns"))
+    return pq.read_schema(path)
 
 
-def _nanos_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS) (driver-side footer
-    peek via pyarrow — one tiny metadata read per table).  A
-    directory's first data file answers for the (uniform) schema, and
-    none can be a nanos column of one that holds none.  Cached on the
+def _footer(path: str):
+    """The arrow schema in the footer of the table ``path``'s first
+    data file by path, the one file Spark's own schema inference
+    reads (a directory's files share one schema).  Cached on the
     file's identity (:func:`_file_ids`), not its path alone, so a
     table regenerated in place with a different encoding (it
     happened: the round-3 driver re-encode) invalidates instead of
     serving stale dtypes."""
     files = _file_ids(path)
-    return _nanos_columns_at(*files[0]) if files else ()
+    if not files:
+        raise FileNotFoundError(f"no data file under {path}")
+    return _arrow_schema_at(*min(files))
 
 
-#: memoized table DataFrames: file_memo_key -> DataFrame.  A
-#: DataFrame is an immutable logical plan, so handing the same
-#: object to every caller is safe; building it anew costs a
-#: spark.read.parquet footer/schema round trip (~50-100ms) per TABLE
-#: per QUERY build, which the round-9 profile found adding up to a
-#: third of the bench numerator across a 4-table star query.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+def _is_nanos(at) -> bool:
+    return str(at).startswith("timestamp[ns")
 
 
-def file_memo_key(spark, path: str) -> tuple:
-    """Session+file identity for driver-side memo caches: keyed on
-    file identity like the pyarrow footer caches so a regenerated
-    table invalidates (the r03 driver re-encode scenario), and on
-    SESSION identity so a stopped session's JVM plan/schema is never
-    served to a new session.  Session identity is applicationId AND
-    ``id(spark)``: a DataFrame is bound to the exact SparkSession
-    that built it, and ``newSession()`` siblings SHARE an
-    applicationId — serving a sibling another session's DataFrame
-    would execute it under the originating session's conf/state.
-    (``id()`` alone could recycle after GC; the applicationId pair
-    makes a stale hit require both a recycled id and a same-app
-    session, and the file-identity fields still have to match.)
-    Shared by the table-DataFrame memo here and the streaming schema
-    memo (queries/streaming.py) so the invalidate-on-rewrite policy
-    lives in one place."""
-    st = os.stat(path)
-    return (spark.sparkContext.applicationId, id(spark), path,
-            st.st_mtime_ns, st.st_size)
+#: the schema-JSON flags a Spark read sets on every field and element
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, from the footer
+    :func:`_footer` reads on the driver: a read given it runs no
+    schema-inference job.  A file Spark wrote carries the schema
+    Spark reads back; any other is converted under the session's
+    parquet confs (a top-level TIMESTAMP(NANOS) column is an int64
+    under ``nanosAsLong``).  Either way every field and element is
+    nullable, as in a Spark read.  For a table that is one file or a
+    directory of files; partition columns, ``mergeSchema``, a nested
+    TIMESTAMP(NANOS) and an INT96 column of a file Spark did not
+    write are not read."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    footer = _footer(path)
+    stored = (footer.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata")
+    if stored is None:
+        ntz, nanos_long = (spark.conf.get(k) == "true" for k in (
+            "spark.sql.parquet.inferTimestampNTZ.enabled",
+            "spark.sql.legacy.parquet.nanosAsLong"))
+        stored = StructType([
+            StructField(f.name, LongType())
+            if nanos_long and _is_nanos(a.type) else f
+            for a, f in zip(footer, from_arrow_schema(footer, ntz))]).json()
+    return StructType.fromJson(json.loads(stored, object_hook=lambda d: {
+        **d, **{k: True for k in _NULLABLE_KEYS if k in d}}))
+
+
+#: driver-side memos of every module, one policy: (applicationId,
+#: id(session), path, what, file identity) -> (value, release).
+#: Values are DataFrames bound to their session, a learned table, a
+#: passed guard; :func:`_memo` fills and evicts them.
+_MEMO: dict[tuple, tuple] = {}
+#: entries kept; past it the least recently used are evicted.
+_MEMO_MAX = 64
+_MEMO_LOCK = threading.RLock()
+
+
+def _evict(keys) -> int:
+    """Drop the memo entries ``keys``, releasing each value that has
+    a ``release`` (a persisted frame's ``unpersist``)."""
+    for k in keys:
+        value, release = _MEMO.pop(k)
+        if release is not None:
+            try:
+                release(value)
+            except Py4JJavaError:
+                pass  # a stopped session's handle: nothing to release
+    return len(keys)
+
+
+def _memo(spark: SparkSession, path: str, what: tuple, build,
+          release=None):
+    """``build()``, memoized per session, table ``path``'s file
+    identity (:func:`_file_ids`) and ``what`` (a tuple whose head
+    names the memo).  A build that raises stores nothing.
+
+    Session identity is applicationId AND ``id(spark)``: a DataFrame
+    is bound to the exact SparkSession that built it, and
+    ``newSession()`` siblings SHARE an applicationId.  (``id()``
+    alone could recycle after GC; with the applicationId a stale hit
+    needs both a recycled id and a same-app session, and the file
+    identity still has to match.)
+
+    One eviction rule: a miss evicts the same session, path and
+    ``what``'s entries of older file identities (a table rewritten
+    in place must neither serve stale results nor keep their cached
+    blocks registered), then the least recently used entries past
+    ``_MEMO_MAX``.  ``release(value)`` runs on eviction.
+
+    ``build`` runs under the memo's lock, so a key is built once even
+    when threads race for it; it may read a memo itself, but must not
+    wait on another thread that does."""
+    head = (spark.sparkContext.applicationId, id(spark), path, what)
+    key = head + (_file_ids(path),)
+    with _MEMO_LOCK:
+        hit = _MEMO.pop(key, None)
+        if hit is None:
+            _evict([k for k in _MEMO if k[:4] == head])
+            hit = (build(), release)
+            _evict(list(_MEMO)[:max(0, len(_MEMO) + 1 - _MEMO_MAX)])
+        _MEMO[key] = hit  # (re)inserted last: the most recently used
+    return hit[0]
+
+
+def _memo_clear(spark: SparkSession | None, name: str) -> int:
+    """Evict the ``name`` memo's entries of ``spark`` (of every
+    session when None); returns how many."""
+    sess = (None if spark is None
+            else (spark.sparkContext.applicationId, id(spark)))
+    with _MEMO_LOCK:
+        return _evict([k for k in _MEMO if k[3][0] == name
+                       and (sess is None or k[:2] == sess)])
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one test table: ``{sf_dir}/{name}.parquet``.
+    """Read one test table: ``{sf_dir}/{name}.parquet``, with its
+    footer schema (:func:`_footer_schema`: no Spark job), memoized
+    (:func:`_memo`).  A DataFrame is an immutable logical plan, so
+    handing the same object to every caller is safe.
 
     TIMESTAMP(NANOS) columns (unsupported by Spark's parquet reader)
     come in as int64 via ``nanosAsLong`` and are floored to
@@ -320,17 +398,17 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     tune(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = file_memo_key(spark, path)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = spark.read.parquet(path)
-    for c in _nanos_columns(path):
-        df = df.withColumn(c, F.expr(f"timestamp_micros({c} DIV 1000)"))
-    if len(_TABLE_CACHE) > 256:  # old sessions' plans: drop, rebuild
-        _TABLE_CACHE.clear()
-    _TABLE_CACHE[key] = df
-    return df
+
+    def build():
+        schema = _footer_schema(spark, path)
+        df = spark.read.schema(schema).parquet(path)
+        for f in _footer(path):
+            if _is_nanos(f.type) and schema[f.name].dataType == LongType():
+                df = df.withColumn(f.name, F.expr(
+                    f"timestamp_micros({f.name} DIV 1000)"))
+        return df
+
+    return _memo(spark, path, ("table",), build)
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -953,12 +953,6 @@ _LINK_SQL = "0.5 + 0.5 * {m} / (1 + abs({m}))"
 _FEAT_SCHEMA = ("doc_id bigint, source string, y double, "
                 "xs array<double>")
 
-#: (session, corpus-file identity) -> persisted dense-feature
-#: DataFrame; see _dense_features for why object identity (not plan
-#: equality) is the reuse contract between trainer and gate.
-_DENSE_FEAT_MEMO: dict = {}
-
-
 def _feat_batches(it):
     """Arrow batch kernel for :func:`_dense_features`: per document,
     tokenize (``\\s+`` split of the trimmed text — same semantics as
@@ -1061,59 +1055,38 @@ def _dense_features(spark, sf_dir):
     import os
 
     from pyspark import StorageLevel
+    from pyspark.sql import DataFrame
 
-    from ..io import (adaptive_cache_level, file_memo_key,
-                      parquet_row_count)
+    from ..io import _memo, adaptive_cache_level, parquet_row_count
 
     corpus = os.path.join(sf_dir, "documents.parquet")
-    key = file_memo_key(spark, corpus)
     n_docs = parquet_row_count(corpus)
-    # dense row = (D+1)-double vector + id/source/label: the level
-    # is corpus-adaptive like _tfidf_w's (r14 verdict #2 — memory
-    # while it fits the heap-fraction budget, DISK_ONLY past it)
-    level = adaptive_cache_level(spark, n_docs * (D_FEATS + 6) * 9)
-    hit = _DENSE_FEAT_MEMO.get(key)
-    if hit is not None:
-        # a spark.catalog.clearCache() (bench drops caches between
-        # runs) deregisters the persist but the memo keeps handing
-        # back the same DataFrame — re-assert, or the multi-branch
-        # GD chain re-runs the Arrow kernel once per branch
-        # (measured 1.35s -> 2.15s in the first r10 capture)
-        if hit.storageLevel == StorageLevel.NONE:
-            hit.persist(level)
-        return hit
-    d = t(spark, sf_dir, "documents").select("doc_id", "source",
-                                             "text")
-    target = max(1, min(spark.sparkContext.defaultParallelism,
-                        -(-n_docs // 1000)))
-    if d.rdd.getNumPartitions() < target:
-        d = d.repartition(target)
-    fxv = (d.mapInPandas(_feat_batches, _FEAT_SCHEMA)
-           .persist(level))
-    # evictions UNPERSIST: a dropped entry's DISK_ONLY blocks would
+
+    def build():
+        d = t(spark, sf_dir, "documents").select("doc_id", "source",
+                                                 "text")
+        target = max(1, min(spark.sparkContext.defaultParallelism,
+                            -(-n_docs // 1000)))
+        if d.rdd.getNumPartitions() < target:
+            d = d.repartition(target)
+        return d.mapInPandas(_feat_batches, _FEAT_SCHEMA)
+
+    # an evicted entry is UNPERSISTED: its DISK_ONLY blocks would
     # otherwise stay registered in the CacheManager for the session's
-    # life with no reachable handle.  Same-session same-path entries
-    # with a different file identity (corpus rewritten in place) are
-    # evicted eagerly for the same reason.
-    stale = [k for k in _DENSE_FEAT_MEMO
-             if k[:3] == key[:3] and k != key]
-    # overflow: evict oldest-inserted first, never a full flush — a
-    # flush unpersists live sessions' hot entries and the next
-    # trainer/gate pair re-runs the Arrow feature kernel, the exact
-    # cost the memo exists to avoid (round-10 ADVICE).  dict
-    # preserves insertion order; dropping from the front is LRU-by-
-    # insertion, good enough for a cache whose hits are clustered
-    # within a session.
-    overflow = len(_DENSE_FEAT_MEMO) - 32
-    if overflow > 0:
-        stale += [k for k in list(_DENSE_FEAT_MEMO)[:overflow]
-                  if k not in stale]
-    for k in stale:
-        try:
-            _DENSE_FEAT_MEMO.pop(k).unpersist()
-        except Exception:
-            pass  # a stopped session's handle: nothing to release
-    _DENSE_FEAT_MEMO[key] = fxv
+    # life with no reachable handle
+    fxv = _memo(spark, corpus, ("dense_features",), build,
+                release=DataFrame.unpersist)
+    # persisted here, and again after a spark.catalog.clearCache()
+    # (bench drops caches between runs), which deregisters the
+    # persist under the memo's feet — or the multi-branch GD chain
+    # re-runs the Arrow kernel once per branch (measured 1.35s ->
+    # 2.15s in the first r10 capture).  Dense row = (D+1)-double
+    # vector + id/source/label: the level is corpus-adaptive like
+    # _tfidf_w's (r14 verdict #2 — memory while it fits the
+    # heap-fraction budget, DISK_ONLY past it)
+    if fxv.storageLevel == StorageLevel.NONE:
+        fxv.persist(adaptive_cache_level(
+            spark, n_docs * (D_FEATS + 6) * 9))
     return fxv
 
 

@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from ..io import spread
+from ..io import _memo, spread
 from . import query, register_oracle_knee
 from .core import t
 
@@ -1906,49 +1906,14 @@ KMEANS_ITERS = 2
 #: iterations chain checkpoint-free into a single job.
 _KMEANS_CHAIN_DEPTH = 4
 
-#: corpora whose components already passed the magnitude guard this
-#: session (the check is a data property of the corpus FILES, so one
-#: green reading per physical corpus suffices — r13 ADVICE: the
-#: guard runs on the PRODUCTION path, not behind a debug env var).
-#: Keyed on (dir, file size/mtime fingerprint), NOT the path alone:
-#: a corpus rewritten in-place (tmp-dir reuse in tests, a refreshed
-#: corpus in a long-lived service) must re-earn its green reading
-#: (r14 ADVICE).
-_KMEANS_MAG_OK: set[tuple] = set()
-
-
-def _corpus_fingerprint(sf_dir: str) -> tuple:
-    """(sf_dir, (name, size, mtime_ns)...) for the embeddings parquet
-    file/dir — cheap stat-only identity of the physical corpus."""
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    ents = []
-    try:
-        if os.path.isdir(path):
-            for name in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, name))
-                ents.append((name, st.st_size, st.st_mtime_ns))
-        else:
-            st = os.stat(path)
-            ents.append(("", st.st_size, st.st_mtime_ns))
-    except OSError:
-        # unstat-able corpus -> unique key, never memo-hits
-        ents.append(("?", -1, id(object())))
-    return (sf_dir, tuple(ents))
-
-
-def _assert_kmeans_magnitude(vlong, sf_dir: str) -> None:
+def _assert_kmeans_magnitude(vlong) -> bool:
     """Fail LOUDLY when embedding components are too large for the
     1e8-scaled long accumulation to stay provably equal to the
     DECIMAL(38,10) oracle: sum over dim of round(term*1e8) must stay
     under 2^53, i.e. max|v| <= sqrt(2^53 / (4e8*dim)) (centroids are
     means of components, so |v-c| <= 2*max|v|); asserted at half the
     derived bound for margin.  One cheap agg over the already-cached
-    vlong, memoized per corpus fingerprint (success only)."""
-    key = _corpus_fingerprint(sf_dir)
-    if key in _KMEANS_MAG_OK:
-        return
+    vlong; True when it passes."""
     row = vlong.agg(
         F.max(F.abs(F.col("v"))).alias("m"),
         (F.max("pos") + 1).alias("dim")).first()
@@ -1962,7 +1927,7 @@ def _assert_kmeans_magnitude(vlong, sf_dir: str) -> None:
             f"longer provably equal to the DECIMAL(38,10) oracle; "
             f"rescale the corpus or lower the scale factor (see "
             f"derivation in sims_kmeans_lloyd)")
-    _KMEANS_MAG_OK.add(key)
+    return True
 
 
 def _kmeans_oracle() -> str:
@@ -2023,15 +1988,17 @@ def sims_kmeans_lloyd(spark, sf_dir):
     bounded quantizer table, so assignment never shuffles the corpus
     — and (b) one map-side-combined shuffle to k·dim partial sums
     for the mean update.  The argmin is a min-over-struct
-    AGGREGATION (partial-aggregable, combines map-side, no per-key
-    sort), not a row_number window — same skew-safe choice as the
-    cluster-representative keep-best.  All iterations CHAIN into one
-    plan (r11 verdict #5: the per-iteration eager localCheckpoints
-    made this the sweep's only absolute-rule sleeper at 3.5s — four
-    checkpoint jobs' scheduling floors on a 0.3s compute); a
-    truncation point every _KMEANS_CHAIN_DEPTH iterations bounds
-    plan growth if the constant is ever raised, and at the default
-    2 iterations the whole query is ONE job plus its broadcasts.
+    AGGREGATION (partial-aggregable, combines map-side), not a
+    row_number window — same skew-safe choice as the
+    cluster-representative keep-best.  A struct buffer is not
+    hash-aggregable, so Spark plans it as a SortAggregate: each side
+    of its shuffle sorts the rows by key first.  All iterations
+    CHAIN into one plan (r11 verdict #5: the per-iteration eager
+    localCheckpoints made this the sweep's only absolute-rule sleeper
+    at 3.5s — four checkpoint jobs' scheduling floors on a 0.3s
+    compute); a truncation point every _KMEANS_CHAIN_DEPTH iterations
+    bounds plan growth if the constant is ever raised, and at the
+    default 2 iterations the whole query is ONE job plus its broadcasts.
     Float discipline: squared-distance terms pre-rounded to 8dp and
     accumulated EXACTLY as 1e8-scaled longs (provably equal to the
     oracle's DECIMAL(38,10) sum — see the inline derivation — at
@@ -2039,6 +2006,8 @@ def sims_kmeans_lloyd(spark, sf_dir):
     argmin ties broken by centroid id (struct comparison orders by
     d2 then cent_id — identical tie-break) — bit-identical to the
     unrolled-CTE oracle."""
+    import os
+
     emb = spread(t(spark, sf_dir, "embeddings"))
     vlong = (emb.select("vec_id", F.posexplode("embedding")
                         .alias("pos", "vf"))
@@ -2057,11 +2026,13 @@ def sims_kmeans_lloyd(spark, sf_dir):
     # round(term*1e8) must stay under 2^53, i.e. max|v| <=
     # sqrt(2^53 / (4e8 * dim)) (centroids are means of components,
     # so |v-c| <= 2*max|v|).  One cheap agg over the already-cached
-    # vlong, memoized per corpus dir for the session, so a rescaled
-    # corpus fails LOUDLY on the production path instead of drifting
-    # from the DECIMAL oracle in the last bit; asserted at half the
-    # derived bound for margin.
-    _assert_kmeans_magnitude(vlong, sf_dir)
+    # vlong, so a rescaled corpus fails LOUDLY on the production path
+    # instead of drifting from the DECIMAL oracle in the last bit.  A
+    # pass is memoized per session on the corpus FILES' identity, not
+    # its path (r14 ADVICE): a corpus rewritten in place must re-earn
+    # its green reading; a failure is never memoized.
+    _memo(spark, os.path.join(sf_dir, "embeddings.parquet"),
+          ("kmeans_magnitude",), lambda: _assert_kmeans_magnitude(vlong))
     cent = (vlong.filter(
         F.col("vec_id") % cent_stride_for(corpus_size(sf_dir)) == 0)
         .select(F.col("vec_id").alias("cent_id"), "pos",

@@ -12,6 +12,7 @@ is still deterministic, so it gets a full DuckDB oracle.
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import shutil
 import tempfile
@@ -19,7 +20,8 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from ..io import broadcast_within_budget, spread as _io_spread
+from ..io import (_footer_schema, broadcast_within_budget, read_table,
+                  spread as _io_spread)
 from ..session import tune
 from . import query, register_oracle_knee
 
@@ -41,25 +43,6 @@ def _stateful_shuffle_partitions(spark, input_path: str) -> str:
     parts = max(4, n_bytes // (128 << 20) + 4)
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     return prev
-
-#: memoized parquet schemas for readStream sources, keyed on file
-#: identity + session (a stream source needs an explicit schema; the
-#: spark.read.parquet probe used to cost a ~50-100ms footer/schema
-#: round trip on EVERY streaming-query build — round-9 profile).
-_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
-def _stream_schema(spark, path: str):
-    from ..io import file_memo_key
-
-    key = file_memo_key(spark, path)
-    hit = _SCHEMA_CACHE.get(key)
-    if hit is None:
-        if len(_SCHEMA_CACHE) > 256:
-            _SCHEMA_CACHE.clear()
-        hit = _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return hit
-
 
 def _with_event_time(df, ltz: bool = False):
     """``ts`` as a proper event-time column whether the parquet
@@ -113,8 +96,8 @@ def _sliced_events_src(spark, sf_dir: str, n_batches: int) -> str:
 
     src = tempfile.mkdtemp(prefix="events_slices_")
     try:
-        d = spark.read.option("pathGlobFilter", "events.parquet") \
-            .parquet(sf_dir)
+        path = os.path.join(sf_dir, "events.parquet")
+        d = spark.read.schema(_footer_schema(spark, path)).parquet(path)
         # materialize the ntile assignment ONCE: the global sort is
         # the dominant slicing cost, and without the checkpoint each
         # per-slice write would re-execute it (review r14)
@@ -151,7 +134,7 @@ def stream_tumbling_window(spark, sf_dir):
     with ``withWatermark`` bounding the state store."""
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     sink = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
     agged = (
         # file stream sources take a directory + glob, not a file
@@ -235,8 +218,8 @@ def run_sessionize_stream(spark, src_dir, glob="events.parquet",
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = spark.read.option("pathGlobFilter", glob) \
-        .parquet(src_dir).schema
+    schema = _footer_schema(spark, os.path.join(
+        src_dir, min(fnmatch.filter(os.listdir(src_dir), glob))))
     sink = f"stream_sessions_{uuid.uuid4().hex[:8]}"
     reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
     if max_files_per_trigger:
@@ -375,8 +358,6 @@ def sessionization_batch(spark, sf_dir):
     100 TB-safe grain (millions of users, short per-user series)."""
     tune(spark)
     from pyspark.sql import Window
-    from ..io import read_table
-
     ev = read_table(spark, sf_dir, "events").select("user_id", "ts")
     w = Window.partitionBy("user_id").orderBy("ts")
     # unix_timestamp works for both TIMESTAMP and TIMESTAMP_NTZ
@@ -426,7 +407,7 @@ def stream_sliding_window(spark, sf_dir):
     than the allowed lateness."""
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     sink = f"stream_sliding_{uuid.uuid4().hex[:8]}"
     agged = (
         _with_event_time(
@@ -475,9 +456,8 @@ def stream_static_join(spark, sf_dir):
     restarting the stream."""
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     sink = f"stream_static_{uuid.uuid4().hex[:8]}"
-    from ..io import read_table
     customer = read_table(spark, sf_dir, "customer") \
         .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
     agged = (
@@ -518,7 +498,7 @@ def stream_dedup_watermark(spark, sf_dir):
     DISTINCT and stays oracle-checkable."""
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
     deduped = (
         _with_event_time(
@@ -571,7 +551,7 @@ def stream_stream_join(spark, sf_dir, n_batches: int = 1):
     dropped."""
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     sink = f"stream_ssjoin_{uuid.uuid4().hex[:8]}"
     src_dir, glob = sf_dir, "events.parquet"
     try:  # rmtree in finally: no leak window after slicing
@@ -649,7 +629,7 @@ def stream_topk_per_window(spark, sf_dir):
     never with the event volume."""
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     sink = f"stream_topk_{uuid.uuid4().hex[:8]}"
     agged = (
         _with_event_time(
@@ -727,7 +707,7 @@ def stream_latest_state(spark, sf_dir):
 
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     wh = tempfile.mkdtemp(prefix="stream_latest_wh_")
     ckpt = tempfile.mkdtemp(prefix="stream_latest_ckpt_")
     cols = ["user_id", "event_type", "ts", "event_id", "value"]
@@ -818,7 +798,7 @@ def stream_stream_left_outer(spark, sf_dir, n_batches: int = 1):
     different scheduling."""
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     sink = f"stream_ssleft_{uuid.uuid4().hex[:8]}"
     src_dir, glob = sf_dir, "events.parquet"
     try:  # rmtree in finally: no leak window after slicing
@@ -902,7 +882,7 @@ def stream_session_window_builtin(spark, sf_dir):
     both half-open, same boundary)."""
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     sink = f"stream_sesswin_{uuid.uuid4().hex[:8]}"
     gap = f"{SESSION_GAP_MIN} minutes"
     agged = (
@@ -965,7 +945,7 @@ def stream_tumbling_append_finalized(spark, sf_dir):
     lateness horizon, not the stream length."""
     tune(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _stream_schema(spark, path)
+    schema = _footer_schema(spark, path)
     sink = f"stream_append_{uuid.uuid4().hex[:8]}"
     agged = (
         _with_event_time(
@@ -1356,8 +1336,8 @@ def stream_incremental_lsh_dedup(spark, sf_dir,
             (batch_bands, "silver", "lsh_bands", ["band"])]
 
     return _run_index_stream(
-        spark, path, spark.read.parquet(path), "doc_id", n_batches,
-        "dup_verdicts", step, batch_times, stage_times)
+        spark, path, read_table(spark, sf_dir, "documents"), "doc_id",
+        n_batches, "dup_verdicts", step, batch_times, stage_times)
 
 
 # ------------------- streaming incremental embedding near-dup index
@@ -1420,7 +1400,7 @@ def stream_incremental_embedding_index(spark, sf_dir,
 
     tune(spark)
     path = os.path.join(sf_dir, "embeddings.parquet")
-    d = spark.read.parquet(path)
+    d = read_table(spark, sf_dir, "embeddings")
     planes = neardup_planes(corpus_size(sf_dir))
     # vector width for the per-batch broadcast byte estimates (one
     # setup-time row fetch; every corpus row shares the dimension)

@@ -1561,19 +1561,6 @@ def text_bpe_learn_merges(spark, sf_dir):
     return _bpe_learn(spark, sf_dir)[0]
 
 
-#: (session, corpus file identity, train slice) -> (merges_df,
-#: seq_df).  The training loop runs BPE_MERGES eager localCheckpoints
-#: — re-running it per consumer (trainer entry, apply entry, held-out
-#: encode; benched min-of-N repeats) re-pays the whole loop and
-#: accumulates checkpoint RDDs until driver GC (round-10 ADVICE).
-#: Holding the DataFrame handles keeps the checkpoint RDDs alive;
-#: eviction just drops the reference (ContextCleaner reclaims on GC —
-#: unlike the persist-based _DENSE_FEAT_MEMO there is nothing to
-#: unpersist, and clearCache() cannot deregister a localCheckpoint,
-#: so no re-assert is needed on hit either).
-_BPE_LEARN_MEMO: dict = {}
-
-
 def clear_bpe_memo(spark=None) -> int:
     """Drop memoized BPE training results — ``spark``'s session only,
     or all sessions when None; returns the number of entries dropped.
@@ -1584,12 +1571,9 @@ def clear_bpe_memo(spark=None) -> int:
     training SQL (SWEEP_r11 first read 0.025s steady / 0.15x ratio —
     a cache artifact, not a number).  Production encoders WANT the
     reuse; benches must not."""
-    keys = [k for k in _BPE_LEARN_MEMO
-            if spark is None
-            or k[:2] == (spark.sparkContext.applicationId, id(spark))]
-    for k in keys:
-        _BPE_LEARN_MEMO.pop(k, None)
-    return len(keys)
+    from ..io import _memo_clear
+
+    return _memo_clear(spark, "bpe")
 
 
 def _bpe_learn(spark, sf_dir, parity: str | None = None):
@@ -1603,16 +1587,25 @@ def _bpe_learn(spark, sf_dir, parity: str | None = None):
 
     ``parity="even"`` trains on even doc_ids only (the held-out
     encode entry's train slice).  Memoized per (session, corpus file
-    identity, parity)."""
-    import os as _os
+    identity, parity) (:func:`io._memo`): the training loop runs
+    BPE_MERGES eager localCheckpoints, and re-running it per consumer
+    (trainer entry, apply entry, held-out encode; benched min-of-N
+    repeats) re-pays the whole loop and accumulates checkpoint RDDs
+    until driver GC (round-10 ADVICE).  Holding the DataFrame handles
+    keeps the checkpoint RDDs alive; eviction just drops the
+    reference (ContextCleaner reclaims on GC, and clearCache() cannot
+    deregister a localCheckpoint, so a hit needs no re-assert)."""
+    import os
 
-    from ..io import file_memo_key
+    from ..io import _memo
 
-    key = file_memo_key(
-        spark, _os.path.join(sf_dir, "documents.parquet")) + (parity,)
-    hit = _BPE_LEARN_MEMO.get(key)
-    if hit is not None:
-        return hit
+    return _memo(spark, os.path.join(sf_dir, "documents.parquet"),
+                 ("bpe", parity),
+                 lambda: _bpe_train(spark, sf_dir, parity))
+
+
+def _bpe_train(spark, sf_dir, parity):
+    """:func:`_bpe_learn`'s training loop, unmemoized."""
     d = spread(t(spark, sf_dir, "documents"))
     if parity == "even":
         d = d.filter(F.col("doc_id") % 2 == 0)
@@ -1663,18 +1656,6 @@ def _bpe_learn(spark, sf_dir, parity: str | None = None):
     out = merges[0]
     for m in merges[1:]:
         out = out.unionByName(m)
-    # evict entries whose file identity changed under the same
-    # (session, path) — a regenerated corpus must not serve stale
-    # vocab — and bound the memo by dropping oldest-inserted first
-    # (NOT a full flush: live sessions' hot entries stay, the
-    # round-10 _DENSE_FEAT_MEMO overflow lesson)
-    stale = [k for k in _BPE_LEARN_MEMO
-             if k[:3] == key[:3] and k[3:5] != key[3:5]]
-    for k in stale:
-        _BPE_LEARN_MEMO.pop(k, None)
-    while len(_BPE_LEARN_MEMO) > 32:
-        _BPE_LEARN_MEMO.pop(next(iter(_BPE_LEARN_MEMO)), None)
-    _BPE_LEARN_MEMO[key] = (out, seq)
     return out, seq
 
 

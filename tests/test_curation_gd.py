@@ -84,29 +84,70 @@ def test_feature_vectors_shape_and_labels(spark):
     assert all(r["y"] == 1.0 or r["y"] == 0.0 for r in rows)
 
 
-def test_dense_features_memoized_same_object(spark):
+def test_dense_features_memoized_same_object(spark, tmp_path):
     """The gate's scoring pass must reuse the TRAINER's persisted
     feature stage.  CacheManager sameResult-matching two separately
     built mapInPandas plans (each embedding its own pickled python
     function) is not a guarantee, so _dense_features memoizes per
     (session, corpus identity) and hands back the SAME DataFrame
     object — object identity IS the reuse contract (round-10
-    advice)."""
-    from energi_data_pipeline_spark.queries.curation import (
-        _DENSE_FEAT_MEMO, _dense_features)
+    advice).  A corpus rewritten in place gets new features, with
+    the old ones unpersisted, and a retrained BPE (the other memo on
+    the documents corpus)."""
+    import time
 
-    _DENSE_FEAT_MEMO.clear()
+    import pyarrow.parquet as pq
+    from pyspark import StorageLevel
+
+    from energi_data_pipeline_spark.io import _memo_clear
+    from energi_data_pipeline_spark.queries.curation import _dense_features
+    from energi_data_pipeline_spark.queries.text import (_bpe_learn,
+                                                         clear_bpe_memo)
+    from tests.conftest import SF0001
+
+    _memo_clear(spark, "dense_features")
     a = _dense_features(spark, SF001)
     b = _dense_features(spark, SF001)
     assert a is b
     # clearCache deregisters the persist under the memo's feet (bench
     # does this between runs) — the next hit must RE-ASSERT it, or
     # every multi-branch consumer re-runs the Arrow kernel per branch
-    from pyspark import StorageLevel
     spark.catalog.clearCache()
     assert a.storageLevel == StorageLevel.NONE
     c = _dense_features(spark, SF001)
     assert c is a
     assert c.storageLevel != StorageLevel.NONE
     a.unpersist()
-    _DENSE_FEAT_MEMO.clear()
+    _memo_clear(spark, "dense_features")
+
+    docs = pq.read_table(f"{SF0001}/documents.parquet")
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(docs.slice(0, 60), path)
+    def cached_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = cached_rdds()
+    old = _dense_features(spark, str(tmp_path))
+    assert old.count() == 60
+    old_rdds = cached_rdds() - before
+    assert old_rdds
+    old_bpe = _bpe_learn(spark, str(tmp_path))
+    assert _bpe_learn(spark, str(tmp_path)) is old_bpe
+    time.sleep(0.01)  # mtime_ns must move even on coarse clocks
+    pq.write_table(docs.slice(60, 40), path)
+    new = _dense_features(spark, str(tmp_path))
+    assert new is not old
+    assert new.storageLevel != StorageLevel.NONE
+    assert new.count() == 40
+    # the old features' blocks are released.  (old.storageLevel cannot
+    # tell: the CacheManager matches plans, and the new frame's plan
+    # reads the same path with the same schema)
+    assert not old_rdds & cached_rdds()
+    new_bpe = _bpe_learn(spark, str(tmp_path))
+    assert new_bpe is not old_bpe
+    assert (sorted(new_bpe[1].select("wd", "cnt").collect())
+            != sorted(old_bpe[1].select("wd", "cnt").collect()))
+    assert clear_bpe_memo(spark) >= 1
+    assert _bpe_learn(spark, str(tmp_path)) is not new_bpe
+    clear_bpe_memo(spark)
+    _memo_clear(spark, "dense_features")

@@ -16,6 +16,8 @@ from pyspark.sql.types import (LongType, StructField, StructType,
 from energi_data_pipeline_spark.io import (insert_if_absent, max_watermark,
                                            read_layer_table, table_path)
 
+from .conftest import SF0001
+
 
 @contextlib.contextmanager
 def job_group(spark, name: str):
@@ -151,6 +153,92 @@ def test_typed_read_runs_no_job(spark, tmp_path):
         df = read_layer_table(spark, wh, "silver", "t", schema=KEY)
         assert df.schema == KEY
     assert jobs() == []
+
+
+TABLES = ("customer", "documents", "embeddings", "events", "lineitem",
+          "nation", "orders", "part", "region", "supplier")
+
+#: Compares ``io._footer_schema`` with Spark's inference in a vanilla
+#: session like the driver's (argv: the repository, then the table
+#: paths; the first is the nanos file): untuned, on every path Spark
+#: reads untuned, then after ``tune`` (which ``read_table`` runs
+#: first), on every path.
+VANILLA = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from energi_data_pipeline_spark.io import _footer_schema
+from energi_data_pipeline_spark.session import tune
+spark = SparkSession.builder.master("local[1]").appName("vanilla") \\
+    .config("spark.ui.enabled", "false").getOrCreate()
+nanos, *rest = sys.argv[2:]
+for paths in (rest, [nanos, *rest]):
+    for p in paths:
+        want = spark.read.parquet(p).schema
+        assert _footer_schema(spark, p) == want, (p, want)
+    tune(spark)
+print("vanilla ok", len(rest) + 1)
+"""
+
+
+def test_footer_schema_is_the_inferred_schema(spark, tmp_path):
+    """A test table is read with the schema its first data file's
+    footer gives on the driver: it must be the schema Spark's
+    inference job gives, in the engine session and in a vanilla one,
+    for every test table, a TIMESTAMP(NANOS) file and a directory of
+    several files."""
+    import glob
+    import subprocess
+    import sys
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from energi_data_pipeline_spark.io import _footer_schema, read_table
+
+    nanos = str(tmp_path / "nanos.parquet")
+    pd.DataFrame({"user_id": [1, 2], "ts": pd.to_datetime(
+        [1, 2_000_000_001], unit="ns")}).to_parquet(nanos, index=False)
+    assert str(pq.read_schema(nanos).field("ts").type) == "timestamp[ns]"
+    multi = tmp_path / "multi.parquet"
+    spark.range(40).selectExpr(
+        "id", "cast(id as string) s", "array(id * 0.5) a",
+        "timestamp_micros(id) t").repartition(4).write.parquet(str(multi))
+    assert len(list(multi.glob("part-*"))) == 4
+    paths = [nanos, *sorted(glob.glob(
+        os.path.join(os.path.dirname(SF0001), "*", "*.parquet"))),
+        str(multi)]
+    assert len(paths) == 32
+    for p in paths:
+        assert _footer_schema(spark, p) == spark.read.parquet(p).schema, p
+    # read_table floors the nanos column, and only that one: Spark
+    # writes its timestamps as INT96, which pyarrow also reports as ns
+    assert read_table(spark, str(tmp_path), "nanos").dtypes == [
+        ("user_id", "bigint"), ("ts", "timestamp")]
+    assert (read_table(spark, str(tmp_path), "multi").schema
+            == spark.read.parquet(str(multi)).schema)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", VANILLA, repo, *paths],
+                         capture_output=True, text=True, timeout=600)
+    assert "vanilla ok 32" in out.stdout, out.stderr[-3000:]
+
+
+def test_test_table_reads_run_no_job(spark):
+    """Every test table read in a fresh session, and the stream
+    sources built on one, run no Spark job to learn a schema."""
+    from energi_data_pipeline_spark.io import read_table
+    from energi_data_pipeline_spark.queries import load_all
+
+    registry = load_all()
+    fresh = spark.newSession()
+    for name in TABLES:
+        with job_group(fresh, f"read:{name}") as jobs:
+            read_table(fresh, SF0001, name)
+        assert jobs() == [], name
+    for name in ("stream_tumbling_window", "stream_sessionization"):
+        with job_group(fresh, f"stream:{name}") as jobs:
+            assert registry[name].fn(fresh, SF0001).count()
+        assert inference_jobs(jobs()) == [], name
 
 
 def test_insert_if_absent_reads_keys_without_inference(spark, tmp_path):

@@ -50,12 +50,8 @@ def test_minhash_queries_build_without_jobs(spark):
     sweep's counts and the shingle arrays all run when the result is
     consumed, not while the plan is constructed."""
     from energi_data_pipeline_spark.queries import load_all
-    from energi_data_pipeline_spark.queries.core import t
 
     registry = load_all()
-    # the table read infers its schema once per session (memoized);
-    # that job belongs to the read, not to any query
-    t(spark, SF0001, "documents")
     try:
         for name in ("dedup_minhash_signature", "dedup_minhash_lsh_pairs",
                      "dedup_lsh_banding_sweep",

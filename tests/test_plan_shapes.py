@@ -131,6 +131,26 @@ def test_budget_decision_lives_in_io():
         callers
 
 
+def test_driver_memos_live_in_io():
+    # one driver-side memo policy: no module but io.py keys a memo on
+    # a file's stat or holds a memo of its own to evict from, and no
+    # handler swallows every exception
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent \
+        / "energi_data_pipeline_spark"
+    found = sorted(
+        f"{src.relative_to(pkg)}:{i}: {line.strip()}"
+        for src in pkg.rglob("*.py")
+        for i, line in enumerate(src.read_text().splitlines(), 1)
+        if re.search(r"except\s+(\(.*)?\bException\b", line)
+        or (src.name != "io.py" and re.search(
+            r"\bos\.stat\(|\.st_mtime|^_[A-Z0-9_]+\s*(:[^=]+)?="
+            r"\s*(\{\}|dict\(|set\(|OrderedDict\()", line)))
+    assert found == [], found
+
+
 def test_unhinted_dim_joins_still_broadcast_at_test_scale(
         spark, registry):
     # the SF-proportional join sides (customer, part, supplier
@@ -436,6 +456,20 @@ def test_tfidf_pairs_weight_table_is_cached(spark):
     df = reg["text_tfidf_cosine_pairs"].fn(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "InMemoryRelation" in plan
+    spark.catalog.clearCache()
+
+
+def test_tfidf_final_plan_reuses_the_corpus_exchange(spark, registry):
+    # the term-frequency and document-frequency branches of the
+    # cached weight table both explode the spread corpus: the
+    # AQE-final plan shuffles it once and the second branch reads it
+    # back as a ReusedExchange (plans/r19/text_tfidf_cosine_pairs_final)
+    df = registry["text_tfidf_cosine_pairs"].fn(spark, SF)
+    df.collect()
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    assert "isFinalPlan=true" in plan
+    assert "ReusedExchange" in plan
     spark.catalog.clearCache()
 
 
@@ -968,9 +1002,9 @@ def test_kmeans_magnitude_guard(spark, tmp_path, registry):
     with pytest.raises(AssertionError, match="precondition violated"):
         sims_kmeans_lloyd(spark, str(tmp_path))
     # a failed corpus is never memoized as passed
-    from energi_data_pipeline_spark.queries.simsearch import \
-        _KMEANS_MAG_OK
-    assert not any(k[0] == str(tmp_path) for k in _KMEANS_MAG_OK)
+    from energi_data_pipeline_spark.io import _MEMO
+    assert not any(k[2] == str(tmp_path / "embeddings.parquet")
+                   and k[3] == ("kmeans_magnitude",) for k in _MEMO)
     spark.catalog.clearCache()
     # and the shipped corpora PASS the same check (bound holds)
     from tests.conftest import SF001
@@ -981,7 +1015,7 @@ def test_kmeans_magnitude_guard(spark, tmp_path, registry):
 def test_kmeans_magnitude_memo_invalidates_on_rewrite(
         spark, tmp_path, registry):
     # r14 ADVICE: the guard memo is keyed on the corpus FILE
-    # fingerprint, not the path — a corpus rewritten in place (tmp
+    # identity, not the path — a corpus rewritten in place (tmp
     # dir reuse, refreshed corpus in a long-lived service) must
     # re-earn its green reading instead of silently skipping the
     # guard it was made unconditional to enforce
@@ -1001,9 +1035,9 @@ def test_kmeans_magnitude_memo_invalidates_on_rewrite(
     }), path)
     assert sims_kmeans_lloyd(spark, str(tmp_path)).count() > 0
     spark.catalog.clearCache()
-    from energi_data_pipeline_spark.queries.simsearch import \
-        _KMEANS_MAG_OK
-    assert any(k[0] == str(tmp_path) for k in _KMEANS_MAG_OK)
+    from energi_data_pipeline_spark.io import _MEMO
+    assert any(k[2] == path and k[3] == ("kmeans_magnitude",)
+               for k in _MEMO)
     _time.sleep(0.01)  # mtime_ns must move even on coarse clocks
     pq.write_table(pa.table({
         "vec_id": pa.array(range(6), type=pa.int64()),

@@ -118,8 +118,8 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, tmp_path):
 
 
 def test_read_table_memo_invalidates_on_rewrite(spark, tmp_path):
-    """Round-9: read_table memoizes the table DataFrame per
-    (applicationId, path, mtime, size) to cut per-query plan-build
+    """Round-9: read_table memoizes the table DataFrame per session
+    and file identity (path, mtime, size) to cut per-query plan-build
     cost.  A regenerated file (the r03 driver re-encode scenario)
     must MISS the memo and serve the new data, never a stale plan."""
     import time
@@ -132,14 +132,16 @@ def test_read_table_memo_invalidates_on_rewrite(spark, tmp_path):
     path = str(tmp_path / "events.parquet")
     pq.write_table(pa.table({"x": pa.array([1, 2], type=pa.int64())}),
                    path)
-    assert read_table(spark, str(tmp_path), "events").count() == 2
-    # same identity -> memo hit (same object is fine, same data is
-    # the contract)
-    assert read_table(spark, str(tmp_path), "events").count() == 2
+    first = read_table(spark, str(tmp_path), "events")
+    assert first.count() == 2
+    # same identity -> memo hit: the same object, the same data
+    assert read_table(spark, str(tmp_path), "events") is first
     time.sleep(0.01)  # ensure mtime_ns moves even on coarse clocks
     pq.write_table(pa.table({"x": pa.array([1, 2, 3],
                                            type=pa.int64())}), path)
-    assert read_table(spark, str(tmp_path), "events").count() == 3
+    again = read_table(spark, str(tmp_path), "events")
+    assert again is not first
+    assert again.count() == 3
 
 
 def test_adaptive_cache_level_gates_on_heap_budget():
